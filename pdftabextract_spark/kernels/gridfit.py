@@ -9,7 +9,6 @@ in row-major scan order via stable selection).
 """
 
 import numpy as np
-import pandas as pd
 
 from .geom import rectintersect_matrix, rectcenter_dist_matrix
 
@@ -95,24 +94,3 @@ def assign_boxes_to_cells(boxes_ltrb, col_positions, row_positions):
     out_row = np.where(matched, row_idx[pick], -1).astype(np.int64)
     out_col = np.where(matched, col_idx[pick], -1).astype(np.int64)
     return out_row, out_col
-
-
-def fit_page_boxes(boxes: pd.DataFrame, col_positions, row_positions) -> pd.DataFrame:
-    """applyInPandas-shaped wrapper: DataFrame with
-    left/top/width/height (+ any payload columns) -> same frame with
-    row_idx/col_idx added (-1 = unmatched)."""
-    if len(boxes) == 0:
-        out = boxes.copy()
-        out["row_idx"] = np.array([], dtype=np.int64)
-        out["col_idx"] = np.array([], dtype=np.int64)
-        return out
-    l = boxes["left"].to_numpy(dtype=float)
-    t = boxes["top"].to_numpy(dtype=float)
-    r = l + boxes["width"].to_numpy(dtype=float)
-    b = t + boxes["height"].to_numpy(dtype=float)
-    ltrb = np.stack([l, t, r, b], axis=1)
-    ri, ci = assign_boxes_to_cells(ltrb, col_positions, row_positions)
-    out = boxes.copy()
-    out["row_idx"] = ri
-    out["col_idx"] = ci
-    return out

@@ -256,24 +256,6 @@ def find_rotation_or_skew(lines_hough, rot_thresh, rot_same_dir_thresh,
     return (None, None), filtered
 
 
-def apply_rotation_or_skew(lines_hough, rs_type, rs_radians):
-    """Add the found radians to theta of affected-direction lines and
-    re-normalize. Parity: imgproc.py:153-176."""
-    if rs_type is None or rs_radians is None:
-        return list(lines_hough)
-    if rs_type == ROTATION:
-        only = None
-    else:
-        only = DIRECTION_HORIZONTAL if rs_type == SKEW_Y else DIRECTION_VERTICAL
-    out = []
-    for rho, theta, theta_norm, line_dir in lines_hough:
-        if only is None or line_dir == only:
-            theta = theta + rs_radians
-            theta_norm = normalize_angle(theta)
-        out.append((rho, theta, theta_norm, line_dir))
-    return out
-
-
 def line_positions_in_direction(lines_hough, direction, img_w, img_h):
     """1-D midpoint positions of lines of one direction (x for vertical,
     y for horizontal), via canvas projection. Parity: imgproc.py:306-314."""

@@ -190,11 +190,6 @@ def _build_encode_table(bits, values):
     return table
 
 
-def _extend(v, s):
-    """JPEG EXTEND: s-bit magnitude v -> signed coefficient."""
-    return v - (1 << s) + 1 if v < (1 << (s - 1)) else v
-
-
 # The MSB-first bit reader (peek16/skip/read over de-stuffed entropy
 # bytes, 1-padding past the end per spec) lives inlined in decode_jpeg's
 # entropy loop as buf/cnt/pos locals — attribute access per symbol was

@@ -1,0 +1,61 @@
+"""Page groups over a stream of Arrow batches.
+
+The per-page kernels (operators/clustering.page_profiles,
+operators/grid.pack_joined) read rows whose (doc_id, page) groups arrive
+contiguously within a partition, but Arrow cuts the partition into
+batches without regard to pages. ``iter_page_groups`` re-cuts the stream
+so every page is handed over whole, exactly once.
+"""
+
+import numpy as np
+import pandas as pd
+
+
+def page_bounds(doc_ids: np.ndarray, pages: np.ndarray) -> np.ndarray:
+    """Run bounds of equal (doc_id, page) in row order: run i covers rows
+    [b[i], b[i+1]); the last entry is the row count."""
+    n = len(pages)
+    same_page = pages[1:] == pages[:-1]
+    if pages.dtype.kind == "f":
+        # a null page arrives as NaN; its rows still form one group
+        same_page |= np.isnan(pages[1:]) & np.isnan(pages[:-1])
+    brk = np.ones(n + 1, dtype=bool)
+    brk[1:n] = (doc_ids[1:] != doc_ids[:-1]) | ~same_page
+    return np.flatnonzero(brk)
+
+
+def iter_page_groups(batches, name: str):
+    """pandas batches -> (frame, bounds) pairs in which every page is
+    complete and ``bounds`` = page_bounds of the frame.
+
+    The trailing page of a batch is held back and prepended to the next
+    one. A page that recurs after its group closed means the input was
+    not page-contiguous; emitting it would produce duplicate partial
+    pages, so it raises instead."""
+    seen = set()
+
+    def closed(pdf, bounds):
+        doc_ids = pdf["doc_id"].to_numpy()
+        pages = pdf["page"].to_numpy()
+        for s in bounds[:-1]:
+            key = (doc_ids[s], pages[s])
+            if key in seen:
+                raise RuntimeError(
+                    "%s: page %r recurred after its group closed; input "
+                    "rows are not page-contiguous" % (name, key))
+            seen.add(key)
+        return pdf, bounds
+
+    carry = None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        bounds = page_bounds(pdf["doc_id"].to_numpy(), pdf["page"].to_numpy())
+        last = bounds[-2]
+        carry = pdf.iloc[last:]
+        if last:
+            yield closed(pdf.iloc[:last], bounds[:-1])
+    if carry is not None:
+        yield closed(carry, np.array([0, len(carry)]))

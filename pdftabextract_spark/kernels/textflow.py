@@ -177,39 +177,3 @@ def cell_text(boxes: pd.DataFrame, split_in_lines=False, **kwargs) -> str:
     if split_in_lines:
         return create_text_from_lines(put_texts_in_lines(boxes), **kwargs)
     return join_texts(boxes, **kwargs)
-
-
-def rotate_boxes(boxes: pd.DataFrame, page_rot, about_x=0.0, about_y=0.0) -> pd.DataFrame:
-    """Rotate every box's (left, top) about a point; width/height keep.
-    Parity: textboxes.py:177-188 (rotate_textboxes)."""
-    from .geom import rotate_xy
-    out = boxes.copy()
-    nx, ny = rotate_xy(out["left"].to_numpy(dtype=float),
-                       out["top"].to_numpy(dtype=float),
-                       page_rot, about_x, about_y)
-    out["left"] = nx
-    out["top"] = ny
-    return out
-
-
-def deskew_boxes(boxes: pd.DataFrame, skew_radians, skew_direction,
-                 about_x=0.0, about_y=0.0) -> pd.DataFrame:
-    """Deskew boxes along x or y. Parity: textboxes.py:191-219:
-    SKEW_X shifts left by -sin(theta)*(center_y - about_y);
-    SKEW_Y shifts top by sin(theta)*(center_x - about_x)."""
-    import math
-    if skew_direction not in ("sx", "sy"):
-        raise ValueError("invalid skew_direction %r" % skew_direction)
-    out = boxes.copy()
-    left = out["left"].to_numpy(dtype=float)
-    top = out["top"].to_numpy(dtype=float)
-    w = out["width"].to_numpy(dtype=float)
-    h = out["height"].to_numpy(dtype=float)
-    s = math.sin(skew_radians)
-    if skew_direction == "sx":
-        d = (top + h / 2) - about_y
-        out["left"] = left + (-1) * s * d
-    else:
-        d = (left + w / 2) - about_x
-        out["top"] = top + s * d
-    return out

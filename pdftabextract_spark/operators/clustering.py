@@ -110,8 +110,7 @@ def cluster_centers_pluggable(df: DataFrame, value_col: str, group_cols,
 
 
 def page_profiles(boxes: DataFrame, col_break_dist: float,
-                  row_break_dist: float,
-                  num_partitions: int = None) -> DataFrame:
+                  row_break_dist: float) -> DataFrame:
     """Fused per-page profile: ONE exchange + ONE Arrow kernel computes,
     per (doc_id, page):
 
@@ -125,29 +124,23 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     one repartition by the page key. Value parity with the window ops is
     property-tested (tests/test_pipeline_e2e.py fused-vs-window).
 
-    The kernel is fully vectorized across each Arrow batch (lexsort by
-    (page, value); segment medians picked by index arithmetic on the
-    sorted values — no per-cluster Python loop) and carries the trailing
-    page across batch boundaries with the same closed-group invariant as
-    the packing kernel (operators/grid.pack_joined).
+    The kernel is fully vectorized across each page-complete frame
+    (lexsort by (page, value); segment medians picked by index arithmetic
+    on the sorted values — no per-cluster Python loop); pages that
+    straddle Arrow batches are reassembled by kernels/pagegroups.
     """
     import numpy as np
     import pandas as pd
+    from ..kernels.pagegroups import iter_page_groups
 
     cbd, rbd = float(col_break_dist), float(row_break_dist)
 
-    proj = boxes.select(
+    src = boxes.select(
         "doc_id", "page", "left", "top",
         (F.col("left") + F.col("width")).alias("right"),
-        (F.col("top") + F.col("height")).alias("bottom"))
-    # num_partitions widens the exchange beyond shuffle.partitions so a
-    # single straggler task (hypervisor jitter locally; a slow executor on
-    # a cluster) costs a fraction of a wave instead of a whole wave
-    if num_partitions:
-        proj = proj.repartition(int(num_partitions), "doc_id", "page")
-    else:
-        proj = proj.repartition("doc_id", "page")
-    src = proj.sortWithinPartitions("doc_id", "page")
+        (F.col("top") + F.col("height")).alias("bottom")) \
+        .repartition("doc_id", "page") \
+        .sortWithinPartitions("doc_id", "page")
 
     def _segments(vals_sorted, page_codes_sorted, dist):
         """Sorted-within-page values -> (seg_start, seg_end) bounds where
@@ -162,15 +155,11 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         ends = np.append(starts[1:], n)
         return starts, ends
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = (pdf["doc_id"].astype(str) + "\x00"
-               + pdf["page"].astype(str)).to_numpy()
-        # stable page codes in arrival (partition-sorted) order
-        page_bounds = np.flatnonzero(np.concatenate(
-            [[True], key[1:] != key[:-1]]))
-        codes = np.cumsum(np.concatenate(
-            [[True], key[1:] != key[:-1]])) - 1
+    def _process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
+        page_bounds = bounds[:-1]
         n_pages = len(page_bounds)
+        # page codes in arrival (partition-sorted) order
+        codes = np.repeat(np.arange(n_pages), np.diff(bounds))
 
         left = pdf["left"].to_numpy(dtype=float)
         top = pdf["top"].to_numpy(dtype=float)
@@ -208,37 +197,8 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         })
 
     def kernel(batches):
-        seen = set()
-
-        def check_and_emit(pdf):
-            keys = (pdf["doc_id"].astype(str) + "\x00"
-                    + pdf["page"].astype(str)).to_numpy()
-            cuts = np.flatnonzero(np.concatenate(
-                [[True], keys[1:] != keys[:-1]]))
-            for k in keys[cuts]:
-                if k in seen:
-                    raise RuntimeError(
-                        "page_profiles: page key %r recurred after its "
-                        "group closed — input not page-contiguous" % (k,))
-                seen.add(k)
-            return _process(pdf)
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            k = (pdf["doc_id"].astype(str) + "\x00"
-                 + pdf["page"].astype(str))
-            last_key = k.iloc[-1]
-            hold = (k == last_key).to_numpy()
-            carry = pdf[hold]
-            emit = pdf[~hold]
-            if len(emit):
-                yield check_and_emit(emit)
-        if carry is not None and len(carry):
-            yield check_and_emit(carry)
+        for pdf, bounds in iter_page_groups(batches, "page_profiles"):
+            yield _process(pdf, bounds)
 
     return src.mapInPandas(
         kernel, schema="doc_id string, page int, "

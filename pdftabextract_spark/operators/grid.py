@@ -1,19 +1,18 @@
 """Grid construction + textbox->cell assignment + cell-text materialization.
 
 The assignment is the reference's interval theta-join with argmax
-(/root/reference/pdftabextract/extract.py:46-117). Two implementations:
+(/root/reference/pdftabextract/extract.py:46-117), scored per page by the
+numpy broadcast kernel kernels/gridfit.assign_boxes_to_cells. Two
+operators run it:
 
-* ``assign_cells_cogrouped`` (default): cogrouped applyInPandas over
-  (doc_id, page) — boxes and the page's border arrays meet without
-  duplicating the arrays per box; the numpy broadcast kernel
-  (kernels.gridfit) scores boxes x cells per page. Co-partitioned by the
-  page key, so the only shuffle is the groupBy exchange both inputs need
-  anyway. Skew-safe: a page is the natural unit of work (boxes-per-page is
-  bounded), group keys are (doc_id, page), never doc_id alone.
+* ``assign_and_pack`` (text path): one Arrow-batched mapInPandas stage
+  that assigns and materializes the cell texts, emitting one packed row
+  per page. Pages that straddle Arrow batches are reassembled by
+  kernels/pagegroups.
 
-* ``assign_cells_sql``: pure-SQL variant (explode cells, range-predicate
-  join, window argmax) kept for oracle cross-checking — same semantics,
-  more shuffle; used by the correctness suite, not the hot path.
+* ``assign_cells_joined`` (image, catalogue and schoollist paths): the
+  long form, one row per box with its (row_idx, col_idx); ``cell_texts``
+  / ``cell_texts_lines`` then aggregate it onto the full grid.
 
 Cell text parity: join_texts (textboxes.py:154-162) — sort by left (stable
 by box order), join with ' ', strip.
@@ -25,35 +24,8 @@ _ASSIGN_SCHEMA = ("doc_id string, page int, box_id int, left double, "
                   "value string, row_idx int, col_idx int")
 
 
-def assign_cells_cogrouped(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """boxes(doc_id,page,box_id,left,top,width,height,value) x
-    positions(doc_id,page,col_positions,row_positions) ->
-    (doc_id,page,box_id,left,value,row_idx,col_idx); unmatched boxes get
-    row_idx = col_idx = -1 (the reference's unmatched_texts anti-set)."""
-    import pandas as pd
-    from ..kernels.gridfit import fit_page_boxes
-
-    def fit(key, boxes_pdf: pd.DataFrame, pos_pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id, page = key
-        if len(pos_pdf) == 0 or len(boxes_pdf) == 0:
-            return pd.DataFrame(columns=[
-                "doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx"])
-        col_pos = pos_pdf.iloc[0]["col_positions"]
-        row_pos = pos_pdf.iloc[0]["row_positions"]
-        out = fit_page_boxes(boxes_pdf, col_pos, row_pos)
-        out["doc_id"] = doc_id
-        out["page"] = page
-        return out[["doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx"]]
-
-    return (
-        boxes.groupBy("doc_id", "page")
-        .cogroup(positions.groupBy("doc_id", "page"))
-        .applyInPandas(fit, schema=_ASSIGN_SCHEMA)
-    )
-
-
 def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """Default assignment path: equi-join boxes with their page's border
+    """Long-form assignment: equi-join boxes with their page's border
     arrays (AQE picks broadcast when positions is small — one row per
     page), then ONE Arrow-batched mapInPandas kernel. Assignment is
     per-box independent given the page grid, so no grouping shuffle is
@@ -63,6 +35,7 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
     from ..kernels.gridfit import assign_boxes_to_cells
+    from ..kernels.pagegroups import page_bounds
 
     joined = boxes.join(
         positions.select("doc_id", "page", "col_positions", "row_positions"),
@@ -75,17 +48,16 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
                 continue
             # group by page via sort + slice on numpy arrays — no per-page
             # pandas sub-frames/copies (53k pages per job add up)
-            key = (pdf["doc_id"].astype(str) + "\x00" + pdf["page"].astype(str)).to_numpy()
-            order = np.argsort(key, kind="stable")
+            doc_ids = pdf["doc_id"].to_numpy()
+            pages = pdf["page"].to_numpy()
+            order = np.lexsort((pages, doc_ids))
             l = pdf["left"].to_numpy(dtype=float)[order]
             t = pdf["top"].to_numpy(dtype=float)[order]
             r = l + pdf["width"].to_numpy(dtype=float)[order]
             b = t + pdf["height"].to_numpy(dtype=float)[order]
             col_pos = pdf["col_positions"].to_numpy()[order]
             row_pos = pdf["row_positions"].to_numpy()[order]
-            sorted_key = key[order]
-            bounds = np.flatnonzero(np.concatenate(
-                [[True], sorted_key[1:] != sorted_key[:-1], [True]]))
+            bounds = page_bounds(doc_ids[order], pages[order])
             out_row = np.empty(n, dtype=np.int64)
             out_col = np.empty(n, dtype=np.int64)
             for s, e in zip(bounds[:-1], bounds[1:]):
@@ -96,8 +68,8 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
             inv = np.empty(n, dtype=np.int64)
             inv[order] = np.arange(n)
             yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "page": pdf["page"].to_numpy(),
+                "doc_id": doc_ids,
+                "page": pages,
                 "box_id": pdf["box_id"].to_numpy(),
                 "left": pdf["left"].to_numpy(),
                 "value": pdf["value"].to_numpy(),
@@ -142,8 +114,9 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
     from ..kernels.gridfit import assign_boxes_to_cells
+    from ..kernels.pagegroups import iter_page_groups
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
         l = pdf["left"].to_numpy(dtype=float)
         t = pdf["top"].to_numpy(dtype=float)
         r = l + pdf["width"].to_numpy(dtype=float)
@@ -154,9 +127,6 @@ def pack_joined(joined: DataFrame) -> DataFrame:
         pages = pdf["page"].to_numpy()
         col_pos = pdf["col_positions"].to_numpy()
         row_pos = pdf["row_positions"].to_numpy()
-        key = pdf["_key"].to_numpy()
-        bounds = np.flatnonzero(np.concatenate(
-            [[True], key[1:] != key[:-1], [True]]))
         out = []
         for s, e in zip(bounds[:-1], bounds[1:]):
             cp = np.asarray(col_pos[s], dtype=float)
@@ -186,94 +156,12 @@ def pack_joined(joined: DataFrame) -> DataFrame:
             "doc_id", "page", "n_rows", "n_cols", "cells", "n_unmatched"])
 
     def kernel(batches):
-        # runtime contiguity invariant: the kernel closes a page group the
-        # moment a different key follows it; if a closed key ever recurs in
-        # this partition, the input was NOT page-contiguous (join reordered
-        # rows / page split across batches in a way the carry can't mend)
-        # and silent duplicate per-page rows would corrupt offsets
-        # downstream — fail loudly instead.
-        seen = set()
-
-        def check_and_emit(pdf):
-            keys = pdf["_key"].to_numpy()
-            cuts = np.flatnonzero(np.concatenate(
-                [[True], keys[1:] != keys[:-1]]))
-            for k in keys[cuts]:
-                if k in seen:
-                    raise RuntimeError(
-                        "assign_and_pack: page key %r recurred after its "
-                        "group closed — input rows are not page-contiguous "
-                        "(use page_contiguous=False to force the exchange)"
-                        % (k,))
-                seen.add(k)
-            return _process(pdf)
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.assign(
-                _key=pdf["doc_id"].astype(str) + "\x00" + pdf["page"].astype(str))
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_key = pdf["_key"].iloc[-1]
-            hold = pdf["_key"] == last_key
-            carry = pdf[hold]
-            emit = pdf[~hold]
-            if len(emit):
-                yield check_and_emit(emit)
-        if carry is not None and len(carry):
-            yield check_and_emit(carry)
+        for pdf, bounds in iter_page_groups(batches, "assign_and_pack"):
+            yield _process(pdf, bounds)
 
     return joined.mapInPandas(
         kernel, schema="doc_id string, page int, n_rows int, n_cols int, "
                        "cells array<string>, n_unmatched int")
-
-
-def assign_cells_sql(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """Relational formulation: explode the grid, join on the candidate
-    range predicates, window-argmax per box. Exact same candidate and
-    tie-break semantics as the kernel."""
-    from pyspark.sql import Window as W
-
-    cells = cells_from_positions(positions)
-    b = boxes.select(
-        "doc_id", "page", "box_id", "left", "top", "value",
-        (F.col("left") + F.col("width")).alias("right"),
-        (F.col("top") + F.col("height")).alias("bottom"),
-    )
-    j = b.join(cells, ["doc_id", "page"])
-    row_ok = (
-        ((F.col("cell_t") <= F.col("top")) & (F.col("top") <= F.col("cell_b")))
-        | ((F.col("cell_t") <= F.col("bottom")) & (F.col("bottom") <= F.col("cell_b")))
-        | ((F.col("top") <= F.col("cell_t")) & (F.col("bottom") >= F.col("cell_b")))
-    )
-    col_ok = (
-        ((F.col("cell_l") <= F.col("left")) & (F.col("left") <= F.col("cell_r")))
-        | ((F.col("cell_l") <= F.col("right")) & (F.col("right") <= F.col("cell_r")))
-        | ((F.col("left") <= F.col("cell_l")) & (F.col("right") >= F.col("cell_r")))
-    )
-    ix = F.greatest(F.lit(0.0), F.least("right", "cell_r") - F.greatest("left", "cell_l"))
-    iy = F.greatest(F.lit(0.0), F.least("bottom", "cell_b") - F.greatest("top", "cell_t"))
-    box_area = (F.col("right") - F.col("left")) * (F.col("bottom") - F.col("top"))
-    cell_area = (F.col("cell_r") - F.col("cell_l")) * (F.col("cell_b") - F.col("cell_t"))
-    isect = F.least(ix * iy, F.least(box_area, cell_area)) / box_area
-    dist = F.sqrt(
-        F.pow((F.col("left") + F.col("right")) / 2 - (F.col("cell_l") + F.col("cell_r")) / 2, 2)
-        + F.pow((F.col("top") + F.col("bottom")) / 2 - (F.col("cell_t") + F.col("cell_b")) / 2, 2)
-    )
-    cand = (
-        j.where(row_ok & col_ok)
-        .withColumn("isect", isect).withColumn("dist", dist)
-        .where(F.col("isect") > 0)
-    )
-    w = W.partitionBy("doc_id", "page", "box_id").orderBy(
-        F.col("isect").desc(), F.col("dist").asc(), F.col("row_idx").asc(), F.col("col_idx").asc())
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx")
-    )
 
 
 def cells_from_positions(positions: DataFrame) -> DataFrame:

@@ -120,7 +120,7 @@ def detect_lines_with_rotation(pages: DataFrame, media: DataFrame,
                                canny_low=50, canny_high=150,
                                hough_rho_res=1.0, hough_theta_res=math.pi / 500,
                                hough_votes_rel=0.2, edge_method="canny",
-                               hough_votes_abs=None, kernel_partitions=None):
+                               hough_votes_abs=None):
     """Fused detect_lines + find_rotation_per_page: decode -> Canny ->
     Hough -> classify -> per-page rotation decision + stray-line filter,
     all inside ONE mapInPandas kernel (round 5).
@@ -135,13 +135,6 @@ def detect_lines_with_rotation(pages: DataFrame, media: DataFrame,
     chain is the same K.find_rotation_or_skew call. Returns
     (rotations, filtered_lines) with the same schemas."""
     joined = pages.select("doc_id", "page", "media_ref").join(media, "media_ref")
-    if kernel_partitions:
-        # escape hatch for sources that collapse many small media files
-        # into a handful of input splits (decode visibly serialized).
-        # NOT a default: shuffling the image bytes costs more than
-        # straggler smoothing saves when the scan already splits sanely
-        # (interleaved A/B on the bench corpus: 3.79s -> 5.08s best).
-        joined = joined.repartition(int(kernel_partitions), "doc_id", "page")
     edge_fn = K.canny_edges if edge_method == "canny" else K.edges_simple
 
     def kernel(batches):

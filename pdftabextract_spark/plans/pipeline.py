@@ -4,27 +4,26 @@ Stages (SURVEY.md §3.4):
   scan      span table -> textbox rows + page rows (JVM-side, sources/spans)
   [image]   media_ref -> page-image bytes -> Hough lines -> rotation/skew
             repair (operators/imgstage) — optional, catalogue_30s path
-  columns   per-page 1-D clustering of box lefts (window gaps-and-islands)
-            -> exact-median centers -> corpus column model fit + per-page
-            repair (operators/model) — the ONLY corpus-wide exchange
-  rows      per-page clustering of box tops -> row borders
-  grid      borders -> cells; cogrouped numpy assignment kernel
-  output    cell texts -> full grid -> ordered result spans
+  profiles  one exchange by (doc_id, page) + one Arrow kernel: per-page
+            column cluster medians, row cluster min tops and extents
+            (operators/clustering.page_profiles)
+  columns   corpus column model fit over the pooled per-page centers +
+            per-page repair (operators/model) — the model reduces to
+            O(distinct offsets) rows on the driver
+  grid      borders -> assign + pack: one Arrow kernel assigns boxes to
+            cells and emits one packed row per page (operators/grid)
+  output    packed pages -> ordered result spans via page-level offsets
 
 Scale notes: every per-page stage partitions by (doc_id, page) — the unit
 of work is a page, never a whole document, which defuses pages-per-doc
-skew (north rule). The column-model fit reduces to O(distinct offsets)
-rows on the driver. All heavy expressions are JVM-side; Python runs only
-in the model-repair pandas UDF and the per-page assignment kernel.
+skew (north rule). All heavy expressions are JVM-side; Python runs only
+in the profile kernel, the model-repair pandas UDF and the assign+pack
+kernel.
 """
 
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W, functions as F
-
-from ..operators.clustering import cluster_centers
-from ..operators.model import fit_and_repair
-from ..operators.grid import assign_cells_joined, cell_texts
 
 
 @dataclass(frozen=True)
@@ -37,28 +36,9 @@ class PipelineParams:
     pad_y: float = 8.0               # row border = cluster min top - pad_y
     model_dist_thresh: float = None  # pooled-center cluster break dist
     same_size_use_model_arr_diff_thresh: float = None
-    profile_partitions: int = None   # width of the fused profile exchange;
-                                     # None = spark.sql.shuffle.partitions.
-                                     # Set to a small multiple of total
-                                     # cores so one straggler task costs a
-                                     # wave fraction, not a whole wave
-    image_kernel_partitions: int = None  # width of the decode/Hough kernel
-                                     # stage (image path). None (default =
-                                     # the media scan's input splits) wins
-                                     # whenever the source splits sanely —
-                                     # measured on the local bench corpus
-                                     # the explicit exchange LOST ~25%
-                                     # (interleaved A/B: 3.79s vs 5.08s
-                                     # best) because shuffling the image
-                                     # bytes costs more than straggler
-                                     # smoothing saves. Reach for it only
-                                     # when a source genuinely collapses
-                                     # many small media files into a
-                                     # handful of splits and the decode
-                                     # visibly serializes
     cache: str = "persist"           # reuse strategy for tables consumed
                                      # by >1 downstream branch (boxes,
-                                     # profiles, positions): "persist"
+                                     # profiles, line centers): "persist"
                                      # (MEMORY_AND_DISK columnar — the
                                      # cluster-safe default: lineage
                                      # recomputes on executor loss),
@@ -103,67 +83,6 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     return df
 
 
-def page_extents(boxes: DataFrame) -> DataFrame:
-    """One pass over boxes: per-page max right / max bottom (used for the
-    closing column and row borders)."""
-    return boxes.groupBy("doc_id", "page").agg(
-        F.max(F.col("left") + F.col("width")).alias("max_right"),
-        F.max(F.col("top") + F.col("height")).alias("max_bottom"))
-
-
-def column_positions(boxes: DataFrame, params: PipelineParams,
-                     extents: DataFrame = None, centers: DataFrame = None) -> DataFrame:
-    """Per-page column borders via text-left clustering + corpus model
-    repair (schoollist_2-style columns, §3.3, with the catalogue's
-    get_adjusted_cluster_centers model fit)."""
-    if centers is None:
-        centers = cluster_centers(
-            boxes, "left", params.col_break_dist, ("doc_id", "page"), center="median")
-    repaired = fit_and_repair(
-        centers, params.n_cols, params.model_break_dist,
-        same_size_use_model_arr_diff_thresh=params.same_size_use_model_arr_diff_thresh)
-
-    # borders: each repaired center - pad, then a right border safely past
-    # the last column (max box right + pad, but at least last center + 2*pad)
-    if extents is None:
-        extents = page_extents(boxes)
-    pad = float(params.pad_x)
-    return (
-        repaired.join(extents.select("doc_id", "page", "max_right"), ["doc_id", "page"])
-        .select(
-            "doc_id", "page",
-            F.concat(
-                F.transform("centers_fixed", lambda c: c - F.lit(pad)),
-                F.array(F.greatest(
-                    F.col("max_right") + F.lit(pad),
-                    F.element_at("centers_fixed", -1) + F.lit(2 * pad),
-                )),
-            ).alias("col_positions"),
-        )
-    )
-
-
-def row_positions(boxes: DataFrame, params: PipelineParams,
-                  extents: DataFrame = None) -> DataFrame:
-    """Per-page row borders: cluster box tops, border = cluster min top -
-    pad_y, closing border = page max bottom + pad_y (schoollist-style rows
-    from text borders, §3.2 step 4)."""
-    row_mins = cluster_centers(
-        boxes, "top", params.row_break_dist, ("doc_id", "page"), center="min")
-    if extents is None:
-        extents = page_extents(boxes)
-    pad = float(params.pad_y)
-    return (
-        row_mins.groupBy("doc_id", "page")
-        .agg(F.array_sort(F.collect_list(F.col("center") - F.lit(pad))).alias("_tops"))
-        .join(extents.select("doc_id", "page", "max_bottom"), ["doc_id", "page"])
-        .select(
-            "doc_id", "page",
-            F.concat("_tops", F.array(F.col("max_bottom") + F.lit(pad))).alias("row_positions"),
-        )
-    )
-
-
 def positions_fused(boxes: DataFrame, params: PipelineParams,
                     persist: bool = True) -> DataFrame:
     """Per-page (col_positions, row_positions) via the FUSED profile
@@ -178,8 +97,7 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
     from ..operators.model import fit_column_model_pooled, repair_page_centers
 
     profiles = page_profiles(boxes, params.col_break_dist,
-                             params.row_break_dist,
-                             num_partitions=params.profile_partitions)
+                             params.row_break_dist)
     if persist:
         profiles = _materialize(profiles, params.cache)
     pooled = profiles.select(
@@ -208,31 +126,10 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
 
 def extract_cells(boxes: DataFrame, params: PipelineParams,
                   persist: bool = True, page_contiguous: bool = False) -> DataFrame:
-    """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid.
-
-    ``persist``: the exploded textbox table feeds five downstream branches
-    (column clustering, row clustering, page extents x2, assignment); at
-    any scale, one materialization beats five re-scans of the span table
-    (scan + explode + JSON parse). Per-page positions likewise feed both
-    the assignment cogroup and the full-grid generator. On a cluster this
-    is MEMORY_AND_DISK; the same call works local.
-    """
-    # scan-time zero-area drop (parse_pages rect validation,
-    # common.py:138-141) — Catalyst pushes this into the source scan
-    boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
-    if persist:
-        # NOTE: measured local[8]@sf0.01 — an explicit
-        # repartition("doc_id","page") before persist costs more (extra
-        # eager exchange + broken AQE broadcast choices downstream) than
-        # the exchanges it saves; materialize unpartitioned and let AQE
-        # plan each branch
-        boxes = _materialize(boxes, params.cache)
-    positions = positions_fused(boxes, params, persist)
-    if persist:
-        positions = _materialize(positions, params.cache)
-    packed = assign_and_pack_from(boxes, positions, page_contiguous)
-    # long form for callers/tests; pure JVM explode off the packed rows —
-    # no shuffle (the packed kernel already did the heavy lifting)
+    """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid: the
+    long form of extract_cells_packed, a pure JVM posexplode of the
+    packed rows (no shuffle)."""
+    packed = extract_cells_packed(boxes, params, persist, page_contiguous)
     return (packed.select(
         "doc_id", "page", "n_cols",
         F.posexplode("cells").alias("pos", "cell_text"))
@@ -244,9 +141,15 @@ def extract_cells(boxes: DataFrame, params: PipelineParams,
 
 def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
                          persist: bool = True, page_contiguous: bool = False) -> DataFrame:
-    """Like extract_cells but returns the packed per-page form
-    (doc_id, page, n_rows, n_cols, cells array, n_unmatched) — the shape
-    the span assembler consumes without any further wide shuffle."""
+    """boxes -> the packed per-page form (doc_id, page, n_rows, n_cols,
+    cells array, n_unmatched) — the shape the span assembler consumes
+    without any further wide shuffle.
+
+    ``persist``: the exploded textbox table feeds both the profile kernel
+    and the assignment; one materialization beats re-scanning the span
+    table (scan + explode + JSON parse) per branch."""
+    # scan-time zero-area drop (parse_pages rect validation,
+    # common.py:138-141) — Catalyst pushes this into the source scan
     boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
     if persist:
         boxes = _materialize(boxes, params.cache)
@@ -285,8 +188,7 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
         pages, media,
         math.radians(rot_thresh_deg), math.radians(rot_same_dir_thresh_deg),
         omit_on_rot_thresh=math.radians(omit_on_rot_thresh_deg),
-        persist=params.cache if persist else False,
-        kernel_partitions=params.image_kernel_partitions)
+        persist=params.cache if persist else False)
 
     boxes_fixed = rotate_boxes_back(boxes, rotations)
     if persist:
@@ -315,8 +217,7 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     # property-tested); the kernel's col medians ride along unused.
     from ..operators.clustering import page_profiles
     prof = page_profiles(boxes_fixed, params.col_break_dist,
-                         params.row_break_dist,
-                         num_partitions=params.profile_partitions)
+                         params.row_break_dist)
     pad_y = float(params.pad_y)
     rows = prof.select(
         "doc_id", "page",
@@ -325,42 +226,9 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
             F.array(F.col("max_bottom") + F.lit(pad_y))
         ).alias("row_positions"))
     positions = cols.join(rows, ["doc_id", "page"])
-    from ..operators.grid import assign_cells_joined
+    from ..operators.grid import assign_cells_joined, cell_texts
     assigned = assign_cells_joined(boxes_fixed, positions)
     return cell_texts(assigned, positions)
-
-
-def result_spans(cells: DataFrame, pages: DataFrame = None) -> DataFrame:
-    """Cells -> ordered output spans per doc:
-    per page ascending, optional image span (from ``pages`` media_ref),
-    then text spans in row-major cell order; offset = dense sequence."""
-    text_spans = cells.select(
-        "doc_id", "page",
-        F.lit("text").alias("kind"),
-        F.col("cell_text").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.col("row_idx"), F.col("col_idx"),
-        F.lit(1).alias("_k"),  # after the image span of the same page
-    )
-    if pages is not None:
-        image_spans = pages.select(
-            "doc_id", "page",
-            F.lit("image").alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.col("media_ref"),
-            F.lit(-1).alias("row_idx"), F.lit(-1).alias("col_idx"),
-            F.lit(0).alias("_k"),
-        ).where(F.col("media_ref").isNotNull())
-        all_spans = text_spans.unionByName(image_spans)
-    else:
-        all_spans = text_spans
-
-    w = W.partitionBy("doc_id").orderBy("page", "_k", "row_idx", "col_idx")
-    return (
-        all_spans
-        .withColumn("offset", F.row_number().over(w) - 1)
-        .select("doc_id", "kind", "text", "media_ref", "offset")
-    )
 
 
 def result_spans_packed(packed: DataFrame, pages: DataFrame = None) -> DataFrame:

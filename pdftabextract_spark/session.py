@@ -57,8 +57,8 @@ def get_spark(app_name="pdftabextract_spark", cores=None, shuffle_partitions=Non
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # the grid-assignment cogroup joins a frame with an aggregate derived
-        # from itself; keys are unambiguous by construction (grouped by name
+        # the grid assignment joins boxes with per-page positions derived
+        # from them; keys are unambiguous by construction (grouped by name
         # on each side), so relax the strict self-join analyzer check
         .config("spark.sql.analyzer.failAmbiguousSelfJoin", "false")
     )

@@ -43,13 +43,14 @@ def main():
     base, params = bench.materialize_image_corpus(spark, 200)
     import pyspark.sql.functions as F
     from pdftabextract_spark.plans.pipeline import (
-        PipelineParams, extract_cells_image_path, _materialize, cell_texts)
+        PipelineParams, extract_cells_image_path, _materialize)
     from pdftabextract_spark.operators.imgstage import (
         detect_lines_with_rotation, apply_rotation_to_lines,
         rotate_boxes_back, line_border_centers)
     from pdftabextract_spark.operators.model import fit_and_repair
     from pdftabextract_spark.operators.clustering import page_profiles
-    from pdftabextract_spark.operators.grid import assign_cells_joined
+    from pdftabextract_spark.operators.grid import (
+        assign_cells_joined, cell_texts)
 
     boxes = spark.read.parquet(os.path.join(base, "boxes"))
     pages = spark.read.parquet(os.path.join(base, "pages"))
@@ -95,8 +96,7 @@ def main():
         cols = repaired.select("doc_id", "page",
                                F.col("centers_fixed").alias("col_positions"))
         tm("4 model fit+repair", lambda: cols.count())
-        prof = page_profiles(bf, pipe.col_break_dist, pipe.row_break_dist,
-                             num_partitions=pipe.profile_partitions)
+        prof = page_profiles(bf, pipe.col_break_dist, pipe.row_break_dist)
         pad_y = float(pipe.pad_y)
         rows = prof.select(
             "doc_id", "page",

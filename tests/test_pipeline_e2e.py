@@ -3,9 +3,11 @@ full pipeline (north-rule invariant: (kind, text, media_ref, order) per
 document)."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from pdftabextract_spark.sources import synth
+from pdftabextract_spark.operators.clustering import cluster_centers
+from pdftabextract_spark.operators.model import fit_and_repair
 from pdftabextract_spark.plans.pipeline import (
     PipelineParams, extract_from_span_table, extract_cells)
 from pdftabextract_spark.sources.spans import textboxes_from_spans
@@ -102,19 +104,20 @@ def test_pack_joined_raises_on_non_contiguous_input(spark):
         return (doc, page, box_id, left, 10.0, 5.0, 5.0, "v",
                 [0.0, 50.0, 100.0], [0.0, 30.0, 60.0])
 
-    # page 1 recurs after page 2 closed it — within one partition. (A
-    # trailing page 3 keeps the recurrence out of the carry buffer, which
-    # deliberately re-merges a recurrence of the LAST key in a batch.)
+    # page 1 recurs after page 2 closed it — within one partition: once
+    # followed by another page, once as the last row of the batch
     rows = [row("d", 1, 0, 5.0), row("d", 2, 0, 5.0), row("d", 1, 1, 55.0),
             row("d", 3, 0, 5.0)]
-    joined = spark.createDataFrame(
-        rows, "doc_id string, page int, box_id int, left double, top double, "
-              "width double, height double, value string, "
-              "col_positions array<double>, row_positions array<double>"
-    ).coalesce(1)
-    with pytest.raises(Exception) as exc:
-        pack_joined(joined).count()
-    assert "page-contiguous" in str(exc.value) or "recurred" in str(exc.value)
+    for bad_rows in (rows, rows[:3]):
+        joined = spark.createDataFrame(
+            bad_rows, "doc_id string, page int, box_id int, left double, "
+                      "top double, width double, height double, value string, "
+                      "col_positions array<double>, row_positions array<double>"
+        ).coalesce(1)
+        with pytest.raises(Exception) as exc:
+            pack_joined(joined).count()
+        assert "page-contiguous" in str(exc.value) \
+            or "recurred" in str(exc.value)
 
     # sanity: the same rows in contiguous order pack cleanly into 3 pages
     ok_rows = [rows[0], rows[2], rows[1], rows[3]]
@@ -212,6 +215,61 @@ def test_image_page_attribution_multi_trailing(spark):
                    6: "mem://m/c.png"}
 
 
+def page_extents(boxes: DataFrame) -> DataFrame:
+    """Per-page max right / max bottom (the closing column and row
+    borders)."""
+    return boxes.groupBy("doc_id", "page").agg(
+        F.max(F.col("left") + F.col("width")).alias("max_right"),
+        F.max(F.col("top") + F.col("height")).alias("max_bottom"))
+
+
+def column_positions(boxes: DataFrame, params: PipelineParams,
+                     extents: DataFrame) -> DataFrame:
+    """Per-page column borders via a window clustering of text lefts +
+    corpus model repair (schoollist_2-style columns, §3.3, with the
+    catalogue's get_adjusted_cluster_centers model fit)."""
+    centers = cluster_centers(
+        boxes, "left", params.col_break_dist, ("doc_id", "page"), center="median")
+    repaired = fit_and_repair(
+        centers, params.n_cols, params.model_break_dist,
+        same_size_use_model_arr_diff_thresh=params.same_size_use_model_arr_diff_thresh)
+    # borders: each repaired center - pad, then a right border safely past
+    # the last column (max box right + pad, but at least last center + 2*pad)
+    pad = float(params.pad_x)
+    return (
+        repaired.join(extents.select("doc_id", "page", "max_right"), ["doc_id", "page"])
+        .select(
+            "doc_id", "page",
+            F.concat(
+                F.transform("centers_fixed", lambda c: c - F.lit(pad)),
+                F.array(F.greatest(
+                    F.col("max_right") + F.lit(pad),
+                    F.element_at("centers_fixed", -1) + F.lit(2 * pad),
+                )),
+            ).alias("col_positions"),
+        )
+    )
+
+
+def row_positions(boxes: DataFrame, params: PipelineParams,
+                  extents: DataFrame) -> DataFrame:
+    """Per-page row borders: window-cluster box tops, border = cluster min
+    top - pad_y, closing border = page max bottom + pad_y (schoollist-style
+    rows from text borders, §3.2 step 4)."""
+    row_mins = cluster_centers(
+        boxes, "top", params.row_break_dist, ("doc_id", "page"), center="min")
+    pad = float(params.pad_y)
+    return (
+        row_mins.groupBy("doc_id", "page")
+        .agg(F.array_sort(F.collect_list(F.col("center") - F.lit(pad))).alias("_tops"))
+        .join(extents.select("doc_id", "page", "max_bottom"), ["doc_id", "page"])
+        .select(
+            "doc_id", "page",
+            F.concat("_tops", F.array(F.col("max_bottom") + F.lit(pad))).alias("row_positions"),
+        )
+    )
+
+
 def test_fused_profiles_equal_window_formulation(spark):
     """positions_fused (single-exchange Arrow kernel) must produce
     byte-identical per-page borders to the window+agg formulation."""
@@ -219,8 +277,7 @@ def test_fused_profiles_equal_window_formulation(spark):
     from pdftabextract_spark.sources import synth
     from pdftabextract_spark.sources.spans import textboxes_from_spans
     from pdftabextract_spark.plans.pipeline import (
-        PipelineParams, positions_fused, page_extents, column_positions,
-        row_positions)
+        PipelineParams, positions_fused)
 
     params = synth.CorpusParams(seed=4242, n_docs=25, n_cols=5)
     pipe = PipelineParams(n_cols=5, min_col_width=params.min_col_width,
