@@ -39,8 +39,10 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pdftabextract_spark.session import default_cores, default_driver_mem  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 # cache mode for the extract pipeline's multi-branch materialization;
 # default from the round-5 interleaved A/B at the bench shape
 # (scripts/cache_ab.py, 6 rounds x 3 modes in ONE session, 2026-08-18):
@@ -296,8 +298,7 @@ def main():
     # JVM each pay 15-390s of GC + page-fault time (r5 session log:
     # gc_sec 387 -> 295 -> 33 -> 17 -> 0.6 across identical reps) before
     # reaching steady state. Benchmarks measure steady state.
-    xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS",
-                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+    xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", default_driver_mem())
     spark = get_spark(app_name="ptx-bench", cores=CPUS,
                       shuffle_partitions=max(CPUS, 8),
                       # UI on for per-rep stage attribution (REST API)

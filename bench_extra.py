@@ -56,13 +56,15 @@ def main():
                     help="print per-stage detail rows")
     args = ap.parse_args()
 
-    from pdftabextract_spark.session import get_spark
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from pdftabextract_spark.session import (
+        default_cores, default_driver_mem, get_spark)
+    cpus = default_cores()
     spark = get_spark(app_name="ptx-bench-extra", cores=cpus,
                       shuffle_partitions=max(cpus, 8),
                       extra_conf={"spark.ui.enabled": "true",
                                   "spark.ui.port": "0",
-                                  "spark.driver.extraJavaOptions": "-Xms32g"})
+                                  "spark.driver.extraJavaOptions":
+                                      "-Xms" + default_driver_mem()})
     import __spark_entry__ as entrymod
     qs = entrymod.queries()
 

@@ -307,6 +307,19 @@ def find_best_matching_array(base_arr, model_arr, same_size_use_model_arr_diff_t
     return best_arr, diff
 
 
+def repair_centers(centers, model_arr, same_size_use_model_arr_diff_thresh=None):
+    """One page's sorted centers -> the repaired array against the corpus
+    model (:func:`find_best_matching_array`); a page with no centers takes
+    the model itself."""
+    base = np.asarray(centers, dtype=float)
+    if len(base) == 0:
+        return model_arr
+    fixed, _ = find_best_matching_array(
+        base, model_arr,
+        same_size_use_model_arr_diff_thresh=same_size_use_model_arr_diff_thresh)
+    return fixed
+
+
 def fit_center_model(centers_norm_clusters, n_required_clusters):
     """Phase 2 of the corpus column-model fit: from pooled normalized
     per-page centers already clustered (list of (indices, values) tuples),

@@ -1,10 +1,11 @@
 """Page groups over a stream of Arrow batches.
 
 The per-page kernels (operators/clustering.page_profiles,
-operators/grid.pack_joined) read rows whose (doc_id, page) groups arrive
-contiguously within a partition, but Arrow cuts the partition into
-batches without regard to pages. ``iter_page_groups`` re-cuts the stream
-so every page is handed over whole, exactly once.
+operators/grid.profile_and_pack and pack_joined) read rows whose
+(doc_id, page) groups arrive contiguously within a partition, but Arrow
+cuts the partition into batches without regard to pages.
+``iter_page_groups`` re-cuts the stream so every page is handed over
+whole, exactly once.
 """
 
 import numpy as np

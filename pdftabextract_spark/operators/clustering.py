@@ -111,26 +111,24 @@ def cluster_centers_pluggable(df: DataFrame, value_col: str, group_cols,
 
 def page_profiles(boxes: DataFrame, col_break_dist: float,
                   row_break_dist: float) -> DataFrame:
-    """Fused per-page profile: ONE exchange + ONE Arrow kernel computes,
-    per (doc_id, page):
-
-      col_centers  sorted break-dist cluster medians of box lefts
-                   (exact percentile-0.5 parity: sorted-midpoint mean)
-      row_tops     sorted break-dist cluster MIN tops
-      max_right / max_bottom  page extents
+    """Fused per-page profile: ONE narrow Arrow kernel computes, per
+    (doc_id, page), the column cluster medians ``col_centers``, the row
+    cluster min tops ``row_tops`` and the extents ``max_right`` /
+    ``max_bottom`` (kernels/pagegrid.profile_pages).
 
     This replaces four separate passes over the box table (column window
-    + agg, row window + agg, extents agg, per-page centers re-agg) with
-    one repartition by the page key. Value parity with the window ops is
-    property-tested (tests/test_pipeline_e2e.py fused-vs-window).
+    + agg, row window + agg, extents agg, per-page centers re-agg). Value
+    parity with the window ops is property-tested (tests/test_pipeline_e2e.py
+    fused-vs-window).
 
-    The kernel is fully vectorized across each page-complete frame
-    (lexsort by (page, value); segment medians picked by index arithmetic
-    on the sorted values — no per-cluster Python loop); pages that
-    straddle Arrow batches are reassembled by kernels/pagegroups.
+    PRECONDITION: rows of one (doc_id, page) arrive contiguously within a
+    partition, as span-table boxes do by construction; ``group_pages``
+    establishes it for any other input. Pages that straddle Arrow batches
+    are reassembled by kernels/pagegroups, which raises when a page
+    recurs (never silent duplicates).
     """
-    import numpy as np
     import pandas as pd
+    from ..kernels.pagegrid import profile_pages
     from ..kernels.pagegroups import iter_page_groups
 
     cbd, rbd = float(col_break_dist), float(row_break_dist)
@@ -138,69 +136,33 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     src = boxes.select(
         "doc_id", "page", "left", "top",
         (F.col("left") + F.col("width")).alias("right"),
-        (F.col("top") + F.col("height")).alias("bottom")) \
-        .repartition("doc_id", "page") \
-        .sortWithinPartitions("doc_id", "page")
-
-    def _segments(vals_sorted, page_codes_sorted, dist):
-        """Sorted-within-page values -> (seg_start, seg_end) bounds where
-        a segment breaks on page change or gap >= dist."""
-        n = len(vals_sorted)
-        brk = np.empty(n, dtype=bool)
-        brk[0] = True
-        if n > 1:
-            brk[1:] = ((page_codes_sorted[1:] != page_codes_sorted[:-1])
-                       | (np.diff(vals_sorted) >= dist))
-        starts = np.flatnonzero(brk)
-        ends = np.append(starts[1:], n)
-        return starts, ends
-
-    def _process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
-        page_bounds = bounds[:-1]
-        n_pages = len(page_bounds)
-        # page codes in arrival (partition-sorted) order
-        codes = np.repeat(np.arange(n_pages), np.diff(bounds))
-
-        left = pdf["left"].to_numpy(dtype=float)
-        top = pdf["top"].to_numpy(dtype=float)
-        right = pdf["right"].to_numpy(dtype=float)
-        bottom = pdf["bottom"].to_numpy(dtype=float)
-
-        def per_page_clusters(vals, dist, center):
-            order = np.lexsort((vals, codes))
-            sv = vals[order]
-            sp = codes[order]
-            s, e = _segments(sv, sp, dist)
-            if center == "median":
-                # exact numpy-median of each sorted segment
-                cvals = (sv[(s + e - 1) // 2] + sv[(s + e) // 2]) / 2.0
-            else:  # min
-                cvals = sv[s]
-            seg_page = sp[s]
-            # segments are page-ordered; split into per-page lists
-            cuts = np.flatnonzero(np.concatenate(
-                [[True], seg_page[1:] != seg_page[:-1]]))
-            return np.split(cvals, cuts[1:])
-
-        col_lists = per_page_clusters(left, cbd, "median")
-        row_lists = per_page_clusters(top, rbd, "min")
-        max_r = np.maximum.reduceat(right, page_bounds)
-        max_b = np.maximum.reduceat(bottom, page_bounds)
-        assert len(col_lists) == len(row_lists) == n_pages
-        return pd.DataFrame({
-            "doc_id": pdf["doc_id"].to_numpy()[page_bounds],
-            "page": pdf["page"].to_numpy()[page_bounds],
-            "col_centers": [list(map(float, a)) for a in col_lists],
-            "row_tops": [list(map(float, a)) for a in row_lists],
-            "max_right": max_r,
-            "max_bottom": max_b,
-        })
+        (F.col("top") + F.col("height")).alias("bottom"))
 
     def kernel(batches):
         for pdf, bounds in iter_page_groups(batches, "page_profiles"):
-            yield _process(pdf, bounds)
+            cols, rows, max_r, max_b = profile_pages(
+                bounds, pdf["left"].to_numpy(dtype=float),
+                pdf["top"].to_numpy(dtype=float),
+                pdf["right"].to_numpy(dtype=float),
+                pdf["bottom"].to_numpy(dtype=float), cbd, rbd)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy()[bounds[:-1]],
+                "page": pdf["page"].to_numpy()[bounds[:-1]],
+                "col_centers": [list(map(float, a)) for a in cols],
+                "row_tops": [list(map(float, a)) for a in rows],
+                "max_right": max_r,
+                "max_bottom": max_b,
+            })
 
     return src.mapInPandas(
         kernel, schema="doc_id string, page int, "
                        "col_centers array<double>, row_tops array<double>, "
                        "max_right double, max_bottom double")
+
+
+def group_pages(df: DataFrame) -> DataFrame:
+    """One exchange + sort that puts each (doc_id, page)'s rows together
+    in one partition, contiguously — the precondition of the per-page
+    kernels (``page_profiles``, operators/grid) for input that is not
+    page-contiguous already."""
+    return df.repartition("doc_id", "page").sortWithinPartitions("doc_id", "page")

@@ -148,14 +148,16 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
        scan stage and shuffled un-reduced into the ``(d1, d2)``
        aggregation. Pairs are now enumerated from a per-shingle sorted
        doc-id list (``groupBy(s).collect_list`` — buffers bounded by
-       ``max_shingle_df`` because stop-shingles are dropped first) with a
-       JVM ``transform``/``slice``/``flatten`` expression, so generation
-       is codegen over 8-byte longs, runs at full parallelism after the
-       shingle exchange, and the shingle stream is derived once instead
-       of four times (census / anti-join probe / both self-join sides).
-       The doc-id list per surviving shingle is exactly the set the
-       self-join matched, and ``i < j`` over the sorted list is exactly
-       ``d1 < d2`` — same pair multiset, same counts.
+       ``max_shingle_df`` because stop-shingles are dropped first) with
+       two chained JVM generators: ``posexplode`` of the sorted list,
+       then ``explode(slice(ds, pos + 2, size))`` of the ids after each
+       position. Generation is codegen over 8-byte longs, runs at full
+       parallelism after the shingle exchange, and the shingle stream is
+       derived once instead of four times (census / anti-join probe /
+       both self-join sides). The doc-id list per surviving shingle is
+       exactly the set the self-join matched, and each id paired with
+       every later id of the sorted list is exactly ``d1 < d2`` — same
+       pair multiset, same counts.
 
     Pass ``max_shingle_df=None`` for exact
     Jaccard; ``log_dropped=True`` counts and warns about dropped

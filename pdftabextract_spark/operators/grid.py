@@ -2,17 +2,23 @@
 
 The assignment is the reference's interval theta-join with argmax
 (/root/reference/pdftabextract/extract.py:46-117), scored per page by the
-numpy broadcast kernel kernels/gridfit.assign_boxes_to_cells. Two
-operators run it:
+numpy broadcast kernel kernels/gridfit.assign_boxes_to_cells. The
+operators that run it:
 
-* ``assign_and_pack`` (text path): one Arrow-batched mapInPandas stage
-  that assigns and materializes the cell texts, emitting one packed row
-  per page. Pages that straddle Arrow batches are reassembled by
-  kernels/pagegroups.
+* ``profile_and_pack`` (text path): one Arrow-batched mapInPandas stage
+  over the boxes alone; with the corpus column model in its closure it
+  profiles each page, repairs the centers, builds the borders, assigns
+  and materializes the cell texts, emitting one packed row per page.
+
+* ``pack_joined`` / ``assign_and_pack``: the same packing for boxes that
+  arrive joined with precomputed per-page border arrays.
 
 * ``assign_cells_joined`` (image, catalogue and schoollist paths): the
   long form, one row per box with its (row_idx, col_idx); ``cell_texts``
   / ``cell_texts_lines`` then aggregate it onto the full grid.
+
+The per-page kernels share kernels/pagegrid and take pages whole from
+kernels/pagegroups, which reassembles pages that straddle Arrow batches.
 
 Cell text parity: join_texts (textboxes.py:154-162) — sort by left (stable
 by box order), join with ' ', strip.
@@ -82,29 +88,52 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
 
 def assign_and_pack(boxes: DataFrame, positions: DataFrame,
                     page_contiguous: bool = False) -> DataFrame:
-    """Fused assignment + cell-text materialization: one Arrow-batched
-    mapInPandas stage emitting ONE ROW PER PAGE:
-    (doc_id, page, n_rows, n_cols, cells array<string> row-major,
-    n_unmatched). No grid-side shuffle at all — the long-form cells join
-    (grid x texts, ~2x corpus rows through the exchange) and the
-    document-wide result window disappear; offsets derive from page-level
-    cumsums downstream. Cell-text parity: join_texts (sort by (left,
-    box_id), ' '-join, strip — textboxes.py:154-162)."""
+    """Assignment + cell-text materialization given per-page border
+    arrays: boxes joined with ``positions``, then ``pack_joined``. With
+    ``page_contiguous=False`` the joined rows first go through
+    operators/clustering.group_pages."""
+    from .clustering import group_pages
+
     joined = boxes.join(
         positions.select("doc_id", "page", "col_positions", "row_positions"),
         ["doc_id", "page"])
-    # the kernel aggregates PER PAGE: every page's rows must live in one
-    # partition and arrive contiguously; the kernel carries the trailing
-    # page group across Arrow batch boundaries — without all this, pages
-    # straddling a batch emit duplicate partial rows and the output
-    # depends on parallelism. Boxes exploded from the span table are
-    # page-contiguous by construction (one doc row -> one exploded run,
-    # spans in offset order), so that path skips the exchange; a runtime
-    # invariant inside pack_joined fails loudly if the assumption breaks.
     if not page_contiguous:
-        joined = joined.repartition("doc_id", "page") \
-                       .sortWithinPartitions("doc_id", "page")
+        joined = group_pages(joined)
     return pack_joined(joined)
+
+
+def _pack_pages(rows: DataFrame, name: str, page_grids) -> DataFrame:
+    """Page-contiguous box rows -> one packed row per page: (doc_id, page,
+    n_rows, n_cols, cells array<string> row-major, n_unmatched).
+    ``page_grids(pdf, bounds, l, t, r, b)`` yields each page's
+    (col_positions, row_positions) in frame order."""
+    import pandas as pd
+    from ..kernels.pagegrid import pack_page
+    from ..kernels.pagegroups import iter_page_groups
+
+    def kernel(batches):
+        for pdf, bounds in iter_page_groups(batches, name):
+            l = pdf["left"].to_numpy(dtype=float)
+            t = pdf["top"].to_numpy(dtype=float)
+            r = l + pdf["width"].to_numpy(dtype=float)
+            b = t + pdf["height"].to_numpy(dtype=float)
+            box_id = pdf["box_id"].to_numpy()
+            value = pdf["value"].to_numpy()
+            doc_ids = pdf["doc_id"].to_numpy()
+            pages = pdf["page"].to_numpy()
+            grids = page_grids(pdf, bounds, l, t, r, b)
+            yield pd.DataFrame(
+                [(doc_ids[s], int(pages[s])) + pack_page(
+                    l[s:e], t[s:e], r[s:e], b[s:e], box_id[s:e], value[s:e],
+                    col_pos, row_pos)
+                 for s, e, (col_pos, row_pos)
+                 in zip(bounds[:-1], bounds[1:], grids)],
+                columns=["doc_id", "page", "n_rows", "n_cols", "cells",
+                         "n_unmatched"])
+
+    return rows.mapInPandas(
+        kernel, schema="doc_id string, page int, n_rows int, n_cols int, "
+                       "cells array<string>, n_unmatched int")
 
 
 def pack_joined(joined: DataFrame) -> DataFrame:
@@ -112,56 +141,52 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     PRECONDITION: rows of one (doc_id, page) arrive contiguously within a
     partition; violations raise (never silent duplicates)."""
     import numpy as np
-    import pandas as pd
-    from ..kernels.gridfit import assign_boxes_to_cells
-    from ..kernels.pagegroups import iter_page_groups
 
-    def _process(pdf: pd.DataFrame, bounds: np.ndarray) -> pd.DataFrame:
-        l = pdf["left"].to_numpy(dtype=float)
-        t = pdf["top"].to_numpy(dtype=float)
-        r = l + pdf["width"].to_numpy(dtype=float)
-        b = t + pdf["height"].to_numpy(dtype=float)
-        box_id = pdf["box_id"].to_numpy()
-        value = pdf["value"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy()
-        pages = pdf["page"].to_numpy()
+    def page_grids(pdf, bounds, *_):
         col_pos = pdf["col_positions"].to_numpy()
         row_pos = pdf["row_positions"].to_numpy()
-        out = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            cp = np.asarray(col_pos[s], dtype=float)
-            rp = np.asarray(row_pos[s], dtype=float)
-            n_rows, n_cols = len(rp) - 1, len(cp) - 1
-            ltrb = np.stack([l[s:e], t[s:e], r[s:e], b[s:e]], axis=1)
-            ri, ci = assign_boxes_to_cells(ltrb, cp, rp)
-            matched = ri >= 0
-            cell_idx = ri[matched] * n_cols + ci[matched]
-            cells = [""] * (n_rows * n_cols)
-            if cell_idx.size:
-                midx = matched.nonzero()[0] + s
-                lefts = l[s:e][matched]
-                bids = box_id[midx]
-                vals = value[midx]
-                ordc = np.lexsort((bids, lefts, cell_idx))
-                ci_sorted = cell_idx[ordc]
-                v_sorted = vals[ordc]
-                cuts = np.flatnonzero(np.concatenate(
-                    [[True], ci_sorted[1:] != ci_sorted[:-1], [True]]))
-                for cs, ce in zip(cuts[:-1], cuts[1:]):
-                    cells[int(ci_sorted[cs])] = " ".join(
-                        str(v) for v in v_sorted[cs:ce]).strip()
-            out.append((doc_ids[s], int(pages[s]), n_rows, n_cols,
-                        cells, int((~matched).sum())))
-        return pd.DataFrame(out, columns=[
-            "doc_id", "page", "n_rows", "n_cols", "cells", "n_unmatched"])
+        return ((np.asarray(col_pos[s], dtype=float),
+                 np.asarray(row_pos[s], dtype=float)) for s in bounds[:-1])
 
-    def kernel(batches):
-        for pdf, bounds in iter_page_groups(batches, "assign_and_pack"):
-            yield _process(pdf, bounds)
+    return _pack_pages(joined, "assign_and_pack", page_grids)
 
-    return joined.mapInPandas(
-        kernel, schema="doc_id string, page int, n_rows int, n_cols int, "
-                       "cells array<string>, n_unmatched int")
+
+def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
+                     row_break_dist: float, pad_x: float, pad_y: float,
+                     same_size_use_model_arr_diff_thresh=None) -> DataFrame:
+    """Boxes + the fitted corpus column model -> one packed row per page
+    (``pack_joined``'s schema) in ONE narrow Arrow kernel. Per page it
+    profiles the boxes (kernels/pagegrid.profile_pages, the math of
+    operators/clustering.page_profiles), repairs the column centers
+    against the model (kernels/clustering.repair_centers), builds the
+    borders (kernels/pagegrid.page_borders) and assigns and packs the
+    boxes (kernels/pagegrid.pack_page). The model rides the closure (it
+    is O(n_cols) doubles), so no per-page border array is ever joined
+    onto the box rows.
+
+    PRECONDITION: as for ``page_profiles`` — rows of one (doc_id, page)
+    arrive contiguously within a partition; violations raise. Boxes with
+    a null doc_id or page get no packed row, like the inner join of
+    ``assign_and_pack`` (they still count in the model fit)."""
+    import numpy as np
+    from ..kernels.clustering import repair_centers
+    from ..kernels.pagegrid import page_borders, profile_pages
+
+    m = np.array(model, dtype=float)
+    cbd, rbd = float(col_break_dist), float(row_break_dist)
+    pad_x, pad_y = float(pad_x), float(pad_y)
+    thresh = same_size_use_model_arr_diff_thresh
+
+    def page_grids(pdf, bounds, l, t, r, b):
+        cols, rows, max_r, max_b = profile_pages(bounds, l, t, r, b, cbd, rbd)
+        for i in range(len(cols)):
+            yield page_borders(repair_centers(cols[i], m, thresh), rows[i],
+                               max_r[i], max_b[i], pad_x, pad_y)
+
+    src = boxes.where(F.col("doc_id").isNotNull() & F.col("page").isNotNull()) \
+        .select("doc_id", "page", "box_id", "left", "top", "width", "height",
+                "value")
+    return _pack_pages(src, "profile_and_pack", page_grids)
 
 
 def cells_from_positions(positions: DataFrame) -> DataFrame:

@@ -9,7 +9,9 @@ see kernels.clustering for the math):
   stage C (driver)       sequential-stateful iterative filter to exactly
                          n_required medians (kernels.fit_center_model)
   stage D (distributed)  broadcast the model; per-page repair via
-                         find_best_matching_array in an Arrow-batched UDF
+                         find_best_matching_array (kernels.repair_centers)
+                         in an Arrow-batched UDF — the text path runs it
+                         inside its pack kernel (operators/grid)
 
 The only corpus-wide exchange is stage B's aggregation of ~pages x columns
 doubles; payload to the driver is O(distinct column offsets).
@@ -20,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..kernels.clustering import (
-    fit_center_model, fit_center_model_summaries, find_best_matching_array,
+    fit_center_model, fit_center_model_summaries, repair_centers,
     zip_clusters_and_values, find_clusters_1d_break_dist,
 )
 
@@ -274,16 +276,9 @@ def repair_page_centers(page_centers: DataFrame, model: np.ndarray,
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def _repair(centers: pd.Series) -> pd.Series:
         m = np.array(model_list, dtype=float)
-        out = []
-        for arr in centers:
-            base = np.asarray(arr, dtype=float)
-            if len(base) == 0:
-                out.append([float(x) for x in m])
-                continue
-            fixed, _ = find_best_matching_array(
-                base, m, same_size_use_model_arr_diff_thresh=thresh)
-            out.append([float(x) for x in fixed])
-        return pd.Series(out)
+        return pd.Series([
+            [float(x) for x in repair_centers(arr, m, thresh)]
+            for arr in centers])
 
     return page_centers.withColumn("centers_fixed", _repair(F.col(centers_col)))
 

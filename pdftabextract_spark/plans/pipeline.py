@@ -4,21 +4,23 @@ Stages (SURVEY.md §3.4):
   scan      span table -> textbox rows + page rows (JVM-side, sources/spans)
   [image]   media_ref -> page-image bytes -> Hough lines -> rotation/skew
             repair (operators/imgstage) — optional, catalogue_30s path
-  profiles  one exchange by (doc_id, page) + one Arrow kernel: per-page
+  profiles  one narrow Arrow kernel over the persisted boxes: per-page
             column cluster medians, row cluster min tops and extents
             (operators/clustering.page_profiles)
-  columns   corpus column model fit over the pooled per-page centers +
-            per-page repair (operators/model) — the model reduces to
-            O(distinct offsets) rows on the driver
-  grid      borders -> assign + pack: one Arrow kernel assigns boxes to
-            cells and emits one packed row per page (operators/grid)
+  columns   corpus column model fit over the pooled per-page centers
+            (operators/model) — reduces to O(distinct offsets) rows on
+            the driver; the model is n_cols doubles
+  grid      one narrow Arrow kernel over the same boxes, with the model in
+            its closure: per page it re-profiles, repairs the centers,
+            builds the borders, assigns the boxes to cells and emits one
+            packed row (operators/grid.profile_and_pack)
   output    packed pages -> ordered result spans via page-level offsets
 
-Scale notes: every per-page stage partitions by (doc_id, page) — the unit
-of work is a page, never a whole document, which defuses pages-per-doc
-skew (north rule). All heavy expressions are JVM-side; Python runs only
-in the profile kernel, the model-repair pandas UDF and the assign+pack
-kernel.
+Scale notes: the unit of work is a page, never a whole document. Both
+passes need each page's rows contiguous within a partition: span-table
+boxes are by construction, so the text path moves no box across the
+network; other inputs get one exchange by (doc_id, page) first. All heavy
+expressions are JVM-side; Python runs only in the two page kernels.
 """
 
 from dataclasses import dataclass
@@ -83,16 +85,23 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     return df
 
 
+def _pooled_centers(profiles: DataFrame) -> DataFrame:
+    """Per-page sorted column centers -> the model fit's pooled column:
+    each page's centers normalized to start at 0 by a JVM transform
+    (centers - centers[0]) instead of a window min."""
+    return profiles.select(
+        F.explode(F.transform(
+            "col_centers",
+            lambda c: c - F.element_at("col_centers", 1))).alias("center_norm"))
+
+
 def positions_fused(boxes: DataFrame, params: PipelineParams,
                     persist: bool = True) -> DataFrame:
-    """Per-page (col_positions, row_positions) via the FUSED profile
-    stage: one exchange + one Arrow kernel over boxes computes column
-    cluster medians, row cluster min-tops, and page extents together
-    (operators/clustering.page_profiles); the corpus model fit pools the
-    per-page center arrays with a JVM transform (centers - centers[0])
-    instead of a second window pass, and the border assembly is pure
-    array expressions on the tiny one-row-per-page frame — the 3 window/
-    agg passes + 3-way join of the unfused formulation disappear."""
+    """Per-page (col_positions, row_positions) as a frame: page profiles,
+    the corpus model fit, the model-repair pandas UDF and the border
+    assembly as array expressions on the one-row-per-page frame. Same
+    precondition as page_profiles. extract_cells_packed computes the same
+    borders inside its pack kernel and never materializes this frame."""
     from ..operators.clustering import page_profiles
     from ..operators.model import fit_column_model_pooled, repair_page_centers
 
@@ -100,11 +109,7 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
                              params.row_break_dist)
     if persist:
         profiles = _materialize(profiles, params.cache)
-    pooled = profiles.select(
-        F.explode(F.transform(
-            "col_centers",
-            lambda c: c - F.element_at("col_centers", 1))).alias("center_norm"))
-    model = fit_column_model_pooled(pooled, params.n_cols,
+    model = fit_column_model_pooled(_pooled_centers(profiles), params.n_cols,
                                     params.model_break_dist)
     repaired = repair_page_centers(
         profiles, model, centers_col="col_centers",
@@ -143,18 +148,39 @@ def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
                          persist: bool = True, page_contiguous: bool = False) -> DataFrame:
     """boxes -> the packed per-page form (doc_id, page, n_rows, n_cols,
     cells array, n_unmatched) — the shape the span assembler consumes
-    without any further wide shuffle.
+    without any further wide shuffle. Two narrow passes over the boxes:
 
-    ``persist``: the exploded textbox table feeds both the profile kernel
-    and the assignment; one materialization beats re-scanning the span
-    table (scan + explode + JSON parse) per branch."""
+      1. page profiles -> pooled centers -> the corpus column model
+         (a driver-side array of n_cols doubles);
+      2. one kernel that profiles, repairs, builds the borders, assigns
+         and packs each page with the model in its closure.
+
+    Both passes need each page's rows contiguous within a partition.
+    Span-table boxes are (``page_contiguous=True``: one doc row explodes
+    into one run, spans in offset order); any other input goes through
+    ONE exchange + sort by (doc_id, page) here, before the persist.
+
+    ``persist``: the box table feeds both passes; one materialization
+    beats re-scanning the span table (scan + explode + JSON parse) per
+    pass."""
+    from ..operators.clustering import group_pages, page_profiles
+    from ..operators.grid import profile_and_pack
+    from ..operators.model import fit_column_model_pooled
+
     # scan-time zero-area drop (parse_pages rect validation,
     # common.py:138-141) — Catalyst pushes this into the source scan
     boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
+    if not page_contiguous:
+        boxes = group_pages(boxes)
     if persist:
         boxes = _materialize(boxes, params.cache)
-    positions = positions_fused(boxes, params, persist)
-    return assign_and_pack_from(boxes, positions, page_contiguous)
+    profiles = page_profiles(boxes, params.col_break_dist,
+                             params.row_break_dist)
+    model = fit_column_model_pooled(_pooled_centers(profiles), params.n_cols,
+                                    params.model_break_dist)
+    return profile_and_pack(
+        boxes, model, params.col_break_dist, params.row_break_dist,
+        params.pad_x, params.pad_y, params.same_size_use_model_arr_diff_thresh)
 
 
 def assign_and_pack_from(boxes: DataFrame, positions: DataFrame,
@@ -209,14 +235,16 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     cols = repaired.select("doc_id", "page",
                            F.col("centers_fixed").alias("col_positions"))
 
-    # rows + extents via the FUSED profile kernel (one exchange), exactly
-    # like the text path's positions_fused — replaces the unfused
-    # cluster_centers window + extents agg + join (3 exchanges over the
-    # box table). row_tops = break-dist cluster MIN tops, identical to
-    # row_positions' center="min" clustering (fused-vs-window parity is
-    # property-tested); the kernel's col medians ride along unused.
-    from ..operators.clustering import page_profiles
-    prof = page_profiles(boxes_fixed, params.col_break_dist,
+    # rows + extents via the FUSED profile kernel, exactly like the text
+    # path — replaces the unfused cluster_centers window + extents agg +
+    # join (3 exchanges over the box table). row_tops = break-dist
+    # cluster MIN tops, identical to row_positions' center="min"
+    # clustering (fused-vs-window parity is property-tested); the
+    # kernel's col medians ride along unused. The rotated boxes come out
+    # of a join, so one exchange by page restores the kernel's
+    # page-contiguity precondition.
+    from ..operators.clustering import group_pages, page_profiles
+    prof = page_profiles(group_pages(boxes_fixed), params.col_break_dist,
                          params.row_break_dist)
     pad_y = float(params.pad_y)
     rows = prof.select(

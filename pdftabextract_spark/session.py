@@ -11,11 +11,34 @@ import os
 
 from pyspark.sql import SparkSession
 
+# local mode: the driver heap is ALL the memory Spark has; this share of
+# the host's memory leaves room for the Python workers and the OS
+HEAP_SHARE = 0.6
+
+
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else HEAP_SHARE of MemTotal (as a JVM
+    size, e.g. ``9216m``)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return "%dm" % (int(line.split()[1]) * HEAP_SHARE // 1024)
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
 
 def get_spark(app_name="pdftabextract_spark", cores=None, shuffle_partitions=None,
               arrow_max_records=2048, extra_conf=None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores), 8)
 
@@ -51,10 +74,9 @@ def get_spark(app_name="pdftabextract_spark", cores=None, shuffle_partitions=Non
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # one Arrow batch ~ a bounded number of pages/boxes per Python call
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
-        # local mode: the driver heap is ALL the memory there is; size it
-        # to the machine (the sandbox has 128GiB) — an 8g heap makes big
+        # size the heap to the machine — a heap far below it makes big
         # persists evict/spill and large jobs go superlinear
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # the grid assignment joins boxes with per-page positions derived

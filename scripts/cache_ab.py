@@ -16,13 +16,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pdftabextract_spark.session import default_cores, get_spark  # noqa: E402
+
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=6000)
     ap.add_argument("--rounds", type=int, default=6)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=default_cores())
     ap.add_argument("--modes", default="persist,checkpoint,none")
     args = ap.parse_args()
     modes = args.modes.split(",")
@@ -32,7 +34,6 @@ def main():
     from bench import materialize_corpus
     from pdftabextract_spark.plans.pipeline import (
         PipelineParams, extract_from_span_table)
-    from pdftabextract_spark.session import get_spark
     from pdftabextract_spark.sources import synth
 
     spark = get_spark(app_name="ptx-cache-ab", cores=args.cpus,

@@ -15,7 +15,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from pdftabextract_spark.session import (  # noqa: E402
+    default_cores, default_driver_mem, get_spark)
+
+CPUS = default_cores()
 CACHE = os.environ.get("SPARK_GRAFT_CACHE_MODE", "checkpoint")
 REPS = int(os.environ.get("REPS", "3"))
 
@@ -34,12 +37,12 @@ def _one(fn):
 
 
 def main():
-    from pdftabextract_spark.session import get_spark
     import bench
 
     spark = get_spark(app_name="img-profile", cores=CPUS,
                       shuffle_partitions=max(CPUS, 8),
-                      extra_conf={"spark.driver.extraJavaOptions": "-Xms32g"})
+                      extra_conf={"spark.driver.extraJavaOptions":
+                                  "-Xms" + default_driver_mem()})
     base, params = bench.materialize_image_corpus(spark, 200)
     import pyspark.sql.functions as F
     from pdftabextract_spark.plans.pipeline import (
@@ -48,7 +51,8 @@ def main():
         detect_lines_with_rotation, apply_rotation_to_lines,
         rotate_boxes_back, line_border_centers)
     from pdftabextract_spark.operators.model import fit_and_repair
-    from pdftabextract_spark.operators.clustering import page_profiles
+    from pdftabextract_spark.operators.clustering import (
+        group_pages, page_profiles)
     from pdftabextract_spark.operators.grid import (
         assign_cells_joined, cell_texts)
 
@@ -96,7 +100,8 @@ def main():
         cols = repaired.select("doc_id", "page",
                                F.col("centers_fixed").alias("col_positions"))
         tm("4 model fit+repair", lambda: cols.count())
-        prof = page_profiles(bf, pipe.col_break_dist, pipe.row_break_dist)
+        prof = page_profiles(group_pages(bf), pipe.col_break_dist,
+                             pipe.row_break_dist)
         pad_y = float(pipe.pad_y)
         rows = prof.select(
             "doc_id", "page",

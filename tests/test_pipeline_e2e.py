@@ -71,7 +71,9 @@ def test_cells_match_ground_truth(spark):
 
 def test_packed_pages_unique_across_batch_splits(spark):
     """Pages straddling Arrow batches must not emit duplicate partial rows
-    (regression: output depended on parallelism)."""
+    (regression: output depended on parallelism), and the span-table
+    fast path (no exchange) must pack exactly the rows the exchange path
+    packs."""
     from pdftabextract_spark.plans.pipeline import extract_cells_packed
     # tiny Arrow batches force every page to straddle batch boundaries
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -81,52 +83,94 @@ def test_packed_pages_unique_across_batch_splits(spark):
         expected = synth.expected_spans_df(spark, PARAMS).count()
         # both kernel paths: with the exchange, and the span-table
         # page-contiguous fast path (regression for the skipped exchange)
+        packed = {}
         for contiguous in (False, True):
-            packed = extract_cells_packed(boxes, PIPE,
-                                          page_contiguous=contiguous)
-            total = packed.count()
-            distinct = packed.select("doc_id", "page").distinct().count()
+            packed[contiguous] = extract_cells_packed(
+                boxes, PIPE, page_contiguous=contiguous)
+            total = packed[contiguous].count()
+            distinct = packed[contiguous].select(
+                "doc_id", "page").distinct().count()
             assert total == distinct, "contiguous=%s" % contiguous
-            n_spans = packed.agg(F.sum(F.size("cells"))).collect()[0][0]
+            n_spans = packed[contiguous].agg(
+                F.sum(F.size("cells"))).collect()[0][0]
             assert n_spans == expected, "contiguous=%s" % contiguous
+        assert packed[True].exceptAll(packed[False]).count() == 0
+        assert packed[False].exceptAll(packed[True]).count() == 0
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_pack_joined_raises_on_non_contiguous_input(spark):
-    """The packing kernel must fail loudly (not emit silent duplicates)
-    when its page-contiguity precondition is violated. The public join
-    path happens to restore contiguity under SMJ (sorted by join key), so
-    drive the kernel directly with interleaved joined-shape rows."""
-    from pdftabextract_spark.operators.grid import pack_joined
+    """Every per-page kernel must fail loudly (not emit silent duplicates)
+    when its page-contiguity precondition is violated: the packing kernel
+    (pack_joined), the profile pass (page_profiles) and the fused pass-2
+    kernel (profile_and_pack). The public join path happens to restore
+    contiguity under SMJ (sorted by join key), so drive the kernels
+    directly with interleaved joined-shape rows (a superset of the box
+    columns the other two read)."""
+    import numpy as np
+    from pdftabextract_spark.operators.clustering import page_profiles
+    from pdftabextract_spark.operators.grid import pack_joined, profile_and_pack
 
     def row(doc, page, box_id, left):
         return (doc, page, box_id, left, 10.0, 5.0, 5.0, "v",
                 [0.0, 50.0, 100.0], [0.0, 30.0, 60.0])
+
+    schema = ("doc_id string, page int, box_id int, left double, "
+              "top double, width double, height double, value string, "
+              "col_positions array<double>, row_positions array<double>")
+    kernels = {
+        "pack_joined": pack_joined,
+        "page_profiles": lambda df: page_profiles(df, 40.0, 15.0),
+        "profile_and_pack": lambda df: profile_and_pack(
+            df, np.array([0.0, 50.0]), 40.0, 15.0, 10.0, 8.0),
+    }
 
     # page 1 recurs after page 2 closed it — within one partition: once
     # followed by another page, once as the last row of the batch
     rows = [row("d", 1, 0, 5.0), row("d", 2, 0, 5.0), row("d", 1, 1, 55.0),
             row("d", 3, 0, 5.0)]
     for bad_rows in (rows, rows[:3]):
-        joined = spark.createDataFrame(
-            bad_rows, "doc_id string, page int, box_id int, left double, "
-                      "top double, width double, height double, value string, "
-                      "col_positions array<double>, row_positions array<double>"
-        ).coalesce(1)
-        with pytest.raises(Exception) as exc:
-            pack_joined(joined).count()
-        assert "page-contiguous" in str(exc.value) \
-            or "recurred" in str(exc.value)
+        bad = spark.createDataFrame(bad_rows, schema).coalesce(1)
+        for name, kernel in kernels.items():
+            with pytest.raises(Exception) as exc:
+                kernel(bad).count()
+            assert "page-contiguous" in str(exc.value) \
+                or "recurred" in str(exc.value), name
 
-    # sanity: the same rows in contiguous order pack cleanly into 3 pages
+    # sanity: the same rows in contiguous order pass cleanly: 3 pages
     ok_rows = [rows[0], rows[2], rows[1], rows[3]]
-    ok = spark.createDataFrame(
-        ok_rows, "doc_id string, page int, box_id int, left double, top double, "
-                 "width double, height double, value string, "
-                 "col_positions array<double>, row_positions array<double>"
-    ).coalesce(1)
-    assert pack_joined(ok).count() == 3
+    ok = spark.createDataFrame(ok_rows, schema).coalesce(1)
+    for name, kernel in kernels.items():
+        assert kernel(ok).count() == 3, name
+
+
+def test_span_path_plan_has_no_box_exchange(spark):
+    """The span-table path runs both passes narrow: the profile pass
+    (which feeds the eager model fit, so it is not in the result's plan)
+    has no Exchange, and the only Exchange of the result's plan is the
+    doc_id window over the packed page rows — none is keyed on
+    (doc_id, page), i.e. none moves the box table."""
+    import re
+    from pdftabextract_spark.operators.clustering import page_profiles
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("formatted")
+
+    def exchange_keys(df):
+        plan = df._jdf.queryExecution().explainString(mode)
+        assert "BroadcastExchange" not in plan, plan
+        # node sections of the formatted plan: "(N) Exchange" + Arguments
+        args = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
+                          plan, re.M)
+        return [re.sub(r"#\d+", "", re.match(
+            r"hashpartitioning\((.*), \d+\)", a).group(1)) for a in args]
+
+    span_docs = synth.span_docs_df(spark, PARAMS)
+    assert exchange_keys(page_profiles(
+        textboxes_from_spans(span_docs), PIPE.col_break_dist,
+        PIPE.row_break_dist)) == []
+    assert exchange_keys(extract_from_span_table(span_docs, PIPE)) == ["doc_id"]
 
 
 def test_image_page_attribution_with_sparse_images(spark):
@@ -301,9 +345,10 @@ def test_fused_profiles_equal_window_formulation(spark):
 def test_skewed_page_counts_extraction(spark):
     """North-star skew hardening: pages-per-doc is heavy-tailed at corpus
     scale. A corpus where a few docs carry 50x the median page count must
-    extract with exact span-sequence equality — the unit of work is the
-    PAGE key (doc_id, page), so a mega-doc spreads across partitions
-    instead of hot-spotting one."""
+    extract with exact span-sequence equality. A document's pages stay in
+    its scan partition (span-table boxes are page-contiguous, so neither
+    pass exchanges them); the kernels stream that partition in Arrow
+    batches, carrying at most one page across a batch boundary."""
     from pyspark.sql import functions as F
     from pdftabextract_spark.sources import synth
     from pdftabextract_spark.plans.pipeline import (
