@@ -297,7 +297,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return simhash(_load(spark, sf, "documents"))
 
     def q18_ngram_jaccard(spark, sf):
-        # word-3-gram Jaccard near-dup candidate pairs (shingle equi-join)
+        # word-3-gram Jaccard near-dup pairs (shared shingles counted per doc)
         from pdftabextract_spark.operators.dedup import ngram_jaccard_pairs
         return ngram_jaccard_pairs(_load(spark, sf, "documents"), n=3, threshold=0.2)
 

@@ -6,13 +6,20 @@ engines (the DuckDB oracles in __spark_entry__ compute identical values).
 Scale notes: exact dedup is one hash-groupBy; minhash/simhash shuffle once
 on doc_id after the word explode (map-side partial min/sum aggregation
 keeps the exchange small); LSH banding turns the quadratic near-dup
-problem into an equi-join on band buckets; the shingle join for n-gram
-Jaccard is bounded by shingle frequency — salting hot shingles or capping
-document frequency (stop-shingle removal) is the knob at 100 TB, exposed
-as ``max_shingle_df``.
+problem into an equi-join on band buckets; n-gram Jaccard counts shared
+shingles per document in one Arrow kernel over per-shingle sorted doc
+lists, whose length (the pair fanout) is bounded by capping document
+frequency (stop-shingle removal) — the knob at 100 TB, exposed as
+``max_shingle_df``.
 """
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql.types import IntegralType
+
+from ..kernels.overlap import OUT_DDL as _COUNTS_DDL, shared_shingle_counts
+from ..partitioning import shuffle_partitions, spread_small_input
 
 PORTABLE_HASH = "cast(conv(substring(md5({x}), 1, 8), 16, 10) as bigint)"
 
@@ -120,56 +127,56 @@ def word_shingles(docs: DataFrame, n=3, text_col="text", id_col="doc_id",
 
 MAX_SHINGLE_DF_DEFAULT = 1000
 
-from ..partitioning import spread_small_input as _spread_small_input  # noqa: E402
-
 
 def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
                         text_col="text", id_col="doc_id",
                         max_shingle_df=MAX_SHINGLE_DF_DEFAULT,
                         log_dropped=False) -> DataFrame:
-    """Near-dup pairs by word-n-gram Jaccard >= threshold. ``max_shingle_df``
-    drops shingles appearing in more than that many docs (stop-shingles) —
-    THE scale knob: it bounds the per-shingle pair fanout at df^2 (default
-    1000 -> <=1e6 pairs per hot shingle) at the cost of slightly
-    underestimating overlap of boilerplate-heavy pairs. An unbounded hot
-    shingle (site boilerplate in 50% of a 10^9-doc corpus) otherwise makes
-    pair generation quadratic in its document frequency.
+    """Near-dup pairs by word-n-gram Jaccard >= threshold -> (d1, d2,
+    common, jaccard) with d1 < d2, ``common`` the number of distinct
+    shingles the two docs share and ``jaccard`` rounded to 6 places.
+    ``id_col`` must be an integral column whose values are unique; a
+    non-integral one raises ``TypeError`` before any job runs.
 
-    .. note:: **Changed in round 3** — the default was ``None`` (exact
-       Jaccard, unbounded fanout); it is now 1000. Callers relying on
-       exact Jaccard for shingles with document frequency above 1000
-       must pass ``max_shingle_df=None`` explicitly.
+    ``max_shingle_df`` drops shingles appearing in more than that many
+    docs (stop-shingles). It bounds the per-shingle doc list, and so the
+    pair fanout, at the cost of slightly underestimating the overlap of
+    boilerplate-heavy pairs; doc sizes are counted after the drop. Pass
+    ``None`` for exact Jaccard. ``log_dropped=True`` counts and warns
+    about dropped stop-shingles (one extra pass over the corpus; keep it
+    off the hot path).
 
-    .. note:: **Rewritten in round 6 (plan only — output identical).**
-       Candidate pairs used to come from a shingle self-equi-join
-       (``a.s = b.s AND a.doc_id < b.doc_id``): the full pair fanout
-       (~df^2/2 rows per shingle, measured 127M rows / 849 MB at the
-       sf1.0 bench corpus) was produced by join machinery inside the
-       scan stage and shuffled un-reduced into the ``(d1, d2)``
-       aggregation. Pairs are now enumerated from a per-shingle sorted
-       doc-id list (``groupBy(s).collect_list`` — buffers bounded by
-       ``max_shingle_df`` because stop-shingles are dropped first) with
-       two chained JVM generators: ``posexplode`` of the sorted list,
-       then ``explode(slice(ds, pos + 2, size))`` of the ids after each
-       position. Generation is codegen over 8-byte longs, runs at full
-       parallelism after the shingle exchange, and the shingle stream is
-       derived once instead of four times (census / anti-join probe /
-       both self-join sides). The doc-id list per surviving shingle is
-       exactly the set the self-join matched, and each id paired with
-       every later id of the sorted list is exactly ``d1 < d2`` — same
-       pair multiset, same counts.
+    Plan:
 
-    Pass ``max_shingle_df=None`` for exact
-    Jaccard; ``log_dropped=True`` counts and warns about dropped
-    stop-shingles (one extra action — keep off the hot path)."""
-    sh = word_shingles(_spread_small_input(docs), n, text_col, id_col,
+    1. hashed shingles, one exchange on ``s``; the stop-shingle drop is a
+       window count on that partitioning (shingles are distinct per doc,
+       so the count is the document frequency);
+    2. ``collect_list`` of each shingle's docs, sorted, then one row per
+       (shingle, doc): ``d1`` and ``tail``, the docs after it in the list
+       (``posexplode`` + ``slice``);
+    3. exchange on ``d1``, sorted within partitions, then one
+       ``mapInArrow`` kernel (kernels/overlap.shared_shingle_counts)
+       counts each (d1, d2)'s shared shingles per d1 group. A doc's row
+       count is its size ``sz1``, so the kernel drops every pair that
+       fails the necessary bound ``common >= (t - 1e-6)*sz1 - 1`` and
+       emits one size row per doc;
+    4. one small exchange on ``coalesce(d2, d1)``: a window ``max`` hands
+       each candidate its ``sz2`` from d2's size row, and the exact
+       ``round(jaccard, 6) >= threshold`` filter runs.
+
+    The pair stream never crosses an exchange or a hash aggregation, and
+    the shingle stream is derived once."""
+    id_type = docs.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError("ngram_jaccard_pairs: id_col %r must be an integral "
+                        "type, got %s" % (id_col, id_type.simpleString()))
+    sh = word_shingles(spread_small_input(docs), n, text_col, id_col,
                        hashed=True)
-    # The repartition pins the exchange at the session's shuffle
-    # parallelism: AQE sizes post-shuffle partitions by the *exchange*
-    # bytes (a few MB of doc-id lists) and would coalesce the stage that
-    # explodes them into the full pair fanout (measured: 10 tasks for a
-    # 125M-row generation on 32 cores).
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # The repartitions pin both exchanges at the session's shuffle
+    # parallelism: AQE sizes post-shuffle partitions by the exchange
+    # bytes and would coalesce the stages whose work (the doc-list
+    # explode, the counting kernel) is far larger than their input.
+    n_part = shuffle_partitions(docs.sparkSession)
     if max_shingle_df is not None and log_dropped:
         # diagnostic path (explicitly off the hot path): a separate df
         # census so the dropped count can be reported
@@ -183,69 +190,33 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
                 "df > %d" % (n_hot, max_shingle_df))
         sh = sh.join(hot, "s", "left_anti").repartition(n_part, "s")
     elif max_shingle_df is not None:
-        # stop-shingle drop fused into the ONE exchange on s: after the
-        # repartition every row of a shingle is in one partition, so a
-        # whole-partition window count over s IS the global document
-        # frequency (shingles are distinct per doc). This replaces the
-        # round-6-initial separate census (a second full shingle
-        # derivation + a broadcast anti-join whose hot-set broadcast is
-        # itself unbounded on adversarial corpora) — interleaved A/B:
-        # 8.3-9.2s -> 7.2-7.9s at sf1.0, 2.0-2.4 -> 1.6-2.0 at sf0.1.
-        # The window buffer spills to disk for a pathologically hot
-        # shingle (ExternalAppendOnlyUnsafeRowArray), which is strictly
-        # safer than broadcasting a huge hot set.
+        # a pathologically hot shingle spills the window buffer to disk
+        # rather than failing
         sh = (sh.repartition(n_part, "s")
               .withColumn("_df", F.count("*").over(W.partitionBy("s")))
               .where(F.col("_df") <= max_shingle_df).drop("_df"))
     else:
         sh = sh.repartition(n_part, "s")
-    # per-group doc lists are bounded by max_shingle_df (the filter above
-    # removed every group larger than the cap), so the aggregation buffer
-    # is O(cap) per shingle at any corpus size. With max_shingle_df=None
-    # the buffer is unbounded — but so is the pair fanout that mode
-    # explicitly opts into.
-    g = sh.groupBy("s").agg(F.collect_list("doc_id").alias("ds"))
-    sizes = (g.select(F.explode("ds").alias("doc_id"))
-             .groupBy("doc_id").agg(F.count("*").alias("sz")))
-    # enumerate i < j pairs of the sorted list with two chained generators
-    # over primitive longs (slice is 1-based; length may overshoot — slice
-    # clamps): no per-pair struct allocation, no flattened pair arrays
-    # candidate pairs are near-unique (measured 114M distinct of 127M
-    # generated at sf1.0), so a map-side partial aggregation cannot reduce
-    # the exchange — the explicit repartition on the group keys makes the
-    # planner emit ONE complete aggregation after the exchange instead of
-    # a useless partial pass over the full fanout before it
-    pairs = (g.where(F.size("ds") >= 2)
-             .select(F.array_sort("ds").alias("ds"))
+    tails = (sh.groupBy("s").agg(F.array_sort(F.collect_list("doc_id"))
+                                 .alias("ds"))
              .select("ds", F.posexplode("ds"))
-             .select(F.col("col").alias("d1"),
-                     F.explode(F.slice("ds", F.col("pos") + F.lit(2),
-                                       F.size("ds"))).alias("d2"))
-             .repartition(n_part, "d1", "d2")
-             .groupBy("d1", "d2")
-             .agg(F.count("*").alias("common")))
-    # threshold pushdown below the size joins (exact): jaccard >= t
-    # requires common >= t*(sz1+sz2)/(1+t) >= t*2*min(sz)/(1+t), so any
-    # pair under the corpus-min bound cannot reach the threshold no
-    # matter its sizes. The -1 slack absorbs float representation error
-    # (common is integral, the true bound real — a pair on the boundary
-    # is kept and re-checked by the exact filter below). Measured at
-    # sf1.0: the bound (min_sz 7 -> common >= 3) drops 99.1% of the
-    # 114M aggregated pairs before the two size joins and the jaccard
-    # arithmetic; the 1-row min is a broadcast, not a driver action.
-    min_sz = sizes.agg(F.min("sz").alias("_min_sz"))
-    bound = (F.col("_min_sz") * F.lit(2.0 * threshold / (1.0 + threshold))
-             - F.lit(1.0))
-    pairs = (pairs.crossJoin(F.broadcast(min_sz))
-             .where(F.col("common") >= bound)
-             .drop("_min_sz"))
-    sa = sizes.select(F.col("doc_id").alias("d1"), F.col("sz").alias("sz1"))
-    sb = sizes.select(F.col("doc_id").alias("d2"), F.col("sz").alias("sz2"))
-    jac = F.col("common") / (F.col("sz1") + F.col("sz2") - F.col("common"))
-    return (pairs.join(sa, "d1").join(sb, "d2")
+             # slice is 1-based and clamps; the last doc gets an empty tail
+             .select(F.col("col").cast("long").alias("d1"),
+                     F.slice("ds", F.col("pos") + F.lit(2), F.size("ds"))
+                     .cast("array<long>").alias("tail")))
+    counts = (tails.repartition(n_part, "d1").sortWithinPartitions("d1")
+              .mapInArrow(partial(shared_shingle_counts, threshold=threshold),
+                          _COUNTS_DDL))
+    sz2 = F.max(F.when(F.col("d2").isNull(), F.col("sz"))).over(
+        W.partitionBy(F.coalesce("d2", "d1")))
+    jac = F.col("common") / (F.col("sz") + F.col("sz2") - F.col("common"))
+    return (counts.withColumn("sz2", sz2)
+            .where(F.col("d2").isNotNull())
             .withColumn("jaccard", F.round(jac, 6))
             .where(F.col("jaccard") >= threshold)
-            .select("d1", "d2", "common", "jaccard"))
+            .select(F.col("d1").cast(id_type).alias("d1"),
+                    F.col("d2").cast(id_type).alias("d2"),
+                    "common", "jaccard"))
 
 
 def neardup_components(pairs: DataFrame, a_col="a", b_col="b",

@@ -5,6 +5,8 @@ cores the session has (splits cannot be finer than row groups), so any
 operator doing heavy per-row work directly on such a scan serializes on a
 handful of tasks. ``spread_small_input`` fixes exactly that case without
 penalizing at-scale inputs, which already arrive in enough splits.
+``shuffle_partitions`` reads the session's shuffle parallelism for
+operators that pin an exchange width.
 """
 
 from pyspark.sql import DataFrame
@@ -39,3 +41,14 @@ def spread_small_input(df: DataFrame,
     except Exception:
         return df
     return df.repartition(target) if min_bytes <= size < max_bytes else df
+
+
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, or the default
+    parallelism when it is not a number (e.g. ``"auto"``, which some
+    Spark distributions accept to let AQE choose)."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism

@@ -111,6 +111,131 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
     assert capped == 0  # only the universal shingle connected the docs
 
 
+def _overlap_docs(spark, seed=5, n_docs=300):
+    """Docs over a 12-word vocabulary, a fifth of them edited copies of
+    earlier ones: plenty of shared 3-grams, several pairs at any
+    threshold. ``hot`` is a shingle prefixed to one doc in three."""
+    rng = np.random.default_rng(seed)
+    vocab = "a b c d e f g h i j k l".split()
+    texts = []
+    for i in range(n_docs):
+        if i and rng.random() < 0.2:
+            ws = texts[rng.integers(0, i)].split(" ")
+            ws[rng.integers(0, len(ws))] = "x"
+        else:
+            ws = list(rng.choice(vocab, rng.integers(3, 25)))
+        texts.append(" ".join(ws))
+    texts = [("hot stop shingle " + t) if i % 3 == 0 else t
+             for i, t in enumerate(texts)]
+    ids = rng.permutation(np.arange(-n_docs, n_docs))[:n_docs] * 1000
+    return spark.createDataFrame(
+        [(int(d), t) for d, t in zip(ids, texts)], "doc_id long, text string")
+
+
+def _brute_force_pairs(spark, docs, n, threshold, max_df):
+    """The q18 oracle's formula from Python-counted shared shingles."""
+    from collections import Counter
+    from itertools import combinations
+    sh = {}
+    for r in docs.collect():
+        ws = r["text"].split(" ")
+        sh[r["doc_id"]] = {" ".join(ws[i:i + n])
+                           for i in range(len(ws) - n + 1)}
+    df = Counter(s for ss in sh.values() for s in ss)
+    sh = {d: {s for s in ss if max_df is None or df[s] <= max_df}
+          for d, ss in sh.items()}
+    rows = [(a, b, len(sh[a] & sh[b]), len(sh[a]), len(sh[b]))
+            for a, b in combinations(sorted(sh), 2) if sh[a] & sh[b]]
+    p = spark.createDataFrame(rows, "d1 long, d2 long, common long, "
+                                    "sz1 long, sz2 long")
+    jac = F.round(F.col("common") / (F.col("sz1") + F.col("sz2")
+                                     - F.col("common")), 6)
+    return (p.withColumn("jaccard", jac).where(F.col("jaccard") >= threshold)
+            .select("d1", "d2", "common", "jaccard"))
+
+
+def _assert_same_rows(a, b):
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def test_ngram_jaccard_equals_brute_force_at_any_arrow_batch_size(spark):
+    """The counting kernel carries d1 groups across Arrow batches: the
+    result at 3 records per batch (every doc split over batches) equals
+    the one at 10000 and the brute-force pairs, with and without the
+    stop-shingle cap."""
+    docs = _overlap_docs(spark)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    for max_df, threshold in ((None, 0.2), (40, 0.5)):
+        want = _brute_force_pairs(spark, docs, 3, threshold, max_df)
+        assert want.count() > 20
+        got = {}
+        try:
+            for batch in (3, 10000):
+                spark.conf.set(key, str(batch))
+                got[batch] = spark.createDataFrame(
+                    D.ngram_jaccard_pairs(docs, threshold=threshold,
+                                          max_shingle_df=max_df).collect(),
+                    "d1 long, d2 long, common long, jaccard double")
+        finally:
+            spark.conf.set(key, old)
+        _assert_same_rows(got[3], got[10000])
+        _assert_same_rows(got[3], want)
+
+
+def test_ngram_jaccard_log_dropped_warns_and_matches(spark):
+    docs = _overlap_docs(spark, seed=6)
+    with pytest.warns(UserWarning, match="dropping [1-9]\\d* stop-shingles"):
+        logged = D.ngram_jaccard_pairs(docs, max_shingle_df=40,
+                                       log_dropped=True)
+    _assert_same_rows(logged, D.ngram_jaccard_pairs(docs, max_shingle_df=40))
+
+
+def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
+    """The plan reads the documents once and never aggregates or
+    nested-loop-joins the pair stream: shared shingles are counted per
+    d1 group in the Arrow kernel."""
+    import re
+    path = str(tmp_path / "documents.parquet")
+    _overlap_docs(spark).write.parquet(path)
+    out = D.ngram_jaccard_pairs(spark.read.parquet(path))
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    assert "MapInArrow" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert not re.search(r"Keys \[2\]: \[d1#\d+L?, d2#\d+L?\]", plan), plan
+    assert out.schema.simpleString() == \
+        "struct<d1:bigint,d2:bigint,common:bigint,jaccard:double>"
+
+
+def test_ngram_jaccard_rejects_non_integral_id_before_any_job(spark):
+    docs = spark.createDataFrame([("a", "x y z w"), ("b", "x y z v")],
+                                 "doc_id string, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("ngram-jaccard-id-type", "type check")
+    try:
+        with pytest.raises(TypeError, match="integral"):
+            D.ngram_jaccard_pairs(docs)
+        assert sc.statusTracker().getJobIdsForGroup(
+            "ngram-jaccard-id-type") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_ngram_jaccard_keeps_integer_id_type(spark):
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox runs")],
+        "doc_id int, text string")
+    out = D.ngram_jaccard_pairs(docs)
+    assert out.schema.simpleString() == \
+        "struct<d1:int,d2:int,common:bigint,jaccard:double>"
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 2, 0.5)]
+
+
 def test_cosine_topk_and_ann_agree_on_top1(spark):
     rng = np.random.RandomState(7)
     base = rng.rand(40, 16).astype("float32")
