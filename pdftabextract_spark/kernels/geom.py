@@ -166,49 +166,6 @@ def rectintersect(a, b, norm_intersect_area=None):
     return raw / 1.0
 
 
-def rectintersect_matrix(boxes, cells, norm="b"):
-    """Vectorized rect intersection: boxes (N,4) x cells (M,4) as
-    (l,t,r,b) float arrays -> (N,M) array of normalized intersection areas,
-    NaN where disjoint. Used by the grid-assignment kernel; same per-pair
-    semantics as :func:`rectintersect` with norm_intersect_area='b'
-    (normalize by the *box* area — parity: extract.py:84 where 'b' is the
-    textbox rect)."""
-    boxes = np.asarray(boxes, dtype=float)
-    cells = np.asarray(cells, dtype=float)
-    bl, bt, br, bb = (boxes[:, i][:, None] for i in range(4))
-    cl, ct, cr, cb = (cells[:, i][None, :] for i in range(4))
-
-    dx1 = br - cl  # b[1][0]-a[0][0] with a=cell, b=box
-    dx2 = cr - bl
-    dy1 = bb - ct
-    dy2 = cb - bt
-    disjoint = (dx1 < 0) | (dx2 < 0) | (dy1 < 0) | (dy2 < 0)
-
-    raw = np.minimum(np.abs(dx1), np.abs(dx2)) * np.minimum(np.abs(dy1), np.abs(dy2))
-    area_box = ((br - bl) * (bb - bt))
-    area_cell = ((cr - cl) * (cb - ct))
-    raw = np.minimum(raw, np.minimum(area_box, area_cell))
-    if norm == "b":
-        out = raw / area_box
-    elif norm == "a":
-        out = raw / area_cell
-    else:
-        out = raw
-    out = np.where(disjoint, np.nan, out)
-    return out
-
-
-def rectcenter_dist_matrix(boxes, cells):
-    """Vectorized center distance: boxes (N,4) x cells (M,4) -> (N,M)."""
-    boxes = np.asarray(boxes, dtype=float)
-    cells = np.asarray(cells, dtype=float)
-    bcx = (boxes[:, 0] + boxes[:, 2])[:, None] / 2
-    bcy = (boxes[:, 1] + boxes[:, 3])[:, None] / 2
-    ccx = (cells[:, 0] + cells[:, 2])[None, :] / 2
-    ccy = (cells[:, 1] + cells[:, 3])[None, :] / 2
-    return np.hypot(bcx - ccx, bcy - ccy)
-
-
 def normalize_angle(theta):
     """Normalize angle into [0, 2*pi), with the reference's 0.99999
     rounding-error fudge. Parity: geom.py:223-240."""

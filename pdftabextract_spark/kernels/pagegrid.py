@@ -1,21 +1,25 @@
-"""Per-page grid math shared by the text-path Arrow kernels.
+"""Page grid math shared by the text-path Arrow kernels.
 
-Spark-free numpy functions over the frames that
+Spark-free numpy/pyarrow functions over the frames that
 kernels/pagegroups.iter_page_groups hands out (``bounds`` = page run
 bounds of the frame):
 
 * ``profile_pages``  column cluster medians, row cluster min tops and the
   page extents of every page in a frame (operators/clustering.page_profiles);
-* ``page_borders``   repaired centers + profile -> column and row borders;
-* ``pack_page``      assign one page's boxes and join each cell's texts
-  (operators/grid.pack_joined).
+* ``page_borders``   repaired centers + profile -> one page's column and
+  row borders;
+* ``pack_pages``     a frame's assigned boxes (kernels/gridfit.assign_pages)
+  -> each page's cell texts, every page in one join (operators/grid).
 
-operators/grid.profile_and_pack chains all three per page.
+operators/grid.profile_and_pack chains all of them: profile and borders
+per page, then one assignment and one pack per frame.
 """
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from .gridfit import assign_boxes_to_cells
+from .strings import WHITESPACE
 
 
 def _segments(vals_sorted, page_codes_sorted, dist):
@@ -86,25 +90,37 @@ def page_borders(centers_fixed, row_tops, max_right, max_bottom,
     return cols, rows
 
 
-def pack_page(left, top, right, bottom, box_id, value,
-              col_positions, row_positions):
-    """One page's boxes -> (n_rows, n_cols, cells, n_unmatched): ``cells``
-    is the row-major list of cell texts, '' for an empty cell. Cell-text
-    parity: join_texts (sort by (left, box_id), ' '-join, strip —
-    textboxes.py:154-162)."""
-    n_rows, n_cols = len(row_positions) - 1, len(col_positions) - 1
-    ltrb = np.stack([left, top, right, bottom], axis=1)
-    ri, ci = assign_boxes_to_cells(ltrb, col_positions, row_positions)
-    matched = ri >= 0
-    cell_idx = ri[matched] * n_cols + ci[matched]
-    cells = [""] * (n_rows * n_cols)
-    if cell_idx.size:
-        ordc = np.lexsort((box_id[matched], left[matched], cell_idx))
-        ci_sorted = cell_idx[ordc]
-        v_sorted = value[matched][ordc]
-        cuts = np.flatnonzero(np.concatenate(
-            [[True], ci_sorted[1:] != ci_sorted[:-1], [True]]))
-        for cs, ce in zip(cuts[:-1], cuts[1:]):
-            cells[int(ci_sorted[cs])] = " ".join(
-                str(v) for v in v_sorted[cs:ce]).strip()
-    return n_rows, n_cols, cells, int((~matched).sum())
+def pack_pages(bounds, row_idx, col_idx, n_rows, n_cols, left, box_id,
+               value):
+    """A frame's assigned boxes (kernels/gridfit.assign_pages) -> (cells,
+    n_unmatched) per page: ``cells`` is a pyarrow list<string> array of
+    each page's row-major cell texts, '' for an empty cell. ``value`` is
+    a pyarrow string array.
+
+    Cell-text parity: join_texts (sort by (left, box_id), ' '-join,
+    strip every str.isspace character — textboxes.py:154-162). A null
+    ``value`` is skipped like array_join skips it in
+    operators/grid.cell_texts; a cell holding only nulls is ''. All
+    pages go through one lexsort over a global cell index and one
+    ``binary_join``."""
+    n_cells = np.asarray(n_rows, dtype=np.int64) * n_cols
+    cell_start = np.concatenate([[0], np.cumsum(n_cells)])
+    code = np.repeat(np.arange(len(n_cells)), np.diff(bounds))
+    matched = row_idx >= 0
+    n_unmatched = np.bincount(code[~matched], minlength=len(n_cells))
+
+    idx = np.flatnonzero(
+        matched & value.is_valid().to_numpy(zero_copy_only=False))
+    cell = cell_start[code[idx]] + row_idx[idx] * n_cols[code[idx]] \
+        + col_idx[idx]
+    order = np.lexsort((box_id[idx], left[idx], cell))
+    cell = cell[order]
+    starts = np.flatnonzero(np.diff(cell, prepend=-1))
+    joined = pc.utf8_trim(pc.binary_join(pa.ListArray.from_arrays(
+        pa.array(np.append(starts, len(cell)), pa.int32()),
+        value.take(pa.array(idx[order]))), " "), WHITESPACE)
+    slot = np.full(cell_start[-1], len(starts))
+    slot[cell[starts]] = np.arange(len(starts))
+    flat = pa.concat_arrays([joined, pa.array([""])]).take(pa.array(slot))
+    return (pa.ListArray.from_arrays(pa.array(cell_start, pa.int32()), flat),
+            n_unmatched)

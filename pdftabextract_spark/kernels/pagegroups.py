@@ -4,12 +4,19 @@ The per-page kernels (operators/clustering.page_profiles,
 operators/grid.profile_and_pack and pack_joined) read rows whose
 (doc_id, page) groups arrive contiguously within a partition, but Arrow
 cuts the partition into batches without regard to pages.
-``iter_page_groups`` re-cuts the stream so every page is handed over
-whole, exactly once.
+``iter_page_groups`` re-cuts the stream of pyarrow record batches
+(mapInArrow) so every page is handed over whole, exactly once.
 """
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+
+
+def column(batch: pa.RecordBatch, name: str, dtype=None) -> np.ndarray:
+    """A record batch column as a numpy array; a null becomes NaN in a
+    numeric column and None in a string column, as in a pandas frame."""
+    return np.asarray(batch.column(name).to_numpy(zero_copy_only=False),
+                      dtype=dtype)
 
 
 def page_bounds(doc_ids: np.ndarray, pages: np.ndarray) -> np.ndarray:
@@ -26,8 +33,8 @@ def page_bounds(doc_ids: np.ndarray, pages: np.ndarray) -> np.ndarray:
 
 
 def iter_page_groups(batches, name: str):
-    """pandas batches -> (frame, bounds) pairs in which every page is
-    complete and ``bounds`` = page_bounds of the frame.
+    """Arrow record batches -> (batch, bounds) pairs in which every page
+    is complete and ``bounds`` = page_bounds of the batch.
 
     The trailing page of a batch is held back and prepended to the next
     one. A page that recurs after its group closed means the input was
@@ -35,9 +42,7 @@ def iter_page_groups(batches, name: str):
     pages, so it raises instead."""
     seen = set()
 
-    def closed(pdf, bounds):
-        doc_ids = pdf["doc_id"].to_numpy()
-        pages = pdf["page"].to_numpy()
+    def closed(batch, doc_ids, pages, bounds):
         for s in bounds[:-1]:
             key = (doc_ids[s], pages[s])
             if key in seen:
@@ -45,18 +50,21 @@ def iter_page_groups(batches, name: str):
                     "%s: page %r recurred after its group closed; input "
                     "rows are not page-contiguous" % (name, key))
             seen.add(key)
-        return pdf, bounds
+        return batch, bounds
 
     carry = None
-    for pdf in batches:
-        if len(pdf) == 0:
+    for batch in batches:
+        if batch.num_rows == 0:
             continue
         if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        bounds = page_bounds(pdf["doc_id"].to_numpy(), pdf["page"].to_numpy())
+            batch = pa.Table.from_batches([carry, batch]).combine_chunks() \
+                .to_batches()[0]
+        doc_ids, pages = column(batch, "doc_id"), column(batch, "page")
+        bounds = page_bounds(doc_ids, pages)
         last = bounds[-2]
-        carry = pdf.iloc[last:]
+        carry = batch.slice(last)
         if last:
-            yield closed(pdf.iloc[:last], bounds[:-1])
+            yield closed(batch.slice(0, last), doc_ids, pages, bounds[:-1])
     if carry is not None:
-        yield closed(carry, np.array([0, len(carry)]))
+        yield closed(carry, column(carry, "doc_id"), column(carry, "page"),
+                     np.array([0, carry.num_rows]))

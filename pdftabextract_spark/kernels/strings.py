@@ -25,3 +25,8 @@ def rel_levenshtein(s1: str, s2: str) -> float:
     """Levenshtein normalized by max length, in [0, 1]."""
     maxlen = max(len(s1), len(s2))
     return levenshtein(s1, s2) / float(maxlen) if maxlen > 0 else 0.0
+
+
+# every character str.isspace() accepts (none lies above U+3000): the set
+# str.strip() removes, for the Arrow and Spark trims that must match it
+WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())

@@ -127,9 +127,10 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     are reassembled by kernels/pagegroups, which raises when a page
     recurs (never silent duplicates).
     """
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
     from ..kernels.pagegrid import profile_pages
-    from ..kernels.pagegroups import iter_page_groups
+    from ..kernels.pagegroups import column, iter_page_groups
 
     cbd, rbd = float(col_break_dist), float(row_break_dist)
 
@@ -138,23 +139,31 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         (F.col("left") + F.col("width")).alias("right"),
         (F.col("top") + F.col("height")).alias("bottom"))
 
-    def kernel(batches):
-        for pdf, bounds in iter_page_groups(batches, "page_profiles"):
-            cols, rows, max_r, max_b = profile_pages(
-                bounds, pdf["left"].to_numpy(dtype=float),
-                pdf["top"].to_numpy(dtype=float),
-                pdf["right"].to_numpy(dtype=float),
-                pdf["bottom"].to_numpy(dtype=float), cbd, rbd)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[bounds[:-1]],
-                "page": pdf["page"].to_numpy()[bounds[:-1]],
-                "col_centers": [list(map(float, a)) for a in cols],
-                "row_tops": [list(map(float, a)) for a in rows],
-                "max_right": max_r,
-                "max_bottom": max_b,
-            })
+    def doubles(values):
+        # from_pandas: a NaN becomes null, which F.greatest skips when
+        # the positions close a page's column borders (plans/pipeline)
+        return pa.array(values, pa.float64(), from_pandas=True)
 
-    return src.mapInPandas(
+    def lists(arrays):
+        offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays])])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), doubles(np.concatenate(arrays)))
+
+    def kernel(batches):
+        for batch, bounds in iter_page_groups(batches, "page_profiles"):
+            cols, rows, max_r, max_b = profile_pages(
+                bounds, *(column(batch, c, float)
+                          for c in ("left", "top", "right", "bottom")),
+                cbd, rbd)
+            first = pa.array(bounds[:-1])
+            yield pa.RecordBatch.from_arrays([
+                batch.column("doc_id").take(first),
+                batch.column("page").take(first).cast(pa.int32()),
+                lists(cols), lists(rows), doubles(max_r), doubles(max_b)],
+                names=["doc_id", "page", "col_centers", "row_tops",
+                       "max_right", "max_bottom"])
+
+    return src.mapInArrow(
         kernel, schema="doc_id string, page int, "
                        "col_centers array<double>, row_tops array<double>, "
                        "max_right double, max_bottom double")

@@ -1,14 +1,16 @@
 """Grid construction + textbox->cell assignment + cell-text materialization.
 
 The assignment is the reference's interval theta-join with argmax
-(/root/reference/pdftabextract/extract.py:46-117), scored per page by the
-numpy broadcast kernel kernels/gridfit.assign_boxes_to_cells. The
-operators that run it:
+(pdftabextract extract.py:46-117), run over a whole batch
+of complete pages at once by the one assignment kernel
+kernels/gridfit.assign_pages: each box is scored only against its
+candidate cells. The operators that run it:
 
-* ``profile_and_pack`` (text path): one Arrow-batched mapInPandas stage
-  over the boxes alone; with the corpus column model in its closure it
-  profiles each page, repairs the centers, builds the borders, assigns
-  and materializes the cell texts, emitting one packed row per page.
+* ``profile_and_pack`` (text path): one narrow mapInArrow stage over the
+  boxes alone; with the corpus column model in its closure it profiles
+  each page, repairs the centers and builds the borders, then assigns
+  every box of the batch and materializes the cell texts of all its
+  pages (kernels/pagegrid.pack_pages), emitting one packed row per page.
 
 * ``pack_joined`` / ``assign_and_pack``: the same packing for boxes that
   arrive joined with precomputed per-page border arrays.
@@ -17,8 +19,8 @@ operators that run it:
   long form, one row per box with its (row_idx, col_idx); ``cell_texts``
   / ``cell_texts_lines`` then aggregate it onto the full grid.
 
-The per-page kernels share kernels/pagegrid and take pages whole from
-kernels/pagegroups, which reassembles pages that straddle Arrow batches.
+The packing kernels take pages whole from kernels/pagegroups, which
+reassembles pages that straddle Arrow batches.
 
 Cell text parity: join_texts (textboxes.py:154-162) — sort by left (stable
 by box order), join with ' ', strip.
@@ -35,12 +37,11 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
     arrays (AQE picks broadcast when positions is small — one row per
     page), then ONE Arrow-batched mapInPandas kernel. Assignment is
     per-box independent given the page grid, so no grouping shuffle is
-    needed at all; the kernel just sub-groups each Arrow batch by page to
-    vectorize boxes x cells scoring. ~50x fewer Python crossings than a
-    per-page applyInPandas."""
+    needed at all: the kernel sorts each Arrow batch by page and assigns
+    all of its boxes in one kernels/gridfit.assign_pages call."""
     import numpy as np
     import pandas as pd
-    from ..kernels.gridfit import assign_boxes_to_cells
+    from ..kernels.gridfit import assign_pages
     from ..kernels.pagegroups import page_bounds
 
     joined = boxes.join(
@@ -52,8 +53,6 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
             n = len(pdf)
             if n == 0:
                 continue
-            # group by page via sort + slice on numpy arrays — no per-page
-            # pandas sub-frames/copies (53k pages per job add up)
             doc_ids = pdf["doc_id"].to_numpy()
             pages = pdf["page"].to_numpy()
             order = np.lexsort((pages, doc_ids))
@@ -61,16 +60,11 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
             t = pdf["top"].to_numpy(dtype=float)[order]
             r = l + pdf["width"].to_numpy(dtype=float)[order]
             b = t + pdf["height"].to_numpy(dtype=float)[order]
-            col_pos = pdf["col_positions"].to_numpy()[order]
-            row_pos = pdf["row_positions"].to_numpy()[order]
             bounds = page_bounds(doc_ids[order], pages[order])
-            out_row = np.empty(n, dtype=np.int64)
-            out_col = np.empty(n, dtype=np.int64)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                ltrb = np.stack([l[s:e], t[s:e], r[s:e], b[s:e]], axis=1)
-                ri, ci = assign_boxes_to_cells(ltrb, col_pos[s], row_pos[s])
-                out_row[s:e] = ri
-                out_col[s:e] = ci
+            first = order[bounds[:-1]]
+            ri, ci, _, _ = assign_pages(
+                bounds, l, t, r, b, pdf["col_positions"].to_numpy()[first],
+                pdf["row_positions"].to_numpy()[first])
             inv = np.empty(n, dtype=np.int64)
             inv[order] = np.arange(n)
             yield pd.DataFrame({
@@ -79,8 +73,8 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
                 "box_id": pdf["box_id"].to_numpy(),
                 "left": pdf["left"].to_numpy(),
                 "value": pdf["value"].to_numpy(),
-                "row_idx": out_row[inv],
-                "col_idx": out_col[inv],
+                "row_idx": ri[inv],
+                "col_idx": ci[inv],
             })
 
     return joined.mapInPandas(kernel, schema=_ASSIGN_SCHEMA)
@@ -104,34 +98,38 @@ def assign_and_pack(boxes: DataFrame, positions: DataFrame,
 
 def _pack_pages(rows: DataFrame, name: str, page_grids) -> DataFrame:
     """Page-contiguous box rows -> one packed row per page: (doc_id, page,
-    n_rows, n_cols, cells array<string> row-major, n_unmatched).
-    ``page_grids(pdf, bounds, l, t, r, b)`` yields each page's
-    (col_positions, row_positions) in frame order."""
-    import pandas as pd
-    from ..kernels.pagegrid import pack_page
-    from ..kernels.pagegroups import iter_page_groups
+    n_rows, n_cols, cells array<string> row-major, n_unmatched), through
+    one mapInArrow stage. ``page_grids(batch, bounds, l, t, r, b)``
+    returns each page's col_positions and row_positions (two sequences in
+    frame order); kernels/gridfit.assign_pages and
+    kernels/pagegrid.pack_pages then assign and pack every page of the
+    batch at once."""
+    import pyarrow as pa
+    from ..kernels.gridfit import assign_pages
+    from ..kernels.pagegrid import pack_pages
+    from ..kernels.pagegroups import column, iter_page_groups
 
     def kernel(batches):
-        for pdf, bounds in iter_page_groups(batches, name):
-            l = pdf["left"].to_numpy(dtype=float)
-            t = pdf["top"].to_numpy(dtype=float)
-            r = l + pdf["width"].to_numpy(dtype=float)
-            b = t + pdf["height"].to_numpy(dtype=float)
-            box_id = pdf["box_id"].to_numpy()
-            value = pdf["value"].to_numpy()
-            doc_ids = pdf["doc_id"].to_numpy()
-            pages = pdf["page"].to_numpy()
-            grids = page_grids(pdf, bounds, l, t, r, b)
-            yield pd.DataFrame(
-                [(doc_ids[s], int(pages[s])) + pack_page(
-                    l[s:e], t[s:e], r[s:e], b[s:e], box_id[s:e], value[s:e],
-                    col_pos, row_pos)
-                 for s, e, (col_pos, row_pos)
-                 in zip(bounds[:-1], bounds[1:], grids)],
-                columns=["doc_id", "page", "n_rows", "n_cols", "cells",
-                         "n_unmatched"])
+        for batch, bounds in iter_page_groups(batches, name):
+            l, t, w, h = (column(batch, c, float)
+                          for c in ("left", "top", "width", "height"))
+            r, b = l + w, t + h
+            col_pos, row_pos = page_grids(batch, bounds, l, t, r, b)
+            ri, ci, n_rows, n_cols = assign_pages(bounds, l, t, r, b,
+                                                  col_pos, row_pos)
+            cells, n_unmatched = pack_pages(
+                bounds, ri, ci, n_rows, n_cols, l, column(batch, "box_id"),
+                batch.column("value"))
+            first = pa.array(bounds[:-1])
+            yield pa.RecordBatch.from_arrays([
+                batch.column("doc_id").take(first),
+                batch.column("page").take(first).cast(pa.int32()),
+                pa.array(n_rows, pa.int32()), pa.array(n_cols, pa.int32()),
+                cells, pa.array(n_unmatched, pa.int32())],
+                names=["doc_id", "page", "n_rows", "n_cols", "cells",
+                       "n_unmatched"])
 
-    return rows.mapInPandas(
+    return rows.mapInArrow(
         kernel, schema="doc_id string, page int, n_rows int, n_cols int, "
                        "cells array<string>, n_unmatched int")
 
@@ -141,12 +139,17 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     PRECONDITION: rows of one (doc_id, page) arrive contiguously within a
     partition; violations raise (never silent duplicates)."""
     import numpy as np
+    import pyarrow as pa
 
-    def page_grids(pdf, bounds, *_):
-        col_pos = pdf["col_positions"].to_numpy()
-        row_pos = pdf["row_positions"].to_numpy()
-        return ((np.asarray(col_pos[s], dtype=float),
-                 np.asarray(row_pos[s], dtype=float)) for s in bounds[:-1])
+    def page_grids(batch, bounds, *_):
+        first = pa.array(bounds[:-1])
+        out = []
+        for name in ("col_positions", "row_positions"):
+            lists = batch.column(name).take(first)
+            out.append(np.split(
+                lists.flatten().to_numpy(zero_copy_only=False),
+                np.cumsum(lists.value_lengths().to_numpy())[:-1]))
+        return out
 
     return _pack_pages(joined, "assign_and_pack", page_grids)
 
@@ -158,11 +161,12 @@ def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
     (``pack_joined``'s schema) in ONE narrow Arrow kernel. Per page it
     profiles the boxes (kernels/pagegrid.profile_pages, the math of
     operators/clustering.page_profiles), repairs the column centers
-    against the model (kernels/clustering.repair_centers), builds the
-    borders (kernels/pagegrid.page_borders) and assigns and packs the
-    boxes (kernels/pagegrid.pack_page). The model rides the closure (it
-    is O(n_cols) doubles), so no per-page border array is ever joined
-    onto the box rows.
+    against the model (kernels/clustering.repair_centers) and builds the
+    borders (kernels/pagegrid.page_borders); then it assigns and packs
+    every page of the batch at once (kernels/gridfit.assign_pages,
+    kernels/pagegrid.pack_pages). The model rides the closure (it is
+    O(n_cols) doubles), so no per-page border array is ever joined onto
+    the box rows.
 
     PRECONDITION: as for ``page_profiles`` — rows of one (doc_id, page)
     arrive contiguously within a partition; violations raise. Boxes with
@@ -177,11 +181,11 @@ def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
     pad_x, pad_y = float(pad_x), float(pad_y)
     thresh = same_size_use_model_arr_diff_thresh
 
-    def page_grids(pdf, bounds, l, t, r, b):
+    def page_grids(batch, bounds, l, t, r, b):
         cols, rows, max_r, max_b = profile_pages(bounds, l, t, r, b, cbd, rbd)
-        for i in range(len(cols)):
-            yield page_borders(repair_centers(cols[i], m, thresh), rows[i],
-                               max_r[i], max_b[i], pad_x, pad_y)
+        return zip(*(page_borders(repair_centers(c, m, thresh), rw, mr, mb,
+                                  pad_x, pad_y)
+                     for c, rw, mr, mb in zip(cols, rows, max_r, max_b)))
 
     src = boxes.where(F.col("doc_id").isNotNull() & F.col("page").isNotNull()) \
         .select("doc_id", "page", "box_id", "left", "top", "width", "height",
@@ -217,14 +221,19 @@ def cells_from_positions(positions: DataFrame) -> DataFrame:
 def cell_texts(assigned: DataFrame, positions: DataFrame) -> DataFrame:
     """Aggregate assigned boxes into cell text (join_texts semantics) and
     left-join onto the FULL grid so empty cells materialize with ''.
-    Matched boxes only (row_idx >= 0)."""
+    Matched boxes only (row_idx >= 0). Null values are skipped and the
+    trim strips every str.isspace character, as kernels/pagegrid.pack_pages
+    does."""
+    from ..kernels.strings import WHITESPACE
+
     texts = (
         assigned.where(F.col("row_idx") >= 0)
         .groupBy("doc_id", "page", "row_idx", "col_idx")
         .agg(F.array_sort(F.collect_list(F.struct("left", "box_id", "value"))).alias("_b"))
         .select(
             "doc_id", "page", "row_idx", "col_idx",
-            F.trim(F.array_join(F.transform("_b", lambda b: b["value"]), " ")).alias("cell_text"),
+            F.trim(F.array_join(F.transform("_b", lambda b: b["value"]), " "),
+                   F.lit(WHITESPACE)).alias("cell_text"),
         )
     )
     grid = cells_from_positions(positions).select("doc_id", "page", "row_idx", "col_idx")

@@ -10,10 +10,13 @@ Stages (SURVEY.md §3.4):
   columns   corpus column model fit over the pooled per-page centers
             (operators/model) — reduces to O(distinct offsets) rows on
             the driver; the model is n_cols doubles
-  grid      one narrow Arrow kernel over the same boxes, with the model in
-            its closure: per page it re-profiles, repairs the centers,
-            builds the borders, assigns the boxes to cells and emits one
-            packed row (operators/grid.profile_and_pack)
+  grid      one narrow mapInArrow kernel over the same boxes, with the
+            model in its closure: per page it re-profiles, repairs the
+            centers and builds the borders; then it assigns every box of
+            the Arrow batch in one call (kernels/gridfit.assign_pages)
+            and packs all of the batch's pages at once
+            (kernels/pagegrid.pack_pages), one packed row per page
+            (operators/grid.profile_and_pack)
   output    packed pages -> ordered result spans via page-level offsets
 
 Scale notes: the unit of work is a page, never a whole document. Both

@@ -1,23 +1,27 @@
-"""kernels/pagegroups.iter_page_groups on hand-built pandas batches: pages
+"""kernels/pagegroups.iter_page_groups on hand-built Arrow batches: pages
 that straddle batches come out whole and once; a page that recurs after
 its group closed raises."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 
 
 def _batch(rows):
-    return pd.DataFrame(rows, columns=["doc_id", "page", "v"]).astype(
-        {"page": "int32", "v": "int64"})
+    return pa.RecordBatch.from_pandas(
+        pd.DataFrame(rows, columns=["doc_id", "page", "v"]).astype(
+            {"doc_id": str, "page": "int32", "v": "int64"}),
+        preserve_index=False)
 
 
 def _groups(batches):
     """(doc_id, page) -> list of v, one entry per emitted page."""
     out = []
-    for pdf, bounds in iter_page_groups(iter(batches), "test"):
+    for batch, bounds in iter_page_groups(iter(batches), "test"):
+        pdf = batch.to_pandas()
         assert bounds[0] == 0 and bounds[-1] == len(pdf)
         for s, e in zip(bounds[:-1], bounds[1:]):
             keys = set(zip(pdf["doc_id"].iloc[s:e], pdf["page"].iloc[s:e]))
@@ -60,8 +64,9 @@ def test_recurrence_raises(batches):
 
 
 def test_null_pages_form_one_group():
-    pdf = pd.DataFrame({"doc_id": ["a", "a", "a"],
-                        "page": [np.nan, np.nan, 1.0], "v": [0, 1, 2]})
+    batch = pa.RecordBatch.from_pydict({"doc_id": ["a", "a", "a"],
+                                        "page": [None, None, 1],
+                                        "v": [0, 1, 2]})
     sizes = [np.diff(bounds).tolist()
-             for _, bounds in iter_page_groups(iter([pdf]), "test")]
+             for _, bounds in iter_page_groups(iter([batch]), "test")]
     assert sizes == [[2], [1]]

@@ -372,3 +372,69 @@ def test_skewed_page_counts_extraction(spark):
     bad = j.where(~(F.col("r.kind").eqNullSafe(F.col("e.kind"))
                     & F.col("r.text").eqNullSafe(F.col("e.text")))).count()
     assert bad == 0 and expected.count() > 0
+
+
+def _span_docs(spark, boxes):
+    """One doc of text spans, one per payload dict, in order."""
+    import json
+    spans = [{"kind": "text", "text": json.dumps(payload), "media_ref": None,
+              "offset": off} for off, payload in enumerate(boxes)]
+    return spark.createDataFrame(
+        [("d", spans)],
+        "doc_id string, spans array<struct<"
+        "kind string, text string, media_ref string, offset int>>")
+
+
+def test_span_without_value_is_skipped_in_cell_text(spark):
+    """A text span whose payload has no "v" has a null value: its cell
+    text joins only the other boxes, as array_join does in cell_texts
+    (it used to come out as the text "None")."""
+    box = dict(w=20.0, h=10.0, p=1)
+    docs = _span_docs(spark, [
+        dict(v="a", l=50.0, t=60.0, **box),
+        dict(l=75.0, t=60.0, **box),            # no "v"
+        dict(v="b", l=250.0, t=60.0, **box),
+        dict(l=250.0, t=120.0, **box),          # no "v", alone in its cell
+        dict(v="c", l=50.0, t=120.0, **box),
+    ])
+    pipe = PipelineParams(n_cols=2, min_col_width=80.0, min_row_height=30.0)
+    got = [r["text"] for r in
+           extract_from_span_table(docs, pipe).orderBy("offset").collect()]
+    assert got == ["a", "b", "c", ""]
+
+
+def test_cell_texts_strips_like_the_text_path(spark):
+    """cell_texts (image, catalogue and schoollist paths) and the text
+    path's batch pack give the same cell texts for the same assigned
+    boxes: nulls skipped, every str.isspace character stripped (\\t, \\n,
+    \\r and \\xa0 included; Spark's trim alone strips only spaces)."""
+    import numpy as np
+    import pyarrow as pa
+    from pdftabextract_spark.kernels.pagegrid import pack_pages
+    from pdftabextract_spark.operators.grid import cell_texts
+
+    # (box_id, left, value, row_idx, col_idx) on a 2 x 2 grid
+    boxes = [(0, 1.0, "\ta", 0, 0), (1, 2.0, None, 0, 0),
+             (2, 3.0, "b\n", 0, 0), (3, 1.0, "\r\xa0c\xa0", 0, 1),
+             (4, 1.0, None, 1, 0), (5, 9.0, "x", -1, -1),
+             (6, 1.0, " 　d e ", 1, 1)]
+    assigned = spark.createDataFrame(
+        [("d", 1) + b for b in boxes],
+        "doc_id string, page int, box_id int, left double, value string, "
+        "row_idx int, col_idx int")
+    positions = spark.createDataFrame(
+        [("d", 1, [0.0, 10.0, 20.0], [0.0, 10.0, 20.0])],
+        "doc_id string, page int, col_positions array<double>, "
+        "row_positions array<double>")
+    spark_cells = {(r["row_idx"], r["col_idx"]): r["cell_text"]
+                   for r in cell_texts(assigned, positions).collect()}
+
+    box_id, left, value, ri, ci = zip(*boxes)
+    cells, n_unmatched = pack_pages(
+        np.array([0, len(boxes)]), np.array(ri), np.array(ci),
+        np.array([2]), np.array([2]), np.array(left), np.array(box_id),
+        pa.array(value))
+    assert cells.to_pylist() == [["a b", "c", "", "d e"]]
+    assert n_unmatched.tolist() == [1]
+    assert [spark_cells[(r, c)] for r in range(2) for c in range(2)] \
+        == cells.to_pylist()[0]
