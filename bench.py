@@ -43,9 +43,10 @@ from pdftabextract_spark.session import default_cores, default_driver_mem  # noq
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cores()
-# cache mode for the extract pipeline's multi-branch materialization;
-# default from the round-5 interleaved A/B at the bench shape
-# (scripts/cache_ab.py, 6 rounds x 3 modes in ONE session, 2026-08-18):
+# cache mode for the image pipeline's multi-branch materialization (the
+# span-table extract path caches nothing); default from the round-5
+# interleaved A/B at the bench shape (6 rounds x 3 modes in ONE session,
+# 2026-08-18, when the extract path still cached its boxes):
 #   checkpoint best 2.466s / quiet-reps 2.47-2.56 (most stable)
 #   persist    best 2.850s / quiet-reps 2.85-3.44
 #   none       best 4.844s / quiet-reps 4.8-18.6

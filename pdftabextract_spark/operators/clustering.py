@@ -109,12 +109,45 @@ def cluster_centers_pluggable(df: DataFrame, value_col: str, group_cols,
     return out.drop("_sd")
 
 
+def _doubles(values):
+    # from_pandas: a NaN becomes null, which F.greatest skips when the
+    # positions close a page's column borders (plans/pipeline)
+    import pyarrow as pa
+    return pa.array(values, pa.float64(), from_pandas=True)
+
+
+def _profile_columns(bounds, left, top, right, bottom, col_break_dist,
+                    row_break_dist):
+    """A frame of complete pages -> the Arrow columns col_centers,
+    row_tops, max_right, max_bottom, one row per page
+    (kernels/pagegrid.profile_pages)."""
+    import numpy as np
+    import pyarrow as pa
+    from ..kernels.pagegrid import profile_pages
+
+    cols, rows, max_r, max_b = profile_pages(
+        bounds, left, top, right, bottom, col_break_dist, row_break_dist)
+
+    def lists(arrays):
+        offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays])])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), _doubles(np.concatenate(arrays)))
+
+    return [lists(cols), lists(rows), _doubles(max_r), _doubles(max_b)]
+
+
+_PROFILES = ("doc_id string, page int, col_centers array<double>, "
+             "row_tops array<double>, max_right double, max_bottom double")
+_PROFILE_NAMES = ["doc_id", "page", "col_centers", "row_tops", "max_right",
+                  "max_bottom"]
+
+
 def page_profiles(boxes: DataFrame, col_break_dist: float,
                   row_break_dist: float) -> DataFrame:
     """Fused per-page profile: ONE narrow Arrow kernel computes, per
     (doc_id, page), the column cluster medians ``col_centers``, the row
     cluster min tops ``row_tops`` and the extents ``max_right`` /
-    ``max_bottom`` (kernels/pagegrid.profile_pages).
+    ``max_bottom`` (``_profile_columns``).
 
     This replaces four separate passes over the box table (column window
     + agg, row window + agg, extents agg, per-page centers re-agg). Value
@@ -122,14 +155,12 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     fused-vs-window).
 
     PRECONDITION: rows of one (doc_id, page) arrive contiguously within a
-    partition, as span-table boxes do by construction; ``group_pages``
-    establishes it for any other input. Pages that straddle Arrow batches
-    are reassembled by kernels/pagegroups, which raises when a page
-    recurs (never silent duplicates).
+    partition, as ``sources.spans.textboxes_from_spans`` emits them;
+    ``group_pages`` establishes it for any other input. Pages that
+    straddle Arrow batches are reassembled by kernels/pagegroups, which
+    raises when a page recurs (never silent duplicates).
     """
-    import numpy as np
     import pyarrow as pa
-    from ..kernels.pagegrid import profile_pages
     from ..kernels.pagegroups import column, iter_page_groups
 
     cbd, rbd = float(col_break_dist), float(row_break_dist)
@@ -139,34 +170,55 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         (F.col("left") + F.col("width")).alias("right"),
         (F.col("top") + F.col("height")).alias("bottom"))
 
-    def doubles(values):
-        # from_pandas: a NaN becomes null, which F.greatest skips when
-        # the positions close a page's column borders (plans/pipeline)
-        return pa.array(values, pa.float64(), from_pandas=True)
-
-    def lists(arrays):
-        offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays])])
-        return pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), doubles(np.concatenate(arrays)))
-
     def kernel(batches):
         for batch, bounds in iter_page_groups(batches, "page_profiles"):
-            cols, rows, max_r, max_b = profile_pages(
-                bounds, *(column(batch, c, float)
-                          for c in ("left", "top", "right", "bottom")),
-                cbd, rbd)
             first = pa.array(bounds[:-1])
             yield pa.RecordBatch.from_arrays([
                 batch.column("doc_id").take(first),
                 batch.column("page").take(first).cast(pa.int32()),
-                lists(cols), lists(rows), doubles(max_r), doubles(max_b)],
-                names=["doc_id", "page", "col_centers", "row_tops",
-                       "max_right", "max_bottom"])
+                *_profile_columns(bounds, *(
+                    column(batch, c, float)
+                    for c in ("left", "top", "right", "bottom")), cbd, rbd)],
+                names=_PROFILE_NAMES)
 
-    return src.mapInArrow(
-        kernel, schema="doc_id string, page int, "
-                       "col_centers array<double>, row_tops array<double>, "
-                       "max_right double, max_bottom double")
+    return src.mapInArrow(kernel, schema=_PROFILES)
+
+
+def span_page_profiles(span_docs: DataFrame, col_break_dist: float,
+                       row_break_dist: float) -> DataFrame:
+    """``page_profiles`` straight from span-doc rows (doc_id, spans): one
+    narrow Arrow kernel decodes each frame of docs
+    (sources/spans.decode_spans, which emits every page as one run) and
+    profiles its pages. Adds ``row_token``, an id of the input row each
+    page came from, so a caller can check that no doc_id spans two input
+    rows. Boxes with a null doc_id or page get a profile row like any
+    other page."""
+    import pyarrow as pa
+    from ..kernels.pagegroups import column, page_bounds
+    from ..sources.spans import decode_spans, frames
+
+    cbd, rbd = float(col_break_dist), float(row_break_dist)
+    src = span_docs.select("doc_id", "spans",
+                           F.monotonically_increasing_id().alias("row_token"))
+
+    def kernel(batches):
+        for frame in frames(batches):
+            boxes, _ = decode_spans(frame)
+            if not boxes.num_rows:
+                continue
+            l, t, w, h = (column(boxes, c, float)
+                          for c in ("left", "top", "width", "height"))
+            bounds = page_bounds(column(boxes, "_row"), column(boxes, "page"))
+            first = pa.array(bounds[:-1])
+            yield pa.RecordBatch.from_arrays([
+                boxes.column("doc_id").take(first),
+                boxes.column("page").take(first),
+                *_profile_columns(bounds, l, t, l + w, t + h, cbd, rbd),
+                frame.column("row_token").take(
+                    boxes.column("_row").take(first))],
+                names=_PROFILE_NAMES + ["row_token"])
+
+    return src.mapInArrow(kernel, schema=_PROFILES + ", row_token long")
 
 
 def group_pages(df: DataFrame) -> DataFrame:

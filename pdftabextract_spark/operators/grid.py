@@ -6,11 +6,12 @@ of complete pages at once by the one assignment kernel
 kernels/gridfit.assign_pages: each box is scored only against its
 candidate cells. The operators that run it:
 
-* ``profile_and_pack`` (text path): one narrow mapInArrow stage over the
-  boxes alone; with the corpus column model in its closure it profiles
-  each page, repairs the centers and builds the borders, then assigns
-  every box of the batch and materializes the cell texts of all its
-  pages (kernels/pagegrid.pack_pages), emitting one packed row per page.
+* ``pack_frame`` + ``profile_grids`` (text path): with the corpus column
+  model in its closure, profile each page of a frame of boxes, repair the
+  centers and build the borders, then assign every box of the frame and
+  materialize the cell texts of all its pages (kernels/pagegrid.pack_pages).
+  ``profile_and_pack`` runs them over box rows, one packed row per page;
+  plans/pipeline.extract_from_span_table runs them inside its span kernel.
 
 * ``pack_joined`` / ``assign_and_pack``: the same packing for boxes that
   arrive joined with precomputed per-page border arrays.
@@ -19,8 +20,9 @@ candidate cells. The operators that run it:
   long form, one row per box with its (row_idx, col_idx); ``cell_texts``
   / ``cell_texts_lines`` then aggregate it onto the full grid.
 
-The packing kernels take pages whole from kernels/pagegroups, which
-reassembles pages that straddle Arrow batches.
+The box-row kernels take pages whole from kernels/pagegroups, which
+reassembles pages that straddle Arrow batches; the span kernel's frames
+are whole docs (sources/spans.frames).
 
 Cell text parity: join_texts (textboxes.py:154-162) — sort by left (stable
 by box order), join with ' ', strip.
@@ -96,30 +98,42 @@ def assign_and_pack(boxes: DataFrame, positions: DataFrame,
     return pack_joined(joined)
 
 
+def pack_frame(batch, bounds, page_grids):
+    """A frame of complete pages (box columns left, top, width, height,
+    box_id, value; ``bounds`` = its page run bounds) -> per page
+    (n_rows, n_cols, cells, n_unmatched). ``page_grids(batch, bounds, l,
+    t, r, b)`` returns each page's col_positions and row_positions (two
+    sequences in frame order); kernels/gridfit.assign_pages and
+    kernels/pagegrid.pack_pages then assign and pack every page of the
+    frame at once."""
+    from ..kernels.gridfit import assign_pages
+    from ..kernels.pagegrid import pack_pages
+    from ..kernels.pagegroups import column
+
+    l, t, w, h = (column(batch, c, float)
+                  for c in ("left", "top", "width", "height"))
+    r, b = l + w, t + h
+    col_pos, row_pos = page_grids(batch, bounds, l, t, r, b)
+    ri, ci, n_rows, n_cols = assign_pages(bounds, l, t, r, b, col_pos,
+                                          row_pos)
+    cells, n_unmatched = pack_pages(bounds, ri, ci, n_rows, n_cols, l,
+                                    column(batch, "box_id"),
+                                    batch.column("value"))
+    return n_rows, n_cols, cells, n_unmatched
+
+
 def _pack_pages(rows: DataFrame, name: str, page_grids) -> DataFrame:
     """Page-contiguous box rows -> one packed row per page: (doc_id, page,
     n_rows, n_cols, cells array<string> row-major, n_unmatched), through
-    one mapInArrow stage. ``page_grids(batch, bounds, l, t, r, b)``
-    returns each page's col_positions and row_positions (two sequences in
-    frame order); kernels/gridfit.assign_pages and
-    kernels/pagegrid.pack_pages then assign and pack every page of the
-    batch at once."""
+    one mapInArrow stage that runs ``pack_frame`` on every frame of
+    complete pages."""
     import pyarrow as pa
-    from ..kernels.gridfit import assign_pages
-    from ..kernels.pagegrid import pack_pages
-    from ..kernels.pagegroups import column, iter_page_groups
+    from ..kernels.pagegroups import iter_page_groups
 
     def kernel(batches):
         for batch, bounds in iter_page_groups(batches, name):
-            l, t, w, h = (column(batch, c, float)
-                          for c in ("left", "top", "width", "height"))
-            r, b = l + w, t + h
-            col_pos, row_pos = page_grids(batch, bounds, l, t, r, b)
-            ri, ci, n_rows, n_cols = assign_pages(bounds, l, t, r, b,
-                                                  col_pos, row_pos)
-            cells, n_unmatched = pack_pages(
-                bounds, ri, ci, n_rows, n_cols, l, column(batch, "box_id"),
-                batch.column("value"))
+            n_rows, n_cols, cells, n_unmatched = pack_frame(
+                batch, bounds, page_grids)
             first = pa.array(bounds[:-1])
             yield pa.RecordBatch.from_arrays([
                 batch.column("doc_id").take(first),
@@ -154,24 +168,15 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     return _pack_pages(joined, "assign_and_pack", page_grids)
 
 
-def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
-                     row_break_dist: float, pad_x: float, pad_y: float,
-                     same_size_use_model_arr_diff_thresh=None) -> DataFrame:
-    """Boxes + the fitted corpus column model -> one packed row per page
-    (``pack_joined``'s schema) in ONE narrow Arrow kernel. Per page it
-    profiles the boxes (kernels/pagegrid.profile_pages, the math of
+def profile_grids(model, col_break_dist: float, row_break_dist: float,
+                  pad_x: float, pad_y: float,
+                  same_size_use_model_arr_diff_thresh=None):
+    """The ``page_grids`` of ``pack_frame`` for boxes alone, with the
+    fitted corpus column model in the closure: per page it profiles the
+    boxes (kernels/pagegrid.profile_pages, the math of
     operators/clustering.page_profiles), repairs the column centers
     against the model (kernels/clustering.repair_centers) and builds the
-    borders (kernels/pagegrid.page_borders); then it assigns and packs
-    every page of the batch at once (kernels/gridfit.assign_pages,
-    kernels/pagegrid.pack_pages). The model rides the closure (it is
-    O(n_cols) doubles), so no per-page border array is ever joined onto
-    the box rows.
-
-    PRECONDITION: as for ``page_profiles`` — rows of one (doc_id, page)
-    arrive contiguously within a partition; violations raise. Boxes with
-    a null doc_id or page get no packed row, like the inner join of
-    ``assign_and_pack`` (they still count in the model fit)."""
+    borders (kernels/pagegrid.page_borders)."""
     import numpy as np
     from ..kernels.clustering import repair_centers
     from ..kernels.pagegrid import page_borders, profile_pages
@@ -187,10 +192,28 @@ def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
                                   pad_x, pad_y)
                      for c, rw, mr, mb in zip(cols, rows, max_r, max_b)))
 
+    return page_grids
+
+
+def profile_and_pack(boxes: DataFrame, model, col_break_dist: float,
+                     row_break_dist: float, pad_x: float, pad_y: float,
+                     same_size_use_model_arr_diff_thresh=None) -> DataFrame:
+    """Boxes + the fitted corpus column model -> one packed row per page
+    (``pack_joined``'s schema) in ONE narrow Arrow kernel: ``pack_frame``
+    with ``profile_grids``. The model rides the closure (it is O(n_cols)
+    doubles), so no per-page border array is ever joined onto the box
+    rows.
+
+    PRECONDITION: as for ``page_profiles`` — rows of one (doc_id, page)
+    arrive contiguously within a partition; violations raise. Boxes with
+    a null doc_id or page get no packed row, like the inner join of
+    ``assign_and_pack`` (they still count in the model fit)."""
     src = boxes.where(F.col("doc_id").isNotNull() & F.col("page").isNotNull()) \
         .select("doc_id", "page", "box_id", "left", "top", "width", "height",
                 "value")
-    return _pack_pages(src, "profile_and_pack", page_grids)
+    return _pack_pages(src, "profile_and_pack", profile_grids(
+        model, col_break_dist, row_break_dist, pad_x, pad_y,
+        same_size_use_model_arr_diff_thresh))
 
 
 def cells_from_positions(positions: DataFrame) -> DataFrame:

@@ -1,29 +1,40 @@
 """The flagship table-extraction pipeline as one Spark DAG.
 
-Stages (SURVEY.md §3.4):
-  scan      span table -> textbox rows + page rows (JVM-side, sources/spans)
-  [image]   media_ref -> page-image bytes -> Hough lines -> rotation/skew
-            repair (operators/imgstage) — optional, catalogue_30s path
-  profiles  one narrow Arrow kernel over the persisted boxes: per-page
-            column cluster medians, row cluster min tops and extents
-            (operators/clustering.page_profiles)
-  columns   corpus column model fit over the pooled per-page centers
-            (operators/model) — reduces to O(distinct offsets) rows on
-            the driver; the model is n_cols doubles
-  grid      one narrow mapInArrow kernel over the same boxes, with the
-            model in its closure: per page it re-profiles, repairs the
-            centers and builds the borders; then it assigns every box of
-            the Arrow batch in one call (kernels/gridfit.assign_pages)
-            and packs all of the batch's pages at once
-            (kernels/pagegrid.pack_pages), one packed row per page
-            (operators/grid.profile_and_pack)
-  output    packed pages -> ordered result spans via page-level offsets
+Span-table input (``extract_from_span_table``) runs as two narrow
+mapInArrow passes over the span-doc rows (doc_id, spans) themselves. Both
+decode each frame of docs with sources/spans.decode_spans: flatten the
+spans, parse the text payloads with the Arrow JSON reader, drop the boxes
+the reference parse drops and sort each doc's boxes by (page, offset), so
+every page is one run without any exchange.
 
-Scale notes: the unit of work is a page, never a whole document. Both
-passes need each page's rows contiguous within a partition: span-table
-boxes are by construction, so the text path moves no box across the
-network; other inputs get one exchange by (doc_id, page) first. All heavy
-expressions are JVM-side; Python runs only in the two page kernels.
+  pass 1    per-page column cluster medians, row cluster min tops and
+            extents (operators/clustering.span_page_profiles), then the
+            corpus column model fit over the pooled per-page centers
+            (operators/model) — an eager driver-side fit whose model is
+            n_cols doubles. The fit job also checks that every doc_id
+            comes from one input row: a window over the page rows, the
+            path's only exchange.
+  pass 2    with the model in its closure, per frame of docs: profile,
+            repair and border every page, assign every box at once
+            (kernels/gridfit.assign_pages), pack the cell texts
+            (kernels/pagegrid.pack_pages) and emit the result spans with
+            per-doc offsets — plus the image spans, attributed to pages
+            by sources/spans.image_pages, when ``with_images``.
+
+Box-table input (``extract_cells_packed`` / ``extract_cells``) runs the
+same two passes over box rows: one exchange by (doc_id, page) puts each
+page's rows together, the boxes are materialized once (``cache``), then
+operators/clustering.page_profiles -> model fit ->
+operators/grid.profile_and_pack. ``result_spans_packed`` turns its packed
+pages into result spans with a doc_id window.
+
+[image]  media_ref -> page-image bytes -> Hough lines -> rotation/skew
+         repair (operators/imgstage), the catalogue_30s path
+         (``extract_cells_image_path``).
+
+Scale notes: the unit of work is a page, never a whole corpus; a span-doc
+row carries all of its pages, so the span path moves no box across the
+network.
 """
 
 from dataclasses import dataclass
@@ -41,9 +52,12 @@ class PipelineParams:
     pad_y: float = 8.0               # row border = cluster min top - pad_y
     model_dist_thresh: float = None  # pooled-center cluster break dist
     same_size_use_model_arr_diff_thresh: float = None
-    cache: str = "persist"           # reuse strategy for tables consumed
-                                     # by >1 downstream branch (boxes,
-                                     # profiles, line centers): "persist"
+    cache: str = "persist"           # reuse strategy for the tables that
+                                     # box-input extract_cells* and the
+                                     # image path consume in >1 branch
+                                     # (boxes, profiles, line centers;
+                                     # the span path caches nothing):
+                                     # "persist"
                                      # (MEMORY_AND_DISK columnar — the
                                      # cluster-safe default: lineage
                                      # recomputes on executor loss),
@@ -133,11 +147,11 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
 
 
 def extract_cells(boxes: DataFrame, params: PipelineParams,
-                  persist: bool = True, page_contiguous: bool = False) -> DataFrame:
+                  persist: bool = True) -> DataFrame:
     """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid: the
     long form of extract_cells_packed, a pure JVM posexplode of the
     packed rows (no shuffle)."""
-    packed = extract_cells_packed(boxes, params, persist, page_contiguous)
+    packed = extract_cells_packed(boxes, params, persist)
     return (packed.select(
         "doc_id", "page", "n_cols",
         F.posexplode("cells").alias("pos", "cell_text"))
@@ -148,9 +162,9 @@ def extract_cells(boxes: DataFrame, params: PipelineParams,
 
 
 def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
-                         persist: bool = True, page_contiguous: bool = False) -> DataFrame:
+                         persist: bool = True) -> DataFrame:
     """boxes -> the packed per-page form (doc_id, page, n_rows, n_cols,
-    cells array, n_unmatched) — the shape the span assembler consumes
+    cells array, n_unmatched) — the shape result_spans_packed consumes
     without any further wide shuffle. Two narrow passes over the boxes:
 
       1. page profiles -> pooled centers -> the corpus column model
@@ -158,23 +172,20 @@ def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
       2. one kernel that profiles, repairs, builds the borders, assigns
          and packs each page with the model in its closure.
 
-    Both passes need each page's rows contiguous within a partition.
-    Span-table boxes are (``page_contiguous=True``: one doc row explodes
-    into one run, spans in offset order); any other input goes through
-    ONE exchange + sort by (doc_id, page) here, before the persist.
+    Both passes need each page's rows contiguous within a partition, so
+    the boxes go through ONE exchange + sort by (doc_id, page) here,
+    before the persist.
 
     ``persist``: the box table feeds both passes; one materialization
-    beats re-scanning the span table (scan + explode + JSON parse) per
-    pass."""
+    beats recomputing the input per pass."""
     from ..operators.clustering import group_pages, page_profiles
     from ..operators.grid import profile_and_pack
     from ..operators.model import fit_column_model_pooled
 
     # scan-time zero-area drop (parse_pages rect validation,
     # common.py:138-141) — Catalyst pushes this into the source scan
-    boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
-    if not page_contiguous:
-        boxes = group_pages(boxes)
+    boxes = group_pages(
+        boxes.where((F.col("width") > 0) & (F.col("height") > 0)))
     if persist:
         boxes = _materialize(boxes, params.cache)
     profiles = page_profiles(boxes, params.col_break_dist,
@@ -262,23 +273,13 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     return cell_texts(assigned, positions)
 
 
-def result_spans_packed(packed: DataFrame, pages: DataFrame = None) -> DataFrame:
-    """Packed per-page cells -> ordered result spans. Offsets come from a
-    page-level cumulative sum (one window over #pages rows) instead of a
-    document-wide row sort over every span — the scale-defining change for
-    wide corpora."""
-    per_page = packed.select(
-        "doc_id", "page", "n_cols", "cells",
-        F.size("cells").alias("_n_text"))
-    if pages is not None:
-        media = pages.select("doc_id", "page", "media_ref")
-        per_page = per_page.join(media, ["doc_id", "page"], "left")
-        has_img = F.col("media_ref").isNotNull()
-    else:
-        per_page = per_page.withColumn("media_ref", F.lit(None).cast("string"))
-        has_img = F.lit(False)
-    per_page = per_page.withColumn("_n_spans",
-                                   F.col("_n_text") + F.when(has_img, 1).otherwise(0))
+def result_spans_packed(packed: DataFrame) -> DataFrame:
+    """Packed per-page cells (``extract_cells_packed``) -> ordered text
+    result spans. Offsets come from a page-level cumulative sum (one
+    window over #pages rows) instead of a document-wide row sort over
+    every span."""
+    per_page = packed.select("doc_id", "page", "cells",
+                             F.size("cells").alias("_n_spans"))
     w = W.partitionBy("doc_id").orderBy("page") \
          .rowsBetween(W.unboundedPreceding, W.currentRow)
     # duplicate-(doc_id,page) guard: a page split across kernel partitions
@@ -295,33 +296,123 @@ def result_spans_packed(packed: DataFrame, pages: DataFrame = None) -> DataFrame
         F.lit(0))
     per_page = per_page.withColumn(
         "_base", F.sum("_n_spans").over(w) - F.col("_n_spans") + dup_probe)
-
-    text_spans = per_page.select(
-        "doc_id", "_base", "media_ref",
-        F.posexplode("cells").alias("_pos", "text"),
+    return per_page.select(
+        "doc_id", "_base", F.posexplode("cells").alias("_pos", "text"),
     ).select(
         "doc_id", F.lit("text").alias("kind"), "text",
         F.lit(None).cast("string").alias("media_ref"),
-        (F.col("_base") + F.col("_pos")
-         + F.when(F.col("media_ref").isNotNull(), 1).otherwise(0)
-         ).cast("int").alias("offset"),
-    )
-    if pages is None:
-        return text_spans
-    image_spans = per_page.where(F.col("media_ref").isNotNull()).select(
-        "doc_id", F.lit("image").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        "media_ref", F.col("_base").cast("int").alias("offset"))
-    return text_spans.unionByName(image_spans)
+        (F.col("_base") + F.col("_pos")).cast("int").alias("offset"))
+
+
+_RESULT_SPANS = ("doc_id string, kind string, text string, "
+                 "media_ref string, offset int")
+
+
+def _one_row_per_doc(profiles: DataFrame) -> DataFrame:
+    """The duplicate-row guard of the span path: a doc_id whose pages come
+    from more than one input row would be packed as two docs with
+    colliding offsets, so the job fails instead, naming the doc_id. The
+    check is a min/max window of ``row_token`` over the one-row-per-page
+    profiles, folded into col_centers so that the model fit, which reads
+    only col_centers, cannot prune it. Null doc_ids are exempt (they get
+    no output)."""
+    w = W.partitionBy("doc_id")
+    one_row = F.col("doc_id").isNull() \
+        | (F.min("row_token").over(w) == F.max("row_token").over(w))
+    return profiles.withColumn("col_centers", F.when(
+        one_row, F.col("col_centers")).otherwise(F.raise_error(F.concat(
+            F.lit("extract_from_span_table: doc_id '"), F.col("doc_id"),
+            F.lit("' comes from more than one input row")))))
+
+
+def _page_spans(doc_ids, row, page, cells, images):
+    """The packed pages of a frame, in (doc row, page) order -> its result
+    spans as an Arrow record batch (``_RESULT_SPANS``): per doc, pages
+    ascending; each page's image span (when ``images``, sorted by (_row,
+    page), holds one for it) then its cells row-major; offsets count from
+    0 in every doc. ``doc_ids`` is the frame's doc_id column, ``row`` /
+    ``page`` the pages' doc row and page number, ``cells`` their
+    list<string> cells."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from ..kernels.pagegroups import column
+
+    def key(rows, pages):
+        return np.asarray(rows, np.int64) * (1 << 32) \
+            + np.asarray(pages, np.int64) + (1 << 31)
+
+    n_cells = pc.list_value_length(cells).to_numpy(zero_copy_only=False)
+    slot = np.full(len(row), -1)
+    media = pa.nulls(0, pa.string())
+    if images is not None and images.num_rows:
+        have, want = key(column(images, "_row"), column(images, "page")), \
+            key(row, page)
+        at = np.minimum(np.searchsorted(have, want), len(have) - 1)
+        slot = np.where(have[at] == want, at, -1)
+        media = images.column("media_ref")
+    has_img = slot >= 0
+    n_spans = n_cells + has_img
+    start = np.cumsum(n_spans) - n_spans
+    first = np.flatnonzero(np.diff(row, prepend=-1))
+    doc_start = start[first].repeat(np.diff(np.append(first, len(row))))
+    is_img = np.zeros(int(n_spans.sum()), dtype=bool)
+    is_img[start[has_img]] = True
+    flat = cells.flatten()
+    text = np.full(len(is_img), len(flat))
+    text[~is_img] = np.arange(len(flat))
+    media_at = np.full(len(is_img), len(media))
+    media_at[start[has_img]] = slot[has_img]
+
+    def nullable(values, take):
+        return pa.concat_arrays([values, pa.nulls(1, values.type)]) \
+            .take(pa.array(take))
+
+    return pa.RecordBatch.from_arrays([
+        doc_ids.take(pa.array(np.repeat(row, n_spans))),
+        pa.array(["text", "image"]).take(pa.array(is_img.astype(np.int8))),
+        nullable(flat, text), nullable(media, media_at),
+        pa.array(np.arange(len(is_img)) - doc_start.repeat(n_spans),
+                 pa.int32())],
+        names=["doc_id", "kind", "text", "media_ref", "offset"])
 
 
 def extract_from_span_table(span_docs: DataFrame, params: PipelineParams,
                             with_images: bool = False) -> DataFrame:
-    """North-rule span table in -> result spans out (exploded form)."""
-    from ..sources.spans import textboxes_from_spans, pages_from_spans
+    """North-rule span table in -> result spans out (exploded form:
+    doc_id, kind, text, media_ref, offset), in the two narrow passes of
+    the module docstring. Each doc_id must come from one input row (the
+    fit job fails otherwise); boxes with a null doc_id or page count in
+    the model fit but get no output."""
+    import pyarrow.compute as pc
+    from ..kernels.pagegroups import column, page_bounds
+    from ..operators.clustering import span_page_profiles
+    from ..operators.grid import pack_frame, profile_grids
+    from ..operators.model import fit_column_model_pooled
+    from ..sources.spans import decode_spans, frames
 
-    boxes = textboxes_from_spans(span_docs)
-    # exploded span-table boxes are page-contiguous by construction
-    packed = extract_cells_packed(boxes, params, page_contiguous=True)
-    pages = pages_from_spans(span_docs) if with_images else None
-    return result_spans_packed(packed, pages)
+    profiles = span_page_profiles(span_docs, params.col_break_dist,
+                                  params.row_break_dist)
+    model = fit_column_model_pooled(
+        _pooled_centers(_one_row_per_doc(profiles)), params.n_cols,
+        params.model_break_dist)
+    grids = profile_grids(model, params.col_break_dist, params.row_break_dist,
+                          params.pad_x, params.pad_y,
+                          params.same_size_use_model_arr_diff_thresh)
+
+    def kernel(batches):
+        for frame in frames(batches):
+            boxes, images = decode_spans(frame, images=with_images)
+            boxes = boxes.filter(pc.and_(boxes.column("doc_id").is_valid(),
+                                         boxes.column("page").is_valid()))
+            if not boxes.num_rows:
+                continue
+            row, page = column(boxes, "_row"), column(boxes, "page")
+            bounds = page_bounds(row, page)
+            _, _, cells, _ = pack_frame(boxes, bounds, grids)
+            first = bounds[:-1]
+            yield _page_spans(frame.column("doc_id"), row[first], page[first],
+                             cells, images)
+
+    return span_docs.select("doc_id", "spans").mapInArrow(
+        kernel, schema=_RESULT_SPANS)

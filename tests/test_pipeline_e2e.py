@@ -72,30 +72,27 @@ def test_cells_match_ground_truth(spark):
 def test_packed_pages_unique_across_batch_splits(spark):
     """Pages straddling Arrow batches must not emit duplicate partial rows
     (regression: output depended on parallelism), and the span-table
-    fast path (no exchange) must pack exactly the rows the exchange path
-    packs."""
-    from pdftabextract_spark.plans.pipeline import extract_cells_packed
+    path (span kernels, no exchange) must emit exactly the spans the
+    box-table path (exchange, packed pages, doc_id window) emits."""
+    from pdftabextract_spark.plans.pipeline import (
+        extract_cells_packed, result_spans_packed)
     # tiny Arrow batches force every page to straddle batch boundaries
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        boxes = textboxes_from_spans(synth.span_docs_df(spark, PARAMS))
+        span_docs = synth.span_docs_df(spark, PARAMS)
         expected = synth.expected_spans_df(spark, PARAMS).count()
-        # both kernel paths: with the exchange, and the span-table
-        # page-contiguous fast path (regression for the skipped exchange)
-        packed = {}
-        for contiguous in (False, True):
-            packed[contiguous] = extract_cells_packed(
-                boxes, PIPE, page_contiguous=contiguous)
-            total = packed[contiguous].count()
-            distinct = packed[contiguous].select(
-                "doc_id", "page").distinct().count()
-            assert total == distinct, "contiguous=%s" % contiguous
-            n_spans = packed[contiguous].agg(
-                F.sum(F.size("cells"))).collect()[0][0]
-            assert n_spans == expected, "contiguous=%s" % contiguous
-        assert packed[True].exceptAll(packed[False]).count() == 0
-        assert packed[False].exceptAll(packed[True]).count() == 0
+        packed = extract_cells_packed(textboxes_from_spans(span_docs), PIPE)
+        assert packed.count() == packed.select(
+            "doc_id", "page").distinct().count()
+        assert packed.agg(F.sum(F.size("cells"))).collect()[0][0] == expected
+        spans = {"box": result_spans_packed(packed),
+                 "span": extract_from_span_table(span_docs, PIPE)}
+        for name, df in spans.items():
+            assert df.count() == df.select(
+                "doc_id", "offset").distinct().count() == expected, name
+        assert spans["span"].exceptAll(spans["box"]).count() == 0
+        assert spans["box"].exceptAll(spans["span"]).count() == 0
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
@@ -146,31 +143,31 @@ def test_pack_joined_raises_on_non_contiguous_input(spark):
 
 
 def test_span_path_plan_has_no_box_exchange(spark):
-    """The span-table path runs both passes narrow: the profile pass
-    (which feeds the eager model fit, so it is not in the result's plan)
-    has no Exchange, and the only Exchange of the result's plan is the
-    doc_id window over the packed page rows — none is keyed on
-    (doc_id, page), i.e. none moves the box table."""
-    import re
-    from pdftabextract_spark.operators.clustering import page_profiles
+    """The span-table path runs both passes narrow over the span-doc rows:
+    the profile pass (which feeds the eager model fit, so it is not in
+    the result's plan) has no Exchange, and the result's plan, with and
+    without images, has no Exchange and no cached relation. The box
+    profile pass over decoded span boxes has no Exchange either."""
+    from pdftabextract_spark.operators.clustering import (
+        page_profiles, span_page_profiles)
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
         .fromString("formatted")
 
-    def exchange_keys(df):
-        plan = df._jdf.queryExecution().explainString(mode)
-        assert "BroadcastExchange" not in plan, plan
-        # node sections of the formatted plan: "(N) Exchange" + Arguments
-        args = re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
-                          plan, re.M)
-        return [re.sub(r"#\d+", "", re.match(
-            r"hashpartitioning\((.*), \d+\)", a).group(1)) for a in args]
+    def plan(df):
+        return df._jdf.queryExecution().explainString(mode)
 
     span_docs = synth.span_docs_df(spark, PARAMS)
-    assert exchange_keys(page_profiles(
-        textboxes_from_spans(span_docs), PIPE.col_break_dist,
-        PIPE.row_break_dist)) == []
-    assert exchange_keys(extract_from_span_table(span_docs, PIPE)) == ["doc_id"]
+    for df in (page_profiles(textboxes_from_spans(span_docs),
+                             PIPE.col_break_dist, PIPE.row_break_dist),
+               span_page_profiles(span_docs, PIPE.col_break_dist,
+                                  PIPE.row_break_dist)):
+        assert "Exchange" not in plan(df), plan(df)
+    for with_images in (False, True):
+        p = plan(extract_from_span_table(span_docs, PIPE,
+                                         with_images=with_images))
+        assert "Exchange" not in p and "InMemory" not in p, p
+        assert "MapInArrow" in p, p
 
 
 def test_image_page_attribution_with_sparse_images(spark):
