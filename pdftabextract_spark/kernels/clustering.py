@@ -367,6 +367,30 @@ def fit_center_model_summaries(summaries, n_required_clusters):
     return np.array(sorted(medians)), True
 
 
+def fit_pooled_centers(pooled, n_required_clusters, dist_thresh):
+    """The corpus column model from the pooled normalized centers (a float
+    array, NaN for a null): break-dist clusters in ascending order, then
+    :func:`fit_center_model`. The driver-side fit of
+    operators/model.fit_column_model_pooled."""
+    clusters_w_vals = zip_clusters_and_values(
+        find_clusters_1d_break_dist(pooled, dist_thresh), pooled)
+    # order clusters by ascending value like the distributed cids
+    clusters_w_vals.sort(key=lambda cw: cw[1].min())
+    model, _ = fit_center_model(clusters_w_vals, n_required_clusters)
+    return model
+
+
+def count_values(values):
+    """The distinct values of a float array with their counts:
+    ``np.repeat`` of the pair gives the same multiset back. Values are
+    told apart by bit pattern, so every NaN and -0.0 comes back as it
+    went in."""
+    bits, counts = np.unique(
+        np.ascontiguousarray(values, dtype=float).view(np.int64),
+        return_counts=True)
+    return bits.view(float), counts
+
+
 def get_adjusted_cluster_centers(clusters, n_required_clusters,
                                  find_center_clusters_method, **kwargs):
     """Corpus-level column/row model fit + per-page repair.

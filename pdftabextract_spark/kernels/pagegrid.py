@@ -6,13 +6,16 @@ bounds of the frame):
 
 * ``profile_pages``  column cluster medians, row cluster min tops and the
   page extents of every page in a frame (operators/clustering.page_profiles);
+* ``normalized_column_centers``  every page's column centers shifted to
+  start at 0: the span path's model-fit pool (plans/pipeline);
 * ``page_borders``   repaired centers + profile -> one page's column and
   row borders;
 * ``pack_pages``     a frame's assigned boxes (kernels/gridfit.assign_pages)
   -> each page's cell texts, every page in one join (operators/grid).
 
-operators/grid.profile_and_pack chains all of them: profile and borders
-per page, then one assignment and one pack per frame.
+operators/grid.profile_and_pack chains profile_pages, page_borders and
+pack_pages: profile and borders per page, then one assignment and one
+pack per frame.
 """
 
 import numpy as np
@@ -36,9 +39,10 @@ def _segments(vals_sorted, page_codes_sorted, dist):
     return starts, ends
 
 
-def _per_page_clusters(vals, codes, dist, center):
-    """Break-dist clusters of ``vals`` within each page -> one sorted
-    array of cluster centers per page, in page order."""
+def _page_clusters(vals, codes, dist, center):
+    """Break-dist clusters of ``vals`` within each page -> (centers,
+    firsts): every page's sorted cluster centers, concatenated in page
+    order, and the index of each page's first center."""
     order = np.lexsort((vals, codes))
     sv = vals[order]
     sp = codes[order]
@@ -49,10 +53,29 @@ def _per_page_clusters(vals, codes, dist, center):
     else:  # min
         cvals = sv[s]
     seg_page = sp[s]
-    # segments are page-ordered; split into per-page lists
-    cuts = np.flatnonzero(np.concatenate(
+    return cvals, np.flatnonzero(np.concatenate(
         [[True], seg_page[1:] != seg_page[:-1]]))
-    return np.split(cvals, cuts[1:])
+
+
+def _per_page_clusters(vals, codes, dist, center):
+    """``_page_clusters`` split into one sorted array per page."""
+    cvals, firsts = _page_clusters(vals, codes, dist, center)
+    return np.split(cvals, firsts[1:])
+
+
+def _page_codes(bounds):
+    return np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+
+
+def normalized_column_centers(bounds, left, col_break_dist):
+    """Every page's column centers (``profile_pages``' col_centers) minus
+    the page's first center, concatenated: the pooled values the corpus
+    column model is fit on. A NaN center or first center gives NaN, as a
+    null does in Spark's ``c - element_at(col_centers, 1)``."""
+    cvals, firsts = _page_clusters(left, _page_codes(bounds),
+                                   col_break_dist, "median")
+    return cvals - np.repeat(cvals[firsts],
+                             np.diff(np.append(firsts, len(cvals))))
 
 
 def profile_pages(bounds, left, top, right, bottom,
@@ -68,7 +91,7 @@ def profile_pages(bounds, left, top, right, bottom,
       max_right, max_bottom  page extents
     """
     page_starts = bounds[:-1]
-    codes = np.repeat(np.arange(len(page_starts)), np.diff(bounds))
+    codes = _page_codes(bounds)
     col_centers = _per_page_clusters(left, codes, col_break_dist, "median")
     row_tops = _per_page_clusters(top, codes, row_break_dist, "min")
     assert len(col_centers) == len(row_tops) == len(page_starts)

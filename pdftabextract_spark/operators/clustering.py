@@ -184,43 +184,6 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     return src.mapInArrow(kernel, schema=_PROFILES)
 
 
-def span_page_profiles(span_docs: DataFrame, col_break_dist: float,
-                       row_break_dist: float) -> DataFrame:
-    """``page_profiles`` straight from span-doc rows (doc_id, spans): one
-    narrow Arrow kernel decodes each frame of docs
-    (sources/spans.decode_spans, which emits every page as one run) and
-    profiles its pages. Adds ``row_token``, an id of the input row each
-    page came from, so a caller can check that no doc_id spans two input
-    rows. Boxes with a null doc_id or page get a profile row like any
-    other page."""
-    import pyarrow as pa
-    from ..kernels.pagegroups import column, page_bounds
-    from ..sources.spans import decode_spans, frames
-
-    cbd, rbd = float(col_break_dist), float(row_break_dist)
-    src = span_docs.select("doc_id", "spans",
-                           F.monotonically_increasing_id().alias("row_token"))
-
-    def kernel(batches):
-        for frame in frames(batches):
-            boxes, _ = decode_spans(frame)
-            if not boxes.num_rows:
-                continue
-            l, t, w, h = (column(boxes, c, float)
-                          for c in ("left", "top", "width", "height"))
-            bounds = page_bounds(column(boxes, "_row"), column(boxes, "page"))
-            first = pa.array(bounds[:-1])
-            yield pa.RecordBatch.from_arrays([
-                boxes.column("doc_id").take(first),
-                boxes.column("page").take(first),
-                *_profile_columns(bounds, l, t, l + w, t + h, cbd, rbd),
-                frame.column("row_token").take(
-                    boxes.column("_row").take(first))],
-                names=_PROFILE_NAMES + ["row_token"])
-
-    return src.mapInArrow(kernel, schema=_PROFILES + ", row_token long")
-
-
 def group_pages(df: DataFrame) -> DataFrame:
     """One exchange + sort that puts each (doc_id, page)'s rows together
     in one partition, contiguously — the precondition of the per-page

@@ -22,9 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..kernels.clustering import (
-    fit_center_model, fit_center_model_summaries, repair_centers,
-    zip_clusters_and_values, find_clusters_1d_break_dist,
-)
+    fit_center_model_summaries, fit_pooled_centers, repair_centers)
 
 
 def normalized_centers(centers: DataFrame, group_cols=("doc_id", "page")) -> DataFrame:
@@ -78,6 +76,8 @@ def fit_column_model_pooled(pooled: DataFrame, n_required_clusters: int,
     a ``limit(N+1)`` probe: CollectLimit executes incremental scale-up
     rounds that re-pay the upstream shuffle map side — measured 3-10x
     slower than count+collect on the extraction pipeline (BENCH r3 A/B).
+    The span-table path does not fit through here and has no such bound
+    (plans/pipeline._span_model).
     """
     limit = MAX_DRIVER_POOL if max_driver_pool is None else max_driver_pool
     # persist across the two driver-path actions (count + collect) — and
@@ -87,13 +87,9 @@ def fit_column_model_pooled(pooled: DataFrame, n_required_clusters: int,
     pooled = pooled.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if pooled.count() <= limit:
-            arrow = pooled.toPandas()["center_norm"].to_numpy(dtype=float)
-            cluster_ind = find_clusters_1d_break_dist(arrow, dist_thresh)
-            clusters_w_vals = zip_clusters_and_values(cluster_ind, arrow)
-            # order clusters by ascending value like the distributed cids
-            clusters_w_vals.sort(key=lambda cw: cw[1].min())
-            model, _ = fit_center_model(clusters_w_vals, n_required_clusters)
-            return model
+            return fit_pooled_centers(
+                pooled.toPandas()["center_norm"].to_numpy(dtype=float),
+                n_required_clusters, dist_thresh)
 
         summaries = cluster_summaries_distributed(pooled, dist_thresh)
         rows = summaries.orderBy("cid").collect()

@@ -83,17 +83,6 @@ def line_ids(boxes: DataFrame) -> DataFrame:
     return b.withColumn("line_id", F.sum(brk).over(cum).cast("int"))
 
 
-def texts_by_line(boxes: DataFrame, linejoin: str = " ") -> DataFrame:
-    """Lines as rows: per (page, line_id), boxes sorted by left joined with
-    ``linejoin`` (join_texts semantics, textboxes.py:154-162)."""
-    lined = line_ids(boxes)
-    return (lined.groupBy(*PAGE_KEY, "line_id")
-            .agg(F.array_sort(F.collect_list(F.struct("left", "box_id", "value"))).alias("_b"))
-            .select(*PAGE_KEY, "line_id",
-                    F.trim(F.array_join(F.transform("_b", lambda x: x["value"]),
-                                        linejoin)).alias("line_text")))
-
-
 def merge_nearby_boxes(boxes: DataFrame, direction: str,
                        max_nearby_dist: float, max_same_axis_dist: float,
                        axis_align: str = "low", merge_on_overlap: bool = False,

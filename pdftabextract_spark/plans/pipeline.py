@@ -7,13 +7,16 @@ spans, parse the text payloads with the Arrow JSON reader, drop the boxes
 the reference parse drops and sort each doc's boxes by (page, offset), so
 every page is one run without any exchange.
 
-  pass 1    per-page column cluster medians, row cluster min tops and
-            extents (operators/clustering.span_page_profiles), then the
-            corpus column model fit over the pooled per-page centers
-            (operators/model) — an eager driver-side fit whose model is
-            n_cols doubles. The fit job also checks that every doc_id
-            comes from one input row: a window over the page rows, the
-            path's only exchange.
+  pass 1    one Spark job (``span_center_counts``, collected with
+            toArrow): per partition, the distinct normalized column
+            centers of its pages with their counts, and the doc_id of
+            every doc row with a kept box. The driver checks that no
+            doc_id comes from two input rows and fits the corpus column
+            model (n_cols doubles) over the pool the (center, count)
+            pairs stand for (kernels/clustering.fit_pooled_centers). No
+            exchange, no cache, no count — and no bound on the driver:
+            it holds the whole pool (8 bytes per page column) and one
+            doc_id per doc, so its memory grows with the corpus.
   pass 2    with the model in its closure, per frame of docs: profile,
             repair and border every page, assign every box at once
             (kernels/gridfit.assign_pages), pack the cell texts
@@ -308,21 +311,83 @@ _RESULT_SPANS = ("doc_id string, kind string, text string, "
                  "media_ref string, offset int")
 
 
-def _one_row_per_doc(profiles: DataFrame) -> DataFrame:
-    """The duplicate-row guard of the span path: a doc_id whose pages come
-    from more than one input row would be packed as two docs with
-    colliding offsets, so the job fails instead, naming the doc_id. The
-    check is a min/max window of ``row_token`` over the one-row-per-page
-    profiles, folded into col_centers so that the model fit, which reads
-    only col_centers, cannot prune it. Null doc_ids are exempt (they get
-    no output)."""
-    w = W.partitionBy("doc_id")
-    one_row = F.col("doc_id").isNull() \
-        | (F.min("row_token").over(w) == F.max("row_token").over(w))
-    return profiles.withColumn("col_centers", F.when(
-        one_row, F.col("col_centers")).otherwise(F.raise_error(F.concat(
-            F.lit("extract_from_span_table: doc_id '"), F.col("doc_id"),
-            F.lit("' comes from more than one input row")))))
+_CENTER_COUNTS = ("centers array<double>, counts array<bigint>, "
+                  "doc_ids array<string>")
+
+
+def span_center_counts(span_docs: DataFrame,
+                       col_break_dist: float) -> DataFrame:
+    """Pass 1 of ``extract_from_span_table`` as one narrow Arrow kernel
+    over the span-doc rows. Per partition it emits one row: the distinct
+    normalized column centers of its pages
+    (kernels/pagegrid.normalized_column_centers, one frame of docs at a
+    time) as ``centers`` with their ``counts``, and the doc_id of each
+    doc row with a non-null doc_id and at least one kept box as
+    ``doc_ids``. Boxes with a null doc_id or page count in the
+    centers."""
+    import numpy as np
+    import pyarrow as pa
+    from ..kernels.clustering import count_values
+    from ..kernels.pagegrid import normalized_column_centers
+    from ..kernels.pagegroups import column, page_bounds
+    from ..sources.spans import decode_spans, frames
+
+    cbd = float(col_break_dist)
+
+    def one_list(values):
+        return pa.ListArray.from_arrays(
+            pa.array([0, len(values)], pa.int32()), values)
+
+    def kernel(batches):
+        pooled, doc_ids = [], []
+        for frame in frames(batches):
+            boxes, _ = decode_spans(frame)
+            if not boxes.num_rows:
+                continue
+            row = column(boxes, "_row")
+            pooled.append(normalized_column_centers(
+                page_bounds(row, column(boxes, "page")),
+                column(boxes, "left", float), cbd))
+            doc_ids.append(frame.column("doc_id").take(
+                pa.array(np.unique(row))).drop_null())
+        if pooled:
+            centers, counts = count_values(np.concatenate(pooled))
+            yield pa.RecordBatch.from_arrays(
+                [one_list(pa.array(centers)), one_list(pa.array(counts)),
+                 one_list(pa.concat_arrays(doc_ids))],
+                names=["centers", "counts", "doc_ids"])
+
+    return span_docs.select("doc_id", "spans") \
+        .mapInArrow(kernel, schema=_CENTER_COUNTS)
+
+
+def _span_model(span_docs: DataFrame, params: PipelineParams):
+    """Pass 1 in one Spark job: collect ``span_center_counts``, check that
+    no doc_id comes from two input rows, and fit the corpus column model
+    on the driver over the pool the (center, count) pairs stand for
+    (kernels/clustering.fit_pooled_centers, the driver path of
+    operators/model.fit_column_model_pooled). A doc_id whose kept boxes
+    come from more than one input row would be packed as two docs with
+    colliding offsets, so it raises instead, naming the doc_id; null
+    doc_ids are exempt (they get no output). Unlike
+    fit_column_model_pooled there is no distributed fallback: the driver
+    holds the whole pool and every kept doc_id."""
+    import numpy as np
+    import pyarrow.compute as pc
+    from ..kernels.clustering import fit_pooled_centers
+
+    got = span_center_counts(span_docs, params.col_break_dist).toArrow()
+    centers, counts, doc_ids = (pc.list_flatten(got.column(c))
+                                for c in ("centers", "counts", "doc_ids"))
+    seen = pc.value_counts(doc_ids)
+    repeated = seen.filter(pc.greater(seen.field("counts"), 1))
+    if len(repeated):
+        raise ValueError("extract_from_span_table: doc_id '%s' comes from "
+                         "more than one input row"
+                         % repeated.field("values")[0].as_py())
+    return fit_pooled_centers(
+        np.repeat(centers.to_numpy(), counts.to_numpy()), params.n_cols,
+        params.model_break_dist)
 
 
 def _page_spans(doc_ids, row, page, cells, images):
@@ -381,21 +446,15 @@ def extract_from_span_table(span_docs: DataFrame, params: PipelineParams,
                             with_images: bool = False) -> DataFrame:
     """North-rule span table in -> result spans out (exploded form:
     doc_id, kind, text, media_ref, offset), in the two narrow passes of
-    the module docstring. Each doc_id must come from one input row (the
-    fit job fails otherwise); boxes with a null doc_id or page count in
-    the model fit but get no output."""
+    the module docstring. Each doc_id must come from one input row (pass
+    1 raises otherwise); boxes with a null doc_id or page count in the
+    model fit but get no output."""
     import pyarrow.compute as pc
     from ..kernels.pagegroups import column, page_bounds
-    from ..operators.clustering import span_page_profiles
     from ..operators.grid import pack_frame, profile_grids
-    from ..operators.model import fit_column_model_pooled
     from ..sources.spans import decode_spans, frames
 
-    profiles = span_page_profiles(span_docs, params.col_break_dist,
-                                  params.row_break_dist)
-    model = fit_column_model_pooled(
-        _pooled_centers(_one_row_per_doc(profiles)), params.n_cols,
-        params.model_break_dist)
+    model = _span_model(span_docs, params)
     grids = profile_grids(model, params.col_break_dist, params.row_break_dist,
                           params.pad_x, params.pad_y,
                           params.same_size_use_model_arr_diff_thresh)

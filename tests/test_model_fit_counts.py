@@ -1,0 +1,126 @@
+"""The span path's corpus model fit from (center, count) pairs: pass 1
+emits each partition's pool as kernels/clustering.count_values pairs,
+and the driver fits kernels/clustering.fit_pooled_centers over
+``np.repeat`` of them. These tests check that this gives the pooled fit
+of operators/model.fit_column_model_pooled: seeded pools with ties, NaN,
+±inf, ±0 and near-overflow centers, a single value and an empty pool, at
+dist_thresh 0 and > 0, each permuted and split into random partitions.
+The property test is Spark-free; one Spark test checks the same pools
+through fit_column_model_pooled's driver and distributed paths."""
+
+import warnings
+
+import numpy as np
+import pytest
+
+from pdftabextract_spark.kernels.clustering import (
+    count_values, fit_pooled_centers)
+
+THRESHOLDS = (0.0, 0.5, 1.0, 5.0, 40.0)
+
+
+def _pool(rng):
+    """A normalized-center-like pool: a few column offsets with heavy ties
+    and jitter, or a handful of special values."""
+    n = int(rng.integers(0, 80))
+    if rng.random() < 0.3:
+        return rng.choice([0.0, -0.0, 1.0, 2.5, 30.0, 31.0, 100.0,
+                           1.7e308, np.nan, np.inf, -np.inf], n)
+    pool = rng.choice([0.0, 120.0, 260.5, 401.25], n) \
+        + rng.integers(-8, 9, n) / 2.0
+    if n and rng.random() < 0.3:
+        pool[rng.integers(0, n, 3)] = np.nan
+    return pool
+
+
+def _cut(rng, values):
+    cuts = np.sort(rng.integers(0, len(values) + 1, int(rng.integers(0, 4))))
+    return np.split(values, cuts)
+
+
+def _pairs(rng, pool):
+    """``pool`` permuted and cut into partitions, each counted as pass 1
+    counts it; the partitions' pairs concatenated as the driver collects
+    them."""
+    parts = [count_values(p) for p in _cut(rng, rng.permutation(pool))]
+    return tuple(np.concatenate(p) for p in zip(*parts))
+
+
+def _outcome(fn):
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            return fn()
+    except (AssertionError, ValueError) as e:
+        return type(e).__name__
+
+
+def _same(a, b):
+    """Equal outcomes: the same exception, or models equal value by value
+    with NaN = NaN and the sign of every zero."""
+    if isinstance(a, str) or isinstance(b, str):
+        return a == b
+    return a.dtype == b.dtype and a.shape == b.shape \
+        and np.array_equal(a, b, equal_nan=True) \
+        and np.array_equal(np.signbit(a), np.signbit(b))
+
+
+def _bits(values):
+    return np.sort(np.asarray(values, dtype=float).view(np.int64))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_pairs_fit_equals_pooled_fit(seed):
+    rng = np.random.default_rng(seed)
+    for _ in range(150):
+        pool = _pool(rng)
+        thresh = float(rng.choice(THRESHOLDS))
+        n_cols = int(rng.integers(1, 8))
+        expanded = np.repeat(*_pairs(rng, pool))
+        assert np.array_equal(_bits(expanded), _bits(pool)), pool.tolist()
+        want = _outcome(lambda: fit_pooled_centers(pool, n_cols, thresh))
+        got = _outcome(lambda: fit_pooled_centers(expanded, n_cols, thresh))
+        assert _same(got, want), (pool.tolist(), thresh, n_cols, got, want)
+
+
+@pytest.mark.parametrize("thresh", THRESHOLDS)
+@pytest.mark.parametrize("pool", [[], [7.5], [np.nan], [3.0, 3.0, 3.0],
+                                  [0.0, -0.0, 0.0], [0.0, 1.0, np.nan]],
+                         ids=["empty", "single", "nan", "ties", "zeros",
+                              "nan-tail"])
+def test_edge_pools(pool, thresh):
+    pool = np.array(pool, dtype=float)
+    expanded = np.repeat(*count_values(pool))
+    assert np.array_equal(_bits(expanded), _bits(pool))
+    for n_cols in (1, 2, 5):
+        assert _same(
+            _outcome(lambda: fit_pooled_centers(expanded, n_cols, thresh)),
+            _outcome(lambda: fit_pooled_centers(pool, n_cols, thresh)))
+
+
+def test_pairs_fit_equals_both_spark_paths(spark):
+    """The same model as fit_column_model_pooled over the pool, on its
+    driver path and, where it applies, its distributed path. The pool
+    column holds null where a center is NaN, as Spark's
+    ``c - element_at(col_centers, 1)`` does. The distributed path needs
+    dist_thresh > 0 and cannot take a null center (its partition
+    summaries fail to sort on a null minimum), so it runs on the pools
+    without one."""
+    from pdftabextract_spark.operators.model import fit_column_model_pooled
+
+    rng = np.random.default_rng(11)
+    for case in range(10):
+        pool = _pool(rng)
+        if case == 0:
+            pool = np.array([], dtype=float)
+        thresh = float(THRESHOLDS[case % len(THRESHOLDS)])
+        expanded = np.repeat(*_pairs(rng, pool))
+        df = spark.createDataFrame(
+            [(None if np.isnan(v) else float(v),) for v in pool],
+            "center_norm double").repartition(3)
+        distributed = thresh > 0 and not np.isnan(pool).any()
+        for limit in ((None, 0) if distributed else (None,)):
+            want = _outcome(lambda: fit_column_model_pooled(
+                df, 4, thresh, max_driver_pool=limit))
+            got = _outcome(lambda: fit_pooled_centers(expanded, 4, thresh))
+            assert _same(got, want), (pool.tolist(), thresh, limit)

@@ -144,12 +144,12 @@ def test_pack_joined_raises_on_non_contiguous_input(spark):
 
 def test_span_path_plan_has_no_box_exchange(spark):
     """The span-table path runs both passes narrow over the span-doc rows:
-    the profile pass (which feeds the eager model fit, so it is not in
-    the result's plan) has no Exchange, and the result's plan, with and
-    without images, has no Exchange and no cached relation. The box
+    the pass-1 frame (collected for the eager model fit, so it is not in
+    the result's plan) has no Exchange and no cached relation, and the
+    result's plan, with and without images, has neither. The box
     profile pass over decoded span boxes has no Exchange either."""
-    from pdftabextract_spark.operators.clustering import (
-        page_profiles, span_page_profiles)
+    from pdftabextract_spark.operators.clustering import page_profiles
+    from pdftabextract_spark.plans.pipeline import span_center_counts
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
         .fromString("formatted")
@@ -158,16 +158,65 @@ def test_span_path_plan_has_no_box_exchange(spark):
         return df._jdf.queryExecution().explainString(mode)
 
     span_docs = synth.span_docs_df(spark, PARAMS)
-    for df in (page_profiles(textboxes_from_spans(span_docs),
-                             PIPE.col_break_dist, PIPE.row_break_dist),
-               span_page_profiles(span_docs, PIPE.col_break_dist,
-                                  PIPE.row_break_dist)):
-        assert "Exchange" not in plan(df), plan(df)
+    profiles = page_profiles(textboxes_from_spans(span_docs),
+                             PIPE.col_break_dist, PIPE.row_break_dist)
+    assert "Exchange" not in plan(profiles), plan(profiles)
+    p = plan(span_center_counts(span_docs, PIPE.col_break_dist))
+    assert "Exchange" not in p and "InMemory" not in p, p
+    assert "MapInArrow" in p, p
     for with_images in (False, True):
         p = plan(extract_from_span_table(span_docs, PIPE,
                                          with_images=with_images))
         assert "Exchange" not in p and "InMemory" not in p, p
         assert "MapInArrow" in p, p
+
+
+def test_span_path_runs_two_jobs(spark):
+    """extract_from_span_table into a sink runs exactly two Spark jobs,
+    with and without images: pass 1's one collect and pass 2's write. No
+    count, no guard exchange and no cache add a job."""
+    import dataclasses
+
+    sc = spark.sparkContext
+    for with_images in (False, True):
+        params = dataclasses.replace(PARAMS, with_images=with_images)
+        span_docs = synth.span_docs_df(spark, params)
+        group = "span-path-jobs-%s" % with_images
+        sc.setJobGroup(group, "span path job count")
+        try:
+            extract_from_span_table(span_docs, PIPE, with_images=with_images) \
+                .write.format("noop").mode("overwrite").save()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2, \
+                with_images
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+
+def test_span_model_equals_pooled_fit(spark):
+    """Pass 1's model (the collected (center, count) pairs, fit on the
+    driver) is bit-equal to fit_column_model_pooled over the normalized
+    page centers of the decoded span boxes, on its driver and its
+    distributed path, with and without a skewed page_dist."""
+    import dataclasses
+    from pdftabextract_spark.operators.clustering import page_profiles
+    from pdftabextract_spark.operators.model import fit_column_model_pooled
+    from pdftabextract_spark.plans.pipeline import (
+        _pooled_centers, _span_model)
+
+    skewed = dataclasses.replace(PARAMS, seed=43,
+                                 page_dist=((1, .6), (2, .25), (40, .15)))
+    for params in (PARAMS, skewed):
+        span_docs = synth.span_docs_df(spark, params)
+        pooled = _pooled_centers(page_profiles(
+            textboxes_from_spans(span_docs), PIPE.col_break_dist,
+            PIPE.row_break_dist))
+        got = [x.hex() for x in _span_model(span_docs, PIPE)]
+        for limit in (None, 0):
+            want = fit_column_model_pooled(pooled, PIPE.n_cols,
+                                           PIPE.model_break_dist,
+                                           max_driver_pool=limit)
+            assert got == [x.hex() for x in want], (params.seed, limit)
 
 
 def test_image_page_attribution_with_sparse_images(spark):

@@ -209,6 +209,45 @@ def test_repeated_doc_id_raises(spark):
         assert "dup-doc-7" in str(exc.value), num_slices
 
 
+def test_null_doc_ids_are_exempt(spark):
+    """Rows with a null doc_id never trip the guard (they get no
+    output), however many there are."""
+    null_row = (None, [(0, _payload("n", 10.0, 10.0, 1))])
+    other = ("other", [(0, _payload("z", 10.0, 10.0, 1))])
+    got = _spans(spark, [null_row, null_row, other])
+    assert got and {r[0] for r in got} == {"other"}
+
+
+def test_doc_id_repeated_without_kept_boxes_passes(spark):
+    """A doc_id repeated only in rows with no kept box (zero-area or
+    malformed payloads) passes, and those rows add nothing."""
+    doc = ("d", [(0, _payload("x0", 10.0, 10.0, 1)),
+                 (1, _payload("x1", 200.0, 10.0, 1))])
+    empty = ("d", [(0, '{"v":"k","l":10,"t":10,"w":0,"h":5,"p":1}'),
+                   (1, "not json")])
+    want = _spans(spark, [doc])
+    for num_slices in (1, 2):
+        assert sorted(tuple(r) for r in extract_from_span_table(
+            _docs(spark, [doc, empty, empty], num_slices=num_slices),
+            PIPE).collect()) == want
+
+
+def test_corpus_without_kept_text_box_gives_no_rows(spark):
+    """Only image spans, or only zero-area boxes: no rows, with and
+    without images."""
+    image = {"kind": "image", "text": None, "media_ref": "mem://i.png",
+             "offset": 0}
+    zero = {"kind": "text", "media_ref": None, "offset": 1,
+            "text": '{"v":"k","l":10,"t":10,"w":0,"h":5,"p":1}'}
+    for spans in ([image], [zero], [image, zero]):
+        docs = spark.createDataFrame([("d", spans), ("e", spans)],
+                                     SPAN_DOCS)
+        for with_images in (False, True):
+            assert extract_from_span_table(
+                docs, PIPE, with_images=with_images).collect() == [], \
+                (spans, with_images)
+
+
 def test_frames_cut_at_doc_rows(monkeypatch):
     """frames cuts each span-doc batch only between doc rows, starting a
     new frame at the row that carries the span count past a multiple of
