@@ -322,35 +322,29 @@ def repair_centers(centers, model_arr, same_size_use_model_arr_diff_thresh=None)
 
 def fit_center_model(centers_norm_clusters, n_required_clusters):
     """Phase 2 of the corpus column-model fit: from pooled normalized
-    per-page centers already clustered (list of (indices, values) tuples),
-    iteratively pick cluster medians from the most-populous clusters down
-    until exactly ``n_required_clusters`` medians are kept; degrade to all
-    medians when too few clusters exist. Sequential-stateful by design —
-    runs on the driver over a tiny pooled array.
-    Parity: clustering.py:111-140.
-    """
-    return fit_center_model_summaries(
-        [(len(vals), np.median(vals)) for _, vals in centers_norm_clusters],
-        n_required_clusters)
-
-
-def fit_center_model_summaries(summaries, n_required_clusters):
-    """:func:`fit_center_model` over ``(count, median)`` cluster summaries
-    in ascending-value order — the web-scale entry point: the filter only
-    ever consumes each cluster's size and exact median, so clusters never
-    need materializing (the distributed fit aggregates them to this tuple
-    per cluster, O(distinct column offsets) rows).
+    per-page centers already clustered (list of (indices, values) tuples
+    in ascending-value order), iteratively pick cluster medians from the
+    most-populous clusters down until exactly ``n_required_clusters``
+    medians are kept; degrade to all medians when too few clusters exist.
+    Sequential-stateful by design — runs on the driver over the pooled
+    array. Parity: clustering.py:111-140.
 
     The reference's loop (clustering.py:120-136) counts min_n_values down
     from the LARGEST cluster size, appending each pass's still-unseen
     cluster medians in list order and removing appended clusters. With
     static lengths/medians this is exactly: visit clusters in decreasing
     length (stable on list order), skip duplicate median VALUES, stop at
-    n_required. The direct loop is O(max_len x clusters x median) — at
-    web scale max_len is the page count, so we run the equivalent
-    O(C log C) form (equivalence property-tested against a direct port
-    in tests/test_kernels_clustering.py).
+    n_required. The direct loop is O(max_len x clusters x median) — max_len
+    is the page count, so we run the equivalent O(C log C) form
+    (equivalence property-tested against a direct port in
+    tests/test_kernels_clustering.py).
+
+    Raises ``ValueError`` when there are at least ``n_required_clusters``
+    clusters but fewer distinct medians (dist_thresh 0 puts each repeated
+    center in a cluster of its own).
     """
+    summaries = [(len(vals), np.median(vals))
+                 for _, vals in centers_norm_clusters]
     if len(summaries) < n_required_clusters:
         return np.array(sorted(m for _n, m in summaries)), False
 
@@ -363,7 +357,11 @@ def fit_center_model_summaries(summaries, n_required_clusters):
         if len(medians) == n_required_clusters:
             break
 
-    assert len(medians) == n_required_clusters
+    if len(medians) != n_required_clusters:
+        raise ValueError(
+            "column model: %d clusters required, but the pooled centers "
+            "have only %d distinct cluster medians"
+            % (n_required_clusters, len(medians)))
     return np.array(sorted(medians)), True
 
 
@@ -374,7 +372,6 @@ def fit_pooled_centers(pooled, n_required_clusters, dist_thresh):
     operators/model.fit_column_model_pooled."""
     clusters_w_vals = zip_clusters_and_values(
         find_clusters_1d_break_dist(pooled, dist_thresh), pooled)
-    # order clusters by ascending value like the distributed cids
     clusters_w_vals.sort(key=lambda cw: cw[1].min())
     model, _ = fit_center_model(clusters_w_vals, n_required_clusters)
     return model

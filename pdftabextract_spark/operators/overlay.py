@@ -1,7 +1,7 @@
-"""Debug overlay SINK: render detected Hough lines / grid borders onto
-the page images as PNG blobs — the distributed staging of the
-reference's visual diagnostics (imgproc.py:364-442; its examples write
-overlay PNGs per page while tuning, catalog_30s.py:95-102).
+"""Debug overlay SINK: render grid borders onto the page images as PNG
+blobs — the distributed staging of the reference's visual diagnostics
+(imgproc.py:364-442; its examples write overlay PNGs per page while
+tuning, catalog_30s.py:95-102).
 
 Scale shape: one mapInPandas over (page x media) rows — per-page unit of
 work, no shuffle beyond the media equi-join, output is a binary column a
@@ -11,52 +11,13 @@ encoder (kernels/png.py).
 """
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..kernels import draw as D
 from ..kernels.png import encode_png
 from ..kernels.raster import decode_raster
 
 _OVERLAY_SCHEMA = "doc_id string, page int, media_ref string, overlay binary"
-
-
-def _media_joined(per_page: DataFrame, pages: DataFrame, media: DataFrame,
-                  extra_cols):
-    sel = pages.select("doc_id", "page", "media_ref", *extra_cols)
-    return (per_page.join(sel, ["doc_id", "page"])
-            .join(media, "media_ref"))
-
-
-def render_line_overlays(lines: DataFrame, pages: DataFrame,
-                         media: DataFrame,
-                         color_h=(0, 255, 0), color_v=(255, 0, 0),
-                         line_width=2) -> DataFrame:
-    """(doc_id, page, rho, theta, direction) lines + page images ->
-    (doc_id, page, media_ref, overlay PNG) with horizontal/vertical lines
-    in distinct colors (draw_lines-in-both-directions parity,
-    imgproc.py:387-393)."""
-    per_page = (lines.groupBy("doc_id", "page")
-                .agg(F.collect_list(F.struct("rho", "theta", "direction"))
-                     .alias("page_lines")))
-    joined = _media_joined(per_page, pages, media, [])
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = D.to_rgb(decode_raster(bytes(r.bytes)))
-                ls = [(x["rho"], x["theta"], x["direction"])
-                      for x in r.page_lines]
-                D.draw_polar_lines(
-                    img, [l for l in ls if l[2] == "h"], color_h, line_width)
-                D.draw_polar_lines(
-                    img, [l for l in ls if l[2] == "v"], color_v, line_width)
-                rows.append((r.doc_id, int(r.page), r.media_ref,
-                             encode_png(img)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "page", "media_ref", "overlay"])
-
-    return joined.mapInPandas(kernel, schema=_OVERLAY_SCHEMA)
 
 
 def render_grid_overlays(positions: DataFrame, pages: DataFrame,
@@ -66,10 +27,12 @@ def render_grid_overlays(positions: DataFrame, pages: DataFrame,
     coordinates — the save_page_grids payload) + page images ->
     (doc_id, page, media_ref, overlay PNG) with every grid border drawn
     full-span, scaled page->image space via the page/image dims."""
-    per_page = positions.select("doc_id", "page", "col_positions",
-                                "row_positions")
-    joined = _media_joined(per_page, pages, media,
-                           ["width", "height", "img_w", "img_h"])
+    joined = (positions.select("doc_id", "page", "col_positions",
+                               "row_positions")
+              .join(pages.select("doc_id", "page", "media_ref", "width",
+                                 "height", "img_w", "img_h"),
+                    ["doc_id", "page"])
+              .join(media, "media_ref"))
 
     def kernel(batches):
         for pdf in batches:

@@ -244,7 +244,7 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     # catalog_30s.py:46,161-166)
     centers = line_border_centers(lines_fixed, pages, "v", params.col_break_dist)
     if persist:
-        # consumed twice: the model-fit probe action and the repair join
+        # consumed twice: the model-fit collect and the repair join
         centers = _materialize(centers, params.cache)
     repaired = fit_and_repair(
         centers, params.n_cols + 1, params.model_break_dist,
@@ -365,12 +365,11 @@ def _span_model(span_docs: DataFrame, params: PipelineParams):
     """Pass 1 in one Spark job: collect ``span_center_counts``, check that
     no doc_id comes from two input rows, and fit the corpus column model
     on the driver over the pool the (center, count) pairs stand for
-    (kernels/clustering.fit_pooled_centers, the driver path of
-    operators/model.fit_column_model_pooled). A doc_id whose kept boxes
-    come from more than one input row would be packed as two docs with
-    colliding offsets, so it raises instead, naming the doc_id; null
-    doc_ids are exempt (they get no output). Unlike
-    fit_column_model_pooled there is no distributed fallback: the driver
+    (kernels/clustering.fit_pooled_centers, as
+    operators/model.fit_column_model_pooled fits a pooled frame). A doc_id
+    whose kept boxes come from more than one input row would be packed as
+    two docs with colliding offsets, so it raises instead, naming the
+    doc_id; null doc_ids are exempt (they get no output). The driver
     holds the whole pool and every kept doc_id."""
     import numpy as np
     import pyarrow.compute as pc

@@ -447,7 +447,10 @@ def test_fit_center_model_equivalent_to_reference_loop(cluster_vals, n_required)
         if m not in distinct:
             distinct.append(m)
     if len(cw) >= n_required and len(distinct) < n_required:
-        return  # both variants would fail the same assert — skip
+        # fewer distinct medians than required: the fit raises
+        with pytest.raises(ValueError, match="%d clusters required" % n_required):
+            fit_center_model(cw, n_required)
+        return
     got, ok1 = fit_center_model(cw, n_required)
     expect, ok2 = _fit_center_model_reference_loop(cw, n_required)
     assert ok1 == ok2

@@ -1,12 +1,13 @@
-"""The span path's corpus model fit from (center, count) pairs: pass 1
-emits each partition's pool as kernels/clustering.count_values pairs,
-and the driver fits kernels/clustering.fit_pooled_centers over
-``np.repeat`` of them. These tests check that this gives the pooled fit
-of operators/model.fit_column_model_pooled: seeded pools with ties, NaN,
+"""The corpus model fit. The span path's pass 1 emits each partition's
+pool as kernels/clustering.count_values pairs, and the driver fits
+kernels/clustering.fit_pooled_centers over ``np.repeat`` of them. These
+tests check that this gives the pooled fit of
+operators/model.fit_column_model_pooled: seeded pools with ties, NaN,
 ±inf, ±0 and near-overflow centers, a single value and an empty pool, at
 dist_thresh 0 and > 0, each permuted and split into random partitions.
-The property test is Spark-free; one Spark test checks the same pools
-through fit_column_model_pooled's driver and distributed paths."""
+The property test is Spark-free; two Spark tests check
+fit_column_model_pooled itself: the same model on the same pools, and
+one job with no cache."""
 
 import warnings
 
@@ -51,7 +52,7 @@ def _outcome(fn):
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)
             return fn()
-    except (AssertionError, ValueError) as e:
+    except ValueError as e:
         return type(e).__name__
 
 
@@ -98,14 +99,17 @@ def test_edge_pools(pool, thresh):
             _outcome(lambda: fit_pooled_centers(pool, n_cols, thresh)))
 
 
+def test_too_few_distinct_medians_raises():
+    """dist_thresh 0 puts each repeated center in its own cluster: four
+    clusters, two distinct medians, three required."""
+    with pytest.raises(ValueError, match="3 clusters required.* only 2 "):
+        fit_pooled_centers(np.array([0., 0., 5., 5.]), 3, 0.0)
+
+
 def test_pairs_fit_equals_both_spark_paths(spark):
-    """The same model as fit_column_model_pooled over the pool, on its
-    driver path and, where it applies, its distributed path. The pool
+    """The same model as fit_column_model_pooled over the pool. The pool
     column holds null where a center is NaN, as Spark's
-    ``c - element_at(col_centers, 1)`` does. The distributed path needs
-    dist_thresh > 0 and cannot take a null center (its partition
-    summaries fail to sort on a null minimum), so it runs on the pools
-    without one."""
+    ``c - element_at(col_centers, 1)`` does."""
     from pdftabextract_spark.operators.model import fit_column_model_pooled
 
     rng = np.random.default_rng(11)
@@ -118,9 +122,35 @@ def test_pairs_fit_equals_both_spark_paths(spark):
         df = spark.createDataFrame(
             [(None if np.isnan(v) else float(v),) for v in pool],
             "center_norm double").repartition(3)
-        distributed = thresh > 0 and not np.isnan(pool).any()
-        for limit in ((None, 0) if distributed else (None,)):
-            want = _outcome(lambda: fit_column_model_pooled(
-                df, 4, thresh, max_driver_pool=limit))
-            got = _outcome(lambda: fit_pooled_centers(expanded, 4, thresh))
-            assert _same(got, want), (pool.tolist(), thresh, limit)
+        want = _outcome(lambda: fit_column_model_pooled(df, 4, thresh))
+        got = _outcome(lambda: fit_pooled_centers(expanded, 4, thresh))
+        assert _same(got, want), (pool.tolist(), thresh)
+
+
+def test_pooled_fit_runs_one_job_and_caches_nothing(spark):
+    """fit_column_model_pooled is one collect: exactly one Spark job, no
+    RDD left persisted, and the model of fit_pooled_centers over the same
+    values (a null center read as NaN), bit for bit."""
+    from pyspark.sql import functions as F
+    from pdftabextract_spark.operators.model import fit_column_model_pooled
+
+    ids = np.arange(600)
+    values = (ids % 5) * 120.0 + (ids % 7) / 2.0
+    values[ids % 97 == 5] = np.nan
+    i = F.col("id")
+    pooled = spark.range(0, len(ids), numPartitions=3).select(
+        F.when(i % 97 == 5, F.lit(None))
+        .otherwise((i % 5) * 120.0 + (i % 7) / 2.0).alias("center_norm"))
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    group = "pooled-fit-one-job"
+    sc.setJobGroup(group, "pooled fit job count")
+    try:
+        got = fit_column_model_pooled(pooled, 5, 40.0)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+    want = fit_pooled_centers(values, 5, 40.0)
+    assert [x.hex() for x in got] == [x.hex() for x in want]

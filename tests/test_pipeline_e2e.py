@@ -196,8 +196,8 @@ def test_span_path_runs_two_jobs(spark):
 def test_span_model_equals_pooled_fit(spark):
     """Pass 1's model (the collected (center, count) pairs, fit on the
     driver) is bit-equal to fit_column_model_pooled over the normalized
-    page centers of the decoded span boxes, on its driver and its
-    distributed path, with and without a skewed page_dist."""
+    page centers of the decoded span boxes, with and without a skewed
+    page_dist."""
     import dataclasses
     from pdftabextract_spark.operators.clustering import page_profiles
     from pdftabextract_spark.operators.model import fit_column_model_pooled
@@ -212,11 +212,9 @@ def test_span_model_equals_pooled_fit(spark):
             textboxes_from_spans(span_docs), PIPE.col_break_dist,
             PIPE.row_break_dist))
         got = [x.hex() for x in _span_model(span_docs, PIPE)]
-        for limit in (None, 0):
-            want = fit_column_model_pooled(pooled, PIPE.n_cols,
-                                           PIPE.model_break_dist,
-                                           max_driver_pool=limit)
-            assert got == [x.hex() for x in want], (params.seed, limit)
+        want = fit_column_model_pooled(pooled, PIPE.n_cols,
+                                       PIPE.model_break_dist)
+        assert got == [x.hex() for x in want], params.seed
 
 
 def test_image_page_attribution_with_sparse_images(spark):
