@@ -7,11 +7,15 @@ a doc's row count is its shingle count, and counting each ``d2`` over the
 concatenated tails of its group gives the number of shingles the pair
 (d1, d2) shares. The pairs are counted one document at a time, in
 memory, instead of as one row per pair through an exchange and a hash
-aggregation.
+aggregation. The kernel first calls kernels/pyworker.forget_zip_importers,
+so the Python worker that runs the task skips the zip re-reads of its
+next task's setup.
 """
 
 import numpy as np
 import pyarrow as pa
+
+from .pyworker import forget_zip_importers
 
 OUT_SCHEMA = pa.schema([("d1", pa.int64()), ("d2", pa.int64()),
                         ("common", pa.int64()), ("sz", pa.int64())])
@@ -90,6 +94,7 @@ def shared_shingle_counts(batches, threshold: float):
     next batch, so a group split across batches is counted whole. A d1
     that recurs after its group closed means the input was not grouped;
     counting it would split its pairs and size, so it raises instead."""
+    forget_zip_importers()
     seen = set()
     carry = None
 

@@ -5,11 +5,15 @@ operators/grid.profile_and_pack and pack_joined) read rows whose
 (doc_id, page) groups arrive contiguously within a partition, but Arrow
 cuts the partition into batches without regard to pages.
 ``iter_page_groups`` re-cuts the stream of pyarrow record batches
-(mapInArrow) so every page is handed over whole, exactly once.
+(mapInArrow) so every page is handed over whole, exactly once. It first
+calls kernels/pyworker.forget_zip_importers, so the Python worker that
+runs the task skips the zip re-reads of its next task's setup.
 """
 
 import numpy as np
 import pyarrow as pa
+
+from .pyworker import forget_zip_importers
 
 
 def column(batch: pa.RecordBatch, name: str, dtype=None) -> np.ndarray:
@@ -40,6 +44,7 @@ def iter_page_groups(batches, name: str):
     one. A page that recurs after its group closed means the input was
     not page-contiguous; emitting it would produce duplicate partial
     pages, so it raises instead."""
+    forget_zip_importers()
     seen = set()
 
     def closed(batch, doc_ids, pages, bounds):

@@ -9,6 +9,9 @@ reader and returns the batch's boxes and image pages. The Spark entry
 points ``textboxes_from_spans`` and ``pages_from_spans`` are thin
 ``mapInArrow`` stages over it, and both passes of
 plans/pipeline.extract_from_span_table call it inside their kernels.
+All of them cut their input with ``frames``, which first calls
+kernels/pyworker.forget_zip_importers, so the Python worker that runs
+the task skips the zip re-reads of its next task's setup.
 
 Parity notes: a payload reads as ``F.from_json`` with the box schema reads
 it (``parse_payloads``). The box drop replicates parse_pages' rect
@@ -26,6 +29,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.json as pj
 from pyspark.sql import DataFrame, functions as F
+
+from ..kernels.pyworker import forget_zip_importers
 
 BOX_SCHEMA = pa.schema([("v", pa.string()), ("l", pa.float64()),
                         ("t", pa.float64()), ("w", pa.float64()),
@@ -194,6 +199,7 @@ def frames(batches):
     """Span-doc record batches -> slices of whole doc rows, a new slice
     starting at the row that carries the span count past each multiple
     of ``MAX_FRAME_SPANS``."""
+    forget_zip_importers()
     for batch in batches:
         n = pc.list_value_length(batch.column("spans")).fill_null(0) \
             .to_numpy(zero_copy_only=False)

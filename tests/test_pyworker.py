@@ -1,0 +1,103 @@
+"""kernels/pyworker.forget_zip_importers: a Spark-free check that it drops
+the zip importers and leaves imports working, and a worker-side gate that
+every shared kernel iterator calls it, so a reused Python worker holds no
+zip importer for the next task's ``importlib.invalidate_caches()`` to
+re-read."""
+
+import importlib
+import pkgutil
+import sys
+import zipfile
+import zipimport
+
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+
+from pdftabextract_spark.kernels.overlap import shared_shingle_counts
+from pdftabextract_spark.kernels.pagegroups import iter_page_groups
+from pdftabextract_spark.kernels.pyworker import forget_zip_importers
+from pdftabextract_spark.sources.spans import frames
+
+
+def _zip_importers():
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+def test_forget_drops_zip_importers_and_imports_still_work(tmp_path):
+    archive = tmp_path / "pkgs.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("pyworker_zip_pkg/__init__.py", "")
+        z.writestr("pyworker_zip_pkg/first.py", "VALUE = 1\n")
+        z.writestr("pyworker_zip_pkg/second.py", "VALUE = 2\n")
+    saved_path = list(sys.path)
+    saved_cache = dict(sys.path_importer_cache)
+    sys.path.insert(0, str(archive))
+    try:
+        first = importlib.import_module("pyworker_zip_pkg.first")
+        assert first.VALUE == 1
+        assert _zip_importers()
+        forget_zip_importers()
+        assert _zip_importers() == []
+        second = importlib.import_module("pyworker_zip_pkg.second")
+        assert second.VALUE == 2
+        importlib.invalidate_caches()
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        for name in [m for m in sys.modules
+                     if m.split(".")[0] == "pyworker_zip_pkg"]:
+            del sys.modules[name]
+
+
+def _frames_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.array("id").alias("spans"))
+
+
+def _page_groups_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.lit("d").alias("doc_id"), F.col("id").cast("int").alias("page"))
+
+
+def _shingle_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.col("id").alias("d1"), F.array().cast("array<long>").alias("tail"))
+
+
+@pytest.mark.parametrize("name, build, start", [
+    ("frames", _frames_input, frames),
+    ("iter_page_groups", _page_groups_input,
+     lambda batches: iter_page_groups(batches, "gate")),
+    ("shared_shingle_counts", _shingle_input,
+     lambda batches: shared_shingle_counts(batches, 0.5)),
+])
+def test_kernel_iterator_leaves_worker_without_zip_importers(
+        spark, name, build, start):
+    def probe(batches):
+        # not _zip_importers: the worker cannot import this test module
+        def n_zip_importers():
+            return sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+
+        batches = list(batches)
+        # a fresh worker's first pass imports pandas (pyarrow's
+        # to_numpy), which searches, and so re-caches, every zip on the
+        # path; a reused worker has done that already
+        for _ in start(iter(batches)):
+            pass
+        # an earlier task may have cleared the cache: put back an
+        # importer for every zip on the path
+        for entry in sys.path:
+            pkgutil.get_importer(entry)
+        before = n_zip_importers()
+        next(start(iter(batches)), None)
+        yield pa.RecordBatch.from_pydict(
+            {"before": [before], "after": [n_zip_importers()]})
+
+    row = build(spark).mapInArrow(
+        probe, "before long, after long").collect()[0]
+    assert row.before > 0, "the worker has no zip on its path; gate is void"
+    assert row.after == 0, "%s left %d zip importers" % (name, row.after)
