@@ -178,9 +178,9 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
     is the published standard; pass smaller ``n`` for short-document
     corpora.
 
-    Scale shape: shingles are xxhash64'd 8-byte keys (reusing the
-    :func:`~pdftabextract_spark.operators.dedup.word_shingles` machinery,
-    dedup.py:88-106); the distinct eval shingle set is BROADCAST by
+    Scale shape: shingles are xxhash64'd 8-byte keys (reusing
+    :func:`~pdftabextract_spark.operators.dedup.word_shingles`); the
+    distinct eval shingle set is BROADCAST by
     default — eval suites are thousands of documents, so their shingle
     set is megabytes against a 100 TB train corpus, making the check one
     map-side semi-join plus one groupBy on doc_id. Pass
@@ -294,7 +294,7 @@ def boilerplate_fraction(docs: DataFrame, n: int = 8, min_docs: int = 2,
 
     Scale shape: shingles are xxhash64 8-byte keys
     (:func:`~pdftabextract_spark.operators.dedup.word_shingles`,
-    dedup.py:88-106, distinct per doc); the document-frequency count is
+    distinct per doc); the document-frequency count is
     one groupBy on the hash with map-side partials, and the frequent set
     comes back as a join — never an all-pairs comparison.
 
@@ -342,10 +342,10 @@ def duplicate_passage_rate(docs: DataFrame, k: int = 50, text_col="text",
 
     Scale shape: windows are xxhash64 8-byte keys built JVM-side
     (transform over sequence — no Python); the distinct-document count
-    per window reuses the map-side-deduped
-    :func:`~pdftabextract_spark.operators.dedup.word_shingles` rows
-    (dedup.py:88-115), so the census groupBy receives at most one row
-    per (doc, window) and partial-aggregates map-side. The census joins
+    per window dedups each doc's windows map-side (``array_distinct``, as
+    :func:`~pdftabextract_spark.operators.dedup.word_shingles` dedups its
+    grams per doc), so the census groupBy receives at most one row per
+    (doc, window) and partial-aggregates map-side. The census joins
     back to the multiplicity-bearing window stream on the 8-byte hash —
     a shuffled equi-join, never all-pairs — and a hot boilerplate window
     costs its document frequency once in the census, not df² anywhere.

@@ -6,19 +6,22 @@ engines (the DuckDB oracles in __spark_entry__ compute identical values).
 Scale notes: exact dedup is one hash-groupBy; minhash/simhash shuffle once
 on doc_id after the word explode (map-side partial min/sum aggregation
 keeps the exchange small); LSH banding turns the quadratic near-dup
-problem into an equi-join on band buckets; n-gram Jaccard counts shared
-shingles per document in one Arrow kernel over per-shingle sorted doc
-lists, whose length (the pair fanout) is bounded by capping document
-frequency (stop-shingle removal) — the knob at 100 TB, exposed as
-``max_shingle_df``.
+problem into an equi-join on band buckets; n-gram Jaccard is three Arrow
+kernels (shingles, per-shingle sorted doc lists, shared-shingle counts
+per document), and the doc-list length (the pair fanout) is bounded by
+capping document frequency (stop-shingle removal) — the knob at 100 TB,
+exposed as ``max_shingle_df``.
 """
 
 from functools import partial
 
 from pyspark.sql import DataFrame, Window as W, functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql.types import (IntegralType, StringType, StructField,
+                               StructType)
 
-from ..kernels.overlap import OUT_DDL as _COUNTS_DDL, shared_shingle_counts
+from ..kernels.overlap import (OUT_DDL as _COUNTS_DDL, POSTING_DDL,
+                               posting_tails, shared_shingle_counts)
+from ..kernels.shingles import word_grams
 from ..partitioning import shuffle_partitions, spread_small_input
 
 PORTABLE_HASH = "cast(conv(substring(md5({x}), 1, 8), 16, 10) as bigint)"
@@ -94,35 +97,27 @@ def simhash(docs: DataFrame, text_col="text", id_col="doc_id", bits=16) -> DataF
 
 def word_shingles(docs: DataFrame, n=3, text_col="text", id_col="doc_id",
                   hashed: bool = False) -> DataFrame:
-    """Distinct word n-gram shingles per doc (JVM-side transform over
-    sequence — no Python). ``hashed`` replaces the shingle string with
-    xxhash64(s) BEFORE the distinct: the dedup and the downstream
-    equi-join then move 8-byte longs instead of ~n-word strings through
-    the exchange (string keys dominated the q18 shuffle). A 64-bit
-    collision between two distinct shingles of the same doc pair is the
-    only way this changes a count (~1e-10 at 10^5 distinct shingles,
-    deterministic when it happens).
+    """Distinct word ``n``-gram shingles per doc -> (doc_id, s), doc_id
+    keeping ``id_col``'s type. One ``mapInArrow`` kernel
+    (kernels/shingles.word_grams) splits the text on " " as
+    ``split(text, " ")`` does (empty tokens stay), joins each window of
+    ``n`` tokens with " " and keeps each doc's distinct grams, so rows
+    leave the scan stage already deduplicated per doc. A doc with a null
+    text, a null id or fewer than ``n`` tokens has no shingles.
 
-    .. note:: **Changed in round 5** — per-doc dedup moved from a global
-       ``(doc_id, s)`` ``distinct()`` (a full-corpus exchange) to a
-       map-side ``array_distinct`` inside the shingle row, before the
-       explode. Output multiset is identical (a shingle is unique within
-       its own doc either way); at 10^12 docs this removes the single
-       largest shuffle of the n-gram path — shingle rows now leave the
-       scan stage already deduped, and the first exchange downstream is
-       the one the consumer actually needs (hash by ``s``)."""
-    d = docs.select(F.col(id_col).alias("doc_id"), F.split(text_col, " ").alias("ws"))
-    d = d.where(F.size("ws") >= n)
-    # greatest(..., 0) keeps the expression total: sequence(0, negative)
-    # generates a DESCENDING range whose -1 crashes slice when codegen
-    # evaluates the gram array before the >= n filter drops the row (the
-    # row is still dropped; a clamped bogus gram on it is never observed)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("ws") - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(F.col("ws"), i + 1, n)))
-    if hashed:
-        grams = F.transform(grams, lambda s: F.xxhash64(s))
-    return d.select("doc_id", F.explode(F.array_distinct(grams)).alias("s"))
+    ``hashed`` replaces the gram with ``xxhash64`` of it, computed in the
+    JVM, so exchanges downstream move 8-byte longs instead of ~n-word
+    strings. Two grams of one doc that collide in 64 bits then give two
+    rows with the same ``s`` (about 1e-10 at 10^5 distinct grams);
+    ngram_jaccard_pairs counts such a pair once."""
+    if n < 1:
+        raise ValueError("word_shingles: n must be at least 1, got %r" % n)
+    schema = StructType([StructField("doc_id", docs.schema[id_col].dataType),
+                         StructField("s", StringType())])
+    sh = (docs.select(F.col(id_col).alias("doc_id"),
+                      F.col(text_col).alias("text"))
+          .mapInArrow(partial(word_grams, n=n), schema))
+    return sh.withColumn("s", F.xxhash64("s")) if hashed else sh
 
 
 MAX_SHINGLE_DF_DEFAULT = 1000
@@ -143,23 +138,24 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     pair fanout, at the cost of slightly underestimating the overlap of
     boilerplate-heavy pairs; doc sizes are counted after the drop. Pass
     ``None`` for exact Jaccard. ``log_dropped=True`` counts and warns
-    about dropped stop-shingles (one extra pass over the corpus; keep it
+    about dropped stop-shingles: one extra job over the corpus collects
+    the stop-shingles to the driver, and an anti-join drops them (keep it
     off the hot path).
 
-    Plan:
+    Plan, three Arrow kernels and three exchanges:
 
-    1. hashed shingles, one exchange on ``s``; the stop-shingle drop is a
-       window count on that partitioning (shingles are distinct per doc,
-       so the count is the document frequency);
-    2. ``collect_list`` of each shingle's docs, sorted, then one row per
-       (shingle, doc): ``d1`` and ``tail``, the docs after it in the list
-       (``posexplode`` + ``slice``);
-    3. exchange on ``d1``, sorted within partitions, then one
-       ``mapInArrow`` kernel (kernels/overlap.shared_shingle_counts)
-       counts each (d1, d2)'s shared shingles per d1 group. A doc's row
-       count is its size ``sz1``, so the kernel drops every pair that
-       fails the necessary bound ``common >= (t - 1e-6)*sz1 - 1`` and
-       emits one size row per doc;
+    1. hashed shingles (word_shingles), one exchange on ``s``, sorted
+       within partitions;
+    2. one ``mapInArrow`` kernel (kernels/overlap.posting_tails) builds
+       each shingle's sorted doc list, drops the stop-shingles, and emits
+       one (d1, k, tail) row per doc per flush: ``k`` shingles of d1 and
+       the docs after d1 in their lists;
+    3. exchange on ``d1``, sorted within partitions, then one kernel
+       (kernels/overlap.shared_shingle_counts) counts each (d1, d2)'s
+       shared shingles per d1 group. A doc's size ``sz1`` is the sum of
+       its ``k``, so the kernel drops every pair that fails the necessary
+       bound ``common >= (t - 1e-6)*sz1 - 1`` and emits one size row per
+       doc;
     4. one small exchange on ``coalesce(d2, d1)``: a window ``max`` hands
        each candidate its ``sz2`` from d2's size row, and the exact
        ``round(jaccard, 6) >= threshold`` filter runs.
@@ -174,36 +170,26 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
                        hashed=True)
     # The repartitions pin both exchanges at the session's shuffle
     # parallelism: AQE sizes post-shuffle partitions by the exchange
-    # bytes and would coalesce the stages whose work (the doc-list
-    # explode, the counting kernel) is far larger than their input.
+    # bytes and would coalesce the stages whose work (the posting lists,
+    # the counting kernel) is far larger than their input.
     n_part = shuffle_partitions(docs.sparkSession)
     if max_shingle_df is not None and log_dropped:
         # diagnostic path (explicitly off the hot path): a separate df
         # census so the dropped count can be reported
         import warnings
-        hot = sh.groupBy("s").count().where(F.col("count") > max_shingle_df) \
-                .select("s")
-        n_hot = hot.count()
-        if n_hot:
+        hot = (sh.groupBy("s").count().where(F.col("count") > max_shingle_df)
+               .select("s").collect())
+        if hot:
             warnings.warn(
                 "ngram_jaccard_pairs: dropping %d stop-shingles with "
-                "df > %d" % (n_hot, max_shingle_df))
-        sh = sh.join(hot, "s", "left_anti").repartition(n_part, "s")
-    elif max_shingle_df is not None:
-        # a pathologically hot shingle spills the window buffer to disk
-        # rather than failing
-        sh = (sh.repartition(n_part, "s")
-              .withColumn("_df", F.count("*").over(W.partitionBy("s")))
-              .where(F.col("_df") <= max_shingle_df).drop("_df"))
-    else:
-        sh = sh.repartition(n_part, "s")
-    tails = (sh.groupBy("s").agg(F.array_sort(F.collect_list("doc_id"))
-                                 .alias("ds"))
-             .select("ds", F.posexplode("ds"))
-             # slice is 1-based and clamps; the last doc gets an empty tail
-             .select(F.col("col").cast("long").alias("d1"),
-                     F.slice("ds", F.col("pos") + F.lit(2), F.size("ds"))
-                     .cast("array<long>").alias("tail")))
+                "df > %d" % (len(hot), max_shingle_df))
+            sh = sh.join(F.broadcast(docs.sparkSession.createDataFrame(
+                hot, "s long")), "s", "left_anti")
+        max_shingle_df = None
+    tails = (sh.repartition(n_part, "s").sortWithinPartitions("s")
+             .mapInArrow(partial(posting_tails,
+                                 max_shingle_df=max_shingle_df),
+                         POSTING_DDL))
     counts = (tails.repartition(n_part, "d1").sortWithinPartitions("d1")
               .mapInArrow(partial(shared_shingle_counts, threshold=threshold),
                           _COUNTS_DDL))

@@ -194,21 +194,34 @@ def test_ngram_jaccard_log_dropped_warns_and_matches(spark):
 
 def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
     """The plan reads the documents once and never aggregates or
-    nested-loop-joins the pair stream: shared shingles are counted per
-    d1 group in the Arrow kernel."""
+    nested-loop-joins the pair stream: three Arrow kernels shingle, build
+    the posting lists and count shared shingles per d1 group, with no
+    JVM generator or collect_list left. The log_dropped plan is the same
+    after its census job."""
     import re
     path = str(tmp_path / "documents.parquet")
     _overlap_docs(spark).write.parquet(path)
-    out = D.ngram_jaccard_pairs(spark.read.parquet(path))
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
-    assert "MapInArrow" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert not re.search(r"Keys \[2\]: \[d1#\d+L?, d2#\d+L?\]", plan), plan
-    assert out.schema.simpleString() == \
-        "struct<d1:bigint,d2:bigint,common:bigint,jaccard:double>"
+    docs = spark.read.parquet(path)
+    with pytest.warns(UserWarning, match="stop-shingles"):
+        logged = D.ngram_jaccard_pairs(docs, max_shingle_df=40,
+                                       log_dropped=True)
+    for out in (D.ngram_jaccard_pairs(docs), logged):
+        plan = out._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted"))
+
+        def nodes(name):
+            return len(re.findall(r"^\(\d+\) %s\b" % name, plan, re.M))
+
+        assert nodes("Scan parquet") == 1, plan
+        assert nodes("MapInArrow") == 3, plan
+        assert nodes("Window") == 1, plan
+        for name in ("Generate", "ObjectHashAggregate",
+                     "BroadcastNestedLoopJoin"):
+            assert nodes(name) == 0, plan
+        assert not re.search(r"Keys \[2\]: \[d1#\d+L?, d2#\d+L?\]", plan), plan
+        assert out.schema.simpleString() == \
+            "struct<d1:bigint,d2:bigint,common:bigint,jaccard:double>"
 
 
 def test_ngram_jaccard_rejects_non_integral_id_before_any_job(spark):

@@ -14,9 +14,11 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from pdftabextract_spark.kernels.overlap import shared_shingle_counts
+from pdftabextract_spark.kernels.overlap import (
+    posting_tails, shared_shingle_counts)
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 from pdftabextract_spark.kernels.pyworker import forget_zip_importers
+from pdftabextract_spark.kernels.shingles import word_grams
 from pdftabextract_spark.sources.spans import frames
 
 
@@ -64,7 +66,18 @@ def _page_groups_input(spark):
 
 def _shingle_input(spark):
     return spark.range(2, numPartitions=1).select(
-        F.col("id").alias("d1"), F.array().cast("array<long>").alias("tail"))
+        F.col("id").alias("d1"), F.lit(1).cast("long").alias("k"),
+        F.array().cast("array<long>").alias("tail"))
+
+
+def _text_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.col("id").alias("doc_id"), F.lit("a b c d").alias("text"))
+
+
+def _posting_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.col("id").alias("doc_id"), F.lit(7).cast("long").alias("s"))
 
 
 @pytest.mark.parametrize("name, build, start", [
@@ -73,6 +86,9 @@ def _shingle_input(spark):
      lambda batches: iter_page_groups(batches, "gate")),
     ("shared_shingle_counts", _shingle_input,
      lambda batches: shared_shingle_counts(batches, 0.5)),
+    ("word_grams", _text_input, lambda batches: word_grams(batches, 2)),
+    ("posting_tails", _posting_input,
+     lambda batches: posting_tails(batches, None)),
 ])
 def test_kernel_iterator_leaves_worker_without_zip_importers(
         spark, name, build, start):
