@@ -28,9 +28,10 @@ OUT_SCHEMA = pa.schema([("d1", pa.int64()), ("d2", pa.int64()),
                         ("common", pa.int64()), ("sz", pa.int64())])
 OUT_DDL = "d1 long, d2 long, common long, sz long"
 
-# tail values a posting task buffers before it emits their rows: it
-# bounds the task's memory, give or take one batch's lists; a larger
-# flush emits fewer rows into the d1 exchange
+# docs plus tail values a posting task buffers before it emits their
+# rows, and the most tail values one emitted batch holds: it bounds the
+# task's memory, give or take one batch's lists; a larger flush emits
+# fewer rows into the d1 exchange
 FLUSH_TAIL_VALUES = 1 << 22
 
 _INT64_MAX = int(np.iinfo(np.int64).max)
@@ -82,8 +83,10 @@ def posting_tails(batches, max_shingle_df):
     holds more than ``max_shingle_df`` docs, so a stop-shingle costs at
     most that many docs plus one batch of memory however long its list.
     The kept lists are buffered, a batch's lists at a time, until their
-    tails reach FLUSH_TAIL_VALUES values; each flush emits one row per
-    doc it holds, sorted by d1. Input not sorted on ``s`` raises."""
+    docs and tails reach FLUSH_TAIL_VALUES values; each flush emits one
+    row per doc it holds, sorted by d1, in batches of at most
+    FLUSH_TAIL_VALUES tail values (see _tail_rows). Input not sorted on
+    ``s`` raises."""
     forget_zip_importers()
     carry = None
     hot = None  # the s of a held-back list found over the cap
@@ -112,15 +115,15 @@ def posting_tails(batches, max_shingle_df):
             else:
                 carry = s[last:last + len(docs)], docs
         buf.append(_postings(s[:last], d[:last], max_shingle_df))
-        lengths = buf[-1][1]
-        pending += int((lengths * (lengths - 1) // 2).sum())
+        docs, lengths = buf[-1]
+        pending += len(docs) + int((lengths * (lengths - 1) // 2).sum())
         if pending >= FLUSH_TAIL_VALUES:
-            yield _tail_rows(*map(np.concatenate, zip(*buf)))
+            yield from _tail_rows(*map(np.concatenate, zip(*buf)))
             buf, pending = [], 0
     if carry is not None:
         buf.append(_postings(*carry, max_shingle_df))
     if buf:
-        yield _tail_rows(*map(np.concatenate, zip(*buf)))
+        yield from _tail_rows(*map(np.concatenate, zip(*buf)))
 
 
 def _postings(s, d, max_shingle_df):
@@ -140,23 +143,47 @@ def _postings(s, d, max_shingle_df):
 
 
 def _tail_rows(docs, lengths):
-    """Posting lists -> one (d1, k, tail) row per doc, sorted by d1."""
+    """Posting lists -> (d1, k, tail) rows sorted by d1, in batches of at
+    most FLUSH_TAIL_VALUES tail values, so a long list (exact mode) never
+    builds all its tails at once. Each doc of each list has a piece: its
+    tail, cut where a batch's values end. A batch holds one row per doc
+    it has pieces of; ``k`` counts only the first pieces, so a row that
+    continues a cut tail can carry k = 0 and a doc's k still sums to its
+    number of lists."""
+    if not len(docs):
+        return
     end = np.repeat(np.cumsum(lengths), lengths)
     at = np.arange(len(docs), dtype=np.int64)
     order = np.argsort(docs, kind="stable")
-    n_tail = (end - at - 1)[order]
-    offsets = np.append(0, np.cumsum(n_tail))
-    take = (np.arange(offsets[-1], dtype=np.int64)
-            + np.repeat(order + 1 - offsets[:-1], n_tail))
-    d1 = docs[order]
-    first = _run_starts(d1)
-    return pa.RecordBatch.from_arrays([
-        pa.array(d1[first]),
-        pa.array(np.diff(np.append(first, len(d1)))),
-        pa.ListArray.from_arrays(
-            pa.array(np.append(offsets[first], offsets[-1]), pa.int32()),
-            pa.array(docs[take])),
-    ], schema=POSTING_SCHEMA)
+    src = (at + 1)[order]
+    offsets = np.append(0, np.cumsum((end - at - 1)[order]))
+    step = max(FLUSH_TAIL_VALUES, 1)
+    n_batches = max(1, -(-int(offsets[-1]) // step))
+    lo, hi = offsets[:-1], offsets[1:]
+    first = lo // step
+    n_pieces = np.maximum(hi - 1, lo) // step - first + 1
+    elem = np.repeat(np.arange(len(docs), dtype=np.int64), n_pieces)
+    j = np.arange(len(elem)) - np.repeat(np.cumsum(n_pieces) - n_pieces,
+                                         n_pieces)
+    batch = np.minimum(first[elem] + j, n_batches - 1)
+    start = np.maximum(lo[elem], batch * step)
+    size = np.minimum(hi[elem], (batch + 1) * step) - start
+    src = src[elem] + start - lo[elem]
+    d1, k = docs[order][elem], (j == 0).astype(np.int64)
+    bounds = np.searchsorted(batch, np.arange(n_batches + 1))
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        n = size[a:b]
+        voff = np.append(0, np.cumsum(n))
+        take = (np.arange(voff[-1], dtype=np.int64)
+                + np.repeat(src[a:b] - voff[:-1], n))
+        rows = _run_starts(d1[a:b])
+        yield pa.RecordBatch.from_arrays([
+            pa.array(d1[a:b][rows]),
+            pa.array(np.add.reduceat(k[a:b], rows)),
+            pa.ListArray.from_arrays(
+                pa.array(np.append(voff[rows], voff[-1]), pa.int32()),
+                pa.array(docs[take], pa.int64())),
+        ], schema=POSTING_SCHEMA)
 
 
 def _counts_batch(d1, k, lengths, values, starts, threshold):

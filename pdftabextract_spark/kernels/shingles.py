@@ -5,8 +5,9 @@ stage over (doc_id, text) rows. Each text is split on " " as Spark's
 ``split(text, " ")`` splits it: empty tokens stay, leading and trailing
 ones too, so "a  b" has the tokens "a", "" and "b". A gram is ``n``
 consecutive tokens joined by " ", and each doc's distinct grams come out
-as (doc_id, gram) rows. A row with a null text, a null doc_id or fewer
-than ``n`` tokens gives no rows. The kernel first calls
+as (doc_id, gram) rows. A row with a null text or fewer than ``n``
+tokens gives no rows; a row with a null doc_id gives its grams with a
+null doc_id. The kernel first calls
 kernels/pyworker.forget_zip_importers, so the Python worker that runs the
 task skips the zip re-reads of its next task's setup.
 """
@@ -54,8 +55,7 @@ def _distinct_grams(batch, n):
     ids, text = batch.column(0), batch.column(1)
     words = pc.split_pattern(text, " ")
     n_words = pc.list_value_length(words).fill_null(0).to_numpy()
-    n_grams = np.where(ids.is_valid().to_numpy(zero_copy_only=False)
-                       & (n_words >= n), n_words - n + 1, 0)
+    n_grams = np.where(n_words >= n, n_words - n + 1, 0)
     row = np.repeat(np.arange(len(n_grams), dtype=np.int64), n_grams)
     first = (words.offsets.to_numpy()[:-1].astype(np.int64)
              - np.cumsum(n_grams) + n_grams)

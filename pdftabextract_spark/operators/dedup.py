@@ -103,7 +103,8 @@ def word_shingles(docs: DataFrame, n=3, text_col="text", id_col="doc_id",
     ``split(text, " ")`` does (empty tokens stay), joins each window of
     ``n`` tokens with " " and keeps each doc's distinct grams, so rows
     leave the scan stage already deduplicated per doc. A doc with a null
-    text, a null id or fewer than ``n`` tokens has no shingles.
+    text or fewer than ``n`` tokens has no shingles; a null id keeps its
+    shingles, with a null doc_id.
 
     ``hashed`` replaces the gram with ``xxhash64`` of it, computed in the
     JVM, so exchanges downstream move 8-byte longs instead of ~n-word
@@ -138,9 +139,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     pair fanout, at the cost of slightly underestimating the overlap of
     boilerplate-heavy pairs; doc sizes are counted after the drop. Pass
     ``None`` for exact Jaccard. ``log_dropped=True`` counts and warns
-    about dropped stop-shingles: one extra job over the corpus collects
-    the stop-shingles to the driver, and an anti-join drops them (keep it
-    off the hot path).
+    about dropped stop-shingles: one extra job over the corpus counts
+    them, and the result is the capped one (keep it off the hot path).
+    Docs with a null id take no part.
 
     Plan, three Arrow kernels and three exchanges:
 
@@ -166,8 +167,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     if not isinstance(id_type, IntegralType):
         raise TypeError("ngram_jaccard_pairs: id_col %r must be an integral "
                         "type, got %s" % (id_col, id_type.simpleString()))
-    sh = word_shingles(spread_small_input(docs), n, text_col, id_col,
-                       hashed=True)
+    sh = word_shingles(spread_small_input(
+        docs.where(F.col(id_col).isNotNull())), n, text_col, id_col,
+        hashed=True)
     # The repartitions pin both exchanges at the session's shuffle
     # parallelism: AQE sizes post-shuffle partitions by the exchange
     # bytes and would coalesce the stages whose work (the posting lists,
@@ -177,15 +179,12 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
         # diagnostic path (explicitly off the hot path): a separate df
         # census so the dropped count can be reported
         import warnings
-        hot = (sh.groupBy("s").count().where(F.col("count") > max_shingle_df)
-               .select("s").collect())
-        if hot:
+        n_hot = (sh.groupBy("s").count()
+                 .where(F.col("count") > max_shingle_df).count())
+        if n_hot:
             warnings.warn(
                 "ngram_jaccard_pairs: dropping %d stop-shingles with "
-                "df > %d" % (len(hot), max_shingle_df))
-            sh = sh.join(F.broadcast(docs.sparkSession.createDataFrame(
-                hot, "s long")), "s", "left_anti")
-        max_shingle_df = None
+                "df > %d" % (n_hot, max_shingle_df))
     tails = (sh.repartition(n_part, "s").sortWithinPartitions("s")
              .mapInArrow(partial(posting_tails,
                                  max_shingle_df=max_shingle_df),

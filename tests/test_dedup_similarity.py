@@ -132,6 +132,16 @@ def _overlap_docs(spark, seed=5, n_docs=300):
         [(int(d), t) for d, t in zip(ids, texts)], "doc_id long, text string")
 
 
+def test_ngram_jaccard_skips_null_ids(spark):
+    docs = _overlap_docs(spark, n_docs=60)
+    with_null = docs.unionByName(spark.createDataFrame(
+        [(None, docs.first()["text"])], "doc_id long, text string"))
+    want = D.ngram_jaccard_pairs(docs, threshold=0.2, max_shingle_df=None)
+    assert want.count() > 0
+    _assert_same_rows(D.ngram_jaccard_pairs(with_null, threshold=0.2,
+                                            max_shingle_df=None), want)
+
+
 def _brute_force_pairs(spark, docs, n, threshold, max_df):
     """The q18 oracle's formula from Python-counted shared shingles."""
     from collections import Counter

@@ -5,7 +5,9 @@ rows the posting kernel emits for them, in flushes of a few lists, so a
 d1 spans several rows with ``k > 1``, cut into Arrow batches of several
 sizes. ``posting_tails`` reads (doc_id, s) rows sorted on ``s`` and is
 checked against the posting lists built in Python, at flush bounds of 1,
-7 and the default, then through the counting kernel."""
+7 and the default, then through the counting kernel; no emitted batch
+holds more tail values than the bound, even for one list whose tails
+alone exceed it."""
 
 import itertools
 from collections import Counter, defaultdict
@@ -192,6 +194,7 @@ def _posting_out(rows, size, max_df):
     out = list(posting_tails(_posting_batches(rows, size), max_df))
     for b in out:
         assert b.schema == overlap.POSTING_SCHEMA
+        assert len(b.column("tail").flatten()) <= overlap.FLUSH_TAIL_VALUES
         d1 = b.column("d1").to_pylist()
         assert d1 == sorted(set(d1)), "one row per d1 per flush"
     return [r for b in out for r in zip(*(b.column(c).to_pylist()
@@ -253,6 +256,24 @@ def test_posting_tails_drop_a_long_list_while_it_is_held_back(size):
     got, _ = _posting_out(rows, size, 4)
     assert sorted(got) == [(1, 2, [2, 9]), (2, 1, []), (7, 1, [8, 9]),
                            (8, 1, [9]), (9, 2, [])]
+
+
+@pytest.mark.parametrize("flush", [1, 7])
+def test_posting_tails_cut_a_long_list_into_bounded_batches(monkeypatch,
+                                                            flush):
+    # exact mode: one list of 20 docs has 190 tail values, far over the
+    # flush bound, so docs' tails are cut over batches and the rows that
+    # continue them carry k = 0
+    monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", flush)
+    docs = list(range(20))
+    rows = [(d, 5) for d in reversed(docs)] + [(1, 6), (3, 6)]
+    got, out = _posting_out(rows, 4, None)
+    assert len(out) >= 190 // flush
+    assert any(k == 0 for _, k, _ in got)
+    lists = [docs, [1, 3]]
+    assert _per_doc(got) == _per_doc(_tail_rows(lists, len(lists)))
+    got.sort(key=lambda r: r[0])
+    assert _run(got, 5, 0.0) == _brute_force(lists, 0.0)
 
 
 @pytest.mark.parametrize("rows", [

@@ -21,7 +21,7 @@ TEXTS = [None, "", " ", "a", "a  b c", "a b c ", "a b  ", "  lead in",
 def _split_grams(ids, texts, n):
     want = set()
     for i, t in zip(ids, texts):
-        if i is None or t is None:
+        if t is None:
             continue
         ws = t.split(" ")
         want |= {(i, " ".join(ws[j:j + n])) for j in range(len(ws) - n + 1)}
@@ -53,9 +53,11 @@ def test_word_grams_keep_split_tokens_and_id_type():
          pa.array(["a  b c", " ", "b c b c", "a b"])], names=["doc_id", "text"])
     out = list(word_grams(iter([batch]), 2))
     assert out[0].schema.field("doc_id").type == pa.int32()
-    # empty tokens stay, repeated grams come once, a null id gives none
-    assert sorted(_grams([batch], 2)) == [
-        (7, " b"), (7, "a "), (7, "b c"), (8, " "), (9, "b c"), (9, "c b")]
+    # empty tokens stay, repeated grams come once, a null id keeps its
+    # grams
+    assert set(_grams([batch], 2)) == {
+        (7, " b"), (7, "a "), (7, "b c"), (8, " "), (9, "b c"), (9, "c b"),
+        (None, "a b")}
 
 
 @pytest.mark.parametrize("bound", [1, 20])
@@ -95,10 +97,12 @@ def test_word_shingles_equal_the_jvm_expression(spark, id_type):
                                              rng.integers(0, 30)))
                          for _ in range(200)]
     rows = [(i, t) for i, t in enumerate(texts)]
-    rows += [(len(rows), None), (None, "a null id has no shingles")]
+    rows += [(len(rows), None), (None, "a null id keeps its shingles")]
     docs = spark.createDataFrame(rows, "doc_id %s, text string" % id_type)
-    want = {hashed: Counter(map(tuple, _jvm_shingles(docs, 3, hashed).where(
-        F.col("doc_id").isNotNull()).collect())) for hashed in (False, True)}
+    want = {hashed: Counter(map(tuple, _jvm_shingles(docs, 3, hashed)
+                                .collect())) for hashed in (False, True)}
+    assert all(sum(c for (d, _), c in w.items() if d is None) == 4
+               for w in want.values())
     assert all(len(w) > 1000 for w in want.values())
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
