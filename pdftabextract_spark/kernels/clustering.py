@@ -307,17 +307,87 @@ def find_best_matching_array(base_arr, model_arr, same_size_use_model_arr_diff_t
     return best_arr, diff
 
 
-def repair_centers(centers, model_arr, same_size_use_model_arr_diff_thresh=None):
-    """One page's sorted centers -> the repaired array against the corpus
-    model (:func:`find_best_matching_array`); a page with no centers takes
-    the model itself."""
-    base = np.asarray(centers, dtype=float)
-    if len(base) == 0:
-        return model_arr
-    fixed, _ = find_best_matching_array(
-        base, model_arr,
-        same_size_use_model_arr_diff_thresh=same_size_use_model_arr_diff_thresh)
-    return fixed
+# candidate elements (pages x candidates x candidate length) that
+# repair_pages scores at once: a noisy page (30 centers against a
+# 6-center model, 593,775 candidates) runs in bounded memory
+REPAIR_CHUNK_ELEMENTS = 1 << 18
+
+
+def _first_best(n_pages, n, n_del, score):
+    """Each page's winner of find_best_matching_array's search over
+    ``combinations(range(n), n_del)``: the first candidate, replaced only
+    by a strictly smaller diff (a NaN first diff stays, a later NaN never
+    wins). ``score(pages, keep)`` gives a slice of pages' diffs against a
+    chunk of candidates, each the row of indices it keeps. Returns every
+    page's kept indices and diff."""
+    combos = itertools.combinations(range(n), n_del)
+    per = max(1, REPAIR_CHUNK_ELEMENTS // n)
+    best_d = np.empty(n_pages)
+    best_keep = np.empty((n_pages, n - n_del), dtype=np.int64)
+    for chunk in itertools.count():
+        dels = np.fromiter(itertools.chain.from_iterable(
+            itertools.islice(combos, per)), dtype=np.int64).reshape(-1, n_del)
+        if not len(dels):
+            return best_keep, best_d
+        keep = np.ones((len(dels), n), dtype=bool)
+        keep[np.arange(len(dels))[:, None], dels] = False
+        keep = np.nonzero(keep)[1].reshape(len(dels), n - n_del)
+        step = max(1, REPAIR_CHUNK_ELEMENTS // keep.size)
+        for lo in range(0, n_pages, step):
+            sl = slice(lo, lo + step)
+            d = score(sl, keep)
+            if chunk == 0:
+                best_d[sl], best_keep[sl] = d[:, 0], keep[0]
+            d = np.where(np.isnan(d), np.inf, d)
+            j = np.argmin(d, axis=1)
+            win = d[np.arange(len(j)), j] < best_d[sl]
+            best_d[sl][win] = d[win, j[win]]
+            best_keep[sl][win] = keep[j[win]]
+
+
+def repair_pages(centers, lengths, model, thresh=None):
+    """Every page's centers (concatenated in page order, ``lengths`` per
+    page) -> the (pages, len(model)) matrix whose row i is
+    ``find_best_matching_array(page i, model, thresh)``'s array, bit for
+    bit; a page with no centers takes the model itself. The pages of
+    each center count score all their deletion candidates at once, at
+    most ``REPAIR_CHUNK_ELEMENTS`` candidate elements at a time."""
+    model = np.asarray(model, dtype=float)
+    centers = np.asarray(centers, dtype=float)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    k = len(model)
+    if k == 0 and lengths.any():
+        raise ValueError("model_arr length must be > 0")
+    out = np.tile(model, (len(lengths), 1))
+    starts = np.cumsum(lengths) - lengths
+    for n in np.unique(lengths[lengths > 0]):
+        pages = np.flatnonzero(lengths == n)
+        base = centers[starts[pages, None] + np.arange(n)]
+        offset = model + base[:, :1]
+        if n > k:
+            # delete n - k centers; a candidate's diff is against the
+            # model offset by its own first center
+            def score(sl, keep):
+                cand = base[sl][:, keep]
+                return np.sum(np.abs(cand - (model + cand[..., :1])), -1)
+            keep, diff = _first_best(len(pages), n, n - k, score)
+            fixed = np.take_along_axis(base, keep, axis=1)
+        elif n < k:
+            # delete k - n model positions; the kept ones take the
+            # page's centers, the deleted ones the offset model
+            def score(sl, keep):
+                return np.sum(np.abs((model[keep] + base[sl][:, :1, None])
+                                     - base[sl][:, None, :]), -1)
+            keep, _ = _first_best(len(pages), k, k - n, score)
+            fixed = offset.copy()
+            np.put_along_axis(fixed, keep, base, axis=1)
+            diff = np.sum(np.abs(fixed - offset), -1)
+        else:
+            fixed, diff = base, np.sum(np.abs(base - offset), -1)
+        if thresh is not None:
+            fixed = np.where((diff > thresh)[:, None], offset, fixed)
+        out[pages] = fixed
+    return out
 
 
 def fit_center_model(centers_norm_clusters, n_required_clusters):

@@ -21,18 +21,23 @@ at once instead of page by page:
 import numpy as np
 
 
-def _padded(positions, what):
-    """Per-page position arrays -> (pages, longest) float matrix padded
-    with NaN, and the per-page lengths. Parity: make_grid_cells' empty
-    check (extract.py:18-43)."""
+def padded(values, lengths):
+    """Every page's values, concatenated in page order, -> the (pages,
+    longest) float matrix that holds page i's ``lengths[i]`` values in
+    row i, padded with NaN."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    out = np.full((len(lengths), lengths.max(initial=0)), np.nan)
+    out[np.arange(out.shape[1]) < lengths[:, None]] = values
+    return out
+
+
+def padded_lists(positions):
+    """Per-page position arrays -> ``assign_pages``' (matrix, lengths)
+    pair."""
     lens = np.fromiter(map(len, positions), dtype=np.int64,
                        count=len(positions))
-    if np.any(lens == 0):
-        raise ValueError("List of %s positions is empty." % what)
-    out = np.full((len(lens), lens.max()), np.nan)
-    out[np.arange(lens.max()) < lens[:, None]] = np.concatenate(
-        [np.asarray(p, dtype=float) for p in positions])
-    return out, lens
+    return padded(np.concatenate(
+        [np.asarray(p, dtype=float) for p in positions]), lens), lens
 
 
 def assign_pages(bounds, left, top, right, bottom, col_positions,
@@ -40,9 +45,12 @@ def assign_pages(bounds, left, top, right, bottom, col_positions,
     """Assign every box of a frame to its best grid cell.
 
     ``bounds`` are the page run bounds of the frame (page i holds rows
-    [bounds[i], bounds[i+1])); ``col_positions`` / ``row_positions`` hold
-    each page's sorted borders. Returns (row_idx, col_idx) per box, -1 for
-    an unmatched box, and (n_rows, n_cols) per page.
+    [bounds[i], bounds[i+1])); ``col_positions`` / ``row_positions`` are
+    (matrix, lengths) pairs: row i of the matrix holds page i's sorted
+    borders in its first lengths[i] entries and NaN after them
+    (``padded``; ``padded_lists`` builds the pair from per-page arrays).
+    Returns (row_idx, col_idx) per box, -1 for an unmatched box, and
+    (n_rows, n_cols) per page.
 
     Exact reference semantics (extract.py:46-99):
     * candidate pre-filter: the box's y range vs the row interval and x
@@ -56,8 +64,10 @@ def assign_pages(bounds, left, top, right, bottom, col_positions,
 
     Positions must be non-empty and strictly increasing, else the
     ValueError of make_grid_cells (extract.py:18-43)."""
-    cols, n_cp = _padded(col_positions, "column")
-    rows, n_rp = _padded(row_positions, "row")
+    (cols, n_cp), (rows, n_rp) = col_positions, row_positions
+    for lens, what in ((n_cp, "column"), (n_rp, "row")):
+        if np.any(lens == 0):
+            raise ValueError("List of %s positions is empty." % what)
     with np.errstate(invalid="ignore"):
         if np.any(np.diff(cols, axis=1) <= 0) or \
                 np.any(np.diff(rows, axis=1) <= 0):
@@ -132,5 +142,6 @@ def assign_boxes_to_cells(boxes_ltrb, col_positions, row_positions):
         return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
     row_idx, col_idx, _, _ = assign_pages(
         np.array([0, n]), boxes[:, 0], boxes[:, 1], boxes[:, 2],
-        boxes[:, 3], [col_positions], [row_positions])
+        boxes[:, 3], padded_lists([col_positions]),
+        padded_lists([row_positions]))
     return row_idx, col_idx

@@ -8,20 +8,22 @@ bounds of the frame):
   page extents of every page in a frame (operators/clustering.page_profiles);
 * ``normalized_column_centers``  every page's column centers shifted to
   start at 0: the span path's model-fit pool (plans/pipeline);
-* ``page_borders``   repaired centers + profile -> one page's column and
-  row borders;
+* ``grid_borders``   repaired centers (kernels/clustering.repair_pages)
+  + profiles -> every page's column and row borders as NaN-padded
+  matrices (kernels/gridfit.assign_pages' input);
 * ``pack_pages``     a frame's assigned boxes (kernels/gridfit.assign_pages)
   -> each page's cell texts, every page in one join (operators/grid).
 
-operators/grid.profile_and_pack chains profile_pages, page_borders and
-pack_pages: profile and borders per page, then one assignment and one
-pack per frame.
+operators/grid.profile_grids chains profile_pages, repair_pages and
+grid_borders, each once per frame with no per-page Python loop;
+operators/grid.pack_frame then assigns and packs the frame at once.
 """
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .gridfit import padded
 from .strings import WHITESPACE
 
 
@@ -41,8 +43,8 @@ def _segments(vals_sorted, page_codes_sorted, dist):
 
 def _page_clusters(vals, codes, dist, center):
     """Break-dist clusters of ``vals`` within each page -> (centers,
-    firsts): every page's sorted cluster centers, concatenated in page
-    order, and the index of each page's first center."""
+    lengths): every page's sorted cluster centers, concatenated in page
+    order, and each page's number of centers."""
     order = np.lexsort((vals, codes))
     sv = vals[order]
     sp = codes[order]
@@ -53,14 +55,9 @@ def _page_clusters(vals, codes, dist, center):
     else:  # min
         cvals = sv[s]
     seg_page = sp[s]
-    return cvals, np.flatnonzero(np.concatenate(
+    firsts = np.flatnonzero(np.concatenate(
         [[True], seg_page[1:] != seg_page[:-1]]))
-
-
-def _per_page_clusters(vals, codes, dist, center):
-    """``_page_clusters`` split into one sorted array per page."""
-    cvals, firsts = _page_clusters(vals, codes, dist, center)
-    return np.split(cvals, firsts[1:])
+    return cvals, np.diff(np.append(firsts, len(cvals)))
 
 
 def _page_codes(bounds):
@@ -72,45 +69,54 @@ def normalized_column_centers(bounds, left, col_break_dist):
     the page's first center, concatenated: the pooled values the corpus
     column model is fit on. A NaN center or first center gives NaN, as a
     null does in Spark's ``c - element_at(col_centers, 1)``."""
-    cvals, firsts = _page_clusters(left, _page_codes(bounds),
-                                   col_break_dist, "median")
-    return cvals - np.repeat(cvals[firsts],
-                             np.diff(np.append(firsts, len(cvals))))
+    cvals, lens = _page_clusters(left, _page_codes(bounds),
+                                 col_break_dist, "median")
+    return cvals - np.repeat(cvals[np.cumsum(lens) - lens], lens)
 
 
 def profile_pages(bounds, left, top, right, bottom,
                   col_break_dist, row_break_dist):
     """Profile every page of a frame, fully vectorized (lexsort by (page,
     value); segment medians picked by index arithmetic on the sorted
-    values — no per-cluster Python loop). Returns per page, in frame
-    order:
+    values — no per-cluster Python loop). Returns, in frame order:
 
-      col_centers  sorted break-dist cluster medians of box lefts
-                   (exact percentile-0.5 parity: sorted-midpoint mean)
-      row_tops     sorted break-dist cluster MIN tops
-      max_right, max_bottom  page extents
-    """
+      (col_centers, col_lens)  every page's sorted break-dist cluster
+                   medians of box lefts (exact percentile-0.5 parity:
+                   sorted-midpoint mean), concatenated, and their count
+                   per page
+      (row_tops, row_lens)     the same for the cluster MIN tops
+      max_right, max_bottom    page extents
+
+    Every page of ``bounds`` must hold at least one box."""
     page_starts = bounds[:-1]
     codes = _page_codes(bounds)
-    col_centers = _per_page_clusters(left, codes, col_break_dist, "median")
-    row_tops = _per_page_clusters(top, codes, row_break_dist, "min")
-    assert len(col_centers) == len(row_tops) == len(page_starts)
-    return (col_centers, row_tops,
-            np.maximum.reduceat(right, page_starts),
+    cols = _page_clusters(left, codes, col_break_dist, "median")
+    rows = _page_clusters(top, codes, row_break_dist, "min")
+    if len(cols[1]) != len(page_starts):
+        raise ValueError("profile_pages: %d pages in bounds, %d with boxes"
+                         % (len(page_starts), len(cols[1])))
+    return (cols, rows, np.maximum.reduceat(right, page_starts),
             np.maximum.reduceat(bottom, page_starts))
 
 
-def page_borders(centers_fixed, row_tops, max_right, max_bottom,
+def grid_borders(centers_fixed, row_tops, row_lens, max_right, max_bottom,
                  pad_x, pad_y):
-    """Column border = each repaired center - pad_x, closed by a right
-    border safely past the last column (max box right + pad_x, but at
-    least last center + 2*pad_x); row border = each cluster min top -
-    pad_y, closed by max bottom + pad_y. ``fmax`` skips a NaN extent the
-    way SQL ``greatest`` skips a null."""
-    cols = np.append(centers_fixed - pad_x,
-                     np.fmax(max_right + pad_x, centers_fixed[-1] + 2 * pad_x))
-    rows = np.append(row_tops - pad_y, max_bottom + pad_y)
-    return cols, rows
+    """Every page's column and row borders, each as kernels/gridfit's
+    (NaN-padded matrix, lengths) pair. ``centers_fixed`` is the
+    (pages, n) matrix of repaired centers
+    (kernels/clustering.repair_pages); ``row_tops`` / ``row_lens`` are
+    ``profile_pages``' row clusters. Column border = each repaired center
+    - pad_x, closed by a right border safely past the last column (max
+    box right + pad_x, but at least last center + 2*pad_x); row border =
+    each cluster min top - pad_y, closed by max bottom + pad_y. ``fmax``
+    skips a NaN extent the way SQL ``greatest`` skips a null."""
+    cols = np.column_stack([
+        centers_fixed - pad_x,
+        np.fmax(max_right + pad_x, centers_fixed[:, -1] + 2 * pad_x)])
+    rows = np.insert(row_tops - pad_y, np.cumsum(row_lens),
+                     max_bottom + pad_y)
+    return ((cols, np.full(len(cols), cols.shape[1])),
+            (padded(rows, row_lens + 1), row_lens + 1))
 
 
 def pack_pages(bounds, row_idx, col_idx, n_rows, n_cols, left, box_id,

@@ -128,10 +128,11 @@ def _profile_columns(bounds, left, top, right, bottom, col_break_dist,
     cols, rows, max_r, max_b = profile_pages(
         bounds, left, top, right, bottom, col_break_dist, row_break_dist)
 
-    def lists(arrays):
-        offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays])])
+    def lists(values_lens):
+        values, lens = values_lens
         return pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), _doubles(np.concatenate(arrays)))
+            pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32()),
+            _doubles(values))
 
     return [lists(cols), lists(rows), _doubles(max_r), _doubles(max_b)]
 

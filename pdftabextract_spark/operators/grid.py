@@ -7,8 +7,11 @@ kernels/gridfit.assign_pages: each box is scored only against its
 candidate cells. The operators that run it:
 
 * ``pack_frame`` + ``profile_grids`` (text path): with the corpus column
-  model in its closure, profile each page of a frame of boxes, repair the
-  centers and build the borders, then assign every box of the frame and
+  model in its closure, profile every page of a frame of boxes, repair
+  all of their centers and build all of their borders in frame-wide
+  array passes (kernels/pagegrid.profile_pages,
+  kernels/clustering.repair_pages, kernels/pagegrid.grid_borders; no
+  per-page Python loop), then assign every box of the frame and
   materialize the cell texts of all its pages (kernels/pagegrid.pack_pages).
   ``profile_and_pack`` runs them over box rows, one packed row per page;
   plans/pipeline.extract_from_span_table runs them inside its span kernel.
@@ -37,49 +40,55 @@ _ASSIGN_SCHEMA = ("doc_id string, page int, box_id int, left double, "
 def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
     """Long-form assignment: equi-join boxes with their page's border
     arrays (AQE picks broadcast when positions is small — one row per
-    page), then ONE Arrow-batched mapInPandas kernel. Assignment is
-    per-box independent given the page grid, so no grouping shuffle is
-    needed at all: the kernel sorts each Arrow batch by page and assigns
-    all of its boxes in one kernels/gridfit.assign_pages call."""
-    import numpy as np
-    import pandas as pd
-    from ..kernels.gridfit import assign_pages
-    from ..kernels.pagegroups import page_bounds
-
+    page), then ONE Arrow-batched mapInPandas kernel
+    (``assign_batches``). Assignment is per-box independent given the
+    page grid, so no grouping shuffle is needed at all."""
     joined = boxes.join(
         positions.select("doc_id", "page", "col_positions", "row_positions"),
         ["doc_id", "page"])
+    return joined.mapInPandas(assign_batches, schema=_ASSIGN_SCHEMA)
 
-    def kernel(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            doc_ids = pdf["doc_id"].to_numpy()
-            pages = pdf["page"].to_numpy()
-            order = np.lexsort((pages, doc_ids))
-            l = pdf["left"].to_numpy(dtype=float)[order]
-            t = pdf["top"].to_numpy(dtype=float)[order]
-            r = l + pdf["width"].to_numpy(dtype=float)[order]
-            b = t + pdf["height"].to_numpy(dtype=float)[order]
-            bounds = page_bounds(doc_ids[order], pages[order])
-            first = order[bounds[:-1]]
-            ri, ci, _, _ = assign_pages(
-                bounds, l, t, r, b, pdf["col_positions"].to_numpy()[first],
-                pdf["row_positions"].to_numpy()[first])
-            inv = np.empty(n, dtype=np.int64)
-            inv[order] = np.arange(n)
-            yield pd.DataFrame({
-                "doc_id": doc_ids,
-                "page": pages,
-                "box_id": pdf["box_id"].to_numpy(),
-                "left": pdf["left"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "row_idx": ri[inv],
-                "col_idx": ci[inv],
-            })
 
-    return joined.mapInPandas(kernel, schema=_ASSIGN_SCHEMA)
+def assign_batches(batches):
+    """``assign_cells_joined``'s kernel: it drops the worker's zip
+    importers (kernels/pyworker), then sorts each pandas batch of joined
+    rows by page and assigns all of its boxes in one
+    kernels/gridfit.assign_pages call."""
+    import numpy as np
+    import pandas as pd
+    from ..kernels.gridfit import assign_pages, padded_lists
+    from ..kernels.pagegroups import page_bounds
+    from ..kernels.pyworker import forget_zip_importers
+
+    forget_zip_importers()
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        doc_ids = pdf["doc_id"].to_numpy()
+        pages = pdf["page"].to_numpy()
+        order = np.lexsort((pages, doc_ids))
+        l = pdf["left"].to_numpy(dtype=float)[order]
+        t = pdf["top"].to_numpy(dtype=float)[order]
+        r = l + pdf["width"].to_numpy(dtype=float)[order]
+        b = t + pdf["height"].to_numpy(dtype=float)[order]
+        bounds = page_bounds(doc_ids[order], pages[order])
+        first = order[bounds[:-1]]
+        ri, ci, _, _ = assign_pages(
+            bounds, l, t, r, b,
+            padded_lists(pdf["col_positions"].to_numpy()[first]),
+            padded_lists(pdf["row_positions"].to_numpy()[first]))
+        inv = np.empty(n, dtype=np.int64)
+        inv[order] = np.arange(n)
+        yield pd.DataFrame({
+            "doc_id": doc_ids,
+            "page": pages,
+            "box_id": pdf["box_id"].to_numpy(),
+            "left": pdf["left"].to_numpy(),
+            "value": pdf["value"].to_numpy(),
+            "row_idx": ri[inv],
+            "col_idx": ci[inv],
+        })
 
 
 def assign_and_pack(boxes: DataFrame, positions: DataFrame,
@@ -102,10 +111,10 @@ def pack_frame(batch, bounds, page_grids):
     """A frame of complete pages (box columns left, top, width, height,
     box_id, value; ``bounds`` = its page run bounds) -> per page
     (n_rows, n_cols, cells, n_unmatched). ``page_grids(batch, bounds, l,
-    t, r, b)`` returns each page's col_positions and row_positions (two
-    sequences in frame order); kernels/gridfit.assign_pages and
-    kernels/pagegrid.pack_pages then assign and pack every page of the
-    frame at once."""
+    t, r, b)`` returns the frame's col_positions and row_positions, each
+    a kernels/gridfit (NaN-padded matrix, lengths) pair;
+    kernels/gridfit.assign_pages and kernels/pagegrid.pack_pages then
+    assign and pack every page of the frame at once."""
     from ..kernels.gridfit import assign_pages
     from ..kernels.pagegrid import pack_pages
     from ..kernels.pagegroups import column
@@ -152,17 +161,17 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     """Joined (boxes x page positions) rows -> one packed row per page.
     PRECONDITION: rows of one (doc_id, page) arrive contiguously within a
     partition; violations raise (never silent duplicates)."""
-    import numpy as np
     import pyarrow as pa
+    from ..kernels.gridfit import padded
 
     def page_grids(batch, bounds, *_):
         first = pa.array(bounds[:-1])
         out = []
         for name in ("col_positions", "row_positions"):
             lists = batch.column(name).take(first)
-            out.append(np.split(
-                lists.flatten().to_numpy(zero_copy_only=False),
-                np.cumsum(lists.value_lengths().to_numpy())[:-1]))
+            lens = lists.value_lengths().cast(pa.int64()).to_numpy()
+            out.append((padded(lists.flatten().to_numpy(zero_copy_only=False),
+                               lens), lens))
         return out
 
     return _pack_pages(joined, "assign_and_pack", page_grids)
@@ -172,14 +181,14 @@ def profile_grids(model, col_break_dist: float, row_break_dist: float,
                   pad_x: float, pad_y: float,
                   same_size_use_model_arr_diff_thresh=None):
     """The ``page_grids`` of ``pack_frame`` for boxes alone, with the
-    fitted corpus column model in the closure: per page it profiles the
-    boxes (kernels/pagegrid.profile_pages, the math of
-    operators/clustering.page_profiles), repairs the column centers
-    against the model (kernels/clustering.repair_centers) and builds the
-    borders (kernels/pagegrid.page_borders)."""
+    fitted corpus column model in the closure: one pass each over the
+    whole frame profiles every page (kernels/pagegrid.profile_pages, the
+    math of operators/clustering.page_profiles), repairs every page's
+    column centers against the model (kernels/clustering.repair_pages)
+    and builds every page's borders (kernels/pagegrid.grid_borders)."""
     import numpy as np
-    from ..kernels.clustering import repair_centers
-    from ..kernels.pagegrid import page_borders, profile_pages
+    from ..kernels.clustering import repair_pages
+    from ..kernels.pagegrid import grid_borders, profile_pages
 
     m = np.array(model, dtype=float)
     cbd, rbd = float(col_break_dist), float(row_break_dist)
@@ -187,10 +196,10 @@ def profile_grids(model, col_break_dist: float, row_break_dist: float,
     thresh = same_size_use_model_arr_diff_thresh
 
     def page_grids(batch, bounds, l, t, r, b):
-        cols, rows, max_r, max_b = profile_pages(bounds, l, t, r, b, cbd, rbd)
-        return zip(*(page_borders(repair_centers(c, m, thresh), rw, mr, mb,
-                                  pad_x, pad_y)
-                     for c, rw, mr, mb in zip(cols, rows, max_r, max_b)))
+        cols, (rows, row_lens), max_r, max_b = profile_pages(
+            bounds, l, t, r, b, cbd, rbd)
+        return grid_borders(repair_pages(*cols, m, thresh), rows, row_lens,
+                            max_r, max_b, pad_x, pad_y)
 
     return page_grids
 

@@ -7,21 +7,25 @@ see kernels.clustering for the math):
                          and cluster the pool (kernels.fit_pooled_centers)
   stage C (driver)       sequential-stateful iterative filter to exactly
                          n_required medians (kernels.fit_center_model)
-  stage D (distributed)  broadcast the model; per-page repair via
-                         find_best_matching_array (kernels.repair_centers)
-                         in an Arrow-batched UDF — the text path runs it
-                         inside its pack kernel (operators/grid)
+  stage D (distributed)  the model in the closure; every page of an Arrow
+                         batch repaired at once by kernels.repair_pages
+                         (find_best_matching_array's result, bit for bit)
+                         in an iterator pandas UDF — the text path runs
+                         it inside its pack kernel (operators/grid)
 
 Stage B has no exchange: the pool (~pages x columns doubles, 8 bytes per
 page column) reaches the driver whole, with no bound, so the driver's
 memory grows with the corpus.
 """
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from ..kernels.clustering import fit_pooled_centers, repair_centers
+from ..kernels.clustering import fit_pooled_centers, repair_pages
+from ..kernels.pyworker import forget_zip_importers
 
 
 def normalized_centers(centers: DataFrame, group_cols=("doc_id", "page")) -> DataFrame:
@@ -57,19 +61,31 @@ def repair_page_centers(page_centers: DataFrame, model: np.ndarray,
                         centers_col="centers",
                         same_size_use_model_arr_diff_thresh=None) -> DataFrame:
     """Stage D: per-page sorted centers array -> repaired array of exactly
-    len(model) positions (find_best_matching_array against the broadcast
-    model). Arrow-batched pandas UDF; the model rides the closure (tiny)."""
+    len(model) positions (find_best_matching_array against the model),
+    by an iterator pandas UDF over ``repair_batches``; the model rides
+    the closure (tiny)."""
     model_list = [float(x) for x in model]
     thresh = same_size_use_model_arr_diff_thresh
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _repair(centers: pd.Series) -> pd.Series:
-        m = np.array(model_list, dtype=float)
-        return pd.Series([
-            [float(x) for x in repair_centers(arr, m, thresh)]
-            for arr in centers])
+    def _repair(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        return repair_batches(batches, np.array(model_list), thresh)
 
     return page_centers.withColumn("centers_fixed", _repair(F.col(centers_col)))
+
+
+def repair_batches(batches, model, thresh=None):
+    """``repair_page_centers``' kernel: it drops the worker's zip
+    importers (kernels/pyworker), then repairs every page of each batch
+    (a pandas Series of center arrays) in one
+    kernels/clustering.repair_pages call."""
+    forget_zip_importers()
+    for centers in batches:
+        lens = np.fromiter(map(len, centers), dtype=np.int64,
+                           count=len(centers))
+        flat = np.concatenate([np.zeros(0), *centers])
+        yield pd.Series(list(repair_pages(flat, lens, model, thresh)),
+                        dtype=object)
 
 
 def fit_and_repair(centers: DataFrame, n_required_clusters: int,

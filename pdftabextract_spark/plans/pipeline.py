@@ -17,12 +17,15 @@ every page is one run without any exchange.
             exchange, no cache, no count — and no bound on the driver:
             it holds the whole pool (8 bytes per page column) and one
             doc_id per doc, so its memory grows with the corpus.
-  pass 2    with the model in its closure, per frame of docs: profile,
-            repair and border every page, assign every box at once
-            (kernels/gridfit.assign_pages), pack the cell texts
-            (kernels/pagegrid.pack_pages) and emit the result spans with
-            per-doc offsets — plus the image spans, attributed to pages
-            by sources/spans.image_pages, when ``with_images``.
+  pass 2    with the model in its closure, per frame of docs: profile
+            every page, repair every page's centers and build every
+            page's borders, each in one frame-wide array pass
+            (operators/grid.profile_grids: no per-page Python loop),
+            assign every box at once (kernels/gridfit.assign_pages), pack
+            the cell texts (kernels/pagegrid.pack_pages) and emit the
+            result spans with per-doc offsets — plus the image spans,
+            attributed to pages by sources/spans.image_pages, when
+            ``with_images``.
 
 Box-table input (``extract_cells_packed`` / ``extract_cells``) runs the
 same two passes over box rows: one exchange by (doc_id, page) puts each

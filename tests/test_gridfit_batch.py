@@ -14,7 +14,8 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from pdftabextract_spark.kernels.gridfit import assign_boxes_to_cells, assign_pages
+from pdftabextract_spark.kernels.gridfit import (
+    assign_boxes_to_cells, assign_pages, padded, padded_lists)
 from pdftabextract_spark.kernels.pagegrid import pack_pages
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 from pdftabextract_spark.kernels.strings import WHITESPACE
@@ -158,8 +159,9 @@ def _frame(seed, n_pages=12, nan_bottom_page=3):
 def _assign(pages):
     boxes = np.concatenate([b for b, _, _ in pages])
     bounds = np.concatenate([[0], np.cumsum([len(b) for b, _, _ in pages])])
-    return assign_pages(bounds, *boxes.T, [c for _, c, _ in pages],
-                        [r for _, _, r in pages])
+    return assign_pages(bounds, *boxes.T,
+                        padded_lists([c for _, c, _ in pages]),
+                        padded_lists([r for _, _, r in pages]))
 
 
 @pytest.mark.parametrize("seed", range(8))
@@ -183,6 +185,29 @@ def test_one_page_call_equals_dense_oracle(seed):
         want = dense_assign(boxes, cols, rows)
         np.testing.assert_array_equal(got[0], want[0])
         np.testing.assert_array_equal(got[1], want[1])
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_padded_matrix_input_equals_per_page_lists(seed):
+    """assign_pages reads the same grids from a matrix built by hand
+    (NaN past each page's borders, wider than the longest page) as from
+    per-page lists through padded_lists."""
+    pages = _frame(200 + seed)
+    boxes = np.concatenate([b for b, _, _ in pages])
+    bounds = np.concatenate([[0], np.cumsum([len(b) for b, _, _ in pages])])
+    grids = []
+    for i in (1, 2):
+        lens = np.array([len(p[i]) for p in pages])
+        matrix = np.full((len(pages), lens.max() + 3), np.nan)
+        for row, p in zip(matrix, pages):
+            row[:len(p[i])] = p[i]
+        np.testing.assert_array_equal(
+            padded(np.concatenate([p[i] for p in pages]), lens),
+            matrix[:, :lens.max()])
+        grids.append((matrix, lens))
+    got = assign_pages(bounds, *boxes.T, *grids)
+    for g, w in zip(got, _assign(pages)):
+        np.testing.assert_array_equal(g, w)
 
 
 def test_tie_breaks_and_border_cases():
@@ -234,7 +259,8 @@ def test_bad_positions_raise_like_make_grid_cells(cols, rows, msg):
     good = ([0.0, 5.0], [0.0, 5.0])
     with pytest.raises(ValueError, match=msg):
         assign_pages(np.array([0, 1, 2]), *np.concatenate([boxes, boxes]).T,
-                     [good[0], cols], [good[1], rows])
+                     padded_lists([good[0], cols]),
+                     padded_lists([good[1], rows]))
 
 
 # ------------------------------------------------------------------ pack
@@ -265,8 +291,8 @@ def _pack_stream(batches):
         grids = batch.column("grid").to_pylist()
         ri, ci, n_rows, n_cols = assign_pages(
             bounds, col["l"], col["t"], col["r"], col["b"],
-            [grids[i]["cols"] for i in first],
-            [grids[i]["rows"] for i in first])
+            padded_lists([grids[i]["cols"] for i in first]),
+            padded_lists([grids[i]["rows"] for i in first]))
         cells, n_unmatched = pack_pages(bounds, ri, ci, n_rows, n_cols,
                                         col["l"], col["box_id"],
                                         batch.column("value"))
@@ -297,7 +323,8 @@ def test_pack_pages_skips_null_values_and_strips_unicode_whitespace():
     boxes = np.array([[1, 1, 2, 2], [3, 1, 4, 2], [11, 1, 12, 2],
                       [13, 1, 14, 2]], dtype=float)
     ri, ci, n_rows, n_cols = assign_pages(np.array([0, 4]), *boxes.T,
-                                          [cols], [rows])
+                                          padded_lists([cols]),
+                                          padded_lists([rows]))
     cells, n_unmatched = pack_pages(
         np.array([0, 4]), ri, ci, n_rows, n_cols, boxes[:, 0],
         np.arange(4), pa.array(["a", None, None, "\t\xa0b\n\r"]))

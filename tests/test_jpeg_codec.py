@@ -13,7 +13,8 @@ import os
 import numpy as np
 import pytest
 
-from pdftabextract_spark.kernels.jpeg import decode_jpeg, encode_jpeg
+from jpeg_encoders import encode_jpeg
+from pdftabextract_spark.kernels.jpeg import decode_jpeg
 from pdftabextract_spark.kernels.png import decode_png
 from pdftabextract_spark.kernels.raster import decode_raster
 
@@ -129,7 +130,7 @@ def test_cmyk_and_ycck_decode():
     rng = np.random.default_rng(5)
     g = rng.integers(0, 256, (48, 56)).astype(np.uint8)
     rgb = np.stack([g, np.roll(g, 3, 1), 255 - g], -1)
-    from pdftabextract_spark.kernels.jpeg import encode_jpeg_cmyk
+    from jpeg_encoders import encode_jpeg_cmyk
     ref = decode_jpeg(encode_jpeg(rgb, quality=90))
     ycck = decode_jpeg(encode_jpeg_cmyk(rgb, quality=90, ycck=True))
     assert ycck.shape == (48, 56, 3)
@@ -177,7 +178,7 @@ def test_cmyk_no_adobe_marker_straight_convention():
     rng = np.random.default_rng(11)
     g = rng.integers(64, 192, (32, 40)).astype(np.uint8)
     rgb = np.stack([g, 255 - g, np.roll(g, 5, 1)], -1)
-    from pdftabextract_spark.kernels.jpeg import encode_jpeg_cmyk
+    from jpeg_encoders import encode_jpeg_cmyk
     buf = encode_jpeg_cmyk(rgb, quality=90, ycck=False)
     stripped = _rewrite_app14(buf, None)
     dec = decode_jpeg(stripped)
@@ -195,7 +196,7 @@ def test_truncated_app14_treated_as_no_marker():
     rng = np.random.default_rng(12)
     g = rng.integers(64, 192, (24, 24)).astype(np.uint8)
     rgb = np.stack([g, g, g], -1)
-    from pdftabextract_spark.kernels.jpeg import encode_jpeg_cmyk
+    from jpeg_encoders import encode_jpeg_cmyk
     buf = encode_jpeg_cmyk(rgb, quality=90, ycck=False)
     short = _rewrite_app14(buf, b"Adobe\x00\x64")  # 7-byte payload < 12
     dec = decode_jpeg(short)

@@ -12,9 +12,10 @@ pad blocks DC-only) at the coefficient level."""
 import numpy as np
 import pytest
 
+import jpeg_encoders as E
 from pdftabextract_spark.kernels import jpeg as J
-from pdftabextract_spark.kernels.jpeg import (
-    decode_jpeg, encode_jpeg, encode_jpeg_progressive)
+from pdftabextract_spark.kernels.jpeg import decode_jpeg
+from jpeg_encoders import encode_jpeg, encode_jpeg_progressive
 
 
 def _noisy(seed, h, w):
@@ -90,8 +91,8 @@ def test_progressive_420_coefficients_exact():
     y = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
     cb = -0.168736 * f[..., 0] - 0.331264 * f[..., 1] + 0.5 * f[..., 2] + 128.0
     cr = 0.5 * f[..., 0] - 0.418688 * f[..., 1] - 0.081312 * f[..., 2] + 128.0
-    qy = J._scale_qtab(J.QTAB_LUMA.ravel()[J.ZIGZAG], 88)
-    qc = J._scale_qtab(J.QTAB_CHROMA.ravel()[J.ZIGZAG], 88)
+    qy = E._scale_qtab(J.QTAB_LUMA.ravel()[J.ZIGZAG], 88)
+    qc = E._scale_qtab(J.QTAB_CHROMA.ravel()[J.ZIGZAG], 88)
     qyn = np.empty(64, np.int64); qyn[J.ZIGZAG] = qy
     qcn = np.empty(64, np.int64); qcn[J.ZIGZAG] = qc
     mcus_x, mcus_y = -(-W // 16), -(-H // 16)
@@ -102,7 +103,7 @@ def test_progressive_420_coefficients_exact():
         cwb, chb = mcus_x * hi, mcus_y * vi
         p = np.pad(p, ((0, chb * 8 - p.shape[0]), (0, cwb * 8 - p.shape[1])),
                    mode="edge")
-        return J._fdct_quant(p, qn.reshape(8, 8))
+        return E._fdct_quant(p, qn.reshape(8, 8))
 
     exp = [prep(y, 2, 2, qyn), prep(cb, 1, 1, qcn), prep(cr, 1, 1, qcn)]
     for ci in range(3):

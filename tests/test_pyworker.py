@@ -1,8 +1,8 @@
 """kernels/pyworker.forget_zip_importers: a Spark-free check that it drops
 the zip importers and leaves imports working, and a worker-side gate that
-every shared kernel iterator calls it, so a reused Python worker holds no
-zip importer for the next task's ``importlib.invalidate_caches()`` to
-re-read."""
+every shared kernel iterator, and every Python stage kernel that runs
+outside them, calls it, so a reused Python worker holds no zip importer
+for the next task's ``importlib.invalidate_caches()`` to re-read."""
 
 import importlib
 import pkgutil
@@ -10,6 +10,7 @@ import sys
 import zipfile
 import zipimport
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,8 @@ from pdftabextract_spark.kernels.overlap import (
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 from pdftabextract_spark.kernels.pyworker import forget_zip_importers
 from pdftabextract_spark.kernels.shingles import word_grams
+from pdftabextract_spark.operators.grid import assign_batches
+from pdftabextract_spark.operators.model import repair_batches
 from pdftabextract_spark.sources.spans import frames
 
 
@@ -80,7 +83,29 @@ def _posting_input(spark):
         F.col("id").alias("doc_id"), F.lit(7).cast("long").alias("s"))
 
 
+def _joined_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.lit("d").alias("doc_id"), F.col("id").cast("int").alias("page"),
+        F.col("id").cast("int").alias("box_id"),
+        *(F.lit(v).alias(c) for c, v in (
+            ("left", 1.0), ("top", 1.0), ("width", 2.0), ("height", 2.0))),
+        F.lit("v").alias("value"),
+        F.array(F.lit(0.0), F.lit(5.0)).alias("col_positions"),
+        F.array(F.lit(0.0), F.lit(5.0)).alias("row_positions"))
+
+
+def _centers_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.array(F.col("id").cast("double"), F.lit(9.0)).alias("centers"))
+
+
 @pytest.mark.parametrize("name, build, start", [
+    ("assign_batches", _joined_input,
+     lambda batches: assign_batches(b.to_pandas() for b in batches)),
+    ("repair_batches", _centers_input,
+     lambda batches: repair_batches(
+         (b.column("centers").to_pandas() for b in batches),
+         np.array([0.0, 5.0]))),
     ("frames", _frames_input, frames),
     ("iter_page_groups", _page_groups_input,
      lambda batches: iter_page_groups(batches, "gate")),
