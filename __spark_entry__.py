@@ -570,13 +570,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pages = synth.pages_df(spark, params)
             media = synth.media_df(spark, params)
             lines = detect_lines(pages, media)
-            # persist=True + counting the enriched frame: rot and counts
-            # are two subtrees over one persisted pass (no omit filter is
-            # set, so the enriched line rows ARE the classified lines) —
-            # otherwise the raster kernel would run once per subtree
+            # rot and counts are two subtrees over the enriched frame
+            # find_rotation_per_page persists (no omit filter is set, so
+            # the enriched line rows ARE the classified lines): the raster
+            # kernel runs once, not once per subtree
             rot, filtered = find_rotation_per_page(
                 lines, np.deg2rad(_Q42_ROT_THRESH_DEG),
-                np.deg2rad(_Q42_SAME_DIR_THRESH_DEG), persist=True)
+                np.deg2rad(_Q42_SAME_DIR_THRESH_DEG))
             counts = filtered.groupBy("doc_id", "page").agg(
                 F.sum(F.when(F.col("direction") == "v", 1).otherwise(0))
                  .alias("n_v"),

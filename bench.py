@@ -23,12 +23,12 @@ Steady-state measurement (round 5): the driver JVM heap is pre-sized
 (-Xms = -Xmx) so G1 never grows it mid-bench, one FULL-SIZE untimed
 warmup rep per e2e workload absorbs first-touch page faults (this
 sandbox faults pages at ~0.5 GB/s), and an untimed System.gc() between
-reps reclaims dropped localCheckpoint blocks — together these removed
-the 15-390s GC tail the first timed reps of a fresh JVM used to pay.
+reps lets the JVM clean up what the previous rep dropped — together
+these removed the 15-390s GC tail the first timed reps of a fresh JVM
+used to pay.
 
 Usage:
   python bench.py                 # full bench, one JSON line to stdout
-  python bench.py --extract-only  # flagship only (used by scale_bench)
 """
 
 import json
@@ -43,18 +43,6 @@ from pdftabextract_spark.session import default_cores, default_driver_mem  # noq
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cores()
-# cache mode for the image pipeline's multi-branch materialization (the
-# span-table extract path caches nothing); default from the round-5
-# interleaved A/B at the bench shape (6 rounds x 3 modes in ONE session,
-# 2026-08-18, when the extract path still cached its boxes):
-#   checkpoint best 2.466s / quiet-reps 2.47-2.56 (most stable)
-#   persist    best 2.850s / quiet-reps 2.85-3.44
-#   none       best 4.844s / quiet-reps 4.8-18.6
-# localCheckpoint wins for the bench shape (no columnar re-encode); the
-# ENGINE default stays "persist" (recomputable lineage, the cluster-safe
-# choice — plans/pipeline.py). Override to re-A/B.
-CACHE_MODE = os.environ.get("SPARK_GRAFT_CACHE_MODE", "checkpoint")
-
 # corpus sizing per sf tier (docs; pages ~= 2.2x docs, boxes ~= 40x pages)
 _DOCS_BY_SF = {"sf0.001": 120, "sf0.01": 1200, "sf0.1": 6000}
 
@@ -190,11 +178,12 @@ def _quiet_median(walls, stats):
 
 
 def _interrep_gc(spark):
-    """UNTIMED housekeeping between reps: localCheckpoint blocks from the
-    previous rep are reclaimed only after the driver JVM garbage-collects
-    the dropped RDD (async ContextCleaner); without a nudge they pile up
-    in the block manager and successive reps GC against a fuller heap
-    (r5 log: gc_sec 16 -> 24 -> 90 across identical steady-state reps)."""
+    """UNTIMED housekeeping between reps: what a rep leaves behind (its
+    shuffle files, the RDDs it dropped) is reclaimed only after the
+    driver JVM garbage-collects the dropped objects (async
+    ContextCleaner); without a nudge it piles up and successive reps GC
+    against a fuller heap (r5 log, when the image path still used
+    localCheckpoint: gc_sec 16 -> 24 -> 90 across identical reps)."""
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:
@@ -223,8 +212,7 @@ def make_extract_rep(spark, n_docs):
     params = synth.CorpusParams(seed=42, n_docs=n_docs, n_cols=6)
     pipe = PipelineParams(n_cols=params.n_cols,
                           min_col_width=params.min_col_width,
-                          min_row_height=params.min_row_height,
-                          cache=CACHE_MODE)
+                          min_row_height=params.min_row_height)
     span_docs = spark.read.parquet(path)
     # one small UNTIMED warmup pass first: the fresh JVM's first heavy
     # job pays whole-stage-codegen compilation + Python worker spin-up,
@@ -277,8 +265,7 @@ def make_image_rep(spark, n_docs=200):
     n_pages = pages.count()
     pipe = PipelineParams(n_cols=params.n_cols,
                           min_col_width=params.min_col_width,
-                          min_row_height=params.min_row_height,
-                          cache=CACHE_MODE)
+                          min_row_height=params.min_row_height)
 
     def rep():
         spark.catalog.clearCache()
@@ -289,7 +276,6 @@ def make_image_rep(spark, n_docs=200):
 
 def main():
     bw_start = _bandwidth_probe_gbps()
-    extract_only = "--extract-only" in sys.argv
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS",
                                 _DOCS_BY_SF.get(_sf_tag(SF_DIR), 6000)))
 
@@ -317,37 +303,6 @@ def main():
     # so timed reps start at steady state
     extract_rep()
     meter.snapshot()  # drain warmup/materialization stages
-
-    if extract_only:
-        # scale_bench path: back-to-back reps (it interleaves whole
-        # invocations itself)
-        n_reps = int(os.environ.get("SPARK_GRAFT_EXTRACT_REPS", "2"))
-        walls, stats, n_spans = [], [], 0
-        for _ in range(n_reps):
-            w, st, n_spans = _timed(extract_rep, meter)
-            walls.append(w)
-            stats.append(st)
-            _interrep_gc(spark)
-        best = min(walls)
-        result = {
-            "metric": "e2e_extraction_and_operator_suite",
-            "value": round(best, 3), "unit": "sec",
-            "queries": {"extract_e2e": round(best, 3)},
-            "queries_median": {"extract_e2e": round(_median(walls), 3)},
-            "queries_median_quiet": {
-                "extract_e2e": round(_quiet_median(walls, stats), 3)},
-            "value_median": round(_median(walls), 3),
-            "sf": _sf_tag(SF_DIR), "extract_docs": n_docs,
-            "extract_spans": n_spans,
-            "extract_docs_per_sec": round(n_docs / best, 2),
-            "extract_rep_stats": stats,
-            "cache_mode": CACHE_MODE, "cpus": CPUS,
-            "host_bw_gbps": {"start": bw_start,
-                             "end": _bandwidth_probe_gbps()},
-        }
-        spark.stop()
-        print(json.dumps(result))
-        return
 
     image_rep, img_pages = make_image_rep(spark)
     image_rep()  # full-size untimed warmup (same rationale as extract)
@@ -409,7 +364,6 @@ def main():
         "cpus": CPUS,
         "image_pages": img_pages,
         "image_pages_per_sec": round(img_pages / queries["image_e2e"], 2),
-        "cache_mode": CACHE_MODE,
         "rounds": rounds,
         # per-rep wall + stage attribution (exec_sec/gc_sec) for the two
         # e2e workloads — a slow rep is diagnosable from the record alone

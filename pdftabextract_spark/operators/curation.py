@@ -10,29 +10,16 @@ keyed aggregation — no self-joins, no driver-side state. Sequence
 packing is the one genuinely sequential algorithm; it runs per GROUP
 (source shard) inside applyInPandas, which is exactly how a 100 TB
 corpus is packed in practice (per input shard, never one global scan),
-and group skew is bounded by shard size, not corpus size.
+and group skew is bounded by shard size, not corpus size. Nothing here
+caches or persists a frame: where a shingle stream feeds two consumers
+(boilerplate_fraction's census and probe, duplicate_passage_rate's
+windows and census), each re-derives it, so a call leaves no cached
+block behind in the session.
 """
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
-
-
-def _materialize(df: DataFrame, mode) -> DataFrame:
-    """Optional materialization for frames consumed by several downstream
-    branches (mirrors plans.pipeline._materialize): ``"persist"`` =
-    MEMORY_AND_DISK cache, ``"checkpoint"`` = lazy localCheckpoint (cuts
-    lineage, no columnar re-encode), anything falsy / ``"none"`` = no
-    reuse (each consumer recomputes the lineage). Operators default to no
-    reuse — cluster-safe, nothing pinned — and expose a ``cache=``
-    parameter so corpus-scale callers can stop a multi-consumer shingle
-    stream from re-deriving its input 2-3 times per call."""
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=False)
-    if mode == "persist":
-        from pyspark import StorageLevel
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
 
 
 # ------------------------------------------------- repetition signals
@@ -167,8 +154,7 @@ def pack_next_fit(docs: DataFrame, budget: int, text_col="text",
 
 def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
                   text_col="text", id_col="doc_id", eval_text_col=None,
-                  eval_id_col=None, broadcast_eval=True,
-                  cache=None) -> DataFrame:
+                  eval_id_col=None, broadcast_eval=True) -> DataFrame:
     """Train-vs-eval n-gram overlap — the industry-standard contamination
     check (GPT-3/PaLM/Llama eval decontamination): per training document,
     the fraction of its distinct word ``n``-gram shingles that also occur
@@ -193,9 +179,7 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
     twice per call. They are now ONE pass: a left join against the
     distinct eval set marks each shingle row, and a single groupBy counts
     rows and marks together (the eval set is distinct, so the left join
-    is fanout-free). ``cache`` additionally materializes the marked
-    stream (``"persist"`` / ``"checkpoint"``) for callers composing this
-    with other shingle consumers."""
+    is fanout-free)."""
     from pyspark.sql.functions import broadcast
     from .dedup import word_shingles
 
@@ -205,8 +189,7 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
         .select("s").distinct().withColumn("_m", F.lit(1))
     if broadcast_eval:
         ev = broadcast(ev)
-    marked = _materialize(sh.join(ev, "s", "left"), cache)
-    return (marked.groupBy("doc_id")
+    return (sh.join(ev, "s", "left").groupBy("doc_id")
             .agg(F.count("*").alias("n_shingles"),
                  F.count("_m").alias("contaminated"))
             .select("doc_id", "n_shingles", "contaminated",
@@ -280,8 +263,7 @@ def source_mix_rates(docs: DataFrame, targets: dict,
 
 
 def boilerplate_fraction(docs: DataFrame, n: int = 8, min_docs: int = 2,
-                         text_col="text", id_col="doc_id",
-                         cache=None) -> DataFrame:
+                         text_col="text", id_col="doc_id") -> DataFrame:
     """Cross-document boilerplate signal: per document, the fraction of
     its DISTINCT word ``n``-gram shingles that occur in at least
     ``min_docs`` distinct documents corpus-wide (headers, footers,
@@ -305,13 +287,10 @@ def boilerplate_fraction(docs: DataFrame, n: int = 8, min_docs: int = 2,
     join against the frequent set marks each shingle row (fanout-free:
     the frequent set has one row per shingle) and a single groupBy counts
     rows and marks together — leaving two derivations (census + marked
-    stream). ``cache`` (``"persist"`` / ``"checkpoint"``) materializes
-    the shingle stream so census and probe share one derivation at
-    corpus scale."""
+    stream); nothing is cached."""
     from .dedup import word_shingles
 
-    sh = _materialize(
-        word_shingles(docs, n, text_col, id_col, hashed=True), cache)
+    sh = word_shingles(docs, n, text_col, id_col, hashed=True)
     frequent = (sh.groupBy("s").agg(F.count("*").alias("_df"))
                 .where(F.col("_df") >= int(min_docs)).select("s")
                 .withColumn("_m", F.lit(1)))
@@ -325,7 +304,7 @@ def boilerplate_fraction(docs: DataFrame, n: int = 8, min_docs: int = 2,
 
 
 def duplicate_passage_rate(docs: DataFrame, k: int = 50, text_col="text",
-                           id_col="doc_id", cache=None) -> DataFrame:
+                           id_col="doc_id") -> DataFrame:
     """Exact duplicate-passage rate per document (the ExactSubstr dedup
     signal of Lee et al., "Deduplicating Training Data Makes Language
     Models Better", ACL 2022, computed at word granularity): the fraction
@@ -354,10 +333,8 @@ def duplicate_passage_rate(docs: DataFrame, k: int = 50, text_col="text",
     ARRAY is built once and shared by both consumers (the multiplicity
     stream explodes it, the census explodes its ``array_distinct`` —
     previously the census re-split and re-hashed the text through a
-    separate ``word_shingles`` call, a third pass over the corpus).
-    ``cache`` (``"persist"`` / ``"checkpoint"``) materializes the
-    hash-array frame so the two consumers share one scan at corpus
-    scale."""
+    separate ``word_shingles`` call, a third pass over the corpus);
+    nothing is cached."""
     d = (docs.select(F.col(id_col).alias("doc_id"),
                      F.split(text_col, " ").alias("ws"))
          .where(F.size("ws") >= k))
@@ -368,7 +345,7 @@ def duplicate_passage_rate(docs: DataFrame, k: int = 50, text_col="text",
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("ws") - k, F.lit(0))),
         lambda i: F.xxhash64(F.concat_ws(" ", F.slice(F.col("ws"), i + 1, k))))
-    g = _materialize(d.select("doc_id", grams.alias("gs")), cache)
+    g = d.select("doc_id", grams.alias("gs"))
     wins = g.select("doc_id", F.explode("gs").alias("s"))
     ndocs = (g.select(F.explode(F.array_distinct("gs")).alias("s"))
              .groupBy("s").agg(F.count("*").alias("_nd")))

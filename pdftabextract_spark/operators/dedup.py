@@ -1,12 +1,11 @@
 """Deduplication operators for large text corpora (first-class engine
-components per the build brief): exact hashing, MinHash+LSH, SimHash, and
+components per the build brief): exact hashing, MinHash, SimHash, and
 n-gram Jaccard. All hashing is md5-derived so results are portable across
 engines (the DuckDB oracles in __spark_entry__ compute identical values).
 
 Scale notes: exact dedup is one hash-groupBy; minhash/simhash shuffle once
 on doc_id after the word explode (map-side partial min/sum aggregation
-keeps the exchange small); LSH banding turns the quadratic near-dup
-problem into an equi-join on band buckets; n-gram Jaccard is three Arrow
+keeps the exchange small); n-gram Jaccard is three Arrow
 kernels (shingles, per-shingle sorted doc lists, shared-shingle counts
 per document), and the doc-list length (the pair fanout) is bounded by
 capping document frequency (stop-shingle removal) — the knob at 100 TB,
@@ -54,31 +53,6 @@ def minhash_signatures(docs: DataFrame, text_col="text", id_col="doc_id",
     aggs = [F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(p)).alias(f"s{i}")
             for i, (a, b) in enumerate(hashes)]
     return hw.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_lsh_pairs(docs: DataFrame, text_col="text", id_col="doc_id",
-                      bands=2) -> DataFrame:
-    """LSH candidate pairs: split the 8-hash signature into ``bands`` bands
-    and equi-join docs sharing a full band. Returns (d1, d2, n_bands)."""
-    sig = minhash_signatures(docs, text_col, id_col)
-    n = len(MINHASH_AB)
-    per = n // bands
-    parts = []
-    for bidx in range(bands):
-        cols = [f"s{i}" for i in range(bidx * per, (bidx + 1) * per)]
-        parts.append(sig.select(
-            "doc_id", F.lit(bidx).alias("band"),
-            F.concat_ws(",", *cols).alias("bucket")))
-    all_bands = parts[0]
-    for pdf in parts[1:]:
-        all_bands = all_bands.unionByName(pdf)
-    a = all_bands.alias("a")
-    b = all_bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-            .agg(F.count("*").alias("n_bands")))
 
 
 def simhash(docs: DataFrame, text_col="text", id_col="doc_id", bits=16) -> DataFrame:

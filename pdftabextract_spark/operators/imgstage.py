@@ -18,15 +18,67 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import imgproc as K
+from ..kernels.pyworker import forget_zip_importers
 from ..kernels.raster import decode_raster
 
 _LINES_SCHEMA = ("doc_id string, page int, rho double, theta double, "
                  "theta_norm double, direction string")
 
-_ROT_SCHEMA = ("doc_id string, page int, rot_type string, rot_radians double")
+_ENRICHED_SCHEMA = _LINES_SCHEMA + ", rot_type string, rot_radians double"
+
+_LINE_COLS = ["doc_id", "page", "rho", "theta", "theta_norm", "direction"]
+
+_ENRICHED_COLS = _LINE_COLS + ["rot_type", "rot_radians"]
+
+
+def _batch_lines(pdf, canny_low=50, canny_high=150, hough_rho_res=1.0,
+                 hough_theta_res=math.pi / 500, hough_votes_rel=0.2,
+                 edge_method="canny", hough_votes_abs=None):
+    """Yield (row, classified Hough lines [(rho, theta, theta_norm,
+    direction)]) for each page image of a batch: decode, edges, Hough,
+    h/v classification.
+
+    One loop body, not a per-page call: a page's frames stay alive until
+    the next page's replace them, so the allocator reuses their memory
+    rather than returning it to the OS and faulting it back in per page
+    (a per-page helper made the kernel ~20% slower on a 4-vCPU host)."""
+    edge_fn = K.canny_edges if edge_method == "canny" else K.edges_simple
+    for r in pdf.itertuples(index=False):
+        gray = decode_raster(bytes(r.bytes), luma_only=True)
+        edges = edge_fn(gray, canny_low, canny_high)
+        votes = (int(hough_votes_abs) if hough_votes_abs is not None
+                 else int(round(hough_votes_rel * gray.shape[1])))
+        lines = K.hough_lines(edges, hough_rho_res, hough_theta_res,
+                              max(votes, 2))
+        yield r, K.classify_hough_lines(lines)
+
+
+def _enriched(lines: DataFrame):
+    """Persist the enriched line frame (both outputs consume it through
+    separate downstream actions; without this the whole upstream lineage,
+    typically decode+Canny+Hough, would run per consumer) and split it
+    into (rotations, filtered lines) with two narrow filters."""
+    enriched = lines.persist(StorageLevel.MEMORY_AND_DISK)
+    rotations = enriched.where(F.col("direction").isNull()).select(
+        "doc_id", "page", "rot_type", "rot_radians")
+    filtered_lines = enriched.where(F.col("direction").isNotNull())
+    return rotations, filtered_lines
+
+
+def line_batches(batches, **detect):
+    """``detect_lines``' kernel: it drops the worker's zip importers
+    (kernels/pyworker), then emits each page image's classified lines.
+    ``detect``: the keyword arguments of ``_batch_lines``."""
+    forget_zip_importers()
+    for pdf in batches:
+        rows = []
+        for r, lh in _batch_lines(pdf, **detect):
+            rows.extend((r.doc_id, r.page, *line) for line in lh)
+        yield pd.DataFrame(rows, columns=_LINE_COLS)
 
 
 def detect_lines(pages: DataFrame, media: DataFrame,
@@ -44,29 +96,38 @@ def detect_lines(pages: DataFrame, media: DataFrame,
     or 'simple' (thresholded gradient — cheaper, adequate only for clean
     synthetic renders)."""
     joined = pages.select("doc_id", "page", "media_ref").join(media, "media_ref")
-    edge_fn = K.canny_edges if edge_method == "canny" else K.edges_simple
+    detect = dict(canny_low=canny_low, canny_high=canny_high,
+                  hough_rho_res=hough_rho_res, hough_theta_res=hough_theta_res,
+                  hough_votes_rel=hough_votes_rel, edge_method=edge_method,
+                  hough_votes_abs=hough_votes_abs)
+    return joined.mapInPandas(lambda batches: line_batches(batches, **detect),
+                              schema=_LINES_SCHEMA)
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                gray = decode_raster(bytes(r.bytes), luma_only=True)
-                edges = edge_fn(gray, canny_low, canny_high)
-                votes = (int(hough_votes_abs) if hough_votes_abs is not None
-                         else int(round(hough_votes_rel * gray.shape[1])))
-                lines = K.hough_lines(edges, hough_rho_res, hough_theta_res,
-                                      max(votes, 2))
-                for rho, theta, theta_norm, direction in K.classify_hough_lines(lines):
-                    rows.append((r.doc_id, r.page, rho, theta, theta_norm, direction))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "page", "rho", "theta", "theta_norm", "direction"])
 
-    return joined.mapInPandas(kernel, schema=_LINES_SCHEMA)
+def rotation_group(pdf: pd.DataFrame, rot_thresh, rot_same_dir_thresh,
+                   omit_on_rot_thresh=None, only_direction=None):
+    """``find_rotation_per_page``'s grouped kernel: it drops the worker's
+    zip importers (kernels/pyworker), then returns one page's header row
+    (direction NULL) and its filtered lines, each carrying the page's
+    rotation decision."""
+    forget_zip_importers()
+    doc_id = pdf.iloc[0]["doc_id"]
+    page = int(pdf.iloc[0]["page"])
+    lh = list(zip(pdf["rho"], pdf["theta"], pdf["theta_norm"], pdf["direction"]))
+    (rs_type, rs_rad), filtered = K.find_rotation_or_skew(
+        lh, rot_thresh, rot_same_dir_thresh,
+        omit_on_rot_thresh=omit_on_rot_thresh, only_direction=only_direction)
+    rows = [(np.nan, np.nan, np.nan, None)] + list(filtered)
+    out = pd.DataFrame(rows, columns=["rho", "theta", "theta_norm", "direction"])
+    out.insert(0, "doc_id", doc_id)
+    out.insert(1, "page", page)
+    out["rot_type"] = rs_type
+    out["rot_radians"] = np.nan if rs_rad is None else float(rs_rad)
+    return out
 
 
 def find_rotation_per_page(lines: DataFrame, rot_thresh, rot_same_dir_thresh,
-                           omit_on_rot_thresh=None, only_direction=None,
-                           persist=False):
+                           omit_on_rot_thresh=None, only_direction=None):
     """Per-page rotation/skew decision + stray-line filter.
 
     Returns (rotations DF, filtered lines DF). The decision logic is the
@@ -80,43 +141,43 @@ def find_rotation_per_page(lines: DataFrame, rot_thresh, rot_same_dir_thresh,
     rotations, and the filtered lines carry rot_type/rot_radians so
     apply_rotation_to_lines needs no join back to the rotations.
 
-    ``persist`` caches the shared enriched frame (both outputs consume it
-    via separate downstream actions — without this the whole upstream
-    lineage, typically decode+Canny+Hough, would run per consumer)."""
+    The shared enriched frame is persisted (MEMORY_AND_DISK) and never
+    released, so the lines' upstream runs once for both outputs."""
+    return _enriched(lines.groupBy("doc_id", "page").applyInPandas(
+        lambda pdf: rotation_group(pdf, rot_thresh, rot_same_dir_thresh,
+                                   omit_on_rot_thresh, only_direction),
+        schema=_ENRICHED_SCHEMA))
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id = pdf.iloc[0]["doc_id"]
-        page = int(pdf.iloc[0]["page"])
-        lh = list(zip(pdf["rho"], pdf["theta"], pdf["theta_norm"], pdf["direction"]))
-        (rs_type, rs_rad), filtered = K.find_rotation_or_skew(
-            lh, rot_thresh, rot_same_dir_thresh,
-            omit_on_rot_thresh=omit_on_rot_thresh, only_direction=only_direction)
-        rows = [(np.nan, np.nan, np.nan, None)] + list(filtered)
-        out = pd.DataFrame(rows, columns=["rho", "theta", "theta_norm", "direction"])
-        out.insert(0, "doc_id", doc_id)
-        out.insert(1, "page", page)
-        out["rot_type"] = rs_type
-        out["rot_radians"] = np.nan if rs_rad is None else float(rs_rad)
-        return out
 
-    schema = (_LINES_SCHEMA + ", rot_type string, rot_radians double")
-    enriched = lines.groupBy("doc_id", "page").applyInPandas(kernel, schema=schema)
-    if persist:
-        # persist accepts True (MEMORY_AND_DISK) or a PipelineParams.cache
-        # mode string — see plans.pipeline._materialize
-        from ..plans.pipeline import _materialize
-        enriched = _materialize(
-            enriched, persist if isinstance(persist, str) else "persist")
-    rotations = enriched.where(F.col("direction").isNull()).select(
-        "doc_id", "page", "rot_type", "rot_radians")
-    filtered_lines = enriched.where(F.col("direction").isNotNull())
-    return rotations, filtered_lines
+def rotation_line_batches(batches, rot_thresh, rot_same_dir_thresh,
+                          omit_on_rot_thresh=None, only_direction=None,
+                          **detect):
+    """``detect_lines_with_rotation``'s kernel: it drops the worker's zip
+    importers (kernels/pyworker), then emits, per page image with lines,
+    a header row (direction NULL) and the filtered lines, each carrying
+    the page's rotation decision. ``detect``: the keyword arguments of
+    ``_batch_lines``."""
+    forget_zip_importers()
+    for pdf in batches:
+        rows = []
+        for r, lh in _batch_lines(pdf, **detect):
+            if not lh:
+                continue
+            (rs_type, rs_rad), filtered = K.find_rotation_or_skew(
+                lh, rot_thresh, rot_same_dir_thresh,
+                omit_on_rot_thresh=omit_on_rot_thresh,
+                only_direction=only_direction)
+            rad = np.nan if rs_rad is None else float(rs_rad)
+            rows.append((r.doc_id, r.page, np.nan, np.nan, np.nan,
+                         None, rs_type, rad))
+            rows.extend((r.doc_id, r.page, rho, theta, tn, d, rs_type, rad)
+                        for rho, theta, tn, d in filtered)
+        yield pd.DataFrame(rows, columns=_ENRICHED_COLS)
 
 
 def detect_lines_with_rotation(pages: DataFrame, media: DataFrame,
                                rot_thresh, rot_same_dir_thresh,
                                omit_on_rot_thresh=None, only_direction=None,
-                               persist=False,
                                canny_low=50, canny_high=150,
                                hough_rho_res=1.0, hough_theta_res=math.pi / 500,
                                hough_votes_rel=0.2, edge_method="canny",
@@ -133,47 +194,18 @@ def detect_lines_with_rotation(pages: DataFrame, media: DataFrame,
     pages whose Hough output is empty emit nothing, exactly like the
     groupBy path where an empty group never forms, and the decision
     chain is the same K.find_rotation_or_skew call. Returns
-    (rotations, filtered_lines) with the same schemas."""
+    (rotations, filtered_lines) with the same schemas, off one persisted
+    enriched frame, so the decode runs once for both."""
     joined = pages.select("doc_id", "page", "media_ref").join(media, "media_ref")
-    edge_fn = K.canny_edges if edge_method == "canny" else K.edges_simple
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                gray = decode_raster(bytes(r.bytes), luma_only=True)
-                edges = edge_fn(gray, canny_low, canny_high)
-                votes = (int(hough_votes_abs) if hough_votes_abs is not None
-                         else int(round(hough_votes_rel * gray.shape[1])))
-                lines = K.hough_lines(edges, hough_rho_res, hough_theta_res,
-                                      max(votes, 2))
-                lh = K.classify_hough_lines(lines)
-                if not lh:
-                    continue
-                (rs_type, rs_rad), filtered = K.find_rotation_or_skew(
-                    lh, rot_thresh, rot_same_dir_thresh,
-                    omit_on_rot_thresh=omit_on_rot_thresh,
-                    only_direction=only_direction)
-                rad = np.nan if rs_rad is None else float(rs_rad)
-                rows.append((r.doc_id, r.page, np.nan, np.nan, np.nan,
-                             None, rs_type, rad))
-                rows.extend((r.doc_id, r.page, rho, theta, tn, d,
-                             rs_type, rad)
-                            for rho, theta, tn, d in filtered)
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "page", "rho", "theta", "theta_norm",
-                "direction", "rot_type", "rot_radians"])
-
-    schema = (_LINES_SCHEMA + ", rot_type string, rot_radians double")
-    enriched = joined.mapInPandas(kernel, schema=schema)
-    if persist:
-        from ..plans.pipeline import _materialize
-        enriched = _materialize(
-            enriched, persist if isinstance(persist, str) else "persist")
-    rotations = enriched.where(F.col("direction").isNull()).select(
-        "doc_id", "page", "rot_type", "rot_radians")
-    filtered_lines = enriched.where(F.col("direction").isNotNull())
-    return rotations, filtered_lines
+    detect = dict(canny_low=canny_low, canny_high=canny_high,
+                  hough_rho_res=hough_rho_res, hough_theta_res=hough_theta_res,
+                  hough_votes_rel=hough_votes_rel, edge_method=edge_method,
+                  hough_votes_abs=hough_votes_abs)
+    return _enriched(joined.mapInPandas(
+        lambda batches: rotation_line_batches(
+            batches, rot_thresh, rot_same_dir_thresh, omit_on_rot_thresh,
+            only_direction, **detect),
+        schema=_ENRICHED_SCHEMA))
 
 
 def apply_rotation_to_lines(lines_with_rot: DataFrame, sign: float = -1.0) -> DataFrame:
@@ -273,22 +305,28 @@ def line_border_centers(lines: DataFrame, pages: DataFrame,
 
     sel = lines.where(F.col("direction") == direction).join(
         pages.select("doc_id", "page", "img_w", "img_h"), ["doc_id", "page"])
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for (doc_id, page, img_w, img_h), grp in pdf.groupby(
-                    ["doc_id", "page", "img_w", "img_h"], sort=False):
-                coord_idx = 0 if direction == "v" else 1
-                pos = K.hough_line_midpoints(
-                    grp["rho"].to_numpy(), grp["theta"].to_numpy(),
-                    float(img_w), float(img_h), coord_idx)
-                rows.extend((doc_id, int(page), float(p)) for p in pos)
-            yield pd.DataFrame(rows, columns=["doc_id", "page", "pos"])
-
-    positions = sel.mapInPandas(kernel, schema="doc_id string, page int, pos double")
+    positions = sel.mapInPandas(
+        lambda batches: border_position_batches(batches, direction),
+        schema="doc_id string, page int, pos double")
     return cluster_centers(positions, "pos", dist_thresh, ("doc_id", "page"),
                            center="median")
+
+
+def border_position_batches(batches, direction):
+    """``line_border_centers``' kernel: it drops the worker's zip
+    importers (kernels/pyworker), then emits the canvas-projected
+    midpoint of every ``direction`` line, per page."""
+    forget_zip_importers()
+    coord_idx = 0 if direction == "v" else 1
+    for pdf in batches:
+        rows = []
+        for (doc_id, page, img_w, img_h), grp in pdf.groupby(
+                ["doc_id", "page", "img_w", "img_h"], sort=False):
+            pos = K.hough_line_midpoints(
+                grp["rho"].to_numpy(), grp["theta"].to_numpy(),
+                float(img_w), float(img_h), coord_idx)
+            rows.extend((doc_id, int(page), float(p)) for p in pos)
+        yield pd.DataFrame(rows, columns=["doc_id", "page", "pos"])
 
 
 def filter_empty_cluster_sections(centers: DataFrame, boxes: DataFrame,

@@ -1,37 +1,17 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Media columns: images as opaque binary + typed metadata.
 
-The Spark-side plumbing (schemas, partition-safe batch kernels, Arrow
-batch shapes, bounded per-batch pixel budgets) is real and tested; the
-codec layer is pluggable. In this container only the native PNG codec
-(kernels.png) exists — JPEG/audio/video decoders raise NotImplementedError
-behind a clearly-marked registry slot, or use the deterministic fake for
-pipeline testing (brief: stub the decode, make the plumbing real).
+``probe_media`` sniffs each blob's header for its codec and pixel size
+without decoding it (get_image_size parity); the catalogue and
+schoollist loaders use it to size their page images.
 """
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..kernels.png import decode_png, encode_png, get_image_size_from_bytes
+from ..kernels.png import get_image_size_from_bytes
 
 _META_SCHEMA = ("media_ref string, kind string, width int, height int, "
                 "n_bytes long, codec string")
-_FEAT_SCHEMA = ("media_ref string, mean double, std double, edge_ratio double")
-
-
-def decode_image(buf: bytes) -> np.ndarray:
-    """Decode an image blob. PNG and baseline JPEG are native pure-numpy
-    codecs (kernels.png / kernels.jpeg); other formats raise."""
-    from ..kernels.raster import decode_raster
-    return decode_raster(buf)
-
-
-def fake_decode(buf: bytes, width=32, height=32) -> np.ndarray:
-    """Deterministic fake decoder for plumbing tests: pixels derived from
-    the blob bytes (repeatable, content-sensitive, no codec needed)."""
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    reps = int(np.ceil(width * height / max(len(arr), 1)))
-    return np.tile(arr, reps)[: width * height].reshape(height, width)
 
 
 def probe_media(media: DataFrame) -> DataFrame:
@@ -57,69 +37,3 @@ def probe_media(media: DataFrame) -> DataFrame:
                 "media_ref", "kind", "width", "height", "n_bytes", "codec"])
 
     return media.mapInPandas(kernel, schema=_META_SCHEMA)
-
-
-def image_features(media: DataFrame, decoder=decode_image,
-                   max_batch_pixels: int = 64_000_000) -> DataFrame:
-    """Per-image features (mean/std/edge-ratio) via a pixel-budgeted batch
-    kernel: each Arrow batch decodes images one at a time and yields early
-    if the pixel budget is exceeded, bounding executor memory regardless
-    of image sizes (skew-safe: the unit of work is one blob)."""
-    from ..kernels.imgproc import grayscale, edges_simple
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            pixels = 0
-            for r in pdf.itertuples(index=False):
-                img = decoder(bytes(r.bytes))
-                g = grayscale(img)
-                e = edges_simple(g)
-                # stats accumulate in f64 regardless of the luma dtype
-                # (grayscale is f32 for bandwidth; a f32 mean drifts ~1e-6)
-                rows.append((r.media_ref, float(g.mean(dtype=np.float64)),
-                             float(g.std(dtype=np.float64)), float(e.mean())))
-                pixels += g.size
-                if pixels >= max_batch_pixels:
-                    yield pd.DataFrame(rows, columns=[
-                        "media_ref", "mean", "std", "edge_ratio"])
-                    rows, pixels = [], 0
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "media_ref", "mean", "std", "edge_ratio"])
-
-    return media.mapInPandas(kernel, schema=_FEAT_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int,
-                  decoder=decode_image) -> DataFrame:
-    """Nearest-neighbor resize -> new blobs (media_ref suffixed '#rs')."""
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = decoder(bytes(r.bytes))
-                h, w = img.shape[:2]
-                yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                small = img[yi][:, xi]
-                rows.append((r.media_ref + "#rs", encode_png(small.astype(np.uint8))))
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes"])
-
-    return media.mapInPandas(kernel, schema="media_ref string, bytes binary")
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video frame sampling — STUB: no video codec in this runtime. The
-    plumbing (schema: one row per sampled frame with frame_idx) is real;
-    the decoder slot raises until a codec is registered."""
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf):
-                raise NotImplementedError(
-                    "video decoding requires a codec library not present in "
-                    "this runtime; register one in operators.multimodal")
-            yield pd.DataFrame(columns=["media_ref", "frame_idx", "bytes"])
-
-    return media.mapInPandas(
-        kernel, schema="media_ref string, frame_idx int, bytes binary")

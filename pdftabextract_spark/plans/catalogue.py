@@ -76,14 +76,14 @@ def catalogue_column_positions(boxes: DataFrame, pages: DataFrame,
 
     Returns (col_positions DF (doc_id, page, col_positions array<double>),
     boxes_fixed DF)."""
-    # the Canny+Hough kernel is the expensive stage; persist the rotation
-    # kernel's enriched output (tiny line rows) so every downstream action
-    # (model-fit collect, rotation join, centers, assignment) reuses one
-    # image pass, and the filtered lines already carry the decision
+    # the Canny+Hough kernel is the expensive stage; the rotation kernel
+    # persists its enriched output (tiny line rows) so every downstream
+    # action (model-fit collect, rotation join, centers, assignment)
+    # reuses one image pass, and the filtered lines already carry the
+    # decision
     rotations, filtered = detect_lines_with_rotation(
         pages, media, math.radians(0.5), math.radians(1.0),
-        omit_on_rot_thresh=math.radians(0.5), persist=True,
-        edge_method="canny")
+        omit_on_rot_thresh=math.radians(0.5), edge_method="canny")
     boxes_fixed = rotate_boxes_back(boxes, rotations)
     lines_fixed = apply_rotation_to_lines(filtered)
 

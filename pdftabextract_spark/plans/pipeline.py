@@ -29,14 +29,16 @@ every page is one run without any exchange.
 
 Box-table input (``extract_cells_packed`` / ``extract_cells``) runs the
 same two passes over box rows: one exchange by (doc_id, page) puts each
-page's rows together, the boxes are materialized once (``cache``), then
-operators/clustering.page_profiles -> model fit ->
-operators/grid.profile_and_pack. ``result_spans_packed`` turns its packed
-pages into result spans with a doc_id window.
+page's rows together, then operators/clustering.page_profiles -> model
+fit -> operators/grid.profile_and_pack. Nothing is cached: each pass
+scans and exchanges the boxes once, and a call leaves no persisted frame
+in the session. ``result_spans_packed`` turns its packed pages into
+result spans with a doc_id window.
 
 [image]  media_ref -> page-image bytes -> Hough lines -> rotation/skew
          repair (operators/imgstage), the catalogue_30s path
-         (``extract_cells_image_path``).
+         (``extract_cells_image_path``). It persists three frames that
+         feed more than one branch (MEMORY_AND_DISK) and releases none.
 
 Scale notes: the unit of work is a page, never a whole corpus; a span-doc
 row carries all of its pages, so the span path moves no box across the
@@ -48,6 +50,7 @@ jar.
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
@@ -61,24 +64,6 @@ class PipelineParams:
     pad_y: float = 8.0               # row border = cluster min top - pad_y
     model_dist_thresh: float = None  # pooled-center cluster break dist
     same_size_use_model_arr_diff_thresh: float = None
-    cache: str = "persist"           # reuse strategy for the tables that
-                                     # box-input extract_cells* and the
-                                     # image path consume in >1 branch
-                                     # (boxes, profiles, line centers;
-                                     # the span path caches nothing):
-                                     # "persist"
-                                     # (MEMORY_AND_DISK columnar — the
-                                     # cluster-safe default: lineage
-                                     # recomputes on executor loss),
-                                     # "checkpoint" (localCheckpoint:
-                                     # row-format cache + lineage cut —
-                                     # builds 4-40x faster than the
-                                     # columnar cache in single-JVM
-                                     # microbenches, but a lost executor
-                                     # kills the job; full-path A/B on
-                                     # this host is swamped by 10x
-                                     # hypervisor drift), or "none"
-                                     # (recompute per branch)
 
     @property
     def col_break_dist(self):
@@ -94,23 +79,6 @@ class PipelineParams:
             else self.min_col_width / 2
 
 
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Materialization for frames consumed by multiple downstream
-    branches. ``checkpoint`` = localCheckpoint (lazy): caches the
-    internal rows and truncates lineage — no columnar re-encode, which
-    on this host intermittently costs 10x the scan it saves; recovery
-    on executor loss is a job retry (acceptable: the engine's jobs are
-    idempotent and externally checkpointed, plans/checkpoint.py).
-    ``persist`` = classic MEMORY_AND_DISK columnar cache (recomputable
-    lineage). ``none`` = no reuse."""
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=False)
-    if mode == "persist":
-        from pyspark import StorageLevel
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
-
-
 def _pooled_centers(profiles: DataFrame) -> DataFrame:
     """Per-page sorted column centers -> the model fit's pooled column:
     each page's centers normalized to start at 0 by a JVM transform
@@ -121,8 +89,7 @@ def _pooled_centers(profiles: DataFrame) -> DataFrame:
             lambda c: c - F.element_at("col_centers", 1))).alias("center_norm"))
 
 
-def positions_fused(boxes: DataFrame, params: PipelineParams,
-                    persist: bool = True) -> DataFrame:
+def positions_fused(boxes: DataFrame, params: PipelineParams) -> DataFrame:
     """Per-page (col_positions, row_positions) as a frame: page profiles,
     the corpus model fit, the model-repair pandas UDF and the border
     assembly as array expressions on the one-row-per-page frame. Same
@@ -133,8 +100,6 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
 
     profiles = page_profiles(boxes, params.col_break_dist,
                              params.row_break_dist)
-    if persist:
-        profiles = _materialize(profiles, params.cache)
     model = fit_column_model_pooled(_pooled_centers(profiles), params.n_cols,
                                     params.model_break_dist)
     repaired = repair_page_centers(
@@ -155,12 +120,11 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
         ).alias("row_positions"))
 
 
-def extract_cells(boxes: DataFrame, params: PipelineParams,
-                  persist: bool = True) -> DataFrame:
+def extract_cells(boxes: DataFrame, params: PipelineParams) -> DataFrame:
     """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid: the
     long form of extract_cells_packed, a pure JVM posexplode of the
     packed rows (no shuffle)."""
-    packed = extract_cells_packed(boxes, params, persist)
+    packed = extract_cells_packed(boxes, params)
     return (packed.select(
         "doc_id", "page", "n_cols",
         F.posexplode("cells").alias("pos", "cell_text"))
@@ -170,8 +134,7 @@ def extract_cells(boxes: DataFrame, params: PipelineParams,
                 "cell_text"))
 
 
-def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
-                         persist: bool = True) -> DataFrame:
+def extract_cells_packed(boxes: DataFrame, params: PipelineParams) -> DataFrame:
     """boxes -> the packed per-page form (doc_id, page, n_rows, n_cols,
     cells array, n_unmatched) — the shape result_spans_packed consumes
     without any further wide shuffle. Two narrow passes over the boxes:
@@ -182,11 +145,10 @@ def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
          and packs each page with the model in its closure.
 
     Both passes need each page's rows contiguous within a partition, so
-    the boxes go through ONE exchange + sort by (doc_id, page) here,
-    before the persist.
-
-    ``persist``: the box table feeds both passes; one materialization
-    beats recomputing the input per pass."""
+    the boxes go through one exchange + sort by (doc_id, page) here.
+    Nothing is cached: each pass scans and exchanges the boxes once,
+    which measured faster than building a cache of them, and a call
+    leaves no persisted frame behind."""
     from ..operators.clustering import group_pages, page_profiles
     from ..operators.grid import profile_and_pack
     from ..operators.model import fit_column_model_pooled
@@ -195,8 +157,6 @@ def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
     # common.py:138-141) — Catalyst pushes this into the source scan
     boxes = group_pages(
         boxes.where((F.col("width") > 0) & (F.col("height") > 0)))
-    if persist:
-        boxes = _materialize(boxes, params.cache)
     profiles = page_profiles(boxes, params.col_break_dist,
                              params.row_break_dist)
     model = fit_column_model_pooled(_pooled_centers(profiles), params.n_cols,
@@ -215,12 +175,16 @@ def assign_and_pack_from(boxes: DataFrame, positions: DataFrame,
 def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
                              media: DataFrame, params: PipelineParams,
                              rot_thresh_deg=0.5, rot_same_dir_thresh_deg=1.0,
-                             omit_on_rot_thresh_deg=0.5,
-                             persist: bool = True) -> DataFrame:
+                             omit_on_rot_thresh_deg=0.5) -> DataFrame:
     """The catalogue_30s path (§3.1): columns from Hough-line clusters on
     the page images, rotation estimated from the lines and repaired on
     both lines and textboxes, rows from repaired text tops.
-    ``pages`` needs (doc_id, page, media_ref, img_w, img_h)."""
+    ``pages`` needs (doc_id, page, media_ref, img_w, img_h).
+
+    Three frames feed more than one branch and are persisted
+    (MEMORY_AND_DISK, recomputable if an executor is lost): the line
+    detector's enriched output, the rotated boxes and the line centers.
+    Nothing releases them, so each call leaves them in the session."""
     import math
     from ..operators.imgstage import (
         detect_lines_with_rotation, apply_rotation_to_lines,
@@ -230,28 +194,26 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
     # fused decode + Canny + Hough + per-page rotation decision in ONE
     # kernel stage (no groupBy exchange to reassemble per-page lines);
-    # persisting the kernel OUTPUT means the decode runs exactly once
-    # across all downstream actions and the rotations/filtered split is
-    # two narrow filters
+    # the detector persists the kernel OUTPUT, so the decode runs exactly
+    # once across all downstream actions and the rotations/filtered split
+    # is two narrow filters
     rotations, filtered = detect_lines_with_rotation(
         pages, media,
         math.radians(rot_thresh_deg), math.radians(rot_same_dir_thresh_deg),
-        omit_on_rot_thresh=math.radians(omit_on_rot_thresh_deg),
-        persist=params.cache if persist else False)
+        omit_on_rot_thresh=math.radians(omit_on_rot_thresh_deg))
 
-    boxes_fixed = rotate_boxes_back(boxes, rotations)
-    if persist:
-        boxes_fixed = _materialize(boxes_fixed, params.cache)
+    boxes_fixed = rotate_boxes_back(boxes, rotations).persist(
+        StorageLevel.MEMORY_AND_DISK)
 
     lines_fixed = apply_rotation_to_lines(filtered)
 
     # column borders straight from vertical line clusters (model-repaired);
     # the model size is n_cols + 1 borders (N_COL_BORDERS semantics,
     # catalog_30s.py:46,161-166)
-    centers = line_border_centers(lines_fixed, pages, "v", params.col_break_dist)
-    if persist:
-        # consumed twice: the model-fit collect and the repair join
-        centers = _materialize(centers, params.cache)
+    # consumed twice: the model-fit collect and the repair join
+    centers = line_border_centers(
+        lines_fixed, pages, "v", params.col_break_dist).persist(
+        StorageLevel.MEMORY_AND_DISK)
     repaired = fit_and_repair(
         centers, params.n_cols + 1, params.model_break_dist,
         same_size_use_model_arr_diff_thresh=params.same_size_use_model_arr_diff_thresh)

@@ -128,7 +128,7 @@ def schoollist_row_line_centers(boxes: DataFrame, pages: DataFrame,
     Returns (centers (doc_id,page,cluster_id,center,n), boxes_fixed)."""
     rotations, filtered = detect_lines_with_rotation(
         pages, media, math.radians(0.5), math.radians(1.0),
-        omit_on_rot_thresh=math.radians(0.5), persist=True)
+        omit_on_rot_thresh=math.radians(0.5))
     boxes_fixed = rotate_boxes_back(boxes, rotations, force_rotation=True)
     lines_fixed = apply_rotation_to_lines(filtered)
 
@@ -333,8 +333,7 @@ def schoollist2_row_line_centers(boxes: DataFrame, pages: DataFrame,
     clusters only locate the table header)."""
     rotations, filtered = detect_lines_with_rotation(
         pages, media, math.radians(0.5), math.radians(1.0),
-        omit_on_rot_thresh=math.radians(0.5), only_direction="h",
-        persist=True)
+        omit_on_rot_thresh=math.radians(0.5), only_direction="h")
     boxes_fixed = rotate_boxes_back(boxes, rotations, force_rotation=True)
     lines_fixed = apply_rotation_to_lines(filtered)
     centers = line_border_centers(lines_fixed, pages, "h",

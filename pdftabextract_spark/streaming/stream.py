@@ -39,94 +39,6 @@ def incremental_extract(spark: SparkSession, input_dir: str, output_dir: str,
             .start())
 
 
-def stateful_sessionize(events_stream: DataFrame, gap_seconds: int = 1800,
-                        timeout_seconds: int = 3600, ts_col: str = "ts",
-                        watermark: str = "2 hours"):
-    """Custom stateful streaming operator (applyInPandasWithState): per
-    user, maintain the open session (start, last_ts, n_events) across
-    micro-batches; emit a session row when the gap to the next event
-    exceeds ``gap_seconds`` or the state times out. This is the streaming
-    form of the batch gaps-and-islands sessionization (operators/textboxes
-    chain semantics) — batch and stream agree on session boundaries.
-
-    Timeouts are EVENT-TIME (watermark-driven): an open session closes
-    when the watermark passes last_event + timeout_seconds. Event time
-    keeps the operator deterministic given the same input files, and —
-    unlike ProcessingTimeTimeout — does not make the engine schedule
-    continuous empty "state cleanup" micro-batches (observed on Spark 4:
-    with processing-time timeouts the stream never goes idle, every few
-    ms a no-data batch runs per state partition, and processAllAvailable
-    never settles; wall-clock timeouts are also unreproducible across
-    runs, which violates the engine's determinism contract)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState
-    from pyspark.sql.types import (
-        StructType, StructField, LongType, DoubleType)
-
-    events_stream = events_stream.withWatermark(ts_col, watermark)
-
-    out_schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("session_start", DoubleType()),
-        StructField("session_end", DoubleType()),
-        StructField("n_events", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("start", DoubleType()),
-        StructField("last", DoubleType()),
-        StructField("n", LongType()),
-    ])
-
-    def fn(key, pdfs, state: GroupState):
-        user_id = key[0]
-        sessions = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, last, n = state.get
-                sessions.append((user_id, s, last, n))
-                state.remove()
-        else:
-            ts = []
-            for pdf in pdfs:
-                ts.extend(pdf["ts"].astype("int64").to_numpy() / 1e9)
-            ts.sort()
-            if state.exists:
-                s, last, n = state.get
-            else:
-                s = last = None
-                n = 0
-            for t in ts:
-                if last is not None and t <= last:
-                    # late arrival inside the open session (files/batches
-                    # can deliver events out of order within the
-                    # watermark): extend the session backwards, never
-                    # regress its frontier
-                    s = min(s, t)
-                    n += 1
-                    continue
-                if last is not None and t - last > gap_seconds:
-                    sessions.append((user_id, s, last, n))
-                    s, n = t, 0
-                if s is None:
-                    s = t
-                last = t
-                n += 1
-            state.update((float(s), float(last), int(n)))
-            # close the session when event time (the watermark) moves
-            # timeout_seconds past its last event; the timestamp must lie
-            # strictly beyond the current watermark or Spark rejects it
-            timeout_ms = max(int((last + timeout_seconds) * 1000),
-                             state.getCurrentWatermarkMs() + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        yield pd.DataFrame(sessions, columns=[
-            "user_id", "session_start", "session_end", "n_events"])
-
-    return (events_stream
-            .groupBy("user_id")
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", "EventTimeTimeout"))
-
-
 def windowed_event_counts(events_stream: DataFrame,
                           window: str = "5 minutes",
                           slide: str = "1 minute",

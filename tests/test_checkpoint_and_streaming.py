@@ -192,49 +192,6 @@ def test_streaming_batch_parity_at_scale(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stateful_sessionize_across_microbatches(spark):
-    """Sessions spanning micro-batch boundaries must merge via state."""
-    import datetime as dt
-    from pdftabextract_spark.streaming.stream import stateful_sessionize
-
-    base = tempfile.mkdtemp(prefix="ptx_state_")
-    in_dir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(in_dir)
-    try:
-        t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-        def rows(offsets_min, user=1):
-            return [(user, t0 + dt.timedelta(minutes=m)) for m in offsets_min]
-        schema = "user_id long, ts timestamp"
-        # batch 1: two events 5 min apart (open session)
-        # one file per logical batch -> deterministic arrival order
-        spark.createDataFrame(rows([0, 5]), schema).coalesce(1) \
-            .write.mode("overwrite").parquet(in_dir)
-
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        sessions = stateful_sessionize(stream, gap_seconds=1800)
-        q = (sessions.writeStream.outputMode("append")
-             .format("memory").queryName("sess")
-             .option("checkpointLocation", ckpt).start())
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM sess").count() == 0  # still open
-
-        # batch 2: continuation at +10min, then a gap > 30min -> closes
-        # the first session and opens a second
-        spark.createDataFrame(rows([10, 50]), schema).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM sess").collect()
-        q.stop()
-        assert len(got) == 1
-        s = got[0]
-        assert s["n_events"] == 3  # events at 0, 5, 10 merged across batches
-        assert s["session_end"] - s["session_start"] == 600.0
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_zero_span_buckets_still_converge_to_done(spark, tmpdirs):
     """A pending bucket whose docs produce zero result spans must still get
     a progress row (n_docs=n_spans=0), so reruns don't re-extract it

@@ -340,26 +340,3 @@ def test_fixed_size_sample_two_phase_bounds_per_task_input(spark):
             ids, key=lambda i: (_h.md5(str(i).encode()).hexdigest(), i))[:7]
         assert sorted(got[stratum]) == [(k + 1, d)
                                         for k, d in enumerate(expect)]
-
-
-def test_multi_consumer_cache_modes_identical(spark):
-    """The cache= hook on the multi-consumer shingle operators must not
-    change any value (it only materializes the shared stream)."""
-    from pdftabextract_spark.operators.curation import (
-        boilerplate_fraction, contamination, duplicate_passage_rate)
-
-    rows = [(i, " ".join("w%d" % ((i * 7 + j) % 23) for j in range(12)),
-             "en", "s0") for i in range(40)]
-    docs = _docs(spark, rows)
-    ev = _docs(spark, rows[:6])
-
-    def key(rs):
-        return sorted(tuple(r) for r in rs)
-
-    for mode in ("persist", "checkpoint"):
-        assert key(contamination(docs, ev, n=3, cache=mode).collect()) == \
-            key(contamination(docs, ev, n=3).collect())
-        assert key(boilerplate_fraction(docs, n=3, cache=mode).collect()) == \
-            key(boilerplate_fraction(docs, n=3).collect())
-        assert key(duplicate_passage_rate(docs, k=3, cache=mode).collect()) == \
-            key(duplicate_passage_rate(docs, k=3).collect())

@@ -37,12 +37,6 @@ def test_minhash_identical_docs_share_signature(docs):
     assert shared >= 4
 
 
-def test_minhash_lsh_finds_dups(docs):
-    pairs = {(r["d1"], r["d2"]) for r in D.minhash_lsh_pairs(docs).collect()}
-    assert (1, 2) in pairs
-    assert (1, 5) not in pairs and (4, 5) not in pairs
-
-
 def test_simhash_hamming(docs):
     sh = {r["doc_id"]: r["simhash"] for r in D.simhash(docs).collect()}
     assert sh[1] == sh[2]

@@ -1,7 +1,6 @@
 """Scalar SQL functions vs numpy kernels; multimodal plumbing."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from pdftabextract_spark import functions as FX
@@ -62,32 +61,3 @@ def test_probe_and_features_and_resize(spark):
     for k, v in imgs.items():
         assert meta[k]["codec"] == "png"
         assert (meta[k]["width"], meta[k]["height"]) == (v.shape[1], v.shape[0])
-
-    feats = {r["media_ref"]: r for r in MM.image_features(media).collect()}
-    for k, v in imgs.items():
-        assert abs(feats[k]["mean"] - v.mean()) < 1e-9
-        assert abs(feats[k]["std"] - v.std()) < 1e-9
-
-    small = {r["media_ref"]: bytes(r["bytes"])
-             for r in MM.resize_images(media, 10, 8).collect()}
-    from pdftabextract_spark.kernels.png import decode_png
-    for k in imgs:
-        assert decode_png(small[k + "#rs"]).shape == (8, 10)
-
-
-def test_sample_frames_is_stubbed(spark):
-    media = spark.createDataFrame([("v1", bytearray(b"\x00\x01"))],
-                                  "media_ref string, bytes binary")
-    with pytest.raises(Exception) as exc:
-        MM.sample_frames(media).collect()
-    assert "NotImplementedError" in str(exc.value) or "codec" in str(exc.value)
-
-
-def test_fake_decoder_plumbing(spark):
-    media = spark.createDataFrame(
-        [("x1", bytearray(b"\x10" * 100)), ("x2", bytearray(b"\xf0" * 64))],
-        "media_ref string, bytes binary")
-    feats = {r["media_ref"]: r for r in
-             MM.image_features(media, decoder=MM.fake_decode).collect()}
-    assert feats["x1"]["mean"] == 16.0
-    assert feats["x2"]["mean"] == 240.0

@@ -6,8 +6,10 @@ import pytest
 from pyspark.sql import DataFrame, functions as F
 
 from pdftabextract_spark.sources import synth
+from pdftabextract_spark.operators import curation
 from pdftabextract_spark.operators.clustering import cluster_centers
 from pdftabextract_spark.operators.model import fit_and_repair
+from pdftabextract_spark.plans import pipeline
 from pdftabextract_spark.plans.pipeline import (
     PipelineParams, extract_from_span_table, extract_cells)
 from pdftabextract_spark.sources.spans import textboxes_from_spans
@@ -376,7 +378,7 @@ def test_fused_profiles_equal_window_formulation(spark):
     extents = page_extents(boxes)
     old = (column_positions(boxes, pipe, extents)
            .join(row_positions(boxes, pipe, extents), ["doc_id", "page"]))
-    new = positions_fused(boxes, pipe, persist=False)
+    new = positions_fused(boxes, pipe)
 
     j = old.alias("o").join(new.alias("n"), ["doc_id", "page"], "full_outer")
     diff = j.where(~(
@@ -384,6 +386,45 @@ def test_fused_profiles_equal_window_formulation(spark):
         & F.col("o.row_positions").eqNullSafe(F.col("n.row_positions")))).count()
     assert diff == 0
     assert new.count() == old.count() > 0
+
+
+def _box_input(spark):
+    params = synth.CorpusParams(seed=4343, n_docs=6, n_cols=5)
+    return textboxes_from_spans(synth.span_docs_df(spark, params))
+
+
+def _curation_docs(spark):
+    return spark.createDataFrame(
+        [(i, " ".join("w%d" % ((i * 7 + j) % 23) for j in range(12)))
+         for i in range(20)], "doc_id long, text string")
+
+
+_NO_CACHE_CALLS = {
+    "extract_cells": lambda s: pipeline.extract_cells(_box_input(s), PIPE),
+    "extract_cells_packed": lambda s: pipeline.extract_cells_packed(
+        _box_input(s), PIPE),
+    "positions_fused": lambda s: pipeline.positions_fused(
+        _box_input(s), PIPE),
+    "contamination": lambda s: curation.contamination(
+        _curation_docs(s), _curation_docs(s).limit(4), n=3),
+    "boilerplate_fraction": lambda s: curation.boilerplate_fraction(
+        _curation_docs(s), n=3),
+    "duplicate_passage_rate": lambda s: curation.duplicate_passage_rate(
+        _curation_docs(s), k=3),
+}
+
+
+@pytest.mark.parametrize("name", list(_NO_CACHE_CALLS))
+def test_call_leaves_nothing_cached(spark, name):
+    """The box-input text path and the curation operators cache nothing:
+    after a call and an action, the session holds no new persisted RDD and
+    the cache manager is still empty."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    assert _NO_CACHE_CALLS[name](spark).collect()
+    assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_skewed_page_counts_extraction(spark):

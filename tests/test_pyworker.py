@@ -1,8 +1,9 @@
 """kernels/pyworker.forget_zip_importers: a Spark-free check that it drops
 the zip importers and leaves imports working, and a worker-side gate that
 every shared kernel iterator, and every Python stage kernel that runs
-outside them, calls it, so a reused Python worker holds no zip importer
-for the next task's ``importlib.invalidate_caches()`` to re-read."""
+outside them (the grid, model and imgstage kernels), calls it, so a
+reused Python worker holds no zip importer for the next task's
+``importlib.invalidate_caches()`` to re-read."""
 
 import importlib
 import pkgutil
@@ -18,9 +19,13 @@ from pyspark.sql import functions as F
 from pdftabextract_spark.kernels.overlap import (
     posting_tails, shared_shingle_counts)
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
+from pdftabextract_spark.kernels.png import encode_png
 from pdftabextract_spark.kernels.pyworker import forget_zip_importers
 from pdftabextract_spark.kernels.shingles import word_grams
 from pdftabextract_spark.operators.grid import assign_batches
+from pdftabextract_spark.operators.imgstage import (
+    border_position_batches, line_batches, rotation_group,
+    rotation_line_batches)
 from pdftabextract_spark.operators.model import repair_batches
 from pdftabextract_spark.sources.spans import frames
 
@@ -99,7 +104,38 @@ def _centers_input(spark):
         F.array(F.col("id").cast("double"), F.lit(9.0)).alias("centers"))
 
 
+def _image_input(spark):
+    img = np.zeros((24, 24), dtype=np.uint8)
+    img[:, 12] = 255
+    img[8, :] = 255
+    png = bytearray(encode_png(img))
+    return spark.createDataFrame(
+        [("d", page, "m", png) for page in (1, 2)],
+        "doc_id string, page int, media_ref string, bytes binary"
+    ).coalesce(1)
+
+
+def _lines_input(spark):
+    return spark.range(2, numPartitions=1).select(
+        F.lit("d").alias("doc_id"), F.lit(1).alias("page"),
+        F.lit(24.0).alias("img_w"), F.lit(24.0).alias("img_h"),
+        F.col("id").cast("double").alias("rho"),
+        F.lit(0.0).alias("theta"), F.lit(0.0).alias("theta_norm"),
+        F.lit("v").alias("direction"))
+
+
 @pytest.mark.parametrize("name, build, start", [
+    ("line_batches", _image_input,
+     lambda batches: line_batches(b.to_pandas() for b in batches)),
+    ("rotation_line_batches", _image_input,
+     lambda batches: rotation_line_batches(
+         (b.to_pandas() for b in batches), 0.01, 0.02)),
+    ("rotation_group", _lines_input,
+     lambda batches: (rotation_group(b.to_pandas(), 0.01, 0.02)
+                      for b in batches)),
+    ("border_position_batches", _lines_input,
+     lambda batches: border_position_batches(
+         (b.to_pandas() for b in batches), "v")),
     ("assign_batches", _joined_input,
      lambda batches: assign_batches(b.to_pandas() for b in batches)),
     ("repair_batches", _centers_input,
