@@ -144,9 +144,11 @@ def _finalize(spark, out_df, output_path, progress_path, n_buckets,
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 
     # dynamic partition overwrite: only the buckets present in this run's
-    # output are replaced — done buckets' files are untouched
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out_df.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+    # output are replaced — done buckets' files are untouched. A write
+    # option, so the caller's session conf stays as it was.
+    out_df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic").partitionBy("bucket") \
+        .parquet(output_path)
 
     # metrics + lineage per completed bucket, read back from the output
     # (what was durably written, not what we hoped to write). Every

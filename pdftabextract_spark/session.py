@@ -61,15 +61,14 @@ def get_spark(app_name="pdftabextract_spark", cores=None, shuffle_partitions=Non
         # not predictable enough to gate on. Revisit only with a
         # per-exchange mechanism.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # scan split size (guide §6), parameterised for ops; default =
-        # Spark's 128m. A/B at the sf1.0 bench (round 6): 16m splits were
+        # scan split size (guide §6): Spark's 128m (extra_conf overrides
+        # it). A/B at the sf1.0 bench (round 6): 16m splits were
         # equal-or-slower on every query (q12 0.276 vs 0.254, q17 0.66 vs
         # 0.52 best-of-4) — the few-split small-file scans here are not
         # scan-bound, and per-row-heavy operators spread small inputs
         # explicitly (partitioning.spread_small_input) instead. At scale,
         # raise toward 512m-1g for large sequential scans.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # one Arrow batch ~ a bounded number of pages/boxes per Python call
