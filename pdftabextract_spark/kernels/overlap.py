@@ -1,19 +1,35 @@
 """Shared-shingle counts per document: the posting and counting kernels
-of operators/dedup.ngram_jaccard_pairs, over streams of Arrow batches.
+of operators/dedup.ngram_jaccard_pairs, over blob rows.
 
-``posting_tails`` reads (doc_id, s) shingle rows sorted on the shingle
-hash ``s``. It builds each shingle's sorted doc list (its posting list),
-drops the shingles in more than ``max_shingle_df`` docs, and emits one
-(d1, k, tail) row per doc per flush: ``k`` is the number of d1's kept
-shingles in the flush and ``tail`` the concatenated docs after d1 in
-those shingles' lists. ``shared_shingle_counts`` reads those rows with
-all rows of one d1 together. A doc's size is the sum of its ``k``, and
-counting each d2 over the concatenated tails of its group gives the
-number of shingles the pair (d1, d2) shares. The pairs are counted one
-document at a time, in memory, instead of as one row per pair through an
-exchange and a hash aggregation. Both kernels first call
-kernels/pyworker.forget_zip_importers, so the Python worker that runs the
-task skips the zip re-reads of its next task's setup.
+The kernels of ngram_jaccard_pairs partition their own output. Each
+element (a (doc, shingle key) pair, or a doc's posting tails) has a
+bucket in ``[0, n_buckets)``, and one output row per bucket holds that
+bucket's elements as raw int64 arrays in binary columns ("blobs").
+``DataFrame.repartitionById`` sends a row to partition
+``bucket % n_partitions``, so the JVM moves a few rows per batch instead
+of one row per element. A bucket is a contiguous range of a 64-bit hash
+(``buckets``), so sorting elements by the hash sorts them by bucket too.
+A partition holds ``n_buckets / n_partitions`` buckets; when that is
+more than one, the plan sorts the blob rows on ``bucket`` and each
+kernel task handles one bucket (a "group") at a time, so its memory is
+one group's elements (``blob_groups``).
+
+``posting_blobs`` reads the (doc, s) blobs of kernels/shingles.key_blobs.
+It builds each shingle's sorted doc list (its posting list), counting a
+repeated (s, doc) pair once, and drops the shingles in more than
+``max_shingle_df`` docs. Each doc d1 of a list gets one membership: the
+docs after d1 in that list are its tail. The memberships are bucketed by
+a hash of d1 and emitted as (d1, k, n, tail) blobs: per d1, ``k``
+memberships whose tails, ``n`` values in all, are concatenated in
+``tail``. ``shared_shingle_counts`` reads those blobs one d1 bucket at a
+time. A doc's size is the sum of its ``k``, and counting each d2 over a d1's
+tails gives the number of shingles the pair (d1, d2) shares. The pairs
+are counted one bucket of documents at a time, in memory, instead of as
+one row per pair through an exchange and a hash aggregation.
+
+Every kernel first calls kernels/pyworker.forget_zip_importers, so the
+Python worker that runs the task skips the zip re-reads of its next
+task's setup.
 """
 
 import numpy as np
@@ -21,20 +37,95 @@ import pyarrow as pa
 
 from .pyworker import forget_zip_importers
 
-POSTING_SCHEMA = pa.schema([("d1", pa.int64()), ("k", pa.int64()),
-                            ("tail", pa.list_(pa.int64()))])
-POSTING_DDL = "d1 long, k long, tail array<long>"
+POSTING_DDL = "bucket int, d1 binary, k binary, n binary, tail binary"
 OUT_SCHEMA = pa.schema([("d1", pa.int64()), ("d2", pa.int64()),
                         ("common", pa.int64()), ("sz", pa.int64())])
 OUT_DDL = "d1 long, d2 long, common long, sz long"
+CENSUS_DDL = "n long"
 
-# docs plus tail values a posting task buffers before it emits their
-# rows, and the most tail values one emitted batch holds: it bounds the
-# task's memory, give or take one batch's lists; a larger flush emits
-# fewer rows into the d1 exchange
+# the most int64 values one blob holds, and the most membership slots
+# (one per membership plus its tail values) one posting batch holds: it
+# bounds a posting task's memory beyond its group, and keeps every blob
+# far below the 2 GiB that Arrow's int32 binary offsets allow
 FLUSH_TAIL_VALUES = 1 << 22
 
 _INT64_MAX = int(np.iinfo(np.int64).max)
+_U32 = np.uint64(32)
+
+
+def mix64(x: np.ndarray) -> np.ndarray:
+    """splitmix64's finalizer over a uint64 array: a bijection that
+    spreads nearby values (doc ids) over the whole 64-bit range."""
+    x = x.astype(np.uint64)
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
+
+
+def buckets(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
+    """uint64 hashes -> int32 buckets in [0, n_buckets), non-decreasing
+    in the hash (n_buckets < 2^31: repartitionById takes an int)."""
+    return ((hashes >> _U32) * np.uint64(n_buckets) >> _U32).astype(np.int32)
+
+
+def _run_starts(*cols: np.ndarray) -> np.ndarray:
+    """Start index of every run of equal values across ``cols``."""
+    brk = np.zeros(len(cols[0]), dtype=bool)
+    brk[:1] = True
+    for c in cols:
+        brk[1:] |= c[1:] != c[:-1]
+    return np.flatnonzero(brk)
+
+
+def _blob(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
+    """A binary array whose row i holds ``values[bounds[i]:bounds[i+1]]``
+    as raw bytes, without copying ``values`` (bounds start at 0)."""
+    values = np.ascontiguousarray(values)
+    offsets = (bounds * values.itemsize).astype(np.int32)
+    return pa.Array.from_buffers(pa.binary(), len(bounds) - 1, [
+        None, pa.py_buffer(offsets), pa.py_buffer(values)])
+
+
+def blob_batch(bucket: np.ndarray, **columns) -> pa.RecordBatch:
+    """Elements sorted by ``bucket`` -> one row per bucket run, cut into
+    rows of at most FLUSH_TAIL_VALUES elements, with each named element
+    array as a blob column."""
+    starts = _run_starts(bucket)
+    size = np.diff(np.append(starts, len(bucket)))
+    step = max(FLUSH_TAIL_VALUES, 1)
+    n_rows = -(-size // step)
+    j = np.arange(n_rows.sum()) - np.repeat(np.cumsum(n_rows) - n_rows,
+                                            n_rows)
+    bounds = np.append(np.repeat(starts, n_rows) + j * step, len(bucket))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(bucket[bounds[:-1]])]
+        + [_blob(v, bounds) for v in columns.values()],
+        names=["bucket", *columns])
+
+
+def blob_groups(batches, **dtypes):
+    """Blob rows whose buckets come contiguous -> for each bucket, the
+    concatenated values of each named blob column, as numpy arrays of the
+    given dtypes. A bucket that recurs after its group closed means the
+    rows were not sorted on bucket; it raises instead of splitting the
+    group."""
+    closed, current, parts = set(), None, []
+    for batch in batches:
+        cols = [batch.column(name) for name in dtypes]
+        for i, b in enumerate(batch.column("bucket").to_pylist()):
+            if b != current:
+                if current is not None:
+                    yield [np.concatenate(p) for p in zip(*parts)]
+                    closed.add(current)
+                if b in closed:
+                    raise RuntimeError(
+                        "blob_groups: bucket %d recurred after its group "
+                        "closed; rows are not sorted on bucket" % b)
+                current, parts = b, []
+            parts.append([np.frombuffer(c[i].as_buffer(), dt)
+                          for c, dt in zip(cols, dtypes.values())])
+    if current is not None:
+        yield [np.concatenate(p) for p in zip(*parts)]
 
 
 def pair_counts(gid: np.ndarray, d2: np.ndarray, n_groups: int):
@@ -62,140 +153,115 @@ def pair_counts(gid: np.ndarray, d2: np.ndarray, n_groups: int):
     return g[starts], d[starts], np.diff(np.append(starts, len(d)))
 
 
-def _run_starts(*cols: np.ndarray) -> np.ndarray:
-    """Start index of every run of equal values across ``cols``."""
-    brk = np.zeros(len(cols[0]), dtype=bool)
-    brk[:1] = True
-    for c in cols:
-        brk[1:] |= c[1:] != c[:-1]
-    return np.flatnonzero(brk)
+def _posting_lists(doc: np.ndarray, key: np.ndarray):
+    """(doc, shingle key) elements of one group -> every shingle's doc
+    list, sorted and free of repeats, and the lists' lengths (the
+    shingles' document frequencies)."""
+    order = np.lexsort((doc, key))
+    doc, key = doc[order], key[order]
+    first = _run_starts(key, doc)
+    doc, key = doc[first], key[first]
+    return doc, np.diff(np.append(_run_starts(key), len(key)))
 
 
-def posting_tails(batches, max_shingle_df):
-    """``mapInArrow`` function: (doc_id, s) batches sorted on ``s`` ->
-    ``POSTING_SCHEMA`` batches. ``max_shingle_df=None`` keeps every
-    shingle.
+def posting_blobs(batches, max_shingle_df, n_buckets: int):
+    """``mapInArrow`` function: (bucket, doc, s) blob rows with each
+    bucket's rows contiguous -> (bucket, d1, k, n, tail) blob rows (see
+    ``_tail_blobs``). ``max_shingle_df=None`` keeps every shingle.
 
-    A shingle's doc list counts each doc once (a 64-bit collision of two
-    grams of one doc is one shingle), and the trailing shingle of a batch
-    is held back and prepended to the next batch, so a list split across
-    batches is built whole. A held-back list is dropped as soon as it
-    holds more than ``max_shingle_df`` docs, so a stop-shingle costs at
-    most that many docs plus one batch of memory however long its list.
-    The kept lists are buffered, a batch's lists at a time, until their
-    docs and tails reach FLUSH_TAIL_VALUES values; each flush emits one
-    row per doc it holds, sorted by d1, in batches of at most
-    FLUSH_TAIL_VALUES tail values (see _tail_rows). Input not sorted on
-    ``s`` raises."""
+    A shingle's doc list counts each doc once (a 64-bit key collision of
+    two grams of one doc is one shingle, and a doc split over two input
+    rows is one doc)."""
     forget_zip_importers()
-    carry = None
-    hot = None  # the s of a held-back list found over the cap
-    buf, pending = [], 0
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        s = batch.column("s").to_numpy()
-        d = batch.column("doc_id").to_numpy().astype(np.int64, copy=False)
-        if carry is not None:
-            s, d = np.concatenate([carry[0], s]), np.concatenate([carry[1], d])
-        if (s[1:] < s[:-1]).any() or (hot is not None and s[0] < hot):
-            raise RuntimeError(
-                "posting_tails: input rows are not sorted on s")
-        if hot is not None:
-            cut = int(np.searchsorted(s, hot, side="right"))
-            if cut == len(s):
-                continue
-            s, d, hot = s[cut:], d[cut:], None
-        last = int(_run_starts(s)[-1])
-        carry = s[last:], d[last:]
-        if max_shingle_df is not None and len(carry[1]) > max_shingle_df:
-            docs = np.unique(carry[1])
-            if len(docs) > max_shingle_df:
-                carry, hot = None, s[last]
-            else:
-                carry = s[last:last + len(docs)], docs
-        buf.append(_postings(s[:last], d[:last], max_shingle_df))
-        docs, lengths = buf[-1]
-        pending += len(docs) + int((lengths * (lengths - 1) // 2).sum())
-        if pending >= FLUSH_TAIL_VALUES:
-            yield from _tail_rows(*map(np.concatenate, zip(*buf)))
-            buf, pending = [], 0
-    if carry is not None:
-        buf.append(_postings(*carry, max_shingle_df))
-    if buf:
-        yield from _tail_rows(*map(np.concatenate, zip(*buf)))
+    for doc, key in blob_groups(batches, doc=np.int64, s=np.uint64):
+        docs, lengths = _posting_lists(doc, key)
+        if max_shingle_df is not None:
+            keep = lengths <= max_shingle_df
+            docs, lengths = docs[np.repeat(keep, lengths)], lengths[keep]
+        yield from _tail_blobs(docs, lengths, n_buckets)
 
 
-def _postings(s, d, max_shingle_df):
-    """Complete shingle groups (``s`` sorted) -> the kept posting lists:
-    their docs, each list sorted and free of repeats, and their lengths."""
-    if not len(s):
-        return d, np.zeros(0, np.int64)
-    starts = _run_starts(s)
-    gid = np.repeat(np.arange(len(starts), dtype=np.int64),
-                    np.diff(np.append(starts, len(s))))
-    g, docs, _ = pair_counts(gid, d, len(starts))
-    df = np.bincount(g, minlength=len(starts))
-    if max_shingle_df is not None:
-        keep = df <= max_shingle_df
-        docs, df = docs[np.repeat(keep, df)], df[keep]
-    return docs, df
+def stop_shingle_census(batches, max_shingle_df: int):
+    """``mapInArrow`` function: the (bucket, doc, s) blob rows of
+    ``posting_blobs`` -> one row: the number of shingles in more than
+    ``max_shingle_df`` docs."""
+    forget_zip_importers()
+    n = 0
+    for doc, key in blob_groups(batches, doc=np.int64, s=np.uint64):
+        n += int((_posting_lists(doc, key)[1] > max_shingle_df).sum())
+    yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], ["n"])
 
 
-def _tail_rows(docs, lengths):
-    """Posting lists -> (d1, k, tail) rows sorted by d1, in batches of at
-    most FLUSH_TAIL_VALUES tail values, so a long list (exact mode) never
-    builds all its tails at once. Each doc of each list has a piece: its
-    tail, cut where a batch's values end. A batch holds one row per doc
-    it has pieces of; ``k`` counts only the first pieces, so a row that
-    continues a cut tail can carry k = 0 and a doc's k still sums to its
-    number of lists."""
+def _tail_blobs(docs, lengths, n_buckets):
+    """Posting lists -> (bucket, d1, k, n, tail) blob batches.
+
+    Every doc of every list is a membership with one head slot and its
+    tail (the docs after it in its list). The memberships are ordered by
+    ``mix64(d1)`` (so by d1 bucket, each d1's memberships together) and
+    cut into batches of at most FLUSH_TAIL_VALUES slots, so a long list
+    (exact mode) never builds all its tails at once; a tail that crosses
+    a cut continues in the next batch. A batch holds one row per d1
+    bucket and, in it, one (d1, k, n) entry per d1: ``k`` counts the
+    heads in the batch, so an entry that only continues a tail has k = 0
+    and a doc's k still sums to its number of lists."""
     if not len(docs):
         return
-    end = np.repeat(np.cumsum(lengths), lengths)
     at = np.arange(len(docs), dtype=np.int64)
-    order = np.argsort(docs, kind="stable")
-    src = (at + 1)[order]
-    offsets = np.append(0, np.cumsum((end - at - 1)[order]))
+    hd = mix64(docs)
+    order = np.argsort(hd, kind="stable")
+    n_tail = (np.repeat(np.cumsum(lengths), lengths) - at - 1)[order]
+    hi = np.cumsum(n_tail + 1)
+    lo = hi - n_tail - 1
     step = max(FLUSH_TAIL_VALUES, 1)
-    n_batches = max(1, -(-int(offsets[-1]) // step))
-    lo, hi = offsets[:-1], offsets[1:]
     first = lo // step
-    n_pieces = np.maximum(hi - 1, lo) // step - first + 1
-    elem = np.repeat(np.arange(len(docs), dtype=np.int64), n_pieces)
+    n_pieces = (hi - 1) // step - first + 1
+    elem = np.repeat(at, n_pieces)
     j = np.arange(len(elem)) - np.repeat(np.cumsum(n_pieces) - n_pieces,
                                          n_pieces)
-    batch = np.minimum(first[elem] + j, n_batches - 1)
-    start = np.maximum(lo[elem], batch * step)
-    size = np.minimum(hi[elem], (batch + 1) * step) - start
-    src = src[elem] + start - lo[elem]
-    d1, k = docs[order][elem], (j == 0).astype(np.int64)
-    bounds = np.searchsorted(batch, np.arange(n_batches + 1))
+    chunk = first[elem] + j
+    p_lo = np.maximum(lo[elem], chunk * step)
+    t_lo = np.maximum(p_lo, lo[elem] + 1)
+    t_n = np.maximum(np.minimum(hi[elem], (chunk + 1) * step) - t_lo, 0)
+    # the piece's first tail value sits right after its membership's doc
+    src = order[elem] + t_lo - lo[elem]
+    k = (p_lo == lo[elem]).astype(np.int64)
+    d1, hd = docs[order][elem], hd[order][elem]
+    bounds = _run_starts(chunk).tolist() + [len(chunk)]
     for a, b in zip(bounds[:-1], bounds[1:]):
-        n = size[a:b]
-        voff = np.append(0, np.cumsum(n))
+        heads = _run_starts(d1[a:b])
+        n = np.add.reduceat(t_n[a:b], heads)
+        voff = np.append(0, np.cumsum(t_n[a:b]))
         take = (np.arange(voff[-1], dtype=np.int64)
-                + np.repeat(src[a:b] - voff[:-1], n))
-        rows = _run_starts(d1[a:b])
+                + np.repeat(src[a:b] - voff[:-1], t_n[a:b]))
+        bucket = buckets(hd[a:b][heads], n_buckets)
+        rows = np.append(_run_starts(bucket), len(heads))
         yield pa.RecordBatch.from_arrays([
-            pa.array(d1[a:b][rows]),
-            pa.array(np.add.reduceat(k[a:b], rows)),
-            pa.ListArray.from_arrays(
-                pa.array(np.append(voff[rows], voff[-1]), pa.int32()),
-                pa.array(docs[take], pa.int64())),
-        ], schema=POSTING_SCHEMA)
+            pa.array(bucket[rows[:-1]]),
+            _blob(d1[a:b][heads], rows),
+            _blob(np.add.reduceat(k[a:b], heads), rows),
+            _blob(n, rows),
+            _blob(docs[take], np.append(0, np.cumsum(n))[rows]),
+        ], names=["bucket", "d1", "k", "n", "tail"])
 
 
-def _counts_batch(d1, k, lengths, values, starts, threshold):
-    """Complete d1 groups (row runs at ``starts``) -> one output batch:
-    the candidate pairs (d1, d2, common, sz1), then one (d, null, null,
-    sz) row per group."""
-    docs = d1[starts]
-    sz = np.add.reduceat(k, starts)
-    gid = np.repeat(np.repeat(np.arange(len(docs), dtype=np.int64),
-                              np.diff(np.append(starts, len(d1)))),
-                    lengths)
-    g, d2, common = pair_counts(gid, values, len(docs))
+def shared_shingle_counts(batches, threshold: float):
+    """``mapInArrow`` function: (bucket, d1, k, n, tail) blob rows with
+    each bucket's rows contiguous -> ``OUT_SCHEMA`` batches holding every
+    pair that can still reach ``round(jaccard, 6) >= threshold`` with its
+    shared-shingle count and d1's size (the sum of its ``k``), plus one
+    size row (d2 and common null) per d1. Every entry of a d1 is in its
+    bucket, so one group at a time counts each d1 whole."""
+    forget_zip_importers()
+    for d1, k, n, tail in blob_groups(batches, d1=np.int64, k=np.int64,
+                                      n=np.int64, tail=np.int64):
+        yield _counts(d1, k, n, tail, threshold)
+
+
+def _counts(d1, k, n, tail, threshold):
+    docs, inv = np.unique(d1, return_inverse=True)
+    sz = np.bincount(inv, weights=k, minlength=len(docs)).astype(np.int64)
+    g, d2, common = pair_counts(np.repeat(inv.astype(np.int64), n), tail,
+                                len(docs))
     # round(jaccard, 6) >= t needs jaccard >= t - 5e-7, and
     # jaccard = common / (sz1 + sz2 - common) <= common / sz1 because
     # sz2 >= common (doc ids are unique); so common >= (t - 1e-6) * sz1
@@ -210,50 +276,3 @@ def _counts_batch(d1, k, lengths, values, starts, threshold):
         pa.array(np.concatenate([common, sz]), mask=none),
         pa.array(np.concatenate([sz[g], sz])),
     ], schema=OUT_SCHEMA)
-
-
-def shared_shingle_counts(batches, threshold: float):
-    """``mapInArrow`` function: ``POSTING_SCHEMA`` batches whose d1
-    groups are contiguous -> ``OUT_SCHEMA`` batches holding every pair
-    that can still reach ``round(jaccard, 6) >= threshold`` with its
-    shared-shingle count and d1's size (the sum of its rows' ``k``), plus
-    one size row (d2 and common null) per d1.
-
-    The trailing d1 group of a batch is held back and prepended to the
-    next batch, so a group split across batches is counted whole. A d1
-    that recurs after its group closed means the input was not grouped;
-    counting it would split its pairs and size, so it raises instead."""
-    forget_zip_importers()
-    seen = set()
-    carry = None
-
-    def closed(d1, k, lengths, values, starts):
-        for key in d1[starts].tolist():
-            if key in seen:
-                raise RuntimeError(
-                    "shared_shingle_counts: d1 %r recurred after its group "
-                    "closed; input rows are not grouped by d1" % key)
-            seen.add(key)
-        return _counts_batch(d1, k, lengths, values, starts, threshold)
-
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        tail = batch.column("tail")
-        d1 = batch.column("d1").to_numpy()
-        k = batch.column("k").to_numpy()
-        lengths = tail.value_lengths().to_numpy()
-        values = tail.flatten().to_numpy()
-        if carry is not None:
-            d1, k, lengths, values = (
-                np.concatenate([c, x])
-                for c, x in zip(carry, (d1, k, lengths, values)))
-        starts = _run_starts(d1)
-        last = starts[-1]
-        cut = int(lengths[:last].sum())
-        carry = (d1[last:], k[last:], lengths[last:], values[cut:])
-        if last:
-            yield closed(d1[:last], k[:last], lengths[:last], values[:cut],
-                         starts[:-1])
-    if carry is not None:
-        yield closed(*carry, np.zeros(1, np.int64))

@@ -6,10 +6,12 @@ engines (the DuckDB oracles in __spark_entry__ compute identical values).
 Scale notes: exact dedup is one hash-groupBy; minhash/simhash shuffle once
 on doc_id after the word explode (map-side partial min/sum aggregation
 keeps the exchange small); n-gram Jaccard is three Arrow
-kernels (shingles, per-shingle sorted doc lists, shared-shingle counts
-per document), and the doc-list length (the pair fanout) is bounded by
-capping document frequency (stop-shingle removal) — the knob at 100 TB,
-exposed as ``max_shingle_df``.
+kernels (shingle keys, per-shingle sorted doc lists, shared-shingle
+counts per document) that partition their own output and exchange
+int64 blobs, a few rows per batch, through ``repartitionById``; the
+doc-list length (the pair fanout) is bounded by capping document
+frequency (stop-shingle removal) — the knob at 100 TB, exposed as
+``max_shingle_df``.
 """
 
 from functools import partial
@@ -18,10 +20,12 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.sql.types import (IntegralType, StringType, StructField,
                                StructType)
 
-from ..kernels.overlap import (OUT_DDL as _COUNTS_DDL, POSTING_DDL,
-                               posting_tails, shared_shingle_counts)
-from ..kernels.shingles import word_grams
-from ..partitioning import shuffle_partitions, spread_small_input
+from ..kernels.overlap import (CENSUS_DDL, OUT_DDL as _COUNTS_DDL,
+                               POSTING_DDL, posting_blobs,
+                               shared_shingle_counts, stop_shingle_census)
+from ..kernels.shingles import KEY_BLOB_DDL, key_blobs, word_grams
+from ..partitioning import (shuffle_partitions, size_estimate,
+                            spread_small_input)
 
 PORTABLE_HASH = "cast(conv(substring(md5({x}), 1, 8), 16, 10) as bigint)"
 
@@ -97,6 +101,11 @@ def word_shingles(docs: DataFrame, n=3, text_col="text", id_col="doc_id",
 
 MAX_SHINGLE_DF_DEFAULT = 1000
 
+# documents bytes (the plan's size estimate) one group of a q18 kernel
+# task covers at most: a task holds one group's shingles or tails at a
+# time, so its memory does not grow with the corpus
+GROUP_INPUT_BYTES = 1 << 22
+
 
 def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
                         text_col="text", id_col="doc_id",
@@ -117,55 +126,74 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     them, and the result is the capped one (keep it off the hot path).
     Docs with a null id take no part.
 
-    Plan, three Arrow kernels and three exchanges:
+    Plan, three Arrow kernels that partition their own output, and three
+    exchanges. Each kernel emits, per batch, one row per target bucket
+    holding raw int64 arrays (kernels/overlap); ``repartitionById`` puts
+    bucket b in partition ``b % P`` (P the shuffle partitions). A
+    partition holds G buckets, G from the documents' size estimate and
+    GROUP_INPUT_BYTES; if G > 1 the blob rows are sorted on bucket (a
+    few rows per map batch) and a task handles one bucket at a time.
 
-    1. hashed shingles (word_shingles), one exchange on ``s``, sorted
-       within partitions;
-    2. one ``mapInArrow`` kernel (kernels/overlap.posting_tails) builds
-       each shingle's sorted doc list, drops the stop-shingles, and emits
-       one (d1, k, tail) row per doc per flush: ``k`` shingles of d1 and
-       the docs after d1 in their lists;
-    3. exchange on ``d1``, sorted within partitions, then one kernel
-       (kernels/overlap.shared_shingle_counts) counts each (d1, d2)'s
-       shared shingles per d1 group. A doc's size ``sz1`` is the sum of
-       its ``k``, so the kernel drops every pair that fails the necessary
-       bound ``common >= (t - 1e-6)*sz1 - 1`` and emits one size row per
-       doc;
+    1. kernels/shingles.key_blobs keys each doc's distinct grams with a
+       64-bit hash of their bytes and emits the (doc, key) pairs bucketed
+       by key;
+    2. kernels/overlap.posting_blobs builds each shingle's sorted doc
+       list, drops the stop-shingles, and emits per doc d1 its number of
+       lists ``k`` and the docs after d1 in them (its tails), bucketed by
+       a hash of d1;
+    3. kernels/overlap.shared_shingle_counts counts each (d1, d2)'s
+       shared shingles per d1. A doc's size ``sz1`` is the sum of its
+       ``k``, so the kernel drops every pair that fails the necessary bound
+       ``common >= (t - 1e-6)*sz1 - 1`` and emits one size row per doc;
     4. one small exchange on ``coalesce(d2, d1)``: a window ``max`` hands
        each candidate its ``sz2`` from d2's size row, and the exact
        ``round(jaccard, 6) >= threshold`` filter runs.
 
-    The pair stream never crosses an exchange or a hash aggregation, and
-    the shingle stream is derived once."""
+    The pair stream never crosses an exchange or a hash aggregation, the
+    shingle and tail streams cross theirs as a few blob rows, and the
+    shingle stream is derived once."""
     id_type = docs.schema[id_col].dataType
     if not isinstance(id_type, IntegralType):
         raise TypeError("ngram_jaccard_pairs: id_col %r must be an integral "
                         "type, got %s" % (id_col, id_type.simpleString()))
-    sh = word_shingles(spread_small_input(
-        docs.where(F.col(id_col).isNotNull())), n, text_col, id_col,
-        hashed=True)
-    # The repartitions pin both exchanges at the session's shuffle
-    # parallelism: AQE sizes post-shuffle partitions by the exchange
-    # bytes and would coalesce the stages whose work (the posting lists,
-    # the counting kernel) is far larger than their input.
+    if n < 1:
+        raise ValueError("ngram_jaccard_pairs: n must be at least 1, got %r"
+                         % n)
+    docs = docs.where(F.col(id_col).isNotNull())
+    # The exchanges are pinned at the session's shuffle parallelism:
+    # repartitionById keeps its partition count, and AQE sizing them by
+    # their bytes would coalesce the stages whose work (the posting
+    # lists, the counting kernel) is far larger than their input.
     n_part = shuffle_partitions(docs.sparkSession)
+    n_buckets = n_part * max(1, -(-(size_estimate(docs) or 0)
+                                  // (n_part * GROUP_INPUT_BYTES)))
+
+    def exchange(blobs):
+        out = blobs.repartitionById(n_part, "bucket")
+        return out.sortWithinPartitions("bucket") if n_buckets > n_part \
+            else out
+
+    keys = exchange(spread_small_input(docs).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(text_col).alias("text"))
+        .mapInArrow(partial(key_blobs, n=n, n_buckets=n_buckets),
+                    KEY_BLOB_DDL))
     if max_shingle_df is not None and log_dropped:
         # diagnostic path (explicitly off the hot path): a separate df
-        # census so the dropped count can be reported
+        # census over the same keys, so the dropped count can be reported
         import warnings
-        n_hot = (sh.groupBy("s").count()
-                 .where(F.col("count") > max_shingle_df).count())
+        n_hot = keys.mapInArrow(
+            partial(stop_shingle_census, max_shingle_df=max_shingle_df),
+            CENSUS_DDL).agg(F.sum("n")).first()[0]
         if n_hot:
             warnings.warn(
                 "ngram_jaccard_pairs: dropping %d stop-shingles with "
                 "df > %d" % (n_hot, max_shingle_df))
-    tails = (sh.repartition(n_part, "s").sortWithinPartitions("s")
-             .mapInArrow(partial(posting_tails,
-                                 max_shingle_df=max_shingle_df),
-                         POSTING_DDL))
-    counts = (tails.repartition(n_part, "d1").sortWithinPartitions("d1")
-              .mapInArrow(partial(shared_shingle_counts, threshold=threshold),
-                          _COUNTS_DDL))
+    tails = exchange(keys.mapInArrow(
+        partial(posting_blobs, max_shingle_df=max_shingle_df,
+                n_buckets=n_buckets), POSTING_DDL))
+    counts = tails.mapInArrow(
+        partial(shared_shingle_counts, threshold=threshold), _COUNTS_DDL)
     sz2 = F.max(F.when(F.col("d2").isNull(), F.col("sz"))).over(
         W.partitionBy(F.coalesce("d2", "d1")))
     jac = F.col("common") / (F.col("sz") + F.col("sz2") - F.col("common"))

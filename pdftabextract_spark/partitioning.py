@@ -6,7 +6,9 @@ operator doing heavy per-row work directly on such a scan serializes on a
 handful of tasks. ``spread_small_input`` fixes exactly that case without
 penalizing at-scale inputs, which already arrive in enough splits.
 ``shuffle_partitions`` reads the session's shuffle parallelism for
-operators that pin an exchange width.
+operators that pin an exchange width, and ``size_estimate`` the plan's
+size estimate that both the spread and operators/dedup's group count
+read.
 """
 
 from pyspark.sql import DataFrame
@@ -23,24 +25,29 @@ SPREAD_INPUT_MAX_BYTES = 1 << 30
 SPREAD_INPUT_MIN_BYTES = 4 << 20
 
 
+def size_estimate(df: DataFrame):
+    """The optimized plan's size estimate of ``df`` in bytes, or None when
+    plan statistics are unavailable. Driver-side only; runs no job."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                       .sizeInBytes()))
+    except Exception:
+        return None
+
+
 def spread_small_input(df: DataFrame,
                        max_bytes: int = SPREAD_INPUT_MAX_BYTES,
                        min_bytes: int = SPREAD_INPUT_MIN_BYTES) -> DataFrame:
     """Round-robin repartition a *small but not tiny* input across the
     default parallelism (no-op for inputs estimated outside
     ``[min_bytes, max_bytes)`` or when plan statistics are unavailable).
-    Driver-side only — reads the optimized plan's size estimate, runs no
-    job. Downstream consumers must not depend on row order or physical
-    partitioning (ours all aggregate on keys or compute row-wise
-    values)."""
-    try:
-        spark = df.sparkSession
-        target = spark.sparkContext.defaultParallelism
-        size = int(str(df._jdf.queryExecution().optimizedPlan().stats()
-                       .sizeInBytes()))
-    except Exception:
+    Driver-side only — reads ``size_estimate``, runs no job. Downstream
+    consumers must not depend on row order or physical partitioning (ours
+    all aggregate on keys or compute row-wise values)."""
+    size = size_estimate(df)
+    if size is None or not min_bytes <= size < max_bytes:
         return df
-    return df.repartition(target) if min_bytes <= size < max_bytes else df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def shuffle_partitions(spark) -> int:

@@ -188,31 +188,102 @@ def test_ngram_jaccard_equals_brute_force_at_any_arrow_batch_size(spark):
         _assert_same_rows(got[3], want)
 
 
+def _stop_shingles(docs, n, max_df):
+    """The number of exact gram strings in more than ``max_df`` docs."""
+    from collections import Counter
+    df = Counter()
+    for r in docs.collect():
+        ws = r["text"].split(" ")
+        df.update({" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)})
+    return sum(c > max_df for c in df.values())
+
+
 def test_ngram_jaccard_log_dropped_warns_and_matches(spark):
     docs = _overlap_docs(spark, seed=6)
-    with pytest.warns(UserWarning, match="dropping [1-9]\\d* stop-shingles"):
+    with pytest.warns(UserWarning,
+                      match="dropping [1-9]\\d* stop-shingles") as caught:
         logged = D.ngram_jaccard_pairs(docs, max_shingle_df=40,
                                        log_dropped=True)
+    # the census counts the kernels' gram keys; with no key collision
+    # that is the count over the exact gram strings
+    warned = [w for w in caught if "stop-shingles" in str(w.message)]
+    assert len(warned) == 1
+    assert str(warned[0].message).split()[2] == str(
+        _stop_shingles(docs, 3, 40))
     _assert_same_rows(logged, D.ngram_jaccard_pairs(docs, max_shingle_df=40))
+
+
+def _plan(spark, df):
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+
+
+def _sorts_below_kernels(plan):
+    """Sort nodes in the subtree of any MapInArrow of a formatted plan's
+    tree (a node's subtree is the lines below it indented deeper)."""
+    import re
+    tree = [(len(m.group(1)), m.group(2)) for m in re.finditer(
+        r"^([ :+\-]*)(\w+) \(\d+\)$", plan.split("\n\n")[0], re.M)]
+    found = []
+    for i, (depth, name) in enumerate(tree):
+        if name == "MapInArrow":
+            for d, below in tree[i + 1:]:
+                if d <= depth:
+                    break
+                if below == "Sort":
+                    found.append(below)
+    return found
+
+
+def _kernel_exchange_records(spark, df):
+    """Run ``df``, then read the "shuffle records written" SQL metric of
+    its kernel exchanges (the repartitionById ones), the one nearest the
+    scan first."""
+    df.collect()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    exec_id = max(runs.apply(i).executionId() for i in range(runs.size()))
+    values = store.executionMetrics(exec_id)
+    nodes = store.planGraph(exec_id).allNodes()
+    records = []
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if "shufflepartitionidpassthrough" not in node.desc():
+            continue
+        metrics = node.metrics()
+        for j in range(metrics.size()):
+            m = metrics.apply(j)
+            if m.name() == "shuffle records written":
+                records.append((node.id(), int(values.apply(
+                    m.accumulatorId()).split()[0].replace(",", ""))))
+    # the plan graph numbers its nodes from the root down
+    return [n for _, n in sorted(records, reverse=True)]
 
 
 def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
     """The plan reads the documents once and never aggregates or
-    nested-loop-joins the pair stream: three Arrow kernels shingle, build
-    the posting lists and count shared shingles per d1 group, with no
-    JVM generator or collect_list left. The log_dropped plan is the same
-    after its census job."""
+    nested-loop-joins the pair stream: three Arrow kernels key the
+    shingles, build the posting lists and count shared shingles per d1,
+    with no JVM generator or collect_list left. No Sort feeds a kernel,
+    and each kernel exchange moves a few blob rows per map batch: at most
+    one per (map batch, bucket), buckets = partitions x groups (1 group
+    on this corpus). The log_dropped plan is the same after its census
+    job."""
     import re
     path = str(tmp_path / "documents.parquet")
     _overlap_docs(spark).write.parquet(path)
     docs = spark.read.parquet(path)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    per_batch = int(spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
+    map_batches = sum(-(-r["count"] // per_batch) for r in docs.groupBy(
+        F.spark_partition_id()).count().collect())
     with pytest.warns(UserWarning, match="stop-shingles"):
         logged = D.ngram_jaccard_pairs(docs, max_shingle_df=40,
                                        log_dropped=True)
     for out in (D.ngram_jaccard_pairs(docs), logged):
-        plan = out._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
+        plan = _plan(spark, out)
 
         def nodes(name):
             return len(re.findall(r"^\(\d+\) %s\b" % name, plan, re.M))
@@ -226,6 +297,27 @@ def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
         assert not re.search(r"Keys \[2\]: \[d1#\d+L?, d2#\d+L?\]", plan), plan
         assert out.schema.simpleString() == \
             "struct<d1:bigint,d2:bigint,common:bigint,jaccard:double>"
+        assert nodes("Sort") == 1 and _sorts_below_kernels(plan) == [], plan
+        keys, tails = _kernel_exchange_records(spark, out)
+        assert 0 < keys <= map_batches * n_part
+        # the posting kernel's map batches: one per group it counts
+        assert 0 < tails <= n_part * n_part
+
+
+def test_ngram_jaccard_many_groups_sort_blob_rows_and_match(spark,
+                                                          monkeypatch):
+    """With the group budget far below the corpus, each partition holds
+    several buckets: the plan sorts the blob rows on bucket below the
+    posting and counting kernels, and the result is unchanged."""
+    docs = _overlap_docs(spark, seed=9)
+    want = _brute_force_pairs(spark, docs, 3, 0.3, 40)
+    assert want.count() > 20
+    monkeypatch.setattr(D, "GROUP_INPUT_BYTES", 64)
+    out = D.ngram_jaccard_pairs(docs, threshold=0.3, max_shingle_df=40)
+    assert len(_sorts_below_kernels(_plan(spark, out))) >= 2
+    _assert_same_rows(spark.createDataFrame(
+        out.collect(), "d1 long, d2 long, common long, jaccard double"),
+        want)
 
 
 def test_ngram_jaccard_rejects_non_integral_id_before_any_job(spark):

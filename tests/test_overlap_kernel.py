@@ -1,13 +1,15 @@
 """kernels/overlap against brute-force counting, without Spark.
 
-``shared_shingle_counts`` reads random shingle lists as the (d1, k, tail)
-rows the posting kernel emits for them, in flushes of a few lists, so a
-d1 spans several rows with ``k > 1``, cut into Arrow batches of several
-sizes. ``posting_tails`` reads (doc_id, s) rows sorted on ``s`` and is
-checked against the posting lists built in Python, at flush bounds of 1,
-7 and the default, then through the counting kernel; no emitted batch
-holds more tail values than the bound, even for one list whose tails
-alone exceed it."""
+The kernels read blob rows: (bucket, doc, s) rows as kernels/shingles
+emits them and (bucket, d1, k, n, tail) rows as the posting kernel emits
+them. The tests cut each bucket's elements into blob rows at random
+points, as several map batches give, and hand the rows over in Arrow
+batches of several sizes. ``_exchange`` stands in for
+``repartitionById`` followed by ``sortWithinPartitions("bucket")``: row
+r goes to partition ``r.bucket % P``, rows sorted on bucket. Results
+must equal brute-force counting over the posting lists, and no emitted
+blob may hold more than FLUSH_TAIL_VALUES values.
+"""
 
 import itertools
 from collections import Counter, defaultdict
@@ -18,15 +20,78 @@ import pytest
 
 from pdftabextract_spark.kernels import overlap
 from pdftabextract_spark.kernels.overlap import (
-    pair_counts, posting_tails, shared_shingle_counts)
+    buckets, mix64, pair_counts, posting_blobs, shared_shingle_counts)
+from pdftabextract_spark.kernels.shingles import key_blobs
+
+KEY_COLS = {"doc": np.int64, "s": np.uint64}
+TAIL_COLS = {"d1": np.int64, "k": np.int64, "n": np.int64, "tail": np.int64}
 
 
-def _tail_rows(lists, per_flush=3):
-    """Per-shingle doc lists -> (d1, k, tail) rows sorted by d1: each
-    flush of ``per_flush`` lists gives one row per doc it holds, ``k``
-    the lists of the flush that hold d1 and ``tail`` the docs after d1
-    in them."""
+def _cut_rows(bucket, rng, cols):
+    """Elements sorted by bucket -> blob rows (bucket, [arrays]), each
+    bucket's run cut at random points into one to three rows."""
     rows = []
+    starts = np.flatnonzero(np.append(True, bucket[1:] != bucket[:-1]))
+    for a, b in zip(starts, np.append(starts[1:], len(bucket))):
+        cuts = sorted(set(rng.integers(a, b + 1, 2).tolist()) | {a, b})
+        rows += [(int(bucket[a]), [c[x:y] for c in cols])
+                 for x, y in zip(cuts[:-1], cuts[1:]) if y > x]
+    return rows
+
+
+def _batches(rows, names, size):
+    for i in range(0, len(rows), size):
+        chunk = rows[i:i + size]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([b for b, _ in chunk], pa.int32())]
+            + [pa.array([arrs[j].tobytes() for _, arrs in chunk], pa.binary())
+               for j in range(len(names))],
+            names=["bucket", *names])
+
+
+def _rows_of(batches, cols):
+    """Blob batches -> rows (bucket, [arrays]), checking the blob bound."""
+    rows = []
+    for b in batches:
+        blobs = [b.column(c).to_pylist() for c in cols]
+        for i, bucket in enumerate(b.column("bucket").to_pylist()):
+            arrs = [np.frombuffer(x[i], dt)
+                    for x, dt in zip(blobs, cols.values())]
+            assert all(len(a) <= overlap.FLUSH_TAIL_VALUES for a in arrs)
+            rows.append((bucket, arrs))
+    return rows
+
+
+def _exchange(rows, n_part, run, cols, size):
+    """Route rows to partition ``bucket % n_part``, sort each partition's
+    rows on bucket (stably), and run ``run`` over each partition."""
+    out = []
+    for p in range(n_part):
+        part = sorted((r for r in rows if r[0] % n_part == p),
+                      key=lambda r: r[0])
+        out += list(run(_batches(part, list(cols), size)))
+    return out
+
+
+def _key_rows(pairs, n_buckets, rng):
+    """(doc, s) pairs -> (bucket, [doc, s]) blob rows, elements of a
+    bucket in arbitrary order."""
+    doc = np.array([d for d, _ in pairs], np.int64)
+    s = np.array([k for _, k in pairs], np.uint64)
+    order = rng.permutation(len(doc))
+    doc, s = doc[order], s[order]
+    b = buckets(s, n_buckets)
+    order = np.argsort(b, kind="stable")
+    return _cut_rows(b[order], rng, [doc[order], s[order]])
+
+
+def _tail_rows(lists, n_buckets, rng, per_flush=3):
+    """Per-shingle doc lists -> (bucket, [d1, k, n, tail]) blob rows as
+    the posting kernel emits them: each flush of ``per_flush`` lists gives
+    one entry per doc it holds (``k`` the lists of the flush that hold
+    d1, ``tail`` the docs after d1 in them), so a d1 spans several
+    entries; entries are bucketed by mix64(d1)."""
+    entries = []
     for f in range(0, len(lists), per_flush):
         k, tail = Counter(), defaultdict(list)
         for ds in lists[f:f + per_flush]:
@@ -34,32 +99,40 @@ def _tail_rows(lists, per_flush=3):
             for i, d in enumerate(ds):
                 k[d] += 1
                 tail[d] += ds[i + 1:]
-        rows += [(d, k[d], tail[d]) for d in sorted(k)]
-    rows.sort(key=lambda r: r[0])
+        entries += [(d, k[d], tail[d]) for d in k]
+    if not entries:
+        return []
+    b = buckets(mix64(np.array([e[0] for e in entries], np.int64)),
+                n_buckets)
+    order = np.argsort(b, kind="stable")
+    rows = []
+    for bucket, (at,) in _cut_rows(b[order], rng, [order]):
+        pick = [entries[i] for i in at]
+        rows.append((bucket, [
+            np.array([e[0] for e in pick], np.int64),
+            np.array([e[1] for e in pick], np.int64),
+            np.array([len(e[2]) for e in pick], np.int64),
+            np.array([x for e in pick for x in e[2]], np.int64)]))
     return rows
 
 
-def _batches(rows, size):
-    for i in range(0, len(rows), size):
-        chunk = rows[i:i + size]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([r[0] for r in chunk], pa.int64()),
-             pa.array([r[1] for r in chunk], pa.int64()),
-             pa.array([r[2] for r in chunk], pa.list_(pa.int64()))],
-            names=["d1", "k", "tail"])
-
-
-def _run(rows, size, threshold):
-    out = [b.to_pydict() for b in shared_shingle_counts(
-        _batches(rows, size), threshold)]
-    cols = {k: sum((b[k] for b in out), []) for k in ("d1", "d2", "common",
-                                                       "sz")}
-    recs = list(zip(cols["d1"], cols["d2"], cols["common"], cols["sz"]))
-    pairs = Counter((d1, d2, c, sz) for d1, d2, c, sz in recs
-                    if d2 is not None)
+def _counted(batches):
+    """shared_shingle_counts output -> (Counter of pair rows, Counter of
+    (d1, size))."""
+    recs = []
+    for b in batches:
+        d = b.to_pydict()
+        recs += zip(d["d1"], d["d2"], d["common"], d["sz"])
+    pairs = Counter(r for r in recs if r[1] is not None)
     sizes = Counter((d1, sz) for d1, d2, c, sz in recs if d2 is None)
     assert all(c is None for _, d2, c, _ in recs if d2 is None)
     return pairs, sizes
+
+
+def _count(rows, n_part, size, threshold):
+    return _counted(_exchange(
+        rows, n_part, lambda b: shared_shingle_counts(b, threshold),
+        TAIL_COLS, size))
 
 
 def _brute_force(lists, threshold):
@@ -85,12 +158,12 @@ def test_counts_equal_brute_force(size, threshold):
     # docs 1000 and 1001 occur only in size-1 lists: one size row each,
     # no pairs
     lists += [[1000], [1000], [1001]]
-    rows = _tail_rows(lists)
-    assert any(len(t) == 0 for _, _, t in rows)
-    # a size is a sum of k over several rows, not a row count
-    assert any(k > 1 for _, k, _ in rows)
-    assert len({d for d, _, _ in rows}) < len(rows)
-    pairs, sizes = _run(rows, size, threshold)
+    rows = _tail_rows(lists, 6, rng)
+    # a size is a sum of k over several entries, in several rows
+    assert any(k > 1 for _, (_, ks, _, _) in rows for k in ks)
+    d1s = [d for _, (ds, _, _, _) in rows for d in ds]
+    assert len(set(d1s)) < len(d1s)
+    pairs, sizes = _count(rows, 3, size, threshold)
     want_pairs, want_sizes = _brute_force(lists, threshold)
     assert sizes == want_sizes
     assert pairs == want_pairs
@@ -103,12 +176,17 @@ def test_counts_equal_brute_force(size, threshold):
 
 
 def test_group_split_across_batches():
-    # d1 = 5 has seven rows (k = 1, one list per flush); batches of 2
-    # split it over four batches
+    # d1 = 5 has seven entries (one list each) in seven rows of one
+    # bucket; batches of 2 split that group over eight batches
     lists = [[5, 9], [5, 9], [5, 7], [5, 9, 11], [5], [5, 11], [3, 5]]
-    rows = _tail_rows(lists, per_flush=1)
-    assert sum(d == 5 for d, _, _ in rows) == 7
-    pairs, sizes = _run(rows, 2, 0.0)
+    rows = [(0, [np.array([d]), np.array([1]), np.array([len(ds) - i - 1]),
+                 np.array(ds[i + 1:], np.int64)])
+            for ds in lists for i, d in enumerate(ds)]
+    assert sum(int(arrs[0][0]) == 5 for _, arrs in rows) == 7
+    out = list(shared_shingle_counts(
+        _batches(rows, list(TAIL_COLS), 2), 0.0))
+    assert len(out) == 1  # one group
+    pairs, sizes = _counted(out)
     assert sizes[(5, 7)] == 1
     assert pairs == Counter({(3, 5, 1, 1), (5, 7, 1, 7), (5, 9, 3, 7),
                              (5, 11, 2, 7), (9, 11, 1, 3)})
@@ -127,8 +205,12 @@ def test_ids_near_int64_limits_use_the_lexsort_fallback(size):
     got = pair_counts(g, d, 2)
     assert [x.tolist() for x in got] == [[0, 0, 1], [-big, big - 1, -big],
                                         [1, 1, 1]]
-    pairs, sizes = _run(_tail_rows(lists), size, 0.0)
-    assert (pairs, sizes) == _brute_force(lists, 0.0)
+    assert _count(_tail_rows(lists, 1, rng), 1, size, 0.0) == \
+        _brute_force(lists, 0.0)
+    # and from the shingle side, through the posting kernel
+    pairs = [(d, s) for s, ds in enumerate(lists) for d in ds]
+    assert _pipeline(pairs, 2, 2, size, None, 0.0, rng) == \
+        _brute_force(lists, 0.0)
 
 
 def test_pair_counts_key_sort_equals_lexsort():
@@ -151,63 +233,62 @@ def test_pair_counts_key_sort_equals_lexsort():
     ([1, 2, 2, 1], 2),     # recurrence after the carried group closed
 ])
 def test_interleaved_d1_raises(d1s, size):
-    rows = [(d, 1, [100]) for d in d1s]
+    # rows of d1 buckets that are not contiguous: counting the bucket in
+    # two pieces would split its docs' pairs and sizes
+    one = [np.array([7], np.int64), np.array([1], np.int64),
+           np.array([1], np.int64), np.array([100], np.int64)]
+    rows = [(b, one) for b in d1s]
     with pytest.raises(RuntimeError, match="recurred"):
-        list(shared_shingle_counts(_batches(rows, size), 0.2))
+        list(shared_shingle_counts(_batches(rows, list(TAIL_COLS), size),
+                                   0.2))
+    with pytest.raises(RuntimeError, match="recurred"):
+        list(posting_blobs(_batches([(b, one[:2]) for b in d1s],
+                                    list(KEY_COLS), size), None, 4))
 
 
 def test_empty_input_emits_nothing():
     assert list(shared_shingle_counts(iter([]), 0.2)) == []
 
 
-def _posting_batches(rows, size):
-    for i in range(0, len(rows), size):
-        chunk = rows[i:i + size]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([d for d, _ in chunk], pa.int64()),
-             pa.array([s for _, s in chunk], pa.int64())],
-            names=["doc_id", "s"])
-
-
-def _posting_rows(rng, n_shingles=150, max_df=9):
-    """(doc_id, s) rows sorted on s, docs shuffled within a shingle and
-    some (s, doc) rows repeated, as hash collisions inside a doc give."""
-    rows = []
-    for s in sorted(set(rng.integers(-10**12, 10**12, n_shingles).tolist())):
+def _posting_pairs(rng, n_shingles=150, max_df=9):
+    """(doc, s) pairs with random 64-bit keys and some (s, doc) pairs
+    repeated, as a doc split over two input rows, or two grams of one
+    doc that share a key, give."""
+    pairs = []
+    for s in set(rng.integers(0, 1 << 64, n_shingles, np.uint64).tolist()):
         ds = rng.choice(np.arange(-40, 40), rng.integers(1, max_df + 1),
                         replace=False).tolist()
         ds += rng.choice(ds, rng.integers(0, 3)).tolist()
-        rng.shuffle(ds)
-        rows += [(d, s) for d in ds]
-    return rows
+        pairs += [(d, s) for d in ds]
+    return pairs
 
 
-def _want_lists(rows, max_df):
+def _want_lists(pairs, max_df):
     by_s = defaultdict(set)
-    for d, s in rows:
+    for d, s in pairs:
         by_s[s].add(d)
     return [sorted(ds) for ds in by_s.values()
             if max_df is None or len(ds) <= max_df]
 
 
-def _posting_out(rows, size, max_df):
-    out = list(posting_tails(_posting_batches(rows, size), max_df))
-    for b in out:
-        assert b.schema == overlap.POSTING_SCHEMA
-        assert len(b.column("tail").flatten()) <= overlap.FLUSH_TAIL_VALUES
-        d1 = b.column("d1").to_pylist()
-        assert d1 == sorted(set(d1)), "one row per d1 per flush"
-    return [r for b in out for r in zip(*(b.column(c).to_pylist()
-                                          for c in ("d1", "k", "tail")))], out
-
-
-def _per_doc(rows):
-    """(d1, k, tail) rows -> ({d1: sum k}, Counter of (d1, d2))."""
-    k, pairs = Counter(), Counter()
-    for d1, kk, tail in rows:
-        k[d1] += kk
-        pairs.update((d1, d2) for d2 in tail)
-    return k, pairs
+def _pipeline(pairs, n_part, n_groups, size, max_df, threshold, rng,
+              out=None):
+    """(doc, s) pairs through the posting kernel, the d1 exchange and the
+    counting kernel -> _counted result. The posting rows are appended to
+    ``out`` when given."""
+    n_buckets = n_part * n_groups
+    posted = _exchange(_key_rows(pairs, n_buckets, rng), n_part,
+                       lambda b: posting_blobs(b, max_df, n_buckets),
+                       KEY_COLS, size)
+    rows = _rows_of(posted, TAIL_COLS)
+    for b, (d1, k, n, tail) in rows:
+        # one entry per d1 in a row, every d1 in the row's bucket
+        assert len(set(d1.tolist())) == len(d1)
+        assert (buckets(mix64(d1), n_buckets) == b).all()
+        assert n.sum() == len(tail)
+    if out is not None:
+        out += rows
+    return _count(rows, n_part, size, threshold)
 
 
 @pytest.mark.parametrize("flush", [1, 7, None])
@@ -217,75 +298,164 @@ def test_posting_tails_equal_brute_force(monkeypatch, flush, size, max_df):
     if flush is not None:
         monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", flush)
     rng = np.random.default_rng(size + (flush or 0) + (max_df or 0))
-    rows = _posting_rows(rng)
-    assert len(set(rows)) < len(rows)  # repeated (s, doc) rows
-    lists = _want_lists(rows, max_df)
-    got, out = _posting_out(rows, size, max_df)
-    assert _per_doc(got) == _per_doc(_tail_rows(lists, len(lists)))
+    pairs = _posting_pairs(rng)
+    assert len(set(pairs)) < len(pairs)  # repeated (s, doc) pairs
+    lists = _want_lists(pairs, max_df)
+    assert _pipeline(pairs, 3, 1, size, max_df, 0.0, rng) == \
+        _brute_force(lists, 0.0)
+    # one posting task (one group): one entry per doc per posting batch
+    rows = []
+    assert _pipeline(pairs, 1, 1, size, max_df, 0.0, rng, rows) == \
+        _brute_force(lists, 0.0)
     n_docs = len({d for ds in lists for d in ds})
+    n_entries = sum(len(arrs[0]) for _, arrs in rows)
     if flush is None:
-        # one flush: one row per doc
-        assert len(out) == 1 and len(got) == n_docs
-    elif size < len(rows):
-        # several flushes: docs span several rows
-        assert len(out) > 1 and len(got) > n_docs
-    # and through the counting kernel, rows sorted by d1 as the d1
-    # exchange sorts them
-    got.sort(key=lambda r: r[0])
-    assert _run(got, 5, 0.0) == _brute_force(lists, 0.0)
+        # one posting batch: one entry per doc
+        assert n_entries == n_docs
+    else:
+        # several batches: docs span several entries
+        assert n_entries > n_docs
+
+
+def _entries(rows):
+    """Posting blob rows -> (d1, k, tail) entries."""
+    out = []
+    for _, (d1, k, n, tail) in rows:
+        ends = np.cumsum(n)
+        out += [(int(d), int(kk), tail[e - m:e].tolist())
+                for d, kk, m, e in zip(d1, k, n, ends)]
+    return out
 
 
 def test_posting_tails_cap_keeps_df_at_the_cap():
-    rows = ([(d, 10) for d in (3, 1, 2)] + [(d, 20) for d in (1, 2, 3, 4)]
-            + [(d, 30) for d in (5, 5, 6, 5)])
-    got, _ = _posting_out(rows, 2, 3)
+    pairs = ([(d, 10) for d in (3, 1, 2)] + [(d, 20) for d in (1, 2, 3, 4)]
+             + [(d, 30) for d in (5, 5, 6, 5)])
+    rows = []
+    _pipeline(pairs, 1, 1, 2, 3, 0.0, np.random.default_rng(0), rows)
     # s = 10 has df 3 (kept), s = 20 df 4 (dropped), s = 30 df 2: doc 5
     # counted once
-    assert sorted(got) == [(1, 1, [2, 3]), (2, 1, [3]), (3, 1, []),
-                           (5, 1, [6]), (6, 1, [])]
-    got, _ = _posting_out(rows, 2, None)
-    assert _per_doc(got)[0] == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1, 6: 1}
+    assert sorted(_entries(rows)) == [(1, 1, [2, 3]), (2, 1, [3]),
+                                      (3, 1, []), (5, 1, [6]), (6, 1, [])]
+    rows = []
+    _pipeline(pairs, 1, 1, 2, None, 0.0, np.random.default_rng(0), rows)
+    k = Counter()
+    for d, kk, _ in _entries(rows):
+        k[d] += kk
+    assert k == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1, 6: 1}
+
+
+@pytest.mark.parametrize("cap", [None, 1, 3, 4])
+def test_posting_blobs_caps_none_one_and_at_a_list_length(cap):
+    # lists of 1, 3 and 4 docs: a cap at a list's length keeps it, one
+    # below drops it
+    lists = [[5], [1, 2, 3], [2, 3, 4, 6], [1, 3, 6]]
+    pairs = [(d, s) for s, ds in enumerate(lists) for d in ds]
+    pairs += [(3, 1), (6, 3)]  # repeated (s, doc) pairs count once
+    rng = np.random.default_rng(cap or 0)
+    want = [ds for ds in lists if cap is None or len(ds) <= cap]
+    for size in (1, 2, 7):
+        assert _pipeline(pairs, 2, 1, size, cap, 0.0, rng) == \
+            _brute_force(want, 0.0)
+
+
+def test_posting_blobs_any_element_order():
+    # elements arrive in any order within a bucket, spread over rows of
+    # several map batches: the posting lists are the same
+    rng = np.random.default_rng(11)
+    pairs = _posting_pairs(rng)
+    want = _brute_force(_want_lists(pairs, 4), 0.3)
+    for seed in range(3):
+        order = np.random.default_rng(seed).permutation(len(pairs))
+        assert _pipeline([pairs[i] for i in order], 2, 3, 3, 4, 0.3,
+                         np.random.default_rng(seed)) == want
 
 
 @pytest.mark.parametrize("size", [1, 2, 5])
-def test_posting_tails_drop_a_long_list_while_it_is_held_back(size):
-    # s = 20 has 12 rows over 6 docs (over the cap of 4); s = 30 has 9
-    # rows over 3 docs (under it): both span several batches
-    rows = ([(1, 10), (2, 10)] + [(d % 6, 20) for d in range(12)]
-            + [(7 + d % 3, 30) for d in range(9)] + [(1, 40), (9, 40)])
-    got, _ = _posting_out(rows, size, 4)
-    assert sorted(got) == [(1, 2, [2, 9]), (2, 1, []), (7, 1, [8, 9]),
-                           (8, 1, [9]), (9, 2, [])]
+def test_posting_blobs_drop_a_long_list_spread_over_rows(size):
+    # s = 20 has 12 pairs over 6 docs (over the cap of 4) and s = 30 9
+    # pairs over 3 docs (under it), each cut over several rows and
+    # batches: the first is dropped whole, the second kept whole
+    pairs = ([(1, 10), (2, 10)] + [(d % 6, 20) for d in range(12)]
+             + [(7 + d % 3, 30) for d in range(9)] + [(1, 40), (9, 40)])
+    want = _brute_force([[1, 2], [7, 8, 9], [1, 9]], 0.0)
+    assert _pipeline(pairs, 1, 1, size, 4, 0.0,
+                     np.random.default_rng(size)) == want
+
+
+@pytest.mark.parametrize("n_groups", [2, 9])
+def test_many_groups_per_task(n_groups):
+    # several buckets per partition, each counted as its own group: the
+    # result does not depend on the group count
+    rng = np.random.default_rng(n_groups)
+    pairs = _posting_pairs(rng, n_shingles=300)
+    rows = _key_rows(pairs, 2 * n_groups, rng)
+    assert len({b for b, _ in rows if b % 2 == 0}) > 1
+    want = _brute_force(_want_lists(pairs, 5), 0.2)
+    for size in (1, 4):
+        assert _pipeline(pairs, 2, n_groups, size, 5, 0.2, rng) == want
 
 
 @pytest.mark.parametrize("flush", [1, 7])
 def test_posting_tails_cut_a_long_list_into_bounded_batches(monkeypatch,
                                                             flush):
     # exact mode: one list of 20 docs has 190 tail values, far over the
-    # flush bound, so docs' tails are cut over batches and the rows that
-    # continue them carry k = 0
+    # flush bound, so docs' tails are cut over batches and the entries
+    # that continue them carry k = 0
     monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", flush)
     docs = list(range(20))
-    rows = [(d, 5) for d in reversed(docs)] + [(1, 6), (3, 6)]
-    got, out = _posting_out(rows, 4, None)
-    assert len(out) >= 190 // flush
-    assert any(k == 0 for _, k, _ in got)
-    lists = [docs, [1, 3]]
-    assert _per_doc(got) == _per_doc(_tail_rows(lists, len(lists)))
-    got.sort(key=lambda r: r[0])
-    assert _run(got, 5, 0.0) == _brute_force(lists, 0.0)
-
-
-@pytest.mark.parametrize("rows", [
-    [(1, 5), (2, 5), (1, 3)],
-    # the out-of-order row follows a list dropped over the cap
-    [(1, 5), (2, 5), (3, 5), (4, 5), (5, 5), (6, 5), (1, 3)],
-])
-def test_posting_tails_unsorted_input_raises(rows):
-    for size in (1, 3):
-        with pytest.raises(RuntimeError, match="not sorted"):
-            list(posting_tails(_posting_batches(rows, size), 4))
+    pairs = [(d, 5) for d in reversed(docs)] + [(1, 6), (3, 6)]
+    rows = []
+    got = _pipeline(pairs, 1, 1, 4, None, 0.0, np.random.default_rng(0),
+                    rows)
+    assert len(rows) >= 190 // flush
+    assert any(k == 0 for _, arrs in rows for k in arrs[1])
+    assert got == _brute_force([docs, [1, 3]], 0.0)
 
 
 def test_posting_tails_empty_input_emits_nothing():
-    assert list(posting_tails(iter([]), 10)) == []
+    assert list(posting_blobs(iter([]), 10, 4)) == []
+    # every list over the cap: nothing to emit either
+    rows = _key_rows([(1, 9), (2, 9)], 1, np.random.default_rng(0))
+    assert list(posting_blobs(_batches(rows, list(KEY_COLS), 1), 1, 1)) \
+        == []
+
+
+def _text_batch(ids, texts):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts)],
+        names=["doc_id", "text"])
+
+
+def test_text_pipeline_equals_brute_force_with_a_doc_over_two_rows():
+    # from texts: the shingle kernel's keys, its blob rows through the
+    # exchange, the posting and counting kernels. Doc 3's text comes in
+    # two rows (of two batches), whose grams overlap: each gram counts
+    # once in its size and its pairs
+    rng = np.random.default_rng(8)
+    texts = [" ".join(rng.choice(list("abcdef"), rng.integers(3, 15)))
+             for _ in range(60)]
+    ids = list(range(60))
+    half = texts[3].split(" ")
+    split = [" ".join(half[:5]), " ".join(half[2:])]
+    n_buckets = 6
+    rest = [i for i in ids if i != 3]
+    blobs = list(key_blobs(iter([
+        _text_batch(rest[:30], [texts[i] for i in rest[:30]]),
+        _text_batch([3], split[:1]),
+        _text_batch(rest[30:], [texts[i] for i in rest[30:]]),
+        _text_batch([3], split[1:])]), 3, n_buckets))
+    key_rows = _rows_of(blobs, KEY_COLS)
+    for b, (doc, s) in key_rows:
+        assert (buckets(s, n_buckets) == b).all()
+        assert (s[1:] >= s[:-1]).all()
+    grams = defaultdict(set)
+    for d, t in zip(ids, texts):
+        ws = t.split(" ")
+        for j in range(len(ws) - 2):
+            grams[" ".join(ws[j:j + 3])].add(d)
+    lists = [sorted(ds) for ds in grams.values()]
+    posted = _exchange(key_rows, 3,
+                       lambda b: posting_blobs(b, None, n_buckets),
+                       KEY_COLS, 2)
+    got = _count(_rows_of(posted, TAIL_COLS), 3, 3, 0.0)
+    assert got == _brute_force(lists, 0.0)

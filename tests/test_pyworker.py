@@ -17,11 +17,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdftabextract_spark.kernels.overlap import (
-    posting_tails, shared_shingle_counts)
+    posting_blobs, shared_shingle_counts, stop_shingle_census)
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 from pdftabextract_spark.kernels.png import encode_png
 from pdftabextract_spark.kernels.pyworker import forget_zip_importers
-from pdftabextract_spark.kernels.shingles import word_grams
+from pdftabextract_spark.kernels.shingles import key_blobs, word_grams
 from pdftabextract_spark.operators.grid import assign_batches
 from pdftabextract_spark.operators.imgstage import (
     border_position_batches, line_batches, rotation_group,
@@ -72,10 +72,14 @@ def _page_groups_input(spark):
         F.lit("d").alias("doc_id"), F.col("id").cast("int").alias("page"))
 
 
+def _blob(*values):
+    return F.lit(bytearray(np.array(values, np.int64).tobytes()))
+
+
 def _shingle_input(spark):
     return spark.range(2, numPartitions=1).select(
-        F.col("id").alias("d1"), F.lit(1).cast("long").alias("k"),
-        F.array().cast("array<long>").alias("tail"))
+        F.col("id").cast("int").alias("bucket"), _blob(5).alias("d1"),
+        _blob(1).alias("k"), _blob(1).alias("n"), _blob(9).alias("tail"))
 
 
 def _text_input(spark):
@@ -85,7 +89,8 @@ def _text_input(spark):
 
 def _posting_input(spark):
     return spark.range(2, numPartitions=1).select(
-        F.col("id").alias("doc_id"), F.lit(7).cast("long").alias("s"))
+        F.col("id").cast("int").alias("bucket"), _blob(7, 8).alias("doc"),
+        _blob(9, 9).alias("s"))
 
 
 def _joined_input(spark):
@@ -148,8 +153,11 @@ def _lines_input(spark):
     ("shared_shingle_counts", _shingle_input,
      lambda batches: shared_shingle_counts(batches, 0.5)),
     ("word_grams", _text_input, lambda batches: word_grams(batches, 2)),
-    ("posting_tails", _posting_input,
-     lambda batches: posting_tails(batches, None)),
+    ("key_blobs", _text_input, lambda batches: key_blobs(batches, 2, 4)),
+    ("posting_blobs", _posting_input,
+     lambda batches: posting_blobs(batches, None, 4)),
+    ("stop_shingle_census", _posting_input,
+     lambda batches: stop_shingle_census(batches, 1)),
 ])
 def test_kernel_iterator_leaves_worker_without_zip_importers(
         spark, name, build, start):

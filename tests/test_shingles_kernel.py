@@ -1,7 +1,13 @@
 """kernels/shingles.word_grams: Spark-free against ``text.split(" ")``
 n-grams, and operators/dedup.word_shingles in Spark against the JVM
-expression it replaced (kept below as the oracle)."""
+expression it replaced (kept below as the oracle). kernels/shingles'
+gram keys and key_blobs: against a pure-Python rendering of the
+documented hash, across batches and across two processes."""
 
+import json
+import os
+import subprocess
+import sys
 from collections import Counter
 
 import numpy as np
@@ -9,8 +15,9 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from pdftabextract_spark.kernels import shingles
-from pdftabextract_spark.kernels.shingles import word_grams
+from pdftabextract_spark.kernels import overlap, shingles
+from pdftabextract_spark.kernels.overlap import buckets
+from pdftabextract_spark.kernels.shingles import key_blobs, word_grams
 from pdftabextract_spark.operators.dedup import word_shingles
 
 TEXTS = [None, "", " ", "a", "a  b c", "a b c ", "a b  ", "  lead in",
@@ -75,6 +82,120 @@ def test_word_grams_bounded_passes_equal_one_pass(monkeypatch, bound):
 
 def test_word_grams_empty_input_emits_nothing():
     assert list(word_grams(iter([]), 3)) == []
+
+
+def _reference_key(gram, n):
+    """The documented gram key in Python integers: per token, the top 32
+    bits of ``a_0 + a_1 * len + sum(a_(2+i) * chunk_i) mod 2^64`` for
+    each of two multiplier sets (32-bit little-endian chunks of its
+    UTF-8 bytes, zero-padded), halves joined; per gram, the same over
+    (1, hi_0, lo_0, ..., hi_(n-1), lo_(n-1)) of its tokens' keys."""
+    def hash_of(coords, stage):
+        a = shingles._multipliers(len(coords), stage).tolist()
+        top = [(sum(m * x for m, x in zip(row, coords)) % 2 ** 64) >> 32
+               for row in a]
+        return top[0] << 32 | top[1]
+
+    def token_key(tok):
+        raw = tok.encode()
+        chunks = [int.from_bytes(raw[i:i + 4], "little")
+                  for i in range(0, len(raw), 4)]
+        return hash_of([1, len(raw)] + chunks, 0)
+
+    tokens = gram.split(" ")
+    assert len(tokens) == n
+    keys = [token_key(t) for t in tokens]
+    return hash_of([1] + [h for k in keys for h in (k >> 32, k & 0xFFFFFFFF)],
+                   1)
+
+
+def _keys(batches, n, n_buckets=5):
+    """key_blobs output -> a list of (doc, key) pairs, checking the blob
+    rows: buckets of their keys, keys sorted, each doc's keys distinct."""
+    pairs = []
+    for b in key_blobs(iter(batches), n, n_buckets):
+        assert b.schema.names == ["bucket", "doc", "s"]
+        for bucket, doc, s in zip(*(b.column(c).to_pylist()
+                                    for c in ("bucket", "doc", "s"))):
+            doc = np.frombuffer(doc, np.int64)
+            s = np.frombuffer(s, np.uint64)
+            assert len(doc) == len(s) <= overlap.FLUSH_TAIL_VALUES
+            assert (buckets(s, n_buckets) == bucket).all()
+            assert (s[1:] >= s[:-1]).all()
+            pairs += zip(doc.tolist(), s.tolist())
+    assert len(pairs) == len(set(pairs)), "a doc repeats a key in a row"
+    return pairs
+
+
+@pytest.mark.parametrize("text_type", [pa.string(), pa.large_string()])
+@pytest.mark.parametrize("n", [1, 2, 3])
+@pytest.mark.parametrize("size", [1, 4, 100])
+def test_key_blobs_equal_the_reference_keys(n, size, text_type):
+    texts = TEXTS[1:] + ["a" * 37 + " é" * 5, "x  y z\u00a0w", "ß" * 9]
+    ids = [i * 7 - 20 for i in range(len(texts))]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts, text_type)],
+        names=["doc_id", "text"])
+    got = _keys([batch.slice(i, size) for i in range(0, len(ids), size)], n)
+    want = {(d, _reference_key(g, n)) for d, g in _split_grams(ids, texts, n)}
+    assert Counter(got) == Counter(want)
+
+
+def test_key_blobs_cut_rows_at_the_blob_bound(monkeypatch):
+    monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", 3)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2], pa.int64()),
+         pa.array(["a b c d e f g h i j k l", "a b c x y"])],
+        names=["doc_id", "text"])
+    out = list(key_blobs(iter([batch]), 2, 1))
+    assert out[0].num_rows == 5  # 14 distinct (doc, gram) pairs, <= 3 a row
+    assert Counter(_keys([batch], 2, 1)) == Counter(
+        (d, _reference_key(g, 2))
+        for d, g in _split_grams([1, 2], batch.column(1).to_pylist(), 2))
+
+
+_KEY_SCRIPT = """
+import json, sys
+import numpy as np, pyarrow as pa
+from pdftabextract_spark.kernels.shingles import key_blobs
+texts = json.loads(sys.stdin.read())
+batch = pa.RecordBatch.from_arrays(
+    [pa.array(range(len(texts)), pa.int64()), pa.array(texts)],
+    names=["doc_id", "text"])
+pairs = []
+for b in key_blobs(iter([batch]), 3, 4):
+    for doc, s in zip(b.column("doc").to_pylist(), b.column("s").to_pylist()):
+        pairs += zip(np.frombuffer(doc, np.int64).tolist(),
+                     np.frombuffer(s, np.uint64).tolist())
+print(json.dumps(sorted(pairs)))
+"""
+
+
+def test_gram_keys_equal_across_batches_and_processes():
+    rng = np.random.default_rng(12)
+    vocab = ["", "a", "bb", "ccc", "dddd", "eeeee", "é", "中文", "x" * 17]
+    texts = [" ".join(rng.choice(vocab, rng.integers(0, 20)))
+             for _ in range(300)]
+    ids = list(range(len(texts)))
+    whole = pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts)], names=["doc_id", "text"])
+    grams = _split_grams(ids, texts, 3)
+    key_of = {g: _reference_key(g, 3) for _, g in grams}
+    # distinct grams get distinct keys
+    assert len(set(key_of.values())) == len(key_of) > 600
+    pairs = sorted((d, key_of[g]) for d, g in grams)
+    # a gram gets its key whatever batch, and whatever other grams, it
+    # comes with
+    for size in (1, 7, 300):
+        assert sorted(_keys([whole.slice(i, size)
+                             for i in range(0, len(ids), size)], 3)) == pairs
+    for seed in ("0", "4242"):
+        env = dict(os.environ, PYTHONHASHSEED=seed,
+                   PYTHONPATH=os.pathsep.join(sys.path))
+        out = subprocess.run([sys.executable, "-c", _KEY_SCRIPT],
+                             input=json.dumps(texts), env=env, check=True,
+                             capture_output=True, text=True).stdout
+        assert [tuple(p) for p in json.loads(out)] == pairs
 
 
 def _jvm_shingles(docs, n, hashed):
