@@ -1,31 +1,50 @@
 """Shared-shingle counts per document: the posting and counting kernels
 of operators/dedup.ngram_jaccard_pairs, over blob rows.
 
-The kernels of ngram_jaccard_pairs partition their own output. Each
-element (a (doc, shingle key) pair, or a doc's posting tails) has a
-bucket in ``[0, n_buckets)``, and one output row per bucket holds that
-bucket's elements as raw int64 arrays in binary columns ("blobs").
-``DataFrame.repartitionById`` sends a row to partition
-``bucket % n_partitions``, so the JVM moves a few rows per batch instead
-of one row per element. A bucket is a contiguous range of a 64-bit hash
-(``buckets``), so sorting elements by the hash sorts them by bucket too.
-A partition holds ``n_buckets / n_partitions`` buckets; when that is
-more than one, the plan sorts the blob rows on ``bucket`` and each
-kernel task handles one bucket (a "group") at a time, so its memory is
-one group's elements (``blob_groups``).
+The kernels of ngram_jaccard_pairs partition their own output: one
+output row holds many elements as raw int64 arrays in binary columns
+("blobs"), and ``DataFrame.repartitionById`` places the row, so the JVM
+moves a few rows per batch instead of one row per element.
 
-``posting_blobs`` reads the (doc, s) blobs of kernels/shingles.key_blobs.
-It builds each shingle's sorted doc list (its posting list), counting a
-repeated (s, doc) pair once, and drops the shingles in more than
-``max_shingle_df`` docs. Each doc d1 of a list gets one membership: the
-docs after d1 in that list are its tail. The memberships are bucketed by
-a hash of d1 and emitted as (d1, k, n, tail) blobs: per d1, ``k``
-memberships whose tails, ``n`` values in all, are concatenated in
-``tail``. ``shared_shingle_counts`` reads those blobs one d1 bucket at a
-time. A doc's size is the sum of its ``k``, and counting each d2 over a d1's
-tails gives the number of shingles the pair (d1, d2) shares. The pairs
-are counted one bucket of documents at a time, in memory, instead of as
-one row per pair through an exchange and a hash aggregation.
+Shingle exchange. kernels/shingles.key_blobs gives each (doc, shingle
+key) element a bucket in ``[0, n_buckets)`` (``buckets``: a contiguous
+range of the 64-bit key) and emits one row per bucket; the row goes to
+partition ``bucket % n_partitions``. A partition holds ``n_buckets /
+n_partitions`` buckets; when that is more than one, the plan sorts the
+blob rows on ``bucket`` and ``posting_blobs`` reads one bucket (a
+"group") at a time (``blob_groups``), so its memory is one group's
+elements.
+
+``posting_blobs`` builds each shingle's sorted doc list (its posting
+list), counting a repeated (s, doc) pair once, and drops the shingles
+in more than ``max_shingle_df`` docs. Each doc d1 of a list gets one
+membership: the docs after d1 in that list are its tail. A group's
+memberships are ordered by d1's sort key (``d1_keys``, a bijective
+64-bit hash of d1) and emitted as (part, start, d1, k, n, tail) rows:
+per d1, ``k`` memberships whose tails, ``n`` values in all, are
+concatenated in ``tail``; ``part`` is d1's partition, a contiguous
+range of sort keys, and ``start`` the row's smallest sort key.
+
+Tail exchange. A d1's tails come from every posting group, and their
+volume grows with the square of the shingles' document frequency, so
+the counting kernel cannot hold a partition's, or a fixed bucket's,
+tails at once. Instead each posting group emits its rows in sort-key
+order (one sorted run), cut so that a row holds at most
+``FLUSH_TAIL_VALUES / (2 n_buckets)`` values, and the plan sorts the
+tail rows (a few per map batch) on ``start``. ``shared_shingle_counts``
+reads them in that order: once a row with start ``s`` has arrived, no
+later row holds a d1 keyed below ``s``, so those d1 are complete. When
+its buffer reaches FLUSH_TAIL_VALUES it counts them and keeps the rest,
+at most one part-read row per run (half that bound) plus the d1 keyed
+at ``s``. So a counting task holds about twice FLUSH_TAIL_VALUES
+values, plus one d1's tails, whatever the corpus. The price is row
+size: it shrinks as the bucket count grows, to one value a row at 2^21
+buckets (about 8 TiB of documents at 4 MiB a group).
+
+A doc's size is the sum of its ``k``, and counting each d2 over a d1's
+tails gives the number of shingles the pair (d1, d2) shares; the pairs
+are counted in memory instead of as one row per pair through an
+exchange and a hash aggregation.
 
 Every kernel first calls kernels/pyworker.forget_zip_importers, so the
 Python worker that runs the task skips the zip re-reads of its next
@@ -37,20 +56,26 @@ import pyarrow as pa
 
 from .pyworker import forget_zip_importers
 
-POSTING_DDL = "bucket int, d1 binary, k binary, n binary, tail binary"
+POSTING_DDL = ("part int, start long, d1 binary, k binary, n binary, "
+               "tail binary")
 OUT_SCHEMA = pa.schema([("d1", pa.int64()), ("d2", pa.int64()),
                         ("common", pa.int64()), ("sz", pa.int64())])
 OUT_DDL = "d1 long, d2 long, common long, sz long"
 CENSUS_DDL = "n long"
 
-# the most int64 values one blob holds, and the most membership slots
-# (one per membership plus its tail values) one posting batch holds: it
-# bounds a posting task's memory beyond its group, and keeps every blob
-# far below the 2 GiB that Arrow's int32 binary offsets allow
+# the most int64 values one blob holds, the most membership slots (one
+# per membership plus its tail values) one posting batch holds, and the
+# values the counting kernel gathers before it counts the complete d1:
+# it bounds a kernel task's memory beyond its group
 FLUSH_TAIL_VALUES = 1 << 22
+
+# Arrow binary offsets are int32: the bytes one blob column of a batch
+# may hold (blob_batches starts a new batch before it)
+MAX_BLOB_BYTES = (1 << 31) - 1
 
 _INT64_MAX = int(np.iinfo(np.int64).max)
 _U32 = np.uint64(32)
+_TOP = np.uint64(1 << 63)
 
 
 def mix64(x: np.ndarray) -> np.ndarray:
@@ -65,7 +90,18 @@ def mix64(x: np.ndarray) -> np.ndarray:
 def buckets(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
     """uint64 hashes -> int32 buckets in [0, n_buckets), non-decreasing
     in the hash (n_buckets < 2^31: repartitionById takes an int)."""
+    if not 0 < n_buckets < 1 << 31:
+        raise ValueError("buckets: n_buckets must be in [1, 2^31), got %r"
+                         % (n_buckets,))
     return ((hashes >> _U32) * np.uint64(n_buckets) >> _U32).astype(np.int32)
+
+
+def d1_keys(d1: np.ndarray) -> np.ndarray:
+    """Doc ids -> their int64 sort keys in the tail exchange: ``mix64``
+    with the top bit flipped, so signed order (the JVM's) is the order
+    of ``mix64`` that ``buckets`` ranges over. Distinct ids get distinct
+    keys."""
+    return (mix64(d1) ^ _TOP).view(np.int64)
 
 
 def _run_starts(*cols: np.ndarray) -> np.ndarray:
@@ -77,30 +113,62 @@ def _run_starts(*cols: np.ndarray) -> np.ndarray:
     return np.flatnonzero(brk)
 
 
+def _cut(lo: np.ndarray, hi: np.ndarray, step: int):
+    """Non-empty ranges [lo, hi), in order, cut at the multiples of
+    ``step`` -> (i, a, b): piece j is [a[j], b[j]) of range i[j]."""
+    first = lo // step
+    n = (hi - 1) // step - first + 1
+    i = np.repeat(np.arange(len(lo)), n)
+    cell = first[i] + np.arange(len(i)) - np.repeat(np.cumsum(n) - n, n)
+    return i, np.maximum(lo[i], cell * step), np.minimum(hi[i],
+                                                         (cell + 1) * step)
+
+
 def _blob(values: np.ndarray, bounds: np.ndarray) -> pa.Array:
     """A binary array whose row i holds ``values[bounds[i]:bounds[i+1]]``
-    as raw bytes, without copying ``values`` (bounds start at 0)."""
-    values = np.ascontiguousarray(values)
-    offsets = (bounds * values.itemsize).astype(np.int32)
+    as raw bytes, without copying a contiguous ``values``. Raises rather
+    than let the int32 offsets wrap past MAX_BLOB_BYTES."""
+    values = np.ascontiguousarray(values[bounds[0]:bounds[-1]])
+    offsets = (bounds - bounds[0]) * values.itemsize
+    if offsets[-1] > MAX_BLOB_BYTES:
+        raise ValueError("blob column of %d bytes exceeds the %d that "
+                         "Arrow binary offsets allow"
+                         % (offsets[-1], MAX_BLOB_BYTES))
     return pa.Array.from_buffers(pa.binary(), len(bounds) - 1, [
-        None, pa.py_buffer(offsets), pa.py_buffer(values)])
+        None, pa.py_buffer(offsets.astype(np.int32)),
+        pa.py_buffer(values)])
 
 
-def blob_batch(bucket: np.ndarray, **columns) -> pa.RecordBatch:
-    """Elements sorted by ``bucket`` -> one row per bucket run, cut into
-    rows of at most FLUSH_TAIL_VALUES elements, with each named element
-    array as a blob column."""
+def blob_batches(bucket: np.ndarray, **columns):
+    """Elements sorted by ``bucket`` -> batches of one row per bucket run,
+    cut into rows of at most FLUSH_TAIL_VALUES elements, with each named
+    int64 element array as a blob column. A batch holds at most
+    MAX_BLOB_BYTES of each column, so one long pass becomes several
+    batches."""
     starts = _run_starts(bucket)
-    size = np.diff(np.append(starts, len(bucket)))
-    step = max(FLUSH_TAIL_VALUES, 1)
-    n_rows = -(-size // step)
-    j = np.arange(n_rows.sum()) - np.repeat(np.cumsum(n_rows) - n_rows,
-                                            n_rows)
-    bounds = np.append(np.repeat(starts, n_rows) + j * step, len(bucket))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(bucket[bounds[:-1]])]
-        + [_blob(v, bounds) for v in columns.values()],
-        names=["bucket", *columns])
+    _, lo, hi = _cut(starts, np.append(starts[1:], len(bucket)),
+                     max(FLUSH_TAIL_VALUES, 1))
+    bounds = np.append(lo, len(bucket))
+    cap = max(MAX_BLOB_BYTES // 8, 1)
+    i = 0
+    while i < len(lo):
+        j = max(i + 1, int(np.searchsorted(bounds, bounds[i] + cap,
+                                           side="right")) - 1)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(bucket[bounds[i:j]])]
+            + [_blob(v, bounds[i:j + 1]) for v in columns.values()],
+            names=["bucket", *columns])
+        i = j
+
+
+def blob_rows(batches, key: str, **dtypes):
+    """Blob batches -> (key value, [named blob columns as numpy arrays of
+    the given dtypes]) per row, the arrays viewing the batch's buffers."""
+    for batch in batches:
+        cols = [batch.column(name) for name in dtypes]
+        for i, k in enumerate(batch.column(key).to_pylist()):
+            yield k, [np.frombuffer(c[i].as_buffer(), dt)
+                      for c, dt in zip(cols, dtypes.values())]
 
 
 def blob_groups(batches, **dtypes):
@@ -110,20 +178,17 @@ def blob_groups(batches, **dtypes):
     rows were not sorted on bucket; it raises instead of splitting the
     group."""
     closed, current, parts = set(), None, []
-    for batch in batches:
-        cols = [batch.column(name) for name in dtypes]
-        for i, b in enumerate(batch.column("bucket").to_pylist()):
-            if b != current:
-                if current is not None:
-                    yield [np.concatenate(p) for p in zip(*parts)]
-                    closed.add(current)
-                if b in closed:
-                    raise RuntimeError(
-                        "blob_groups: bucket %d recurred after its group "
-                        "closed; rows are not sorted on bucket" % b)
-                current, parts = b, []
-            parts.append([np.frombuffer(c[i].as_buffer(), dt)
-                          for c, dt in zip(cols, dtypes.values())])
+    for b, row in blob_rows(batches, "bucket", **dtypes):
+        if b != current:
+            if current is not None:
+                yield [np.concatenate(p) for p in zip(*parts)]
+                closed.add(current)
+            if b in closed:
+                raise RuntimeError(
+                    "blob_groups: bucket %d recurred after its group "
+                    "closed; rows are not sorted on bucket" % b)
+            current, parts = b, []
+        parts.append(row)
     if current is not None:
         yield [np.concatenate(p) for p in zip(*parts)]
 
@@ -164,21 +229,25 @@ def _posting_lists(doc: np.ndarray, key: np.ndarray):
     return doc, np.diff(np.append(_run_starts(key), len(key)))
 
 
-def posting_blobs(batches, max_shingle_df, n_buckets: int):
+def posting_blobs(batches, max_shingle_df, n_buckets: int, n_part: int):
     """``mapInArrow`` function: (bucket, doc, s) blob rows with each
-    bucket's rows contiguous -> (bucket, d1, k, n, tail) blob rows (see
-    ``_tail_blobs``). ``max_shingle_df=None`` keeps every shingle.
+    bucket's rows contiguous -> (part, start, d1, k, n, tail) blob rows
+    for ``n_part`` partitions (see ``_tail_blobs``).
+    ``max_shingle_df=None`` keeps every shingle. ``n_buckets`` is the
+    shingle exchange's bucket count, so the number of sorted runs the
+    counting kernel merges.
 
     A shingle's doc list counts each doc once (a 64-bit key collision of
     two grams of one doc is one shingle, and a doc split over two input
     rows is one doc)."""
     forget_zip_importers()
+    row_values = max(1, FLUSH_TAIL_VALUES // (2 * n_buckets))
     for doc, key in blob_groups(batches, doc=np.int64, s=np.uint64):
         docs, lengths = _posting_lists(doc, key)
         if max_shingle_df is not None:
             keep = lengths <= max_shingle_df
             docs, lengths = docs[np.repeat(keep, lengths)], lengths[keep]
-        yield from _tail_blobs(docs, lengths, n_buckets)
+        yield from _tail_blobs(docs, lengths, n_part, row_values)
 
 
 def stop_shingle_census(batches, max_shingle_df: int):
@@ -192,69 +261,94 @@ def stop_shingle_census(batches, max_shingle_df: int):
     yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], ["n"])
 
 
-def _tail_blobs(docs, lengths, n_buckets):
-    """Posting lists -> (bucket, d1, k, n, tail) blob batches.
+def _tail_blobs(docs, lengths, n_part, row_values):
+    """Posting lists -> (part, start, d1, k, n, tail) blob batches.
 
     Every doc of every list is a membership with one head slot and its
     tail (the docs after it in its list). The memberships are ordered by
-    ``mix64(d1)`` (so by d1 bucket, each d1's memberships together) and
-    cut into batches of at most FLUSH_TAIL_VALUES slots, so a long list
-    (exact mode) never builds all its tails at once; a tail that crosses
-    a cut continues in the next batch. A batch holds one row per d1
-    bucket and, in it, one (d1, k, n) entry per d1: ``k`` counts the
-    heads in the batch, so an entry that only continues a tail has k = 0
-    and a doc's k still sums to its number of lists."""
+    ``d1_keys`` (each d1's memberships together) and their slots cut
+    into batches of at most FLUSH_TAIL_VALUES, so a long list (exact
+    mode) never builds all its tails at once, and into rows of at most
+    ``row_values`` slots and one partition; a tail that crosses a cut
+    continues in the next row. A row holds one (d1, k, n) entry per d1:
+    ``k`` counts the heads in the row, so an entry that only continues a
+    tail has k = 0 and a doc's k still sums to its number of lists."""
     if not len(docs):
         return
-    at = np.arange(len(docs), dtype=np.int64)
-    hd = mix64(docs)
-    order = np.argsort(hd, kind="stable")
-    n_tail = (np.repeat(np.cumsum(lengths), lengths) - at - 1)[order]
+    key = d1_keys(docs)
+    order = np.argsort(key, kind="stable")
+    n_tail = (np.repeat(np.cumsum(lengths), lengths)
+              - np.arange(len(docs)) - 1)[order]
     hi = np.cumsum(n_tail + 1)
     lo = hi - n_tail - 1
+    # slot lo + t (t >= 1) of a membership holds docs[order + t]
+    src = order - lo
+    d1, key = docs[order], key[order]
+    part = buckets(key.view(np.uint64) ^ _TOP, n_part)
     step = max(FLUSH_TAIL_VALUES, 1)
-    first = lo // step
-    n_pieces = (hi - 1) // step - first + 1
-    elem = np.repeat(at, n_pieces)
-    j = np.arange(len(elem)) - np.repeat(np.cumsum(n_pieces) - n_pieces,
-                                         n_pieces)
-    chunk = first[elem] + j
-    p_lo = np.maximum(lo[elem], chunk * step)
-    t_lo = np.maximum(p_lo, lo[elem] + 1)
-    t_n = np.maximum(np.minimum(hi[elem], (chunk + 1) * step) - t_lo, 0)
-    # the piece's first tail value sits right after its membership's doc
-    src = order[elem] + t_lo - lo[elem]
-    k = (p_lo == lo[elem]).astype(np.int64)
-    d1, hd = docs[order][elem], hd[order][elem]
-    bounds = _run_starts(chunk).tolist() + [len(chunk)]
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        heads = _run_starts(d1[a:b])
-        n = np.add.reduceat(t_n[a:b], heads)
-        voff = np.append(0, np.cumsum(t_n[a:b]))
+    m, a, b = _cut(lo, hi, step)
+    bounds = np.append(_run_starts(a // step), len(m))
+    for x, y in zip(bounds[:-1], bounds[1:]):
+        j, p_lo, p_hi = _cut(a[x:y], b[x:y], row_values)
+        i = m[x:y][j]
+        cell = p_lo // row_values
+        t_lo = np.maximum(p_lo, lo[i] + 1)
+        t_n = np.maximum(p_hi - t_lo, 0)
+        voff = np.append(0, np.cumsum(t_n))
         take = (np.arange(voff[-1], dtype=np.int64)
-                + np.repeat(src[a:b] - voff[:-1], t_n[a:b]))
-        bucket = buckets(hd[a:b][heads], n_buckets)
-        rows = np.append(_run_starts(bucket), len(heads))
+                + np.repeat(src[i] + t_lo - voff[:-1], t_n))
+        entry = _run_starts(cell, d1[i])
+        n = np.add.reduceat(t_n, entry)
+        e = i[entry]
+        rows = np.append(_run_starts(cell[entry], part[e]), len(entry))
         yield pa.RecordBatch.from_arrays([
-            pa.array(bucket[rows[:-1]]),
-            _blob(d1[a:b][heads], rows),
-            _blob(np.add.reduceat(k[a:b], heads), rows),
+            pa.array(part[e][rows[:-1]]),
+            pa.array(key[e][rows[:-1]]),
+            _blob(d1[e], rows),
+            _blob(np.add.reduceat((p_lo == lo[i]).astype(np.int64), entry),
+                  rows),
             _blob(n, rows),
             _blob(docs[take], np.append(0, np.cumsum(n))[rows]),
-        ], names=["bucket", "d1", "k", "n", "tail"])
+        ], names=["part", "start", "d1", "k", "n", "tail"])
 
 
 def shared_shingle_counts(batches, threshold: float):
-    """``mapInArrow`` function: (bucket, d1, k, n, tail) blob rows with
-    each bucket's rows contiguous -> ``OUT_SCHEMA`` batches holding every
-    pair that can still reach ``round(jaccard, 6) >= threshold`` with its
+    """``mapInArrow`` function: (part, start, d1, k, n, tail) blob rows
+    sorted on ``start`` -> ``OUT_SCHEMA`` batches holding every pair that
+    can still reach ``round(jaccard, 6) >= threshold`` with its
     shared-shingle count and d1's size (the sum of its ``k``), plus one
-    size row (d2 and common null) per d1. Every entry of a d1 is in its
-    bucket, so one group at a time counts each d1 whole."""
+    size row (d2 and common null) per d1.
+
+    Rows are gathered until they hold FLUSH_TAIL_VALUES values; then the
+    d1 keyed below the next row's start, which no later row holds, are
+    counted and the rest kept. A start below the one before means the
+    rows are not sorted; counting on would split a d1, so it raises."""
     forget_zip_importers()
-    for d1, k, n, tail in blob_groups(batches, d1=np.int64, k=np.int64,
-                                      n=np.int64, tail=np.int64):
-        yield _counts(d1, k, n, tail, threshold)
+    held, size, limit, last = [], 0, FLUSH_TAIL_VALUES, None
+    for start, row in blob_rows(batches, "start", d1=np.int64, k=np.int64,
+                                n=np.int64, tail=np.int64):
+        if last is not None and start < last:
+            raise RuntimeError(
+                "shared_shingle_counts: a row starting at %d came after "
+                "one starting at %d; rows are not sorted on start"
+                % (start, last))
+        last = start
+        if size >= limit:
+            d1, k, n, tail = (np.concatenate(c) for c in zip(*held))
+            done = d1_keys(d1) < start
+            if done.any():
+                yield _counts(d1[done], k[done], n[done],
+                              tail[np.repeat(done, n)], threshold)
+            keep = ~done
+            held = [(d1[keep], k[keep], n[keep], tail[np.repeat(keep, n)])]
+            size = int(keep.sum()) + len(held[0][3])
+            limit = size + FLUSH_TAIL_VALUES
+        held.append(row)
+        size += len(row[0]) + len(row[3])
+    if held:
+        d1, k, n, tail = (np.concatenate(c) for c in zip(*held))
+        if len(d1):
+            yield _counts(d1, k, n, tail, threshold)
 
 
 def _counts(d1, k, n, tail, threshold):

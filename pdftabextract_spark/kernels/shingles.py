@@ -43,7 +43,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .overlap import _run_starts, blob_batch, buckets, mix64
+from .overlap import _run_starts, blob_batches, buckets, mix64
 from .pyworker import forget_zip_importers
 
 KEY_BLOB_DDL = "bucket int, doc binary, s binary"
@@ -90,8 +90,9 @@ def key_blobs(batches, n: int, n_buckets: int):
     column without nulls -> (bucket, doc, s) blob rows
     (``KEY_BLOB_DDL``): each doc's distinct gram keys, sorted by key, one
     row per key bucket (kernels/overlap.buckets) of each pass over a
-    batch. The grams of a doc are deduplicated within its row, so a doc
-    split over two input rows yields its keys once per row."""
+    batch (kernels/overlap.blob_batches). The grams of a doc are
+    deduplicated within its row, so a doc split over two input rows
+    yields its keys once per row."""
     forget_zip_importers()
     for batch in batches:
         for part in _passes(batch, n):
@@ -104,8 +105,8 @@ def key_blobs(batches, n: int, n_buckets: int):
             first = _run_starts(key, row)
             key = key[first]
             doc = part.column(0).to_numpy().astype(np.int64, copy=False)
-            yield blob_batch(buckets(key, n_buckets),
-                             doc=doc[row[first]], s=key)
+            yield from blob_batches(buckets(key, n_buckets),
+                                    doc=doc[row[first]], s=key)
 
 
 def _gram_tokens(batch, n):

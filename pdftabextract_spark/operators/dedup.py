@@ -8,10 +8,10 @@ on doc_id after the word explode (map-side partial min/sum aggregation
 keeps the exchange small); n-gram Jaccard is three Arrow
 kernels (shingle keys, per-shingle sorted doc lists, shared-shingle
 counts per document) that partition their own output and exchange
-int64 blobs, a few rows per batch, through ``repartitionById``; the
-doc-list length (the pair fanout) is bounded by capping document
-frequency (stop-shingle removal) — the knob at 100 TB, exposed as
-``max_shingle_df``.
+int64 blobs, a few rows per batch, through ``repartitionById``, each
+task holding a bounded share of its stream; the doc-list length (the
+pair fanout) is bounded by capping document frequency (stop-shingle
+removal) — the knob at 100 TB, exposed as ``max_shingle_df``.
 """
 
 from functools import partial
@@ -101,10 +101,22 @@ def word_shingles(docs: DataFrame, n=3, text_col="text", id_col="doc_id",
 
 MAX_SHINGLE_DF_DEFAULT = 1000
 
-# documents bytes (the plan's size estimate) one group of a q18 kernel
-# task covers at most: a task holds one group's shingles or tails at a
-# time, so its memory does not grow with the corpus
+# documents bytes (the plan's size estimate) one group of the shingle
+# exchange covers at most: a posting task holds one group's (doc, key)
+# pairs at a time, a number linear in those bytes. A plan without
+# statistics gets one group per partition.
 GROUP_INPUT_BYTES = 1 << 22
+# the most buckets the shingle exchange has: far below the 2^31 that
+# repartitionById's int partition id allows
+MAX_BUCKETS = 1 << 24
+
+
+def _bucket_count(size, n_part: int) -> int:
+    """The shingle exchange's bucket count: ``n_part`` times the groups
+    a partition holds, one per GROUP_INPUT_BYTES of the documents' size
+    estimate ``size`` (one group when it is None), MAX_BUCKETS at most."""
+    groups = -(-(size or 0) // (n_part * GROUP_INPUT_BYTES))
+    return n_part * min(max(1, groups), max(1, MAX_BUCKETS // n_part))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
@@ -127,20 +139,22 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     Docs with a null id take no part.
 
     Plan, three Arrow kernels that partition their own output, and three
-    exchanges. Each kernel emits, per batch, one row per target bucket
-    holding raw int64 arrays (kernels/overlap); ``repartitionById`` puts
-    bucket b in partition ``b % P`` (P the shuffle partitions). A
-    partition holds G buckets, G from the documents' size estimate and
-    GROUP_INPUT_BYTES; if G > 1 the blob rows are sorted on bucket (a
-    few rows per map batch) and a task handles one bucket at a time.
+    exchanges. Each kernel emits, per batch, a few rows holding raw
+    int64 arrays (kernels/overlap), and ``repartitionById`` places
+    them; P is the session's shuffle partitions.
 
     1. kernels/shingles.key_blobs keys each doc's distinct grams with a
-       64-bit hash of their bytes and emits the (doc, key) pairs bucketed
-       by key;
+       64-bit hash of their bytes and emits the (doc, key) pairs in one
+       row per key bucket. Bucket b goes to partition ``b % P``; a
+       partition holds G buckets, G from the documents' size estimate
+       and GROUP_INPUT_BYTES (1 without statistics). If G > 1 the rows
+       are sorted on bucket and a task reads one bucket at a time;
     2. kernels/overlap.posting_blobs builds each shingle's sorted doc
        list, drops the stop-shingles, and emits per doc d1 its number of
-       lists ``k`` and the docs after d1 in them (its tails), bucketed by
-       a hash of d1;
+       lists ``k`` and the docs after d1 in them (its tails), in rows
+       ordered by a hash of d1 and routed by a range of it. The rows are
+       sorted on their first hash, so the counting kernel can count the
+       d1 below it and hold a bounded buffer, however long the lists;
     3. kernels/overlap.shared_shingle_counts counts each (d1, d2)'s
        shared shingles per d1. A doc's size ``sz1`` is the sum of its
        ``k``, so the kernel drops every pair that fails the necessary bound
@@ -165,19 +179,15 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
     # their bytes would coalesce the stages whose work (the posting
     # lists, the counting kernel) is far larger than their input.
     n_part = shuffle_partitions(docs.sparkSession)
-    n_buckets = n_part * max(1, -(-(size_estimate(docs) or 0)
-                                  // (n_part * GROUP_INPUT_BYTES)))
-
-    def exchange(blobs):
-        out = blobs.repartitionById(n_part, "bucket")
-        return out.sortWithinPartitions("bucket") if n_buckets > n_part \
-            else out
-
-    keys = exchange(spread_small_input(docs).select(
+    n_buckets = _bucket_count(size_estimate(docs), n_part)
+    keys = (spread_small_input(docs).select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("text"))
         .mapInArrow(partial(key_blobs, n=n, n_buckets=n_buckets),
-                    KEY_BLOB_DDL))
+                    KEY_BLOB_DDL)
+        .repartitionById(n_part, "bucket"))
+    if n_buckets > n_part:
+        keys = keys.sortWithinPartitions("bucket")
     if max_shingle_df is not None and log_dropped:
         # diagnostic path (explicitly off the hot path): a separate df
         # census over the same keys, so the dropped count can be reported
@@ -189,9 +199,10 @@ def ngram_jaccard_pairs(docs: DataFrame, n=3, threshold=0.2,
             warnings.warn(
                 "ngram_jaccard_pairs: dropping %d stop-shingles with "
                 "df > %d" % (n_hot, max_shingle_df))
-    tails = exchange(keys.mapInArrow(
+    tails = (keys.mapInArrow(
         partial(posting_blobs, max_shingle_df=max_shingle_df,
-                n_buckets=n_buckets), POSTING_DDL))
+                n_buckets=n_buckets, n_part=n_part), POSTING_DDL)
+        .repartitionById(n_part, "part").sortWithinPartitions("start"))
     counts = tails.mapInArrow(
         partial(shared_shingle_counts, threshold=threshold), _COUNTS_DDL)
     sz2 = F.max(F.when(F.col("d2").isNull(), F.col("sz"))).over(

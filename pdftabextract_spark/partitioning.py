@@ -27,12 +27,19 @@ SPREAD_INPUT_MIN_BYTES = 4 << 20
 
 def size_estimate(df: DataFrame):
     """The optimized plan's size estimate of ``df`` in bytes, or None when
-    plan statistics are unavailable. Driver-side only; runs no job."""
+    plan statistics are unavailable. Catalyst sizes a leaf without
+    statistics (an RDD, say) at ``spark.sql.defaultSizeInBytes`` and a
+    join at the product of its sides, so an estimate at or above that
+    value counts as unavailable too. Driver-side only; runs no job."""
     try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats()
+        jdf = df._jdf
+        size = int(str(jdf.queryExecution().optimizedPlan().stats()
                        .sizeInBytes()))
+        unknown = int(jdf.sparkSession().sessionState().conf()
+                      .defaultSizeInBytes())
     except Exception:
         return None
+    return None if size >= unknown else size
 
 
 def spread_small_input(df: DataFrame,

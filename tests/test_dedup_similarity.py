@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pdftabextract_spark.operators import dedup as D
 from pdftabextract_spark.operators import similarity as S
 from pdftabextract_spark.operators import textstats as T
+from pdftabextract_spark.partitioning import size_estimate
 
 
 @pytest.fixture(scope="module")
@@ -220,20 +221,22 @@ def _plan(spark, df):
 
 
 def _sorts_below_kernels(plan):
-    """Sort nodes in the subtree of any MapInArrow of a formatted plan's
-    tree (a node's subtree is the lines below it indented deeper)."""
+    """The first sort key of every Sort node in the subtree of a
+    MapInArrow of a formatted plan's tree (a node's subtree is the lines
+    below it indented deeper), each node once."""
     import re
-    tree = [(len(m.group(1)), m.group(2)) for m in re.finditer(
-        r"^([ :+\-]*)(\w+) \(\d+\)$", plan.split("\n\n")[0], re.M)]
-    found = []
-    for i, (depth, name) in enumerate(tree):
+    tree = [(len(m.group(1)), m.group(2), m.group(3)) for m in re.finditer(
+        r"^([ :+\-]*)(\w+) \((\d+)\)$", plan.split("\n\n")[0], re.M)]
+    found = set()
+    for i, (depth, name, _) in enumerate(tree):
         if name == "MapInArrow":
-            for d, below in tree[i + 1:]:
+            for d, below, num in tree[i + 1:]:
                 if d <= depth:
                     break
                 if below == "Sort":
-                    found.append(below)
-    return found
+                    found.add(num)
+    return sorted(re.search(r"^\(%s\) Sort\n.*\nArguments: \[(\w+)#" % num,
+                            plan, re.M).group(1) for num in found)
 
 
 def _kernel_exchange_records(spark, df):
@@ -265,11 +268,12 @@ def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
     """The plan reads the documents once and never aggregates or
     nested-loop-joins the pair stream: three Arrow kernels key the
     shingles, build the posting lists and count shared shingles per d1,
-    with no JVM generator or collect_list left. No Sort feeds a kernel,
-    and each kernel exchange moves a few blob rows per map batch: at most
-    one per (map batch, bucket), buckets = partitions x groups (1 group
-    on this corpus). The log_dropped plan is the same after its census
-    job."""
+    with no JVM generator or collect_list left. The one Sort below a
+    kernel orders the tail exchange's blob rows on ``start``, and each
+    kernel exchange moves a few blob rows per map batch: at most one per
+    (map batch, bucket), buckets = partitions x groups (1 group on this
+    corpus), and one per (posting task, partition) for the tails. The
+    log_dropped plan is the same after its census job."""
     import re
     path = str(tmp_path / "documents.parquet")
     _overlap_docs(spark).write.parquet(path)
@@ -297,7 +301,8 @@ def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
         assert not re.search(r"Keys \[2\]: \[d1#\d+L?, d2#\d+L?\]", plan), plan
         assert out.schema.simpleString() == \
             "struct<d1:bigint,d2:bigint,common:bigint,jaccard:double>"
-        assert nodes("Sort") == 1 and _sorts_below_kernels(plan) == [], plan
+        assert nodes("Sort") == 2, plan
+        assert _sorts_below_kernels(plan) == ["start"], plan
         keys, tails = _kernel_exchange_records(spark, out)
         assert 0 < keys <= map_batches * n_part
         # the posting kernel's map batches: one per group it counts
@@ -305,19 +310,57 @@ def test_ngram_jaccard_plan_one_scan_no_pair_aggregation(spark, tmp_path):
 
 
 def test_ngram_jaccard_many_groups_sort_blob_rows_and_match(spark,
-                                                          monkeypatch):
+                                                          monkeypatch,
+                                                          tmp_path):
     """With the group budget far below the corpus, each partition holds
-    several buckets: the plan sorts the blob rows on bucket below the
-    posting and counting kernels, and the result is unchanged."""
-    docs = _overlap_docs(spark, seed=9)
+    several buckets: the plan sorts the key blob rows on bucket below the
+    posting kernel, and the result is unchanged. (The documents come from
+    parquet: a plan without statistics has one group per partition.)"""
+    path = str(tmp_path / "documents.parquet")
+    _overlap_docs(spark, seed=9).write.parquet(path)
+    docs = spark.read.parquet(path)
     want = _brute_force_pairs(spark, docs, 3, 0.3, 40)
     assert want.count() > 20
     monkeypatch.setattr(D, "GROUP_INPUT_BYTES", 64)
     out = D.ngram_jaccard_pairs(docs, threshold=0.3, max_shingle_df=40)
-    assert len(_sorts_below_kernels(_plan(spark, out))) >= 2
+    assert _sorts_below_kernels(_plan(spark, out)) == ["bucket", "start"]
     _assert_same_rows(spark.createDataFrame(
         out.collect(), "d1 long, d2 long, common long, jaccard double"),
         want)
+
+
+def test_ngram_jaccard_input_without_statistics_runs_one_group(spark,
+                                                              tmp_path):
+    """Catalyst sizes an input built from an RDD (or from local rows) at
+    spark.sql.defaultSizeInBytes. The bucket count reads that as no
+    estimate, one group per partition, so the result and the kernel
+    exchanges' blob rows equal those of the same docs read from parquet,
+    which has statistics."""
+    path = str(tmp_path / "documents.parquet")
+    _overlap_docs(spark, seed=7, n_docs=120).write.parquet(path)
+    docs = spark.read.parquet(path)
+    from_rdd = spark.createDataFrame(docs.rdd, docs.schema)
+    assert size_estimate(docs) is not None
+    assert size_estimate(from_rdd) is None
+    want = D.ngram_jaccard_pairs(docs, threshold=0.3)
+    got = D.ngram_jaccard_pairs(from_rdd, threshold=0.3)
+    assert _kernel_exchange_records(spark, got) == \
+        _kernel_exchange_records(spark, want)
+    assert want.count() > 5
+    _assert_same_rows(got, want)
+
+
+def test_ngram_jaccard_bucket_count_stays_in_int32():
+    n_part = 8
+    assert D._bucket_count(None, n_part) == n_part
+    assert D._bucket_count(0, n_part) == n_part
+    assert D._bucket_count(n_part * D.GROUP_INPUT_BYTES * 3, n_part) == \
+        3 * n_part
+    # estimates far past any corpus (a product of join sides) clamp
+    for size in (1 << 62, (1 << 63) - 1, 1 << 90):
+        assert D._bucket_count(size, n_part) == D.MAX_BUCKETS
+    assert D.MAX_BUCKETS < 1 << 31
+    assert D._bucket_count(1 << 90, 3) == 3 * (D.MAX_BUCKETS // 3)
 
 
 def test_ngram_jaccard_rejects_non_integral_id_before_any_job(spark):

@@ -1,14 +1,15 @@
 """kernels/overlap against brute-force counting, without Spark.
 
 The kernels read blob rows: (bucket, doc, s) rows as kernels/shingles
-emits them and (bucket, d1, k, n, tail) rows as the posting kernel emits
-them. The tests cut each bucket's elements into blob rows at random
-points, as several map batches give, and hand the rows over in Arrow
-batches of several sizes. ``_exchange`` stands in for
-``repartitionById`` followed by ``sortWithinPartitions("bucket")``: row
-r goes to partition ``r.bucket % P``, rows sorted on bucket. Results
-must equal brute-force counting over the posting lists, and no emitted
-blob may hold more than FLUSH_TAIL_VALUES values.
+emits them and (part, start, d1, k, n, tail) rows as the posting kernel
+emits them. The tests cut the elements into blob rows at random points,
+as several map batches give, and hand the rows over in Arrow batches of
+several sizes. ``_exchange`` stands in for ``repartitionById`` followed
+by ``sortWithinPartitions``: key rows go to partition ``bucket % P``
+sorted on bucket, tail rows to partition ``part`` sorted on start, rows
+that tie in arbitrary order. Results must equal brute-force counting
+over the posting lists, and no emitted blob may hold more than
+FLUSH_TAIL_VALUES values.
 """
 
 import itertools
@@ -20,61 +21,71 @@ import pytest
 
 from pdftabextract_spark.kernels import overlap
 from pdftabextract_spark.kernels.overlap import (
-    buckets, mix64, pair_counts, posting_blobs, shared_shingle_counts)
+    blob_batches, buckets, d1_keys, mix64, pair_counts, posting_blobs,
+    shared_shingle_counts)
 from pdftabextract_spark.kernels.shingles import key_blobs
 
+KEY_HEAD = {"bucket": pa.int32()}
+TAIL_HEAD = {"part": pa.int32(), "start": pa.int64()}
 KEY_COLS = {"doc": np.int64, "s": np.uint64}
 TAIL_COLS = {"d1": np.int64, "k": np.int64, "n": np.int64, "tail": np.int64}
 
 
 def _cut_rows(bucket, rng, cols):
-    """Elements sorted by bucket -> blob rows (bucket, [arrays]), each
+    """Elements sorted by bucket -> blob rows ((bucket,), [arrays]), each
     bucket's run cut at random points into one to three rows."""
     rows = []
     starts = np.flatnonzero(np.append(True, bucket[1:] != bucket[:-1]))
     for a, b in zip(starts, np.append(starts[1:], len(bucket))):
         cuts = sorted(set(rng.integers(a, b + 1, 2).tolist()) | {a, b})
-        rows += [(int(bucket[a]), [c[x:y] for c in cols])
+        rows += [((int(bucket[a]),), [c[x:y] for c in cols])
                  for x, y in zip(cuts[:-1], cuts[1:]) if y > x]
     return rows
 
 
-def _batches(rows, names, size):
+def _batches(rows, head, cols, size):
     for i in range(0, len(rows), size):
         chunk = rows[i:i + size]
         yield pa.RecordBatch.from_arrays(
-            [pa.array([b for b, _ in chunk], pa.int32())]
+            [pa.array([h[j] for h, _ in chunk], t)
+             for j, t in enumerate(head.values())]
             + [pa.array([arrs[j].tobytes() for _, arrs in chunk], pa.binary())
-               for j in range(len(names))],
-            names=["bucket", *names])
+               for j in range(len(cols))],
+            names=[*head, *cols])
 
 
-def _rows_of(batches, cols):
-    """Blob batches -> rows (bucket, [arrays]), checking the blob bound."""
+def _rows_of(batches, head, cols):
+    """Blob batches -> rows ((head values), [arrays]), checking the blob
+    bound."""
     rows = []
     for b in batches:
+        heads = list(zip(*(b.column(h).to_pylist() for h in head)))
         blobs = [b.column(c).to_pylist() for c in cols]
-        for i, bucket in enumerate(b.column("bucket").to_pylist()):
+        for i, h in enumerate(heads):
             arrs = [np.frombuffer(x[i], dt)
                     for x, dt in zip(blobs, cols.values())]
             assert all(len(a) <= overlap.FLUSH_TAIL_VALUES for a in arrs)
-            rows.append((bucket, arrs))
+            rows.append((h, arrs))
     return rows
 
 
-def _exchange(rows, n_part, run, cols, size):
-    """Route rows to partition ``bucket % n_part``, sort each partition's
-    rows on bucket (stably), and run ``run`` over each partition."""
+def _exchange(rows, n_part, run, head, cols, size, rng=None):
+    """Route key rows to partition ``bucket % n_part`` and tail rows to
+    partition ``part``, sort each partition's rows on bucket or start
+    (rows that tie in an order ``rng`` shuffles), and run ``run`` over
+    each partition."""
+    if rng is not None:
+        rows = [rows[i] for i in rng.permutation(len(rows))]
     out = []
     for p in range(n_part):
-        part = sorted((r for r in rows if r[0] % n_part == p),
-                      key=lambda r: r[0])
-        out += list(run(_batches(part, list(cols), size)))
+        part = sorted((r for r in rows if r[0][0] % n_part == p),
+                      key=lambda r: r[0][-1])
+        out += list(run(_batches(part, head, cols, size)))
     return out
 
 
 def _key_rows(pairs, n_buckets, rng):
-    """(doc, s) pairs -> (bucket, [doc, s]) blob rows, elements of a
+    """(doc, s) pairs -> ((bucket,), [doc, s]) blob rows, elements of a
     bucket in arbitrary order."""
     doc = np.array([d for d, _ in pairs], np.int64)
     s = np.array([k for _, k in pairs], np.uint64)
@@ -85,13 +96,14 @@ def _key_rows(pairs, n_buckets, rng):
     return _cut_rows(b[order], rng, [doc[order], s[order]])
 
 
-def _tail_rows(lists, n_buckets, rng, per_flush=3):
-    """Per-shingle doc lists -> (bucket, [d1, k, n, tail]) blob rows as
-    the posting kernel emits them: each flush of ``per_flush`` lists gives
-    one entry per doc it holds (``k`` the lists of the flush that hold
-    d1, ``tail`` the docs after d1 in them), so a d1 spans several
-    entries; entries are bucketed by mix64(d1)."""
-    entries = []
+def _tail_rows(lists, n_part, rng, per_flush=3):
+    """Per-shingle doc lists -> ((part, start), [d1, k, n, tail]) blob
+    rows as posting runs give them: each run of ``per_flush`` lists has
+    one entry per doc it holds (``k`` the lists of the run that hold d1,
+    ``tail`` the docs after d1 in them), so a d1 spans several entries.
+    A run's entries are ordered by d1_keys and cut into rows at random
+    points and where the partition changes."""
+    rows = []
     for f in range(0, len(lists), per_flush):
         k, tail = Counter(), defaultdict(list)
         for ds in lists[f:f + per_flush]:
@@ -99,20 +111,16 @@ def _tail_rows(lists, n_buckets, rng, per_flush=3):
             for i, d in enumerate(ds):
                 k[d] += 1
                 tail[d] += ds[i + 1:]
-        entries += [(d, k[d], tail[d]) for d in k]
-    if not entries:
-        return []
-    b = buckets(mix64(np.array([e[0] for e in entries], np.int64)),
-                n_buckets)
-    order = np.argsort(b, kind="stable")
-    rows = []
-    for bucket, (at,) in _cut_rows(b[order], rng, [order]):
-        pick = [entries[i] for i in at]
-        rows.append((bucket, [
-            np.array([e[0] for e in pick], np.int64),
-            np.array([e[1] for e in pick], np.int64),
-            np.array([len(e[2]) for e in pick], np.int64),
-            np.array([x for e in pick for x in e[2]], np.int64)]))
+        d1 = np.array(list(k), np.int64)
+        key = d1_keys(d1)
+        order = np.argsort(key)
+        d1, key = d1[order], key[order]
+        part = buckets(mix64(d1), n_part)
+        for (p,), (at,) in _cut_rows(part, rng, [np.arange(len(d1))]):
+            rows.append(((p, int(key[at[0]])), [
+                d1[at], np.array([k[d] for d in d1[at]], np.int64),
+                np.array([len(tail[d]) for d in d1[at]], np.int64),
+                np.array([x for d in d1[at] for x in tail[d]], np.int64)]))
     return rows
 
 
@@ -129,10 +137,10 @@ def _counted(batches):
     return pairs, sizes
 
 
-def _count(rows, n_part, size, threshold):
+def _count(rows, n_part, size, threshold, rng=None):
     return _counted(_exchange(
         rows, n_part, lambda b: shared_shingle_counts(b, threshold),
-        TAIL_COLS, size))
+        TAIL_HEAD, TAIL_COLS, size, rng))
 
 
 def _brute_force(lists, threshold):
@@ -158,12 +166,12 @@ def test_counts_equal_brute_force(size, threshold):
     # docs 1000 and 1001 occur only in size-1 lists: one size row each,
     # no pairs
     lists += [[1000], [1000], [1001]]
-    rows = _tail_rows(lists, 6, rng)
+    rows = _tail_rows(lists, 3, rng)
     # a size is a sum of k over several entries, in several rows
     assert any(k > 1 for _, (_, ks, _, _) in rows for k in ks)
     d1s = [d for _, (ds, _, _, _) in rows for d in ds]
     assert len(set(d1s)) < len(d1s)
-    pairs, sizes = _count(rows, 3, size, threshold)
+    pairs, sizes = _count(rows, 3, size, threshold, rng)
     want_pairs, want_sizes = _brute_force(lists, threshold)
     assert sizes == want_sizes
     assert pairs == want_pairs
@@ -176,16 +184,21 @@ def test_counts_equal_brute_force(size, threshold):
 
 
 def test_group_split_across_batches():
-    # d1 = 5 has seven entries (one list each) in seven rows of one
-    # bucket; batches of 2 split that group over eight batches
+    # d1 = 5 has seven entries (one list each) in seven rows, one per
+    # posting run; sorted on start they are contiguous, and batches of 2
+    # split them over four batches
     lists = [[5, 9], [5, 9], [5, 7], [5, 9, 11], [5], [5, 11], [3, 5]]
-    rows = [(0, [np.array([d]), np.array([1]), np.array([len(ds) - i - 1]),
-                 np.array(ds[i + 1:], np.int64)])
-            for ds in lists for i, d in enumerate(ds)]
-    assert sum(int(arrs[0][0]) == 5 for _, arrs in rows) == 7
+    rows = sorted((((0, int(d1_keys(np.array([d]))[0])),
+                    [np.array([d]), np.array([1]),
+                     np.array([len(ds) - i - 1]),
+                     np.array(ds[i + 1:], np.int64)])
+                   for ds in lists for i, d in enumerate(ds)),
+                  key=lambda r: r[0][1])
+    fives = [int(arrs[0][0]) == 5 for _, arrs in rows]
+    assert sum(fives) == 7 and fives.index(True) % 2 == 1
     out = list(shared_shingle_counts(
-        _batches(rows, list(TAIL_COLS), 2), 0.0))
-    assert len(out) == 1  # one group
+        _batches(rows, TAIL_HEAD, TAIL_COLS, 2), 0.0))
+    assert len(out) == 1  # counted at the end, in one piece
     pairs, sizes = _counted(out)
     assert sizes[(5, 7)] == 1
     assert pairs == Counter({(3, 5, 1, 1), (5, 7, 1, 7), (5, 9, 3, 7),
@@ -232,18 +245,22 @@ def test_pair_counts_key_sort_equals_lexsort():
     ([1, 2, 1], 1),        # recurrence of a closed group in a later batch
     ([1, 2, 2, 1], 2),     # recurrence after the carried group closed
 ])
+
+
 def test_interleaved_d1_raises(d1s, size):
-    # rows of d1 buckets that are not contiguous: counting the bucket in
-    # two pieces would split its docs' pairs and sizes
+    # tail rows not sorted on start, or key rows not sorted on bucket:
+    # counting a d1 or a bucket in two pieces would split its docs'
+    # pairs and sizes
     one = [np.array([7], np.int64), np.array([1], np.int64),
            np.array([1], np.int64), np.array([100], np.int64)]
-    rows = [(b, one) for b in d1s]
-    with pytest.raises(RuntimeError, match="recurred"):
-        list(shared_shingle_counts(_batches(rows, list(TAIL_COLS), size),
-                                   0.2))
-    with pytest.raises(RuntimeError, match="recurred"):
-        list(posting_blobs(_batches([(b, one[:2]) for b in d1s],
-                                    list(KEY_COLS), size), None, 4))
+    rows = [((0, int(d1_keys(np.array([d]))[0])), [np.array([d])] + one[1:])
+            for d in d1s]
+    with pytest.raises(RuntimeError, match="not sorted"):
+        list(shared_shingle_counts(
+            _batches(rows, TAIL_HEAD, TAIL_COLS, size), 0.2))
+    with pytest.raises(RuntimeError, match="not sorted"):
+        list(posting_blobs(_batches([((b,), one[:2]) for b in d1s],
+                                    KEY_HEAD, KEY_COLS, size), None, 4, 2))
 
 
 def test_empty_input_emits_nothing():
@@ -273,22 +290,26 @@ def _want_lists(pairs, max_df):
 
 def _pipeline(pairs, n_part, n_groups, size, max_df, threshold, rng,
               out=None):
-    """(doc, s) pairs through the posting kernel, the d1 exchange and the
-    counting kernel -> _counted result. The posting rows are appended to
-    ``out`` when given."""
+    """(doc, s) pairs through the posting kernel, the tail exchange and
+    the counting kernel -> _counted result. The posting rows are appended
+    to ``out`` when given."""
     n_buckets = n_part * n_groups
     posted = _exchange(_key_rows(pairs, n_buckets, rng), n_part,
-                       lambda b: posting_blobs(b, max_df, n_buckets),
-                       KEY_COLS, size)
-    rows = _rows_of(posted, TAIL_COLS)
-    for b, (d1, k, n, tail) in rows:
-        # one entry per d1 in a row, every d1 in the row's bucket
-        assert len(set(d1.tolist())) == len(d1)
-        assert (buckets(mix64(d1), n_buckets) == b).all()
+                       lambda b: posting_blobs(b, max_df, n_buckets, n_part),
+                       KEY_HEAD, KEY_COLS, size)
+    rows = _rows_of(posted, TAIL_HEAD, TAIL_COLS)
+    row_values = max(1, overlap.FLUSH_TAIL_VALUES // (2 * n_buckets))
+    for (part, start), (d1, k, n, tail) in rows:
+        # one entry per d1 in a row, ordered by key from the row's start,
+        # every d1 in the row's partition, at most row_values slots
+        key = d1_keys(d1)
+        assert key[0] == start and (key[1:] > key[:-1]).all()
+        assert (buckets(mix64(d1), n_part) == part).all()
         assert n.sum() == len(tail)
+        assert k.sum() + len(tail) <= row_values
     if out is not None:
         out += rows
-    return _count(rows, n_part, size, threshold)
+    return _count(rows, n_part, size, threshold, rng)
 
 
 @pytest.mark.parametrize("flush", [1, 7, None])
@@ -389,7 +410,7 @@ def test_many_groups_per_task(n_groups):
     rng = np.random.default_rng(n_groups)
     pairs = _posting_pairs(rng, n_shingles=300)
     rows = _key_rows(pairs, 2 * n_groups, rng)
-    assert len({b for b, _ in rows if b % 2 == 0}) > 1
+    assert len({b for (b,), _ in rows if b % 2 == 0}) > 1
     want = _brute_force(_want_lists(pairs, 5), 0.2)
     for size in (1, 4):
         assert _pipeline(pairs, 2, n_groups, size, 5, 0.2, rng) == want
@@ -412,12 +433,75 @@ def test_posting_tails_cut_a_long_list_into_bounded_batches(monkeypatch,
     assert got == _brute_force([docs, [1, 3]], 0.0)
 
 
+@pytest.mark.parametrize("flush", [48, 96])
+def test_counting_holds_a_bounded_buffer_on_a_long_exact_list(monkeypatch,
+                                                              flush):
+    # exact mode: one shingle in 90 docs gives 4005 tail values, far over
+    # the patched budget, from six posting runs over two partitions.
+    # Each count the kernel makes holds at most twice the budget plus one
+    # d1's values (its head and tail slots, and an entry per row that
+    # holds it), and the result is unchanged
+    monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", flush)
+    counted = []
+    count = overlap._counts
+
+    def spy(d1, k, n, tail, threshold):
+        counted.append(len(d1) + len(tail))
+        return count(d1, k, n, tail, threshold)
+
+    monkeypatch.setattr(overlap, "_counts", spy)
+    rng = np.random.default_rng(flush)
+    pairs = [(d, 5) for d in range(90)] + _posting_pairs(rng, n_shingles=40)
+    lists = _want_lists(pairs, None)
+    assert _pipeline(pairs, 2, 3, 4, None, 0.0, rng) == \
+        _brute_force(lists, 0.0)
+    one_d1 = Counter()
+    for ds in lists:
+        for i, d in enumerate(ds):
+            one_d1[d] += len(ds) - i
+    assert sum(one_d1.values()) > 40 * flush
+    assert len(counted) > 2  # more than one count per partition
+    assert max(counted) <= 2 * flush + 2 * max(one_d1.values()) + 2 * 6
+
+
+def test_buckets_reject_a_count_outside_int32():
+    h = np.array([0, 1 << 63, (1 << 64) - 1], np.uint64)
+    b = buckets(h, (1 << 31) - 1)
+    assert b.tolist() == sorted(b.tolist()) and 0 <= b.min() and \
+        b.max() < (1 << 31) - 1
+    for bad in (0, 1 << 31, 1 << 41):
+        with pytest.raises(ValueError, match="n_buckets"):
+            buckets(h, bad)
+
+
+def test_blob_batches_keep_each_column_under_the_offset_limit(monkeypatch):
+    # Arrow binary offsets are int32: with the limit patched to 5 values
+    # (40 bytes), one pass of 23 elements leaves as several batches,
+    # none over the limit, holding the same rows; a row alone over the
+    # limit raises instead of wrapping
+    monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", 4)
+    monkeypatch.setattr(overlap, "MAX_BLOB_BYTES", 40)
+    bucket = np.repeat(np.array([0, 1, 3], np.int32), [9, 2, 12])
+    values = np.arange(23, dtype=np.int64)
+    out = list(blob_batches(bucket, v=values))
+    assert len(out) > 1
+    for b in out:
+        assert sum(len(x) for x in b.column("v").to_pylist()) <= 40
+    rows = _rows_of(out, KEY_HEAD, {"v": np.int64})
+    assert np.concatenate([a for _, (a,) in rows]).tolist() == \
+        values.tolist()
+    assert [b for (b,), (a,) in rows for _ in a] == bucket.tolist()
+    monkeypatch.setattr(overlap, "MAX_BLOB_BYTES", 16)
+    with pytest.raises(ValueError, match="offsets"):
+        list(blob_batches(bucket, v=values))
+
+
 def test_posting_tails_empty_input_emits_nothing():
-    assert list(posting_blobs(iter([]), 10, 4)) == []
+    assert list(posting_blobs(iter([]), 10, 4, 2)) == []
     # every list over the cap: nothing to emit either
     rows = _key_rows([(1, 9), (2, 9)], 1, np.random.default_rng(0))
-    assert list(posting_blobs(_batches(rows, list(KEY_COLS), 1), 1, 1)) \
-        == []
+    assert list(posting_blobs(_batches(rows, KEY_HEAD, KEY_COLS, 1), 1, 1,
+                              1)) == []
 
 
 def _text_batch(ids, texts):
@@ -444,8 +528,8 @@ def test_text_pipeline_equals_brute_force_with_a_doc_over_two_rows():
         _text_batch([3], split[:1]),
         _text_batch(rest[30:], [texts[i] for i in rest[30:]]),
         _text_batch([3], split[1:])]), 3, n_buckets))
-    key_rows = _rows_of(blobs, KEY_COLS)
-    for b, (doc, s) in key_rows:
+    key_rows = _rows_of(blobs, KEY_HEAD, KEY_COLS)
+    for (b,), (doc, s) in key_rows:
         assert (buckets(s, n_buckets) == b).all()
         assert (s[1:] >= s[:-1]).all()
     grams = defaultdict(set)
@@ -455,7 +539,7 @@ def test_text_pipeline_equals_brute_force_with_a_doc_over_two_rows():
             grams[" ".join(ws[j:j + 3])].add(d)
     lists = [sorted(ds) for ds in grams.values()]
     posted = _exchange(key_rows, 3,
-                       lambda b: posting_blobs(b, None, n_buckets),
-                       KEY_COLS, 2)
-    got = _count(_rows_of(posted, TAIL_COLS), 3, 3, 0.0)
+                       lambda b: posting_blobs(b, None, n_buckets, 3),
+                       KEY_HEAD, KEY_COLS, 2)
+    got = _count(_rows_of(posted, TAIL_HEAD, TAIL_COLS), 3, 3, 0.0)
     assert got == _brute_force(lists, 0.0)

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdftabextract_spark.kernels.overlap import (
-    posting_blobs, shared_shingle_counts, stop_shingle_census)
+    d1_keys, posting_blobs, shared_shingle_counts, stop_shingle_census)
 from pdftabextract_spark.kernels.pagegroups import iter_page_groups
 from pdftabextract_spark.kernels.png import encode_png
 from pdftabextract_spark.kernels.pyworker import forget_zip_importers
@@ -78,8 +78,10 @@ def _blob(*values):
 
 def _shingle_input(spark):
     return spark.range(2, numPartitions=1).select(
-        F.col("id").cast("int").alias("bucket"), _blob(5).alias("d1"),
-        _blob(1).alias("k"), _blob(1).alias("n"), _blob(9).alias("tail"))
+        F.lit(0).alias("part"),
+        F.lit(int(d1_keys(np.array([5]))[0])).alias("start"),
+        _blob(5).alias("d1"), _blob(1).alias("k"), _blob(1).alias("n"),
+        _blob(9).alias("tail"))
 
 
 def _text_input(spark):
@@ -155,7 +157,7 @@ def _lines_input(spark):
     ("word_grams", _text_input, lambda batches: word_grams(batches, 2)),
     ("key_blobs", _text_input, lambda batches: key_blobs(batches, 2, 4)),
     ("posting_blobs", _posting_input,
-     lambda batches: posting_blobs(batches, None, 4)),
+     lambda batches: posting_blobs(batches, None, 4, 2)),
     ("stop_shingle_census", _posting_input,
      lambda batches: stop_shingle_census(batches, 1)),
 ])

@@ -154,6 +154,31 @@ def test_key_blobs_cut_rows_at_the_blob_bound(monkeypatch):
         for d, g in _split_grams([1, 2], batch.column(1).to_pylist(), 2))
 
 
+def test_key_blobs_split_one_long_pass_under_the_offset_limit(monkeypatch):
+    # one long doc is one pass; with the offset limit patched down to
+    # 10 values a blob column, its keys leave in several batches, none
+    # over the limit, and equal the keys of one batch
+    rng = np.random.default_rng(4)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([9], pa.int64()),
+         pa.array([" ".join(rng.choice(list("abcdefgh"), 300))])],
+        names=["doc_id", "text"])
+    want = _keys([batch], 2, 3)
+    monkeypatch.setattr(overlap, "FLUSH_TAIL_VALUES", 4)
+    monkeypatch.setattr(overlap, "MAX_BLOB_BYTES", 80)
+    out = list(key_blobs(iter([batch]), 2, 3))
+    assert len(out) > 3
+    for b in out:
+        for c in ("doc", "s"):
+            assert sum(len(x) for x in b.column(c).to_pylist()) <= 80
+    got = [(d, k) for b in out
+           for doc, s in zip(b.column("doc").to_pylist(),
+                             b.column("s").to_pylist())
+           for d, k in zip(np.frombuffer(doc, np.int64).tolist(),
+                           np.frombuffer(s, np.uint64).tolist())]
+    assert Counter(got) == Counter(want)
+
+
 _KEY_SCRIPT = """
 import json, sys
 import numpy as np, pyarrow as pa
